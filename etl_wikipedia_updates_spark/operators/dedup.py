@@ -156,7 +156,26 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int, rows: int) -> DataFrame:
     )
 
 
-def lsh_band_rows(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+def lsh_band_col(bands: int, rows: int):
+    """The band unpivot as one generator Column: explode of the
+    (band, band_key) structs over signature columns h0..h{H-1}."""
+    return F.explode(
+        F.expr(
+            "array("
+            + ",".join(
+                f"named_struct('band', {b}, 'band_key', concat_ws('_', "
+                + ",".join(f"h{b * rows + r}" for r in range(rows))
+                + "))"
+                for b in range(bands)
+            )
+            + ")"
+        )
+    ).alias("bk")
+
+
+def lsh_band_rows(
+    sig: DataFrame, bands: int, rows: int, unpivot=None
+) -> DataFrame:
     """Unpivot MinHash signatures into (doc_id, lang, band, band_key)
     bucket-membership rows — one explode, no per-band union. Shared by
     the batch pair enumeration above and the streaming ingest dedup
@@ -164,20 +183,15 @@ def lsh_band_rows(sig: DataFrame, bands: int, rows: int) -> DataFrame:
     accumulated bucket store. NULL lang never pairs: the bucket is a
     grouping key here but a JOIN key in the oracle SQL (NULL = NULL is
     false there), so NULL-lang rows are dropped to keep the two
-    engines bit-equal."""
-    band_structs = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('band', {b}, 'band_key', concat_ws('_', "
-            + ",".join(f"h{b * rows + r}" for r in range(rows))
-            + "))"
-            for b in range(bands)
-        )
-        + ")"
-    )
+    engines bit-equal. ``unpivot`` is a prebuilt lsh_band_col (a
+    stream builds it once, not per micro-batch)."""
     return (
         sig.filter(F.col("lang").isNotNull())
-        .select("doc_id", "lang", F.explode(band_structs).alias("bk"))
+        .select(
+            "doc_id",
+            "lang",
+            lsh_band_col(bands, rows) if unpivot is None else unpivot,
+        )
         .select(
             "doc_id",
             "lang",
@@ -213,8 +227,11 @@ def lsh_candidate_pairs_split(
     contract's quadratic-term guarantee: a prior element's partner
     list is filtered to ``>= thr`` BEFORE the explode, so base-only
     collisions emit nothing (a bucket with no new member emits no
-    rows at all). x < y follows from the list sort order, so pairs
-    arrive normalized; distinct collapses multi-band collisions.
+    rows at all). x <= y follows from the list sort order, so pairs
+    arrive normalized; distinct collapses multi-band collisions. A doc
+    listed twice in one bucket (a duplicated band row) would pair with
+    itself: the x != y filter drops that self-pair, as the _vs form's
+    doc_id != doc_id_b does.
     """
     buckets = band_rows.groupBy("lang", "band", "band_key").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ds")
@@ -230,6 +247,7 @@ def lsh_candidate_pairs_split(
         e1.select(
             F.col("x").alias("doc_id"), F.explode(partners).alias("doc_id2")
         )
+        .filter(F.col("doc_id") != F.col("doc_id2"))
         .distinct()
     )
 
@@ -290,6 +308,11 @@ def jaccard_verify(
     pair endpoint MISSING from doc_token_arrays leaves that side NULL,
     making jaccard NULL, which the >= threshold filter drops — the
     same pairs the old inner joins dropped.
+
+    Precondition: ``pairs`` holds each (doc_id, doc_id2) at most once.
+    The regroup keys on the pair, so duplicate input rows collapse to
+    one output row (the double-join shape returned one per input row);
+    every caller passes distinct candidates.
     """
     long = pairs.select(
         "doc_id",

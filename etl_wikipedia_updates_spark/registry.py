@@ -3,45 +3,23 @@ tests, and bench.
 
 Registry order is a CERTIFICATION ROTATION over SURVEY.md §2.3's 90
 entries (88 oracle-backed + 2 bench-only approximate). The external
-correctness gate records the first 50 entries per round, so the
-surplus sits past the cutoff each round; the rotation policy keeps
-every official row as fresh as the window allows (pinned by
-tests/test_survey_contract.py's freshness test since r15: with ~29
-contract rows pinned every round, the ~56 rotating entries share ~21
-slots, so the feasible bound is a refresh every THIRD gate — any
-entry about to exceed it, or never certified, must sit inside the
-next window):
+correctness gate records the first 50 entries per round, so with the
+29 contract rows pinned every round the rotating entries share ~21
+slots: the feasible bound is a refresh every THIRD gate, pinned by
+tests/test_survey_contract.py (an entry about to exceed it, or never
+certified, must sit inside the next window). Order: never-certified
+entries, entries changed this round, entries at the freshness bound,
+the contract rows Q1-Q28 + wiki, then the oldest remaining rows FIFO.
 
-- Entries with NO official row ever go FIRST, then entries CHANGED
-  this round (their old rows certify code that no longer exists),
-  then the entries hitting the 3-gate freshness bound, then the
-  contract rows Q1-Q28 + wiki (inside the window every round), with
-  any spare slots refreshing the OLDEST remaining rows FIFO.
-- Round-19 window arithmetic (executing the horizon the r18 registry
-  pinned): (4 never-certified: the NEW dsir_select + winnow_fp +
-  source_overlap + ccnet_buckets) + (16 r16-official entries at the
-  bound: grouped_agg_udf .. text_normalize, FIFO in prior tail order
-  — this block includes `percentiles`, whose r19 NULL-handling
-  alignment with percentiles_refined also makes it a changed-core
-  re-cert) + (29 contract) = 49, leaving 1 spare slot spent on the
-  OLDEST r17-official row FIFO (incremental_span_dedup) to lighten
-  the r20 window.
-- Round-20 horizon: the remaining 20 r17-official entries
-  (seq_pack, pack_assignments, then rep_filter .. source_mix) hit
-  their bound at r20; with 29 contract rows that window is 49/50
-  full before new work — 1 free slot. The r18-certified block
-  (percentiles_refined .. incremental_dedup, 21 entries) next hits
-  its bound at r21.
-- The entries that yield are the freshest (r18-certified) ones —
-  every oracle-backed one still differentially tested locally on each
-  pytest run by tests/test_queries_oracle.py.
+Round-21 window: the 19 r17-official entries (past the bound after
+the r20 recording), the 29 contract rows, and the 2 oldest
+r18-certified rows. The other r18-certified entries reach the bound
+at r21 and head the next rotation; the r20-certified ones yield.
 
-All entries are benched by bench.py regardless of position, and the
-oracle-backed entries are oracle-tested every run in
-tests/test_queries_oracle.py (q12_approx and percentiles_approx are
-approximate by design, declare no oracle, and get only the driver's
-rows-only check); the rotation affects only which 50 the external gate
-re-certifies this round.
+Every entry is benched by bench.py regardless of position, and the
+oracle-backed ones are oracle-tested on every pytest run
+(tests/test_queries_oracle.py; q12_approx and percentiles_approx are
+approximate by design and get only the driver's rows-only check).
 """
 
 from __future__ import annotations
@@ -57,60 +35,7 @@ from etl_wikipedia_updates_spark.plans.relational import RELATIONAL_QUERIES
 from etl_wikipedia_updates_spark.plans.wiki import WIKI_QUERIES
 
 DECLARATION_ORDER: list[str] = [
-    # --- NEVER-CERTIFIED first: dsir_select (NEW r19 — DSIR
-    # importance-resampling data selection toward the bench domain,
-    # Xie et al. 2023; fit-small bucket log-ratio model + in-array
-    # scoring projection + TakeOrderedAndProject selection) has no
-    # official row, and neither does winnow_fp (NEW r19 — the
-    # robust-winnowing/MOSS fingerprint sketch audit) nor
-    # source_overlap (NEW r19 — cross-source MinHash resemblance
-    # matrix, the pre-mixing overlap audit) nor ccnet_buckets (NEW
-    # r19 — the CCNet per-language perplexity tercile split,
-    # composing charlm scoring with exact_quantiles_refined) ---
-    "dsir_select",
-    "winnow_fp",
-    "source_overlap",
-    "ccnet_buckets",
-    # --- round-19 rotation head, executing the window the r18
-    # registry promised (r18 verdict #1): the 16 entries whose newest
-    # official row is r16 — they hit the every-third-gate freshness
-    # bound at this gate (tests/test_survey_contract.py), FIFO in
-    # prior tail order. `percentiles` in this block is ALSO a
-    # changed-core re-cert: its r19 NULL-handling alignment (isNotNull
-    # on the value column, matching percentiles_refined — r18 ADVICE)
-    # means its r16 row certifies a plan that no longer exists ---
-    "grouped_agg_udf",
-    "kmeans_clusters",
-    "ann_kmeans",
-    "sample_hash",
-    "simhash_pairs",
-    "stratified_sample",
-    "tfidf_topterms",
-    "semantic_dedup",
-    "cosine_neardup",
-    "text_quality",
-    "dedup_clusters",
-    "contamination",
-    "percentiles",
-    "grouped_zscore",
-    "doc_fingerprint",
-    "text_normalize",
-    # --- §2.3 contract rows (always inside the gate window) ---
-    *[f"q{i}" for i in range(1, 29)],
-    "wiki_pipeline",
-    # --- spare slot (1 after the four new head slots): the OLDEST
-    # r17-official row, FIFO, pulled forward to lighten the r20
-    # window — the 21-entry r17 block hits its bound at r20, which
-    # with 29 contract rows would otherwise be 50/50 full; pulling 1
-    # leaves r20 at 49/50 with 1 free slot ---
-    "incremental_span_dedup",
-    # --- positions 51+: past the cutoff this round. The remaining 20
-    # r17-official entries head the round-20 queue (they hit the
-    # 3-gate bound at r20), FIFO in tail order with seq_pack and
-    # pack_assignments first, followed by the freshest r18-certified
-    # block (bound at r21). Every oracle-backed entry is still
-    # differentially tested locally on each pytest run by
-    # tests/test_queries_oracle.py ---
+    # --- r17-official entries, past the 3-gate freshness bound ---
     "seq_pack",
     "pack_assignments",
     "rep_filter",
@@ -130,9 +55,16 @@ DECLARATION_ORDER: list[str] = [
     "ngram_quality",
     "bpe_token_stats",
     "source_mix",
-    # r18-certified block, FIFO in r18 window order
+    # --- §2.3 contract rows (always inside the gate window) ---
+    *[f"q{i}" for i in range(1, 29)],
+    "wiki_pipeline",
+    # --- r18-certified block, FIFO in r18 window order: the first 2
+    # fill the window's spare slots, the rest head the r22 rotation ---
     "percentiles_refined",
     "bm25_rank",
+    # --- positions 51+: past the cutoff this round. Every
+    # oracle-backed entry is still differentially tested locally on
+    # each pytest run by tests/test_queries_oracle.py ---
     "pii_scrub",
     "charlm_score",
     "shard_manifest",
@@ -152,6 +84,28 @@ DECLARATION_ORDER: list[str] = [
     "seq_pack_subword",
     "source_mix_subword",
     "incremental_dedup",
+    # r20-certified, FIFO in r20 window order
+    "dsir_select",
+    "winnow_fp",
+    "source_overlap",
+    "ccnet_buckets",
+    "grouped_agg_udf",
+    "kmeans_clusters",
+    "ann_kmeans",
+    "sample_hash",
+    "simhash_pairs",
+    "stratified_sample",
+    "tfidf_topterms",
+    "semantic_dedup",
+    "cosine_neardup",
+    "text_quality",
+    "dedup_clusters",
+    "contamination",
+    "percentiles",
+    "grouped_zscore",
+    "doc_fingerprint",
+    "text_normalize",
+    "incremental_span_dedup",
 ]
 
 _declared = QueryRegistry()

@@ -46,13 +46,25 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
+from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import text as T
 from etl_wikipedia_updates_spark.plans.northstar import (
     CONTAM_MIN_SHARED,
+    MINHASH_BANDS,
+    MINHASH_ROWS,
     SHINGLE_DF_CAP,
 )
-from etl_wikipedia_updates_spark.streaming.ingest import append_batch
-from etl_wikipedia_updates_spark.streaming.neardup import _compact_store
+from etl_wikipedia_updates_spark.streaming.ingest import (
+    append_batch,
+    start_batches,
+)
+from etl_wikipedia_updates_spark.streaming.neardup import (
+    SigCols,
+    _compact_store,
+    dedup_append,
+    doc_tids,
+    sig_cols,
+)
 
 CONTAM_DIRNAME = "_contaminated"  # _-prefixed: invisible to sink readers
 
@@ -111,83 +123,120 @@ def bench_spans(bench_docs: DataFrame) -> DataFrame:
     )
 
 
-def decontam_span_verdicts(
-    docs: DataFrame, bench_sp: DataFrame, exclude_self: bool = True
+def _strongest_hits(
+    matches: DataFrame,
+    keys: list[str],
+    min_shared: int,
+    exclude_self: bool,
+    sig=(),
+    sig_min=(),
 ) -> DataFrame:
-    """(doc_id, bench_doc, shared) for every doc carrying at least ONE
-    exact benchmark span — the span-mode rule (a single verbatim
-    SPAN_W-token run vetoes; there is no min-shared threshold like the
-    shingle rule's, matching the batch span_decontam contract of
-    contam_doc > 0). ``shared`` counts matched span occurrences
-    against the reported bench_doc; reporting shape (strongest match,
-    ties to smallest bench_doc) and ``exclude_self`` semantics are
-    identical to decontam_verdicts, so both modes share the
-    quarantine-table schema."""
+    """Per ``keys`` group (a doc) of ``matches`` (its shingle or span
+    rows joined to the bench frame): ``hit``, the strongest benchmark
+    match as struct(neg_shared, bench_doc) — most shared rows, ties to
+    the smallest bench_doc, the batch contamination query's reporting
+    rule — or NULL when no bench_doc reaches ``min_shared``. One
+    doc-keyed aggregation in two levels, (doc, bench_doc) then doc;
+    ``sig``/``sig_min`` add the MinHash mins at each level (a shingle
+    matching k bench docs appears k times, which a min ignores).
+
+    ``exclude_self`` reads a (doc_id == bench_doc) match as no match.
+    It is ONLY valid when the benchmark rows are an id-sharing subset
+    of the streamed corpus (the in-table source-slice convention),
+    where vetoing the pair would empty the benchmark out of its own
+    corpus. For an EXTERNAL benchmark pass False: an id collision
+    between unrelated corpora would otherwise bypass the veto."""
+    bench_doc = F.col("bench_doc")
+    if exclude_self:
+        bench_doc = F.when(F.col("doc_id") != bench_doc, bench_doc)
+    pairs = matches.groupBy(*keys, bench_doc.alias("bench_doc")).agg(
+        F.count("*").alias("shared"), *sig
+    )
+    hit = F.when(
+        F.col("bench_doc").isNotNull() & (F.col("shared") >= min_shared),
+        F.struct((-F.col("shared")).alias("neg_shared"), "bench_doc"),
+    )
+    return pairs.groupBy(*keys).agg(F.min(hit).alias("hit"), *sig_min)
+
+
+def verdict_rows(hits: DataFrame) -> DataFrame:
+    """(doc_id, bench_doc, shared): the quarantine rows of a per-doc
+    ``hit`` frame's vetoed docs."""
+    return hits.filter(F.col("hit").isNotNull()).select(
+        "doc_id",
+        F.col("hit.bench_doc").alias("bench_doc"),
+        (-F.col("hit.neg_shared")).alias("shared"),
+    )
+
+
+def shingle_hits(
+    docs: DataFrame,
+    bench_sh: DataFrame,
+    exclude_self: bool = True,
+    tids: DataFrame | None = None,
+    cols: SigCols | None = None,
+) -> DataFrame:
+    """Per doc (doc_id, lang, hit) under the shingle rule: >=
+    CONTAM_MIN_SHARED distinct shingles shared with one benchmark doc.
+    Given the docs' doc_tids frame and its SigCols, the shingle rows
+    LEFT-join the bench frame and the same aggregation adds
+    h0..h{H-1}: veto and signature from one shingle pass."""
+    fused = tids is not None
+    rows = (tids if fused else T.doc_shingles(docs)).join(
+        F.broadcast(bench_sh), ["lang", "term"], "left" if fused else "inner"
+    )
+    return _strongest_hits(
+        rows, ["doc_id", "lang"], CONTAM_MIN_SHARED, exclude_self,
+        *((cols.sig, cols.sig_min) if fused else ()),
+    )
+
+
+def span_hits(
+    docs: DataFrame,
+    bench_sp: DataFrame,
+    exclude_self: bool = True,
+    tids: DataFrame | None = None,
+    cols: SigCols | None = None,
+) -> DataFrame:
+    """Per doc (doc_id, hit) under the span rule: ONE exact SPAN_W-token
+    benchmark span vetoes (the batch span_decontam contract of
+    contam_doc > 0); ``shared`` counts matched span occurrences. Given
+    ``tids``/``cols``, the span join stays the veto and the shingle
+    rows give the signature, which left-joins the hits (a doc with a
+    span has >= SPAN_W tokens, hence shingles)."""
     from etl_wikipedia_updates_spark.plans.northstar import (
         _span_occurrences,
     )
 
-    sp = _span_occurrences(docs).select("doc_id", "h")
-    joined = sp.join(F.broadcast(bench_sp), "h")
-    if exclude_self:
-        joined = joined.filter(F.col("doc_id") != F.col("bench_doc"))
-    counts = joined.groupBy("doc_id", "bench_doc").agg(
-        F.count("*").alias("shared")
+    rows = (
+        _span_occurrences(docs)
+        .select("doc_id", "h")
+        .join(F.broadcast(bench_sp), "h")
     )
-    w = W.partitionBy("doc_id").orderBy(
-        F.col("shared").desc(), F.col("bench_doc")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("doc_id", "bench_doc", "shared")
-    )
+    hits = _strongest_hits(rows, ["doc_id"], 1, exclude_self)
+    if tids is None:
+        return hits
+    sig = tids.groupBy("doc_id", "lang").agg(*cols.sig)
+    return sig.join(hits, "doc_id", "left")
 
 
 def decontam_verdicts(
     docs: DataFrame, bench_sh: DataFrame, exclude_self: bool = True
 ) -> DataFrame:
-    """(doc_id, bench_doc, shared) for every doc sharing >=
-    CONTAM_MIN_SHARED distinct shingles with a benchmark doc (its
-    strongest single match, ties to the smallest bench_doc — the
-    same reporting rule as the batch contamination query).
-
-    ``exclude_self`` drops (doc_id == bench_doc) pairs and is ONLY
-    valid when the benchmark rows are a subset of the streamed corpus
-    sharing its id universe (the in-table source-slice convention) —
-    there the pair is literally the same row and vetoing it would
-    empty the benchmark out of its own corpus. For an EXTERNAL
-    benchmark with its own id space, pass False: an id collision
-    between unrelated corpora would otherwise silently bypass the
-    veto for exactly that doc."""
-    sh = T.doc_shingles(docs)
-    joined = sh.join(F.broadcast(bench_sh), ["lang", "term"])
-    if exclude_self:
-        joined = joined.filter(F.col("doc_id") != F.col("bench_doc"))
-    counts = (
-        joined.groupBy("doc_id", "bench_doc")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= CONTAM_MIN_SHARED)
-    )
-    w = W.partitionBy("doc_id").orderBy(
-        F.col("shared").desc(), F.col("bench_doc")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("doc_id", "bench_doc", "shared")
-    )
+    """(doc_id, bench_doc, shared) for every doc the shingle rule
+    vetoes (``exclude_self`` as in _strongest_hits)."""
+    return verdict_rows(shingle_hits(docs, bench_sh, exclude_self))
 
 
-# mode name -> (static-frame builder, per-batch verdict function).
+# mode name -> (static-frame builder, per-doc hit function).
 # Both modes share the stream-static join shape, the quarantine-table
 # schema, and the idempotent batch-dir sink; they differ only in what
 # the broadcast frame holds (df-capped shingles vs distinct exact
 # span hashes) and the match rule (>= CONTAM_MIN_SHARED shingles vs
 # >= 1 exact SPAN_W-token span — the batch span_decontam contract).
 DECONTAM_MODES = {
-    "shingles": (bench_shingles, decontam_verdicts),
-    "spans": (bench_spans, decontam_span_verdicts),
+    "shingles": (bench_shingles, shingle_hits),
+    "spans": (bench_spans, span_hits),
 }
 
 
@@ -217,8 +266,8 @@ def decontam_ingest_batch(
     be the ``mode``-matching static frame (bench_shingles output for
     'shingles', bench_spans for 'spans')."""
     spark = batch_df.sparkSession
-    verdicts = _mode_fns(mode)[1](
-        batch_df, bench_sh, exclude_self=exclude_self
+    verdicts = verdict_rows(
+        _mode_fns(mode)[1](batch_df, bench_sh, exclude_self=exclude_self)
     ).persist()
     try:
         survivors = batch_df.join(
@@ -301,7 +350,7 @@ def ingest_with_decontam(
     ONCE, outside the per-batch handler, and unpersisted when the
     stream terminates (a restarted curation stream rebuilds it — no
     cache leak across streams). ``exclude_self`` as in
-    decontam_verdicts: True only when bench_docs is an id-shared
+    _strongest_hits: True only when bench_docs is an id-shared
     subset of the stream; False for an external benchmark.
     ``mode``: 'shingles' (overlap veto — the `contamination` rule) or
     'spans' (exact-substring veto — the `span_decontam` rule)."""
@@ -315,12 +364,7 @@ def ingest_with_decontam(
             mode=mode,
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
+    query = start_batches(stream, handle, checkpoint, available_now)
     _release_on_termination(query, bench_sh)
     return query
 
@@ -335,9 +379,9 @@ def batch_decontam_keep(
     and backfills): keep docs with no benchmark match. The operator
     is stateless per doc, so the streamed sink equals this under ANY
     batching — no arrival-order caveat needed."""
-    build, verdicts_fn = _mode_fns(mode)
-    drops = verdicts_fn(
-        docs, build(bench_docs), exclude_self=exclude_self
+    build, hits_fn = _mode_fns(mode)
+    drops = verdict_rows(
+        hits_fn(docs, build(bench_docs), exclude_self=exclude_self)
     ).select("doc_id")
     return docs.join(drops, "doc_id", "left_anti")
 
@@ -353,6 +397,7 @@ def full_curation_ingest_batch(
     redact_pii: bool = False,
     temp_rates: DataFrame | None = None,
     decontam_mode: str = "shingles",
+    static_cols=None,
 ) -> None:
     """One micro-batch of the COMPLETE per-doc curation pipeline — the
     ingest-time twin of corpus_release's per-doc stages in one pass:
@@ -372,21 +417,17 @@ def full_curation_ingest_batch(
     order does).
     Redaction runs FIRST so every downstream signal (quality ratios,
     shingles, near-dup signatures) sees the text a release would ship.
-    Stage order is the cheap-to-expensive rule: quality needs no
-    state, decontam joins a tiny broadcast, and only the survivors of
-    both pay the signature aggregation + store join. Corpus-global
-    budget FITTING stays release-time/static — the stream only
-    APPLIES precomputed thresholds. The quarantine and bucket stores
-    both fold on the ``compact_every`` cadence."""
+    Quality needs no state and runs next; the veto and the MinHash
+    signature then share ONE shingle pass over its survivors, and only
+    the clean docs' bands meet the bucket store. Corpus-global budget
+    FITTING stays release-time/static — the stream only APPLIES
+    precomputed thresholds. The quarantine and bucket stores both fold
+    on the ``compact_every`` cadence. ``static_cols`` is the stream's
+    _curation_cols, built once per stream (here when absent)."""
     from etl_wikipedia_updates_spark.plans.corpus import pii_redact
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        quality_keep,
-        temp_membership,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        dedup_ingest_batch,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import temp_membership
 
+    keep, cols = static_cols or _curation_cols()
     spark = batch_df.sparkSession
     if redact_pii:
         batch_df = pii_redact(batch_df)
@@ -395,31 +436,44 @@ def full_curation_ingest_batch(
         if temp_rates is None
         else (lambda df: temp_membership(df, temp_rates))
     )
-    # kept and clean are each consumed by MULTIPLE downstream actions
-    # (verdicts, the quarantine write, dedup's band aggregation AND
-    # its survivors append); without the persists every action
-    # re-runs the quality gate's explode — the dominant per-batch
-    # map cost — the same reasoning as verified_ingest_batch's dtok
-    # persist.
-    kept = quality_keep(batch_df).persist()
-    verdicts = _mode_fns(decontam_mode)[1](
-        kept, bench_sh, exclude_self=exclude_self
-    ).persist()
-    clean = kept.join(
-        verdicts.select("doc_id"), "doc_id", "left_anti"
+    # Two persists. ``kept`` feeds the per-doc pass and the sink
+    # append, so the micro-batch is read once. ``per_doc`` holds each
+    # shingled doc's veto verdict AND MinHash signature, from one
+    # shingle pass and one doc-keyed aggregation (shingle_hits /
+    # span_hits); it feeds the quarantine append, the collision
+    # aggregation and the bucket-store append. Vetoed docs leave the
+    # sink in the near-dup anti-join and add no bands to the store.
+    kept = batch_df.filter(keep).persist()
+    per_doc = _mode_fns(decontam_mode)[1](
+        kept, bench_sh, exclude_self, tids=doc_tids(kept, cols.tids), cols=cols
     ).persist()
     try:
-        append_batch(verdicts, contam_store_path(sink_path), batch_id)
+        verdicts = verdict_rows(per_doc)
+        append_batch(
+            verdicts.coalesce(1), contam_store_path(sink_path), batch_id
+        )
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_contam_store(spark, sink_path, below=batch_id)
-        dedup_ingest_batch(
-            clean, sink_path, batch_id, compact_every=compact_every,
-            sink_transform=sink_transform,
+        band = D.lsh_band_rows(
+            per_doc.filter(F.col("hit").isNull()),
+            MINHASH_BANDS, MINHASH_ROWS, cols.bands,
+        )
+        dedup_append(
+            kept, band, sink_path, batch_id, compact_every=compact_every,
+            sink_transform=sink_transform, vetoed=verdicts,
         )
     finally:
-        clean.unpersist()
-        verdicts.unpersist()
+        per_doc.unpersist()
         kept.unpersist()
+
+
+def _curation_cols():
+    """(quality verdict, SigCols): the curation trigger's static
+    Columns, built once per stream. The verdict is rep_keep_col, the
+    statement plans.northstar.quality_keep filters on."""
+    from etl_wikipedia_updates_spark.plans.northstar import rep_keep_col
+
+    return rep_keep_col(), sig_cols()
 
 
 def ingest_with_full_curation(
@@ -443,6 +497,7 @@ def ingest_with_full_curation(
     exclude_self, and ``decontam_mode`` notes as in
     ingest_with_decontam."""
     bench_sh = _mode_fns(decontam_mode)[0](bench_docs).persist()
+    static_cols = _curation_cols()
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         full_curation_ingest_batch(
@@ -452,14 +507,10 @@ def ingest_with_full_curation(
             redact_pii=redact_pii,
             temp_rates=temp_rates,
             decontam_mode=decontam_mode,
+            static_cols=static_cols,
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
+    query = start_batches(stream, handle, checkpoint, available_now)
     _release_on_termination(query, bench_sh)
     return query
 

@@ -80,6 +80,19 @@ def append_batch(batch_df: DataFrame, sink_path: str, batch_id: int) -> None:
         json.dump({"n": dir_row_count(target)}, fh)
 
 
+def start_batches(
+    stream: DataFrame, handle, checkpoint: str, available_now: bool = True
+) -> StreamingQuery:
+    """Start ``handle(batch_df, batch_id)`` as the stream's checkpointed
+    foreachBatch body; ``available_now`` drains the input and stops."""
+    writer = stream.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def _batch_dir_rows(path: str) -> int:
     """Row count of one committed batch dir: the append-time sidecar,
     else the parquet-footer sum (sidecar lost to a crash window, or a
@@ -520,12 +533,7 @@ def ingest_with_retention(
         if max_rows is not None:
             apply_retention(spark, sink_path, max_rows, ts_col)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def rollup_partials(
@@ -631,12 +639,7 @@ def ingest_with_rollup(
         append_batch(batch_df, sink_path, batch_id)
         rollup_partials(batch_df, rollup_path, batch_id, ts_col, key_col)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def enrich_stream(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:

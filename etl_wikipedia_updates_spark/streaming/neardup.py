@@ -37,8 +37,9 @@ instead of growing one directory per trigger forever. At 100 TB the
 store is
 (lang, band, band_key, doc_id) rows — a fraction of corpus bytes —
 and the per-batch work is one signature aggregation over the BATCH
-plus one equi-join against the store: no corpus rescan, no driver
-state. The reference's analog is R10's UNIQUE-index dedup (exact ids,
+plus one bucket-keyed aggregation over its band rows and the store's
+keys: no corpus rescan, no driver state. The reference's analog is
+R10's UNIQUE-index dedup (exact ids,
 unbounded SQLite state, /root/reference/pipeline.py:173-174); this is
 the near-dup generalization with explicit, inspectable state.
 """
@@ -46,8 +47,9 @@ the near-dup generalization with explicit, inspectable state.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -63,6 +65,7 @@ from etl_wikipedia_updates_spark.streaming.ingest import (
     _publish_rewrite,
     _view_parts,
     append_batch,
+    start_batches,
 )
 
 BUCKETS_DIRNAME = "_lsh_buckets"  # _-prefixed: invisible to sink readers
@@ -246,11 +249,46 @@ def _require_payload_coverage(
         )
 
 
-def doc_tids(docs: DataFrame) -> DataFrame:
-    """The shingle -> term-hash chain every dedup derivation starts
-    from. Single definition so blocking (band rows) and verification
-    (shingle sketches) can never disagree on a doc's shingle ids."""
-    return T.doc_shingles(docs).withColumn("tid", T.term_hash_col())
+def tid_cols() -> tuple[Column, Column]:
+    """The shingle -> term-hash chain as two Columns: explode(shingles)
+    AS term, and its term hash AS tid."""
+    return (
+        F.explode(T.shingles_col()).alias("term"),
+        T.term_hash_col().alias("tid"),
+    )
+
+
+class SigCols(NamedTuple):
+    """The Columns of the shingle -> tid -> MinHash -> band chain. A
+    stream builds them once (sig_cols) and reuses them in every
+    micro-batch instead of rebuilding each expression over py4j."""
+
+    tids: tuple  # tid_cols()
+    sig: list  # h0..h{H-1}: min of each universal hash over tid
+    sig_min: list  # h0..h{H-1}: min over already-aggregated h columns
+    bands: Column  # the band unpivot (operators.dedup.lsh_band_col)
+
+
+def sig_cols() -> SigCols:
+    names = [f"h{i}" for i in range(len(MINHASH_PARAMS))]
+    return SigCols(
+        tid_cols(),
+        D.minhash_agg_exprs(MINHASH_PARAMS),
+        [F.min(n).alias(n) for n in names],
+        D.lsh_band_col(MINHASH_BANDS, MINHASH_ROWS),
+    )
+
+
+def doc_tids(docs: DataFrame, cols: tuple | None = None) -> DataFrame:
+    """(doc_id, lang, term, tid): the shingle -> term-hash chain every
+    dedup derivation starts from. Single definition so blocking (band
+    rows), verification (shingle sketches) and the curation trigger's
+    fused veto+signature pass can never disagree on a doc's shingle
+    ids. ``cols``: prebuilt tid_cols()."""
+    shingle, tid = cols or tid_cols()
+    return docs.select("doc_id", "lang", shingle).select(
+        "doc_id", "lang", "term", tid
+    )
 
 
 def doc_band_rows(docs: DataFrame, dtok: DataFrame | None = None) -> DataFrame:
@@ -271,20 +309,34 @@ def batch_neardup_drops(
     band: DataFrame, store: DataFrame | None
 ) -> DataFrame:
     """doc_ids of this batch to drop: bucket seen in the store (earlier
-    batches), or a smaller doc_id in this batch shares the bucket."""
+    batches), or a smaller doc_id in this batch shares the bucket.
+
+    ONE aggregation keyed by bucket over the batch's band rows and the
+    store's keys: per bucket the smallest batch doc_id, whether a store
+    row is present, and the batch's doc list. A doc comes out once per
+    colliding bucket — no distinct, since every consumer anti-joins."""
     keys = ["lang", "band", "band_key"]
-    keeper = band.groupBy(*keys).agg(F.min("doc_id").alias("keeper"))
-    within = (
-        band.join(keeper, keys)
-        .filter(F.col("doc_id") > F.col("keeper"))
-        .select("doc_id")
+    rows = band.select(*keys, "doc_id", F.lit(False).alias("seen"))
+    if store is not None:
+        rows = rows.unionByName(
+            store.select(
+                *keys,
+                F.lit(None).cast("long").alias("doc_id"),
+                F.lit(True).alias("seen"),
+            )
+        )
+    buckets = rows.groupBy(*keys).agg(
+        F.min("doc_id").alias("keeper"),
+        F.max("seen").alias("seen"),
+        F.collect_list("doc_id").alias("ds"),
     )
-    if store is None:
-        return within.distinct()
-    prev = band.join(
-        store.select(*keys), keys, "left_semi"
-    ).select("doc_id")
-    return within.unionByName(prev).distinct()
+    return buckets.select(
+        F.explode(
+            F.when(F.col("seen"), F.col("ds")).otherwise(
+                F.filter("ds", lambda d: d > F.col("keeper"))
+            )
+        ).alias("doc_id")
+    )
 
 
 # --- embedding-space variant (SemDeDup-style blocking) ------------------------
@@ -358,18 +410,47 @@ def _ingest_dedup_batch(
     sink_transform=None,
 ) -> None:
     """One micro-batch of dedup ingest (foreachBatch body), shared by
-    the document (MinHash) and embedding (sign-bucket) variants.
+    the document (MinHash) and embedding (sign-bucket) variants: the
+    batch's band rows from ``band_fn``, then dedup_append."""
+    # The batch and its band rows each feed both appends: persisted,
+    # so the micro-batch is read once (numInputRows counts each row
+    # once) and the signature aggregation runs once.
+    batch = batch_df.persist()
+    band = band_fn(batch).persist()
+    try:
+        dedup_append(
+            batch, band, sink_path, batch_id, id_col,
+            compact_every=compact_every, sink_transform=sink_transform,
+        )
+    finally:
+        band.unpersist()
+        batch.unpersist()
+
+
+def dedup_append(
+    docs: DataFrame,
+    band: DataFrame,
+    sink_path: str,
+    batch_id: int,
+    id_col: str = "doc_id",
+    compact_every: int | None = None,
+    sink_transform=None,
+    vetoed: DataFrame | None = None,
+) -> None:
+    """The appends of one dedup micro-batch, given its docs and their
+    band rows (both persisted by the caller: each feeds two writes).
 
     Reads the bucket store's COMMITTED view below batch_id — the
     compacted snapshot plus unfolded batch dirs (a replayed batch must
-    not collide with its own first attempt) — drops colliding rows,
-    appends survivors to the data sink and ALL batch buckets to the
-    store, both under this batch's idempotent dir. Every
-    ``compact_every`` batches the store is folded into one snapshot
-    version (strictly below this batch id, so a retry of THIS batch
-    still excludes its own buckets); re-running the compaction on a
-    batch retry publishes an identical extra version — idempotent in
-    content.
+    not collide with its own first attempt) — drops colliding rows and
+    any doc_id in ``vetoed`` (one anti-join), appends survivors to the
+    data sink and ALL band rows to the store as one file (its size is
+    bounded by the batch's doc count), both under this batch's
+    idempotent dir. Every ``compact_every`` batches the store is
+    folded into one snapshot version (strictly below this batch id,
+    so a retry of THIS batch still excludes its own buckets);
+    re-running the compaction on a batch retry publishes an identical
+    extra version — idempotent in content.
 
     ``sink_transform`` (a DataFrame -> DataFrame callable, e.g. the
     temperature-membership filter) applies to the SINK append only —
@@ -377,30 +458,24 @@ def _ingest_dedup_batch(
     the release pipeline where dedup canonicalization runs BEFORE
     mixing: a mix-dropped doc must still shadow its later near-dups,
     or a duplicate of it would sneak into the sink."""
-    spark = batch_df.sparkSession
-    # Persisted across the two actions below: the survivors write
-    # evaluates band (through drops) and the store write evaluates it
-    # again — without the persist each batch would pay the signature
-    # aggregation (the dominant per-batch cost) twice.
-    band = band_fn(batch_df).persist()
-    try:
-        store = _store_view(spark, bucket_store_path(sink_path), batch_id)
-        drops = batch_neardup_drops(band, store)
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-        )
-        if sink_transform is not None:
-            survivors = sink_transform(survivors)
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-    finally:
-        band.unpersist()
+    spark = docs.sparkSession
+    store = _store_view(spark, bucket_store_path(sink_path), batch_id)
+    drops = batch_neardup_drops(band, store)
+    if vetoed is not None:
+        drops = drops.unionByName(vetoed.select("doc_id"))
+    survivors = docs.join(
+        drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
+    )
+    if sink_transform is not None:
+        survivors = sink_transform(survivors)
+    append_batch(survivors, sink_path, batch_id)
+    append_batch(
+        band.select("doc_id", "lang", "band", "band_key").coalesce(1),
+        bucket_store_path(sink_path),
+        batch_id,
+    )
+    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+        compact_bucket_store(spark, sink_path, below=batch_id)
 
 
 def dedup_ingest_batch(
@@ -433,12 +508,7 @@ def ingest_with_neardup(
             batch_df, sink_path, batch_id, compact_every=compact_every
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def quality_neardup_ingest_batch(
@@ -477,12 +547,7 @@ def ingest_with_quality_neardup(
             batch_df, sink_path, batch_id, compact_every=compact_every
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_quality_neardup_keep(docs: DataFrame) -> DataFrame:
@@ -510,12 +575,7 @@ def ingest_with_embedding_neardup(
             compact_every=compact_every,
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def _batch_keep(df: DataFrame, band_fn, id_col: str) -> DataFrame:
@@ -614,12 +674,7 @@ def ingest_with_span_neardup(
             batch_df, sink_path, batch_id, compact_every=compact_every
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_span_keep(docs: DataFrame) -> DataFrame:
@@ -835,6 +890,24 @@ def _band_pairs_within(band: DataFrame) -> DataFrame:
     )
 
 
+def _candidate_pairs(
+    band: DataFrame, store_band: DataFrame | None
+) -> DataFrame:
+    """Candidate pairs of a verified micro-batch: within the batch, and
+    across batches with the earlier (store) doc as doc_id and this
+    batch's doc as doc_id2 — the only droppable side."""
+    pairs = _band_pairs_within(band)
+    if store_band is None:
+        return pairs
+    cross = band.join(
+        store_band.withColumnRenamed("doc_id", "doc_id_prev"),
+        ["lang", "band", "band_key"],
+    ).select(
+        F.col("doc_id_prev").alias("doc_id"), F.col("doc_id").alias("doc_id2")
+    )
+    return pairs.unionByName(cross.distinct())
+
+
 def verified_ingest_batch(
     batch_df: DataFrame,
     sink_path: str,
@@ -849,7 +922,6 @@ def verified_ingest_batch(
     idempotent dirs; the store reads exclude this batch id, so a
     replayed batch never verifies against its own first attempt."""
     spark = batch_df.sparkSession
-    keys = ["lang", "band", "band_key"]
     # ONE shingle -> per-char term-hash pass per batch (the dominant
     # per-batch map cost): band rows AND the verify arrays both derive
     # from the persisted dtok instead of re-running the chain each —
@@ -862,23 +934,9 @@ def verified_ingest_batch(
         store_band = _store_view(
             spark, bucket_store_path(sink_path), batch_id
         )
-        pairs = _band_pairs_within(band)
+        pairs = _candidate_pairs(band, store_band)
         tok_lookup = toks
         if store_band is not None:
-            # cross-batch candidates: earlier doc (store) is doc_id,
-            # this batch's doc is doc_id2 — the only droppable side
-            cross = (
-                band.join(
-                    store_band.withColumnRenamed("doc_id", "doc_id_prev"),
-                    keys,
-                )
-                .select(
-                    F.col("doc_id_prev").alias("doc_id"),
-                    F.col("doc_id").alias("doc_id2"),
-                )
-                .distinct()
-            )
-            pairs = pairs.unionByName(cross)
             # a bucket store without matching shingle coverage (sink
             # previously fed by a non-verified mode) must fail loudly,
             # not silently pass near-dups of unverifiable docs
@@ -934,12 +992,7 @@ def ingest_with_verified_neardup(
             batch_df, sink_path, batch_id, compact_every=compact_every
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_verified_neardup_keep(docs: DataFrame) -> DataFrame:
@@ -1015,7 +1068,6 @@ def verified_embedding_ingest_batch(
     batch id, so a replayed batch never verifies against its own
     first attempt."""
     spark = batch_df.sparkSession
-    keys = ["lang", "band", "band_key"]
     band = embedding_band_rows(batch_df).persist()
     vecs = batch_df.select(
         F.col("vec_id").alias("doc_id"), "embedding"
@@ -1024,21 +1076,9 @@ def verified_embedding_ingest_batch(
         store_band = _store_view(
             spark, bucket_store_path(sink_path), batch_id
         )
-        pairs = _band_pairs_within(band)
+        pairs = _candidate_pairs(band, store_band)
         vec_lookup = vecs
         if store_band is not None:
-            cross = (
-                band.join(
-                    store_band.withColumnRenamed("doc_id", "doc_id_prev"),
-                    keys,
-                )
-                .select(
-                    F.col("doc_id_prev").alias("doc_id"),
-                    F.col("doc_id").alias("doc_id2"),
-                )
-                .distinct()
-            )
-            pairs = pairs.unionByName(cross)
             _require_payload_coverage(
                 sink_path, VECTORS_DIRNAME, batch_id, "embedding-verified"
             )
@@ -1087,12 +1127,7 @@ def ingest_with_verified_embedding_neardup(
             batch_df, sink_path, batch_id, compact_every=compact_every
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_verified_embedding_keep(emb: DataFrame) -> DataFrame:

@@ -148,6 +148,20 @@ def test_incremental_candidates_skip_prior_pairs(spark):
     assert {(r["doc_id"], r["doc_id2"]) for r in cand_split} == {
         (r["doc_id"], r["doc_id2"]) for r in cand
     }
+    # a duplicated band row lists a doc twice in its bucket; neither
+    # form may pair it with itself, and the pin still holds
+    band_dup = band_all.unionByName(band_all.filter(F.col("doc_id") == 10))
+    pairs = {
+        form: {(r["doc_id"], r["doc_id2"]) for r in cands.collect()}
+        for form, cands in (
+            ("vs", D.lsh_candidate_pairs_vs(
+                band_dup.filter(F.col("doc_id") >= thr), band_dup
+            )),
+            ("split", D.lsh_candidate_pairs_split(band_dup, thr)),
+        )
+    }
+    assert pairs["split"] == pairs["vs"]
+    assert all(a != b for a, b in pairs["split"])
 
 
 def test_incremental_prior_is_never_dropped(spark):

@@ -658,6 +658,8 @@ def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     expected = checksum(batch_neardup_keep(docs))
     assert expected[0] < docs.count()  # the rule bites on this corpus
     assert checksum(read_sink(spark, sink)) == expected
+    # the micro-batch is read once: the reported input is the replay
+    assert sum(p["numInputRows"] for p in q.recentProgress) == docs.count()
 
     q2 = ingest_with_neardup(
         read_replay_stream(spark, replay, docs.schema), sink, ckpt
@@ -1402,6 +1404,71 @@ def test_streaming_full_curation_equals_batch(spark, tmp_path):
     assert read_sink(spark, contam_store_path(sink)).count() > 0
     for store in (contam_store_path(sink), bucket_store_path(sink)):
         assert sink_snapshot(store).current_version() is not None
+    _assert_curation_stores(spark, sink, docs, bench, "shingles")
+
+
+def _reference_verdicts(docs, bench, mode):
+    """(doc_id, bench_doc, shared) veto verdicts, stated independently
+    of the trigger body: match rows per (doc, bench doc) pair, self
+    pairs dropped, threshold, then each doc's strongest match by a
+    ranked window (ties to the smallest bench_doc)."""
+    from etl_wikipedia_updates_spark.operators import text as T
+    from etl_wikipedia_updates_spark.plans.northstar import (
+        CONTAM_MIN_SHARED,
+        _span_occurrences,
+    )
+    from etl_wikipedia_updates_spark.streaming.decontam import (
+        bench_shingles,
+        bench_spans,
+    )
+
+    if mode == "shingles":
+        rows = T.doc_shingles(docs).join(
+            bench_shingles(bench), ["lang", "term"]
+        )
+        min_shared = CONTAM_MIN_SHARED
+    else:
+        rows = _span_occurrences(docs).join(bench_spans(bench), "h")
+        min_shared = 1
+    counts = (
+        rows.filter(F.col("doc_id") != F.col("bench_doc"))
+        .groupBy("doc_id", "bench_doc")
+        .agg(F.count("*").alias("shared"))
+        .filter(F.col("shared") >= min_shared)
+    )
+    w = W.partitionBy("doc_id").orderBy(
+        F.col("shared").desc(), F.col("bench_doc")
+    )
+    return (
+        counts.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("doc_id", "bench_doc", "shared")
+    )
+
+
+def _assert_curation_stores(spark, sink, docs, bench, mode):
+    """The full-curation stores, row for row: the quarantine holds the
+    veto verdicts over the quality-kept docs, and the bucket store the
+    band rows of the clean docs (kept and not vetoed)."""
+    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
+    from etl_wikipedia_updates_spark.streaming.decontam import (
+        contam_store_path,
+    )
+    from etl_wikipedia_updates_spark.streaming.neardup import (
+        bucket_store_path,
+        doc_band_rows,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    kept = quality_keep(docs)
+    verdicts = _reference_verdicts(kept, bench, mode)
+    clean = kept.join(verdicts.select("doc_id"), "doc_id", "left_anti")
+    assert rows(read_sink(spark, contam_store_path(sink))) == rows(verdicts)
+    assert rows(read_sink(spark, bucket_store_path(sink))) == rows(
+        doc_band_rows(clean).select("doc_id", "lang", "band", "band_key")
+    )
 
 
 def test_decontam_external_bench_id_collision_not_bypassed(spark):
@@ -1844,6 +1911,7 @@ def test_streaming_full_curation_span_mode_equals_batch(spark, tmp_path):
     assert quarantine.filter(F.col("shared") < 1).count() == 0
     span_vetoed = {r["doc_id"] for r in quarantine.select("doc_id").collect()}
     assert span_vetoed  # the span veto bites on this corpus
+    _assert_curation_stores(spark, sink, docs, bench, "spans")
     # and picks a different keep-set than the shingle rule — the dial
     # is doing something
     shingle_kept = batch_full_curation_keep(docs, bench)

@@ -20,6 +20,7 @@ curate modes was invisible round-over-round):
   `span_decontam` rules, streamed)
 - curate: the one-pass quality+decontam+neardup curation ingest
 
+One untimed warm-up replay runs before the first timed measurement.
 Prints one JSON line per measurement. With ``--out PATH`` it also
 writes the combined object to PATH — the per-round regression
 artifact (STREAMBENCH_r{N}.json at the repo root, r17 verdict #4:
@@ -187,31 +188,6 @@ def main() -> None:
     spark = get_spark(app_name="stream_bench", shuffle_partitions=8)
     events = load_table(spark, sf_dir, "events")
     n_events = events.count()
-    with tempfile.TemporaryDirectory() as tmp:
-        replay = f"{tmp}/replay"
-        write_replay_splits(events, replay, N_SPLITS, "ts")
-        stream = read_replay_stream(spark, replay, events.schema)
-        t0 = time.perf_counter()
-        q = ingest_with_retention(stream, f"{tmp}/sink", f"{tmp}/ckpt")
-        _await_or_die(q, "stream_ingest")
-        elapsed = time.perf_counter() - t0
-        sunk = read_sink(spark, f"{tmp}/sink").count()
-    ev_s = sunk / elapsed
-    emit(
-        {
-            "metric": "stream_ingest_events_per_sec",
-            "value": round(ev_s, 1),
-            "unit": "events/sec",
-            "events": sunk,
-            "expected_events": n_events,
-            "elapsed_sec": round(elapsed, 2),
-            "micro_batches": N_SPLITS,
-            "x_wikimedia": round(ev_s / WIKIMEDIA_EV_S, 1),
-            "meets_100x_bar": ev_s >= 100 * WIKIMEDIA_EV_S,
-            "sf": sf_dir,
-        }
-    )
-
     frames = {
         name: load_table(spark, sf_dir, name)
         for name in {MODE_SPECS[m][0] for m in selected}
@@ -243,6 +219,41 @@ def main() -> None:
             s, bench, sink, ck
         ),
     }
+    # One untimed replay first (the first selected mode, else the
+    # events ingest), so JVM start-up and first-use class loading land
+    # on no timed measurement.
+    if selected:
+        table, key, _note = MODE_SPECS[selected[0]]
+        _replay_frame(
+            spark, frames[table], key, starters[selected[0]], "warm-up"
+        )
+    else:
+        _replay_frame(spark, events, "ts", ingest_with_retention, "warm-up")
+    with tempfile.TemporaryDirectory() as tmp:
+        replay = f"{tmp}/replay"
+        write_replay_splits(events, replay, N_SPLITS, "ts")
+        stream = read_replay_stream(spark, replay, events.schema)
+        t0 = time.perf_counter()
+        q = ingest_with_retention(stream, f"{tmp}/sink", f"{tmp}/ckpt")
+        _await_or_die(q, "stream_ingest")
+        elapsed = time.perf_counter() - t0
+        sunk = read_sink(spark, f"{tmp}/sink").count()
+    ev_s = sunk / elapsed
+    emit(
+        {
+            "metric": "stream_ingest_events_per_sec",
+            "value": round(ev_s, 1),
+            "unit": "events/sec",
+            "events": sunk,
+            "expected_events": n_events,
+            "elapsed_sec": round(elapsed, 2),
+            "micro_batches": N_SPLITS,
+            "x_wikimedia": round(ev_s / WIKIMEDIA_EV_S, 1),
+            "meets_100x_bar": ev_s >= 100 * WIKIMEDIA_EV_S,
+            "sf": sf_dir,
+        }
+    )
+
     for mode in selected:
         table, key, note = MODE_SPECS[mode]
         elapsed, kept = _replay_frame(
