@@ -113,11 +113,8 @@ def cmd_pack(args) -> int:
 
     from pyspark.sql import functions as F
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SEQ_LEN,
-        packed_sequences,
-        seq_pack,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import seq_pack
+    from etl_wikipedia_updates_spark.stages import SEQ_LEN, packed_sequences
     from etl_wikipedia_updates_spark.tables import load_table, spread
 
     if args.seqs_per_file is not None and not args.shard:
@@ -474,9 +471,7 @@ def cmd_dedup_ingest(args) -> int:
         if args.bench:
             bench = spark.read.parquet(args.bench)
         else:
-            from etl_wikipedia_updates_spark.plans.northstar import (
-                CONTAM_BENCH_SOURCE,
-            )
+            from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
 
             bench = load_table(spark, args.sf_dir, "documents").filter(
                 F.col("source") == CONTAM_BENCH_SOURCE
@@ -494,9 +489,7 @@ def cmd_dedup_ingest(args) -> int:
         if args.redact_pii:
             extra["redact_pii"] = True
         if getattr(args, "temperature_mix", False):
-            from etl_wikipedia_updates_spark.plans.northstar import (
-                static_temp_rates,
-            )
+            from etl_wikipedia_updates_spark.stages import static_temp_rates
 
             # stream-static model: rates fit once from the declared
             # static table; the stream only applies the thresholds
@@ -609,47 +602,31 @@ def cmd_maintain(args) -> int:
     one JSON line of what happened."""
     import json
 
+    from etl_wikipedia_updates_spark.streaming.decontam import CONTAM_DIRNAME
     from etl_wikipedia_updates_spark.streaming.ingest import (
         compact_rollup,
         compact_sink,
     )
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        bucket_store_path,
-        compact_bucket_store,
-        compact_shingle_store,
-        compact_vector_store,
-        shingle_store_path,
-        vector_store_path,
+        BUCKETS_DIRNAME,
+        SHINGLES_DIRNAME,
+        VECTORS_DIRNAME,
+        compact_store,
     )
 
     spark = _spark()
     out: dict = {}
     out["sink"] = compact_sink(spark, args.sink, args.target_files)
-    if os.path.isdir(bucket_store_path(args.sink)):
-        folded = compact_bucket_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["bucket_store"] = folded if folded else "nothing to fold"
-    if os.path.isdir(shingle_store_path(args.sink)):
-        folded = compact_shingle_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["shingle_store"] = folded if folded else "nothing to fold"
-    if os.path.isdir(vector_store_path(args.sink)):
-        folded = compact_vector_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["vector_store"] = folded if folded else "nothing to fold"
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        compact_contam_store,
-        contam_store_path,
-    )
-
-    if os.path.isdir(contam_store_path(args.sink)):
-        folded = compact_contam_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["contam_store"] = folded if folded else "nothing to fold"
+    for name, dirname in (
+        ("bucket_store", BUCKETS_DIRNAME),
+        ("shingle_store", SHINGLES_DIRNAME),
+        ("vector_store", VECTORS_DIRNAME),
+        ("contam_store", CONTAM_DIRNAME),
+    ):
+        path = os.path.join(args.sink, dirname)
+        if os.path.isdir(path):
+            folded = compact_store(spark, path, target_files=args.target_files)
+            out[name] = folded if folded else "nothing to fold"
     if args.rollup:
         compact_rollup(spark, args.rollup)
         out["rollup"] = "compacted"

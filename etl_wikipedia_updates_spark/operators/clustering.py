@@ -27,11 +27,12 @@ Determinism (oracle hash-matching):
 
 from __future__ import annotations
 
-from etl_wikipedia_updates_spark.caches import purge_stale
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etl_wikipedia_updates_spark.caches import memo
 
 MEAN_SCALE = 6  # scaled-long mean precision (1e-6) for centroid updates
 
@@ -169,20 +170,11 @@ def init_centroids(emb: DataFrame, k: int) -> list[list[float]]:
     return [[float(x) for x in r.embedding] for r in rows]
 
 
-# (applicationId, dim) -> the constant per-dimension sum aggregate.
-# Column objects are immutable expression handles, safely reused across
-# frames and rounds WITHIN a session (rebuilding one per round costs a
-# py4j expression parse per call) — but they wrap py4j objects owned by
-# a SparkContext, so entries are keyed by applicationId and stale-app
-# entries are purged on insert (a handle reused across a context
-# restart errors).
-_UPDATE_AGG_CACHE: dict[tuple[str, int], Column] = {}
-
-
-def _update_agg(dim: int, app: str) -> Column:
-    cached = _UPDATE_AGG_CACHE.get((app, dim))
-    if cached is not None:
-        return cached
+def _update_agg(dim: int) -> Column:
+    """The constant per-dimension sum aggregate. Column objects are
+    immutable expression handles, safely reused across frames and
+    rounds (rebuilding one per round costs a py4j expression parse per
+    call), so callers memoize it per session (caches.memo)."""
     s = float(10**MEAN_SCALE)
     # try_element_at: NULL (skipped by sum) past the end of a short
     # array under ANY ansi setting — plain element_at errors out under
@@ -195,10 +187,7 @@ def _update_agg(dim: int, app: str) -> Column:
     # one named_struct holding every aggregate = ONE F.expr (a single
     # py4j round trip instead of dim+1 of them — measured ~0.3s of
     # driver time per round at dim=64 the other way).
-    st = F.expr(f"named_struct('n', count(*), {sums})").alias("st")
-    purge_stale(_UPDATE_AGG_CACHE, app)
-    _UPDATE_AGG_CACHE[(app, dim)] = st
-    return st
+    return F.expr(f"named_struct('n', count(*), {sums})").alias("st")
 
 
 def update_centroids(
@@ -218,8 +207,8 @@ def update_centroids(
     # fixture schema and quantize/ANN operators share this contract.
     dim = len(prev[0])
     s = float(10**MEAN_SCALE)
-    app = assigned.sparkSession.sparkContext.applicationId
-    rows = assigned.groupBy("cid").agg(_update_agg(dim, app)).collect()
+    agg = memo(assigned.sparkSession, ("update_agg", dim), lambda: _update_agg(dim))
+    rows = assigned.groupBy("cid").agg(agg).collect()
     cents = [list(c) for c in prev]
     for r in rows:
         n = float(r.st.n)

@@ -27,7 +27,11 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from etl_wikipedia_updates_spark.functions.arrays import dot_product, l2_norm
+from etl_wikipedia_updates_spark.functions.arrays import (
+    dot_product,
+    l2_norm,
+    sql_dot_product,
+)
 from etl_wikipedia_updates_spark.functions.deterministic import det_round
 
 
@@ -226,8 +230,6 @@ def lsh_bucket_col(emb_col_name: str, planes: list[list[float]]):
 
 
 def sql_lsh_bucket(expr: str, planes: list[list[float]]) -> str:
-    from etl_wikipedia_updates_spark.functions.arrays import sql_dot_product
-
     terms = []
     for h, plane in enumerate(planes):
         # 6dp decimal strings: DuckDB's DECIMAL(k,6)->DOUBLE conversion is

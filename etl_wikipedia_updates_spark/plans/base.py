@@ -9,45 +9,14 @@ total ORDER BY, and float outputs must be deterministic — see
 
 from __future__ import annotations
 
-from etl_wikipedia_updates_spark.caches import purge_stale
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_wikipedia_updates_spark.caches import memo
+
 Builder = Callable[[SparkSession, str], DataFrame]
-
-
-def total_order(df: DataFrame, *cols) -> DataFrame:
-    """The contract's total ORDER BY, as a single-partition sort.
-
-    A plain ``orderBy`` plans a range exchange, and computing the range
-    bounds SAMPLES the child — re-executing the entire upstream plan a
-    second time (measured: the final sort nearly doubled the near-dup
-    queries). ``repartition(1)`` is a round-robin exchange (no sampling)
-    and a single partition satisfies the sort's required distribution,
-    so the plan becomes Exchange(1) + in-partition sort. Contract
-    outputs are small (a few rows to ~10^5), so the serial sort is
-    noise. At 100 TB a large *result* would never be globally sorted at
-    all — you write partitioned/sorted files (operators.layout) — so
-    the total order stays a contract artifact, not a scale path.
-
-    Use with ``DataFrame.transform``:
-    ``df.transform(total_order, "k1", "k2")``. Not for orderBy+limit
-    top-k queries — those already compile to TakeOrderedAndProject.
-    """
-    return df.repartition(1).orderBy(*cols)
-
-
-# (applicationId, sf_dir, name) -> built DataFrame. Same rationale as
-# tables._TABLE_CACHE one level up: a DataFrame is an immutable logical
-# plan, so one per (query, session, sf) is safely shared by every
-# consumer and every re-execution — the prepared-statement pattern.
-# Rebuilding a plan costs 0.05-0.35s of py4j/analysis per call
-# (measured ~6s across the 61-query suite). Execution is unaffected:
-# each action still runs the full physical plan. Entries die with the
-# session (new applicationId).
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 @dataclass(frozen=True)
@@ -66,19 +35,12 @@ class DeclaredQuery:
             return self.builder
 
         def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-            app = spark.sparkContext.applicationId
-            key = (app, sf_dir, self.name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                # Purge entries from stopped sessions on insert: their
-                # py4j DataFrame handles are dead weight (and error if
-                # ever reused after a SparkContext restart). One live
-                # session at a time is the process model here, so this
-                # bounds the cache at 61 queries x live sf_dirs.
-                purge_stale(_PLAN_CACHE, app)
-                df = self.builder(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df
+            return memo(
+                spark,
+                ("plan", self.name),
+                lambda: self.builder(spark, sf_dir),
+                sf_dir,
+            )
 
         return build
 

@@ -18,7 +18,7 @@ Determinism and the fit-small pattern (charlm_score's shape):
 - The merge loop runs driver-side in pure Python over that bounded
   table (BPE_MERGES iterations of exact integer pair counts; ties
   break to the lexicographically smallest (a, b) pair) and is memoized
-  per (session, sf_dir) via _memo_model.
+  per (session, sf_dir) via caches.memo.
 - Merge application is a left-to-right fold: scanning tokens once,
   (acc[-1], x) == (a, b) replaces the accumulator tail with a||b.
   One pass per rule is complete — a merged token a||b can never
@@ -65,22 +65,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark.caches import memo
 from etl_wikipedia_updates_spark.functions.deterministic import (
     det_round,
     sql_det_round,
 )
 from etl_wikipedia_updates_spark.operators import text as T
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
 from etl_wikipedia_updates_spark.plans.northstar import (
-    MIX_A,
-    MIX_B,
-    MIX_BUCKETS,
-    _memo_model,
     _seq_pack,
     _source_mix,
     mix_budgets,
     seq_pack_sql_from,
     sql_ubucket,
+)
+from etl_wikipedia_updates_spark.stages import (
+    MIX_A,
+    MIX_B,
+    MIX_BUCKETS,
+    total_order,
 )
 from etl_wikipedia_updates_spark.tables import load_table, spread
 
@@ -561,11 +564,11 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    merges = _memo_model(
+    merges = memo(
         spark,
-        sf_dir,
         "bpe_merges",
         lambda: _fit_from_corpus(docs),
+        sf_dir,
     )
     txt = F.lower(F.col("text"))
     nspaces = F.length(txt) - F.length(
@@ -752,11 +755,11 @@ def seq_pack_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    merges = _memo_model(
+    merges = memo(
         spark,
-        sf_dir,
         "bpe_merges",
         lambda: _fit_from_corpus(docs),
+        sf_dir,
     )
     # width 16 (default) beats 32 here (r15 pairs: 1.125 vs 1.224):
     # the encode-only gain of 32 partitions is outweighed by doubling
@@ -823,18 +826,18 @@ def source_mix_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), 32).filter(
         F.col("text").isNotNull()
     )
-    merges = _memo_model(
+    merges = memo(
         spark,
-        sf_dir,
         "bpe_merges",
         lambda: _fit_from_corpus(docs),
+        sf_dir,
     )
     per_doc = per_doc_subwords(docs, merges, alias="n_chars")
-    budget_rows = _memo_model(
+    budget_rows = memo(
         spark,
-        sf_dir,
         "bpe_mix_budgets",
         lambda: mix_budgets(per_doc),
+        sf_dir,
     )
     return (
         _source_mix(per_doc, budget_rows)
@@ -902,11 +905,11 @@ BPE_QUERIES: list[DeclaredQuery] = [
         seq_pack_subword,
         SEQ_PACK_SUBWORD_SQL,
         "sequence-packing audit denominated in BPE subword tokens",
-        # NOT eager (r16): the fit is _memo_model-memoized, so an
+        # NOT eager (r16): the fit is memoized (caches.memo), so an
         # eager rebuild repays ONLY the ~0.25s/run construction +
         # analysis of the replace-chain Column tree (the r15 verdict's
         # decomposition of the 2.76x pair) — the plan is a pure
-        # function of (session, sf_dir) and belongs in _PLAN_CACHE
+        # function of (session, sf_dir) and belongs in the plan memo
         # like every other steady-state builder. A cold session still
         # pays the fit inside the first build.
     ),

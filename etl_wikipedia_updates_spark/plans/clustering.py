@@ -15,6 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark.caches import memo
+from etl_wikipedia_updates_spark.functions.arrays import (
+    sql_cosine_similarity,
+    sql_l2_norm,
+)
 from etl_wikipedia_updates_spark.functions.deterministic import (
     dec_sum,
     det_round,
@@ -23,39 +28,36 @@ from etl_wikipedia_updates_spark.functions.deterministic import (
 )
 from etl_wikipedia_updates_spark.operators import clustering as C
 from etl_wikipedia_updates_spark.operators import similarity as S
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
+from etl_wikipedia_updates_spark.stages import (
+    KMEANS_ITERS,
+    KMEANS_K,
+    PQ_KS,
+    PQ_M,
+    PQ_SUB,
+    SEMDEDUP_TAU,
+    _NRM_SQL,
+    _d2_array_expr,
+    _pq_slice,
+    ne_sql,
+    total_order,
+)
 from etl_wikipedia_updates_spark.tables import load_table, spread
-from etl_wikipedia_updates_spark.caches import purge_stale
-
-KMEANS_K = 8
-# 2 Lloyd's rounds (was 3): the fit is a fixed-point ITERATION BUDGET,
-# not a convergence loop — the oracle CTE chain below is generated from
-# this constant, so Spark and DuckDB always move in lockstep. Each
-# round is one sequential driver job (~0.2-0.3s local floor regardless
-# of data size; the per-job work is map-side), so the round count is
-# the fit's latency knob.
-KMEANS_ITERS = 2
-
-# (applicationId, sf_dir, k, iters) -> fitted centroid matrix. The fit
-# is bit-deterministic in its inputs (init = k lowest vec_ids, exact
-# scaled-long means — see operators/clustering.py), so kmeans_clusters
-# and ann_kmeans, which train on the IDENTICAL frame, share one fit:
-# train-once-serve-many, the same contract as a model registry. Driver
-# memory is k x dim floats per entry; entries from stopped sessions are
-# purged on insert.
-_FIT_CACHE: dict[tuple[str, str, int, int], list[list[float]]] = {}
 
 
 def _fit_centroids(emb: DataFrame, sf_dir: str) -> list[list[float]]:
-    spark = emb.sparkSession
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, KMEANS_K, KMEANS_ITERS)
-    cents = _FIT_CACHE.get(key)
-    if cents is None:
-        purge_stale(_FIT_CACHE, app)
-        cents = C.kmeans_fit(emb, KMEANS_K, KMEANS_ITERS)
-        _FIT_CACHE[key] = cents
-    return cents
+    """The k-means centroid matrix, memoized per sf_dir. The fit is
+    bit-deterministic in its inputs (init = k lowest vec_ids, exact
+    scaled-long means — see operators/clustering.py), so
+    kmeans_clusters and ann_kmeans, which train on the IDENTICAL
+    frame, share one fit: train-once-serve-many, the same contract as
+    a model registry."""
+    return memo(
+        emb.sparkSession,
+        ("kmeans", KMEANS_K, KMEANS_ITERS),
+        lambda: C.kmeans_fit(emb, KMEANS_K, KMEANS_ITERS),
+        sf_dir,
+    )
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,14 +165,12 @@ ANN_KMEANS_K = 3
 ANN_KMEANS_N_QUERIES = 5
 
 
-# The double-cast embedding and its L2 norm, as SQL text — the exact
-# op sequence of functions.arrays.l2_norm (cast per element, square,
-# sequential left fold from a 0.0 seed, sqrt), so cos_sim stays
-# bit-identical to sql_cosine_similarity in the oracle.
+# The double-cast embedding as SQL text; with its L2 norm
+# (stages._NRM_SQL) the exact op sequence of functions.arrays.l2_norm
+# (cast per element, square, sequential left fold from a 0.0 seed,
+# sqrt), so cos_sim stays bit-identical to sql_cosine_similarity in
+# the oracle.
 _E_SQL = "transform(embedding, x -> CAST(x AS DOUBLE))"
-_NRM_SQL = (
-    "sqrt(aggregate(transform({e}, x -> x * x), 0.0D, (acc, v) -> acc + v))"
-)
 
 
 def ann_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,8 +182,6 @@ def ann_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     time per build vs ~0.2s for the string form — same physical plan
     (broadcast hash probe join + ranked window), same bit-exact
     arithmetic (functions.arrays op sequence, inlined as SQL text)."""
-    from etl_wikipedia_updates_spark.functions.deterministic import det_round
-
     emb_raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -238,8 +236,6 @@ def ann_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_kmeans_sql(k: int, iters: int) -> str:
-    from etl_wikipedia_updates_spark.functions.arrays import sql_cosine_similarity
-
     cos = sql_cosine_similarity("q.qe", "e.embedding")
     return (
         "WITH "
@@ -278,9 +274,6 @@ ANN_KMEANS_SQL = _ann_kmeans_sql(KMEANS_K, KMEANS_ITERS)
 # (and composes with IVF cells for sublinearity; here it scans the full
 # corpus, PQ's standalone role). Overfetched shortlist re-scored with
 # exact float cosine, the ann_sq8 contract.
-PQ_M = 4  # subspaces (64-dim embedding -> 16-dim subvectors)
-PQ_SUB = 16
-PQ_KS = 16  # centroids per subspace codebook
 PQ_TOPK = 3
 PQ_N_QUERIES = 5
 # Overfetch dial, swept at sf0.1 (normalized codes, k=3): 12 -> 0.40
@@ -292,75 +285,22 @@ PQ_N_QUERIES = 5
 # shortlist than the corpus.
 PQ_OVERFETCH = 48
 
-# (applicationId, sf_dir, subspace) -> codebook. Same train-once
-# contract as _FIT_CACHE; keyed per subspace because all four books
-# share (k, iters).
-_PQ_FIT_CACHE: dict[tuple[str, str, int], list[list[float]]] = {}
-
-# PQ encodes the UNIT-NORMALIZED vectors: on the unit sphere L2 order
-# equals cosine order, so the ADC shortlist ranks by the same metric
-# the exact rescore uses (unnormalized PQ measured recall@3 0.40 at
-# sf0.1, plateauing at 0.73 with any overfetch — the residual loss was
-# pure L2-vs-cosine rank disagreement; normalized PQ recovers it, see
-# SCALE.md). The norm is bound ONCE per row through a 1-element struct
-# array (s.n below): referencing a computed scalar from inside the
-# divide lambda would re-inline its fold per ELEMENT (the
-# shingles_col/Catalyst no-CSE-into-lambdas pitfall, O(dim^2) per row).
-def ne_sql(col: str = "embedding") -> str:
-    """The unit-normalize expression over an arbitrary array column
-    (vector_index's PQ storage normalizes q_embedding through this).
-
-    The norm is floored at 1e-300 (greatest): a zero vector would
-    otherwise divide 0/0 into NaN subvectors, and NaN ordering inside
-    the struct-min / window ranks is a Spark-vs-DuckDB divergence
-    hazard. With the floor a zero vector normalizes to the zero vector
-    (0/1e-300 == 0 exactly) — deterministic, identical cross-engine,
-    and a bit-level no-op for every nonzero vector (any representable
-    nonzero norm exceeds the floor). The DuckDB twin in _ann_pq_sql
-    applies the same floor."""
-    e = f"transform({col}, x -> CAST(x AS DOUBLE))"
-    return (
-        "element_at(transform(array(named_struct('t', {e}, "
-        "'n', greatest({n}, 1e-300D))), "
-        "s -> transform(s.t, x -> x / s.n)), 1)"
-    ).format(e=e, n=_NRM_SQL.format(e=e))
-
 
 _NE_SQL = ne_sql()
 
 
-def _pq_slice(m: int, col: str = "embedding") -> str:
-    return f"slice({col}, {m * PQ_SUB + 1}, {PQ_SUB})"
-
-
 def _fit_codebooks(emb: DataFrame, sf_dir: str) -> list[list[list[float]]]:
-    spark = emb.sparkSession
-    app = spark.sparkContext.applicationId
-    books = []
-    for m in range(PQ_M):
-        key = (app, sf_dir, m)
-        cents = _PQ_FIT_CACHE.get(key)
-        if cents is None:
-            purge_stale(_PQ_FIT_CACHE, app)
-            sub = emb.selectExpr(
-                "vec_id", f"{_pq_slice(m, _NE_SQL)} AS embedding"
-            )
-            cents = C.kmeans_fit(sub, PQ_KS, KMEANS_ITERS)
-            _PQ_FIT_CACHE[key] = cents
-        books.append(cents)
-    return books
+    """One k-means codebook per subspace, each memoized per sf_dir
+    (all books share (k, iters))."""
 
+    def fit(m: int) -> list[list[float]]:
+        sub = emb.selectExpr("vec_id", f"{_pq_slice(m, _NE_SQL)} AS embedding")
+        return C.kmeans_fit(sub, PQ_KS, KMEANS_ITERS)
 
-def _d2_array_expr(cents: list[list[float]], col: str) -> str:
-    """Array of exact squared-L2 distances from ``col`` to every
-    codebook centroid — the query-side ADC table for one subspace
-    (same fold sequence as _dist_structs_expr, values only)."""
-    return (
-        f"transform({C._matrix_sql(cents)}, c -> "
-        f"aggregate(zip_with({col}, c, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "0.0D, (acc, v) -> acc + v))"
-    )
+    return [
+        memo(emb.sparkSession, ("pq_codebook", m), lambda m=m: fit(m), sf_dir)
+        for m in range(PQ_M)
+    ]
 
 
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,12 +393,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_pq_sql(iters: int) -> str:
-    from etl_wikipedia_updates_spark.functions.arrays import (
-        sql_cosine_similarity,
-    )
-
-    from etl_wikipedia_updates_spark.functions.arrays import sql_l2_norm
-
     # unit-normalize exactly as Spark's _NE_SQL: per element
     # CAST-to-double divided by the full-vector norm (identical IEEE
     # op sequence -> identical doubles), with the same 1e-300
@@ -547,7 +481,6 @@ ANN_PQ_SQL = _ann_pq_sql(KMEANS_ITERS)
 # threshold. The threshold matches cosine_neardup's, but over LEARNED
 # cells instead of the fixture's label column — the label-free
 # composition a real curation run needs.
-SEMDEDUP_TAU = 0.35
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,10 +550,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_dedup_sql(k: int, iters: int) -> str:
-    from etl_wikipedia_updates_spark.functions.arrays import (
-        sql_cosine_similarity,
-    )
-
     cos = sql_cosine_similarity("a.embedding", "b.embedding")
     return (
         "WITH "

@@ -45,12 +45,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark.caches import memo
 from etl_wikipedia_updates_spark.operators import text as T
 from etl_wikipedia_updates_spark.operators.text import (
     HASH_P,
     TERM_HASH_BASE,
 )
 
+from etl_wikipedia_updates_spark.functions.arrays import l2_norm, sql_l2_norm
 from etl_wikipedia_updates_spark.functions.deterministic import (
     dec_sum,
     det_round,
@@ -60,19 +62,34 @@ from etl_wikipedia_updates_spark.functions.deterministic import (
 from etl_wikipedia_updates_spark.operators.quantiles import (
     exact_quantiles_refined,
 )
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
 from etl_wikipedia_updates_spark.plans.northstar import (
-    CONTAM_BENCH_SOURCE,
-    TEMP_A,
-    TEMP_ALPHA,  # noqa: F401 — the documented knob, re-exported
-    TEMP_B,
-    TEMP_BUCKETS,
-    _memo_model,
+    _REP_KEEP_COND,
+    _REP_PER_DOC_CTES,
     sql_temp_rate_ppm,
     sql_ubucket,
+)
+from etl_wikipedia_updates_spark.stages import (
+    CONTAM_BENCH_SOURCE,
+    NGQ_BUCKETS,
+    NGQ_HI_PPM,
+    N_SHARDS,
+    PII_EMAIL,
+    PII_IPV4,
+    PII_PHONE,
+    SHARD_A,
+    SHARD_B,
+    TEMP_A,
+    TEMP_B,
+    TEMP_BUCKETS,
+    fit_ngram_weights,
+    manifest_of,
+    ngram_doc_scores,
+    pii_redacted_col,
+    shard_assign_col,
     temp_keep_cond,
     temp_rates,
-    ubucket_col,
+    total_order,
 )
 from etl_wikipedia_updates_spark.tables import load_table, spread
 
@@ -307,11 +324,11 @@ def charlm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    counts = _memo_model(
+    counts = memo(
         spark,
-        sf_dir,
         "charlm_bigram_counts",
         lambda: _fit_bigram_counts(_doc_bigrams(spread(docs))),
+        sf_dir,
     )
     chars, table, ctx, vs = _charlm_table(counts)
     if chars and len(chars) <= CHARLM_DENSE_MAX:
@@ -374,10 +391,10 @@ def _charlm_score_dense(
                     # ERRORS on 0 but silently WRAPS on negatives —
                     # mis-scoring with no signal. Route any rank-0 to
                     # index 0 so a model/corpus desync (stale
-                    # _memo_model after a data rewrite) fails loudly
-                    # instead: element_at(_, 0) throws on both ANSI
-                    # settings. Unreachable while model and corpus are
-                    # in sync (the memo keys on app+sf_dir).
+                    # model) fails loudly instead: element_at(_, 0)
+                    # throws on both ANSI settings. Unreachable while
+                    # model and corpus are in sync (the memo refits
+                    # when a file under sf_dir changes).
                     lambda a, b: F.element_at(
                         tbl,
                         F.when(
@@ -528,11 +545,11 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit_docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    counts = _memo_model(
+    counts = memo(
         spark,
-        sf_dir,
         "charlm_bigram_counts",
         lambda: _fit_bigram_counts(_doc_bigrams(spread(fit_docs))),
+        sf_dir,
     )
     chars, table, ctx, vs = _charlm_table(counts)
     base = spread(
@@ -637,71 +654,6 @@ FROM b GROUP BY lang, bucket ORDER BY lang, bucket
 
 
 # --- shard_manifest: deterministic output sharding + manifest -----------------
-N_SHARDS = 16
-SHARD_A = 1_664_525  # Numerical Recipes LCG — public constants,
-SHARD_B = 1_013_904_223  # a third stream uncorrelated with split/mix
-
-
-def shard_assign_col(n_shards: int = N_SHARDS):
-    """The writer's repartition key: stateless per-row integer math —
-    any cluster size reproduces the same doc -> shard assignment.
-    ``n_shards`` is THE scale dial: the one-file-per-shard layout
-    means shard count == write parallelism == file size divisor, so a
-    100 TB release raises it (e.g. 10k shards of ~10 GB) while the
-    registered shard_manifest query pins N_SHARDS=16 for the oracle."""
-    return ubucket_col(SHARD_A, SHARD_B, n_shards)
-
-
-def manifest_of(docs: DataFrame) -> DataFrame:
-    """Per-shard manifest over a (doc_id, source, n_chars, shard)
-    frame — shared verbatim by the planning query (shard_manifest) and
-    the post-write verifier (release.verify_sharded recomputes THIS
-    aggregation from the files the writer produced), so the plan and
-    the audit can never diverge."""
-    shards = docs.groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars_total"),
-        F.sum("doc_id").alias("id_checksum"),
-        F.countDistinct("source").alias("n_sources"),
-    )
-    # Corpus totals as window sums over the POST-aggregation shards
-    # frame (N_SHARDS rows, catalog-bounded — allowlisted in
-    # explain_audit), not docs.agg(...) crossJoined in: the agg form
-    # plans the docs subtree twice (r19's temp_rates lesson, applied
-    # here by the r19 verdict). Equivalence: shard assignment is total
-    # (stateless integer math on doc_id), so sum(n_docs) over shards ==
-    # count(*) over docs, and sum/ignore-NULL of the per-shard sums ==
-    # the global sums; an empty docs frame is empty either way (the
-    # old crossJoin of an empty left side was also empty).
-    totals_w = W.partitionBy()
-    return (
-        shards.withColumn(
-            "total_docs", F.sum("n_docs").over(totals_w)
-        )
-        .withColumn(
-            "total_chars", F.sum("n_chars_total").over(totals_w)
-        )
-        .select(
-            "shard",
-            "n_docs",
-            F.col("n_chars_total").cast("bigint").alias("n_chars_total"),
-            F.col("id_checksum").cast("bigint").alias("id_checksum"),
-            "n_sources",
-            det_round(
-                F.col("n_docs").cast("double")
-                / F.col("total_docs").cast("double"),
-                6,
-            ).alias("doc_share"),
-            det_round(
-                F.col("n_chars_total").cast("double")
-                / F.col("total_chars").cast("double"),
-                6,
-            ).alias("char_share"),
-        )
-        .transform(total_order, "shard")
-    )
-
-
 def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every doc to one of N_SHARDS output shards by the
     universal hash and emit the per-shard manifest: doc/char budgets,
@@ -747,23 +699,6 @@ FROM s CROSS JOIN t ORDER BY shard
 
 
 # --- pii_scrub: PII detection + redaction audit -------------------------------
-# The standard curation stage the fixture corpus happens not to need
-# (synthetic lorem text carries no PII — the per-source rows are
-# all-zero there) but a web corpus always does; the regex semantics are
-# pinned by tests/test_corpus.py over a fixture that DOES carry PII.
-# Patterns live in the Java-regex/RE2 COMMON SUBSET (character classes,
-# bounded quantifiers, \b, \d — no backreferences, no lookaround), so
-# Spark and DuckDB match identically; parity over emails / IPs / phone
-# forms is probed in the test. Spark-side patterns go through the
-# Column API (F.lit), never an F.expr SQL literal — Spark SQL string
-# literals eat backslashes, DuckDB's don't, and a pattern embedded in
-# both dialects' source text is exactly how the engines drift apart.
-PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-PII_PHONE = r"\+\d{1,3}[ -]?\d{6,12}"  # E.164-ish: +CC then 6-12 digits
-_PII_TAGS = [(PII_EMAIL, "<EMAIL>"), (PII_IPV4, "<IP>"), (PII_PHONE, "<PHONE>")]
-
-
 def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source PII audit: match counts per class, flagged docs, and
     the redacted-text length checksum (proves the REPLACEMENT, not
@@ -836,38 +771,6 @@ SELECT source, COUNT(*) AS n_docs,
   CAST(SUM(red_len) AS BIGINT) AS redacted_len_sum
 FROM per_doc GROUP BY source ORDER BY source
 """
-
-
-def pii_redacted_col(col: str) -> "F.Column":
-    """THE redaction expression — every PII match replaced by its
-    class tag, in _PII_TAGS order. The single construction point for
-    pii_scrub (audit), pii_redact (applied transform) and therefore
-    the streaming curation stage: the audited chain and the applied
-    chain are one object, not two copies."""
-    red = F.col(col)
-    for pat, tag in _PII_TAGS:
-        red = F.regexp_replace(red, F.lit(pat), F.lit(tag))
-    return red
-
-
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """THE redaction transform: every PII match replaced by its class
-    tag, n_chars refreshed when present. Shared by the pii_scrub audit
-    (same pii_redacted_col chain) and the streaming curation ingest's
-    optional stage 0 (streaming/decontam.py, redact_pii=True) so the
-    audited expression and the applied expression can never diverge.
-    Stateless map-side projection — streams under any batching; NULL
-    text stays NULL (regexp_replace of NULL), its n_chars becomes 0
-    (the fixture convention)."""
-    out = docs.withColumn(text_col, pii_redacted_col(text_col))
-    if "n_chars" in docs.columns:
-        out = out.withColumn(
-            "n_chars",
-            F.coalesce(F.length(text_col), F.lit(0)).cast(
-                docs.schema["n_chars"].dataType
-            ),
-        )
-    return out
 
 
 # --- distinct_kmv: deterministic bottom-k (KMV) distinct sketch ---------------
@@ -1169,8 +1072,6 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions.arrays fold — identical sequence on both engines) + one
     |labels|-key agg; norms cross the oracle hash through the standard
     dec_sum/det_round pins, min/max are order-free."""
-    from etl_wikipedia_updates_spark.functions.arrays import l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "label",
         F.size("embedding").alias("dim"),
@@ -1192,8 +1093,6 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_stats_sql() -> str:
-    from etl_wikipedia_updates_spark.functions.arrays import sql_l2_norm
-
     return f"""
 WITH e AS (
   SELECT label, len(embedding) AS dim,
@@ -1213,149 +1112,6 @@ EMBEDDING_STATS_SQL = _embedding_stats_sql()
 
 
 # --- ngram_quality: hashed-n-gram quality classifier ---------------------------
-# The fastText-style linear quality classifier (Joulin et al. 2016 bag
-# of hashed n-gram features; the CCNet/GPT-3-style "quality classifier"
-# companion to charlm_score's perplexity signal): word-bigram shingles
-# hash into a fixed feature space, each bucket learns a keep-affinity
-# weight from a weak label, and a document scores as the mean weight of
-# its features. Everything is corpus-fit and label-self-supervised: the
-# weak label is the Gopher repetition verdict (plans.northstar's
-# _rep_keep_cond — a map-side expression since r14), the standard
-# bootstrap when no human labels exist.
-#
-# Determinism: weights are integer ppm (floor(keep_grams * 1e6 /
-# total_grams) via integer division — Spark `div`, DuckDB `//`, both
-# truncating on non-negatives), scores are integer ppm means — zero
-# libm, zero float divisions across the oracle hash.
-#
-# Scale shape (r15 replan — the r14 shape persisted the exploded
-# per-gram stream and ran a 5-barrier fit/join/score ladder; the
-# barrier decomposition showed each stage paying the fixed per-job
-# floor while the actual compute measured ~0.05s): the "fit" is ONE
-# job — gram explode onto the FIXED key space with map-side partials,
-# so at most NGQ_BUCKETS x partitions rows shuffle — whose 4096-row
-# result is COLLECTED (bounded-model state, the charlm charset² /
-# lang_id top-terms pattern) and re-bound as an array literal; scoring
-# is then a PURE MAP-SIDE fold over each doc's shingle array (weight
-# lookup by element_at into the folded constant), so the score pass
-# has no join, no explode, and no shuffle before the consumer's own
-# aggregation. Nothing persists — the advice-flagged corpus x bigrams
-# cache is gone; the only retained state is the 4096-int weight list.
-NGQ_BUCKETS = 4096
-NGQ_HI_PPM = 500_000  # "leans keep": mean bucket affinity above 50%
-
-
-def fit_ngram_weights(docs: DataFrame) -> list[int]:
-    """Fit the classifier: the per-bucket keep-affinity weights (ppm)
-    as a plain NGQ_BUCKETS-long integer list — ONE job (gram explode
-    with map-side partials onto the fixed bucket space, collect).
-
-    Bounded-model argument for the collect: the key space is the
-    FIXED 4096-bucket feature space, independent of corpus size or
-    vocabulary — exactly the charlm charset²-counts / lang_id
-    top-terms pattern. Buckets no corpus gram hashes into keep weight
-    0; they are unreachable by any scorer fed the same corpus (its
-    gram stream is the fit's gram stream), and a cross-corpus caller
-    scores an unseen-bucket gram as 0 ("no keep evidence")."""
-    from etl_wikipedia_updates_spark.plans.northstar import rep_keep_col
-
-    # The label rides INSIDE the exploded values: Catalyst pulls a
-    # generator-independent projection ABOVE the Generate, which would
-    # re-run the whole repetition fold once per GRAM row (measured 13x
-    # before this shape); packing (g, keep) structs per doc evaluates
-    # the label once and replicates it as a VALUE.
-    pairs = F.element_at(
-        F.transform(
-            F.array(
-                F.struct(
-                    rep_keep_col().cast("int").alias("ks"),
-                    T.shingles_col(k=2).alias("sh"),
-                )
-            ),
-            lambda s: F.transform(
-                s["sh"],
-                lambda g: F.struct(g.alias("g"), s["ks"].alias("keep")),
-            ),
-        ),
-        1,
-    )
-    rows = (
-        docs.select(F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.keep").alias("keep"),
-            (T.term_hash_fn(F.col("p.g")) % NGQ_BUCKETS).alias("b"),
-        )
-        .groupBy("b")
-        .agg(
-            F.expr("sum(keep) * 1000000 div count(*)")
-            .cast("bigint")
-            .alias("w_ppm")
-        )
-        .collect()
-    )
-    weights = [0] * NGQ_BUCKETS
-    for r in rows:
-        weights[r["b"]] = r["w_ppm"]
-    return weights
-
-
-def ngram_score_sql(weights: list[int]) -> str:
-    """The map-side scorer as ONE Spark-SQL text (single parse — the
-    doc_nsub_col plan-build lesson; the Column-lambda form of the same
-    fold measured ~0.3s of py4j per build): mean fitted bucket weight
-    over the doc's distinct word-bigram shingles, NULL when the doc
-    has no bigram features. The weight table is inlined as a 4096-int
-    array literal (constant-folded once by Catalyst) and each gram
-    looks its weight up via element_at after the shared term-hash
-    fold — no join, no explode, no shuffle. The token array and the
-    shingle array are each bound ONCE as a lambda variable (the
-    shingles_col idiom); the hash and shingle constructions replay
-    T.shingles_col(k=2) / T.term_hash_fn exactly (pinned by
-    tests/test_corpus.py's scorer-equivalence test)."""
-    warr = "array(" + ",".join(f"{int(x)}L" for x in weights) + ")"
-    ghash = (
-        f"aggregate(split(g, ''), 0L, "
-        f"(h, c) -> (h * {T.TERM_HASH_BASE} + ascii(c)) % {HASH_P})"
-    )
-    tot = (
-        f"aggregate(sh, 0L, (a, g) -> a + element_at({warr}, "
-        f"CAST(({ghash}) % {NGQ_BUCKETS} + 1 AS INT)))"
-    )
-    shingles = (
-        "CASE WHEN size(tk) >= 2 THEN array_distinct("
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> concat_ws(' ', element_at(tk, i), element_at(tk, i + 1)))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
-    per = f"CASE WHEN size(sh) > 0 THEN ({tot}) div size(sh) END"
-    return (
-        "element_at(transform(array(split(lower(text), ' ')), tk -> "
-        f"element_at(transform(array({shingles}), sh -> {per}), 1)), 1)"
-    )
-
-
-def ngram_doc_scores(
-    docs: DataFrame, weights: list[int] | None = None
-) -> DataFrame:
-    """Per-document classifier scores — (doc_id, source, score_ppm) —
-    the fit+score core shared by the ngram_quality audit and the
-    release gate (release_members(quality_classifier=True)). Docs with
-    fewer than 2 tokens have no bigram features and carry a NULL
-    score_ppm (every membership consumer — the < NGQ_HI_PPM gate, the
-    audit's count/sum — is NULL-skipping, so they behave exactly as if
-    absent). Pass precomputed ``weights`` to reuse a fitted model
-    (ngram_quality memoizes its fit per sf_dir); otherwise the fit
-    runs here, one job. The returned frame is pure map-side — no
-    shuffle until the caller's own aggregation."""
-    if weights is None:
-        weights = fit_ngram_weights(docs)
-    return docs.select(
-        "doc_id",
-        "source",
-        F.expr(ngram_score_sql(weights)).cast("bigint").alias("score_ppm"),
-    )
-
-
 def ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source audit of the hashed-n-gram quality classifier:
     scored docs, mean score (ppm), and the count + id-checksum of
@@ -1366,16 +1122,15 @@ def ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lang_id/charlm train-once-serve-every-build pattern — so the
     steady-state query is the single map-side score pass + one
     |sources|-key aggregate."""
-    from etl_wikipedia_updates_spark.plans.northstar import _memo_model
 
     docs = spread(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    weights = _memo_model(
+    weights = memo(
         spark,
-        sf_dir,
         f"ngq_weights_{NGQ_BUCKETS}",
         lambda: fit_ngram_weights(docs),
+        sf_dir,
     )
     per_doc = ngram_doc_scores(docs, weights)
     hi = F.col("score_ppm") >= NGQ_HI_PPM
@@ -1404,11 +1159,6 @@ def ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_quality_sql() -> str:
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _REP_KEEP_COND,
-        _REP_PER_DOC_CTES,
-    )
-
     return f"""
 WITH {_REP_PER_DOC_CTES},
 lab AS (
@@ -1529,11 +1279,11 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
-    table = _memo_model(
+    table = memo(
         spark,
-        sf_dir,
         f"dsir_weights_{DSIR_B}",
         lambda: _fit_dsir_weights(docs),
+        sf_dir,
     )
     # ONE py4j call for the whole literal (digits-only, so the inline
     # array() is injection-safe — the _charlm_score_dense precedent).

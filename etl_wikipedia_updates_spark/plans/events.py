@@ -27,7 +27,8 @@ from etl_wikipedia_updates_spark.functions.deterministic import (
     sql_ts_str,
     ts_str,
 )
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
+from etl_wikipedia_updates_spark.stages import total_order
 from etl_wikipedia_updates_spark.tables import load_table
 
 # Fixed vocabulary of the synthetic events table (FIXTURES.md §B).

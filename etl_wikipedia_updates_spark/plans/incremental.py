@@ -40,21 +40,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark.caches import memo
+from etl_wikipedia_updates_spark.functions.deterministic import sql_det_round
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import text as T
 from etl_wikipedia_updates_spark.operators.text import HASH_P
-from etl_wikipedia_updates_spark.functions.deterministic import (
-    det_round,
-    sql_det_round,
-)
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
-from etl_wikipedia_updates_spark.plans.northstar import (
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
+from etl_wikipedia_updates_spark.plans.northstar import SQL_SH
+from etl_wikipedia_updates_spark.stages import (
     JACCARD_THRESHOLD,
     MINHASH_BANDS,
     MINHASH_PARAMS,
     MINHASH_ROWS,
-    SQL_SH,
-    _memo_model,
+    SPAN_HOP,
+    SPAN_W,
+    _span_audit_tagged,
+    _span_occurrences,
+    total_order,
 )
 from etl_wikipedia_updates_spark.tables import load_table, spread
 
@@ -108,8 +110,11 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs in the snapshot, kept, dropped against the prior corpus,
     dropped within the snapshot, kept-id checksum."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    thr = _memo_model(
-        spark, sf_dir, "incr_thr", lambda: snapshot_threshold(docs)
+    thr = memo(
+        spark,
+        "incr_thr",
+        lambda: snapshot_threshold(docs),
+        sf_dir,
     )
     flagged = incremental_vs_prior(docs, thr)
     kept = F.col("cluster_id").isNull() | (
@@ -215,109 +220,6 @@ INCREMENTAL_DEDUP_SQL = _incremental_sql()
 
 
 # --- incremental_span_dedup (r17): the recrawl story for SPANS ---------------
-def span_audit_vs_prior(
-    new_spans: DataFrame, prior_hashes: DataFrame
-) -> DataFrame:
-    """Per-source audit of a NEW crawl's span duplication against a
-    PRIOR published corpus — the shared frame-level core: the
-    registered query derives both sides from the table (synthetic id
-    threshold), release.publish_span_store's probe path feeds the
-    prior side from the persisted store, and the equivalence tests
-    feed it adversarial frames. ``new_spans`` is (doc_id, source, h)
-    span occurrences (plans.northstar._span_occurrences — the SAME
-    machinery as span_dedup/span_removal/span_decontam, so all four
-    agree on what a span is); ``prior_hashes`` is any frame with an
-    ``h`` column (raw occurrences or the store's distinct hashes —
-    max(is_prior) is multiplicity-blind, so both give identical
-    audits).
-
-    Scale shape: ONE h-keyed exchange over the union — span_dedup's
-    exact shuffle with a side tag. A sort window computes, per span
-    hash, whether ANY prior occurrence exists (has_prior) and the
-    min/max NEW doc ids (dup within the snapshot = min != max, the
-    span_dedup rule); prior x prior duplication is never computed —
-    the term a per-recrawl from-scratch span_dedup re-pays at 100 TB.
-    The prior side ships as bare hashes (the store artifact), not
-    text: the probe's shuffle mass is 8 bytes per stored span.
-
-    Per new doc: spans_doc occurrences, dup_prior (h in the prior
-    corpus), dup_new (h shared with another new doc), dup_any
-    (either). Per source over new docs (docs shorter than SPAN_W
-    carry no spans and are absent, as in span_dedup).
-    """
-    return _span_audit_tagged(
-        new_spans.select(
-            "doc_id", "source", "h", F.lit(0).alias("is_prior")
-        ).unionByName(
-            prior_hashes.select(
-                F.lit(None).cast("long").alias("doc_id"),
-                F.lit(None).cast("string").alias("source"),
-                "h",
-                F.lit(1).alias("is_prior"),
-            )
-        )
-    )
-
-
-def _span_audit_tagged(u: DataFrame) -> DataFrame:
-    """The audit body over a single TAGGED occurrence frame
-    (doc_id, source, h, is_prior) — split out so the registered query
-    can tag one scan's output by the id threshold instead of unioning
-    two filtered copies of the same corpus subtree (which would run
-    the scan + span hashing twice; the _seq_pack_cum lesson). Prior
-    rows may carry real or NULL doc_id/source — both are ignored
-    (the is_prior filter runs before either is consumed)."""
-    from pyspark.sql import Window as W
-
-    wh = W.partitionBy("h")
-    new_doc = F.when(F.col("is_prior") == 0, F.col("doc_id"))
-    flagged = (
-        u.select(
-            "doc_id",
-            "source",
-            "is_prior",
-            F.max("is_prior").over(wh).alias("has_prior"),
-            F.min(new_doc).over(wh).alias("mn"),
-            F.max(new_doc).over(wh).alias("mx"),
-        )
-        .filter(F.col("is_prior") == 0)
-        .select(
-            "doc_id",
-            "source",
-            F.col("has_prior").cast("long").alias("dup_prior"),
-            (F.col("mn") != F.col("mx")).cast("long").alias("dup_new"),
-        )
-    )
-    per_doc = flagged.groupBy("doc_id", "source").agg(
-        F.count("*").alias("spans_doc"),
-        F.sum("dup_prior").alias("dp"),
-        F.sum("dup_new").alias("dn"),
-        F.sum(F.greatest("dup_prior", "dup_new")).alias("da"),
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count("*").alias("new_docs"),
-            F.sum("spans_doc").cast("bigint").alias("total_spans"),
-            F.sum("dp").cast("bigint").alias("dup_prior_spans"),
-            F.sum("dn").cast("bigint").alias("dup_new_spans"),
-            F.sum("da").cast("bigint").alias("dup_spans"),
-            F.sum((F.col("da") > 0).cast("bigint"))
-            .cast("bigint")
-            .alias("docs_affected"),
-        )
-        .withColumn(
-            "dup_frac",
-            det_round(
-                F.col("dup_spans").cast("double")
-                / F.col("total_spans").cast("double"),
-                4,
-            ),
-        )
-        .transform(total_order, "source")
-    )
-
-
 def incremental_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered form: the same synthetic snapshot boundary as
     incremental_dedup (top id quarter = "the new crawl", shared
@@ -337,13 +239,12 @@ def incremental_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (a union of two filters over the same subtree would scan
     and hash the corpus twice; plan-pinned in tests/test_plans.py)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    thr = _memo_model(
-        spark, sf_dir, "incr_thr", lambda: snapshot_threshold(docs)
+    thr = memo(
+        spark,
+        "incr_thr",
+        lambda: snapshot_threshold(docs),
+        sf_dir,
     )
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
-
     return _span_audit_tagged(
         _span_occurrences(docs).select(
             "doc_id",
@@ -355,11 +256,6 @@ def incremental_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_span_sql() -> str:
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SPAN_HOP,
-        SPAN_W,
-    )
-
     return f"""
 WITH t AS (
   SELECT doc_id, source, string_split(lower(text), ' ') AS l FROM documents

@@ -21,7 +21,11 @@ from etl_wikipedia_updates_spark.functions.deterministic import (
     sql_money_sum,
     ts_str,
 )
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.operators.quantiles import (
+    exact_quantiles_refined,
+)
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
+from etl_wikipedia_updates_spark.stages import total_order
 from etl_wikipedia_updates_spark.tables import load_table
 
 
@@ -465,10 +469,6 @@ def percentiles_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment (n ~ 1e12) raises it to ~n/rows_per_task, e.g. 1e7 for
     ~6e5-row brackets — the operator takes it as a parameter, nothing
     structural changes."""
-    from etl_wikipedia_updates_spark.operators.quantiles import (
-        exact_quantiles_refined,
-    )
-
     orders = load_table(spark, sf_dir, "orders")
     out = exact_quantiles_refined(
         orders,

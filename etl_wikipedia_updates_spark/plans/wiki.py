@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_wikipedia_updates_spark.functions.deterministic import ts_str
 from etl_wikipedia_updates_spark.pipeline import wiki_transform
-from etl_wikipedia_updates_spark.plans.base import DeclaredQuery, total_order
+from etl_wikipedia_updates_spark.plans.base import DeclaredQuery
+from etl_wikipedia_updates_spark.stages import total_order
 
 FIXTURE_LINES: list[str] = [
     # full edit (baseline)

@@ -18,16 +18,29 @@ R11-R14 sink contract.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_wikipedia_updates_spark.plans.northstar import (
+from etl_wikipedia_updates_spark.stages import (
+    N_SHARDS,
+    SEQ_LEN,
+    SPAN_HOP,
+    SPAN_W,
+    _require_span_params,
+    _span_occurrences,
+    manifest_of,
+    packed_sequences,
+    pii_redacted_col,
     release_audit,
     release_members,
     remove_dup_spans,
+    shard_assign_col,
+    span_audit_vs_prior,
 )
 from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
-from etl_wikipedia_updates_spark.tables import load_table
+from etl_wikipedia_updates_spark.tables import load_table, spread
 
 
 def release_corpus(
@@ -47,7 +60,7 @@ def release_corpus(
     corpus-sized).
 
     ``remove_spans=True`` adds the optional span-excision stage
-    (plans.northstar.remove_dup_spans) over the RELEASED docs: doc-
+    (stages.remove_dup_spans) over the RELEASED docs: doc-
     level near-dups are already gone by construction, so this excises
     the remaining cross-doc duplicated spans (shared boilerplate)
     from every doc but the canonical minimum-id owner — Lee et al.
@@ -66,8 +79,6 @@ def release_corpus(
     accounting the original text, same contract as remove_spans, so
     verify_release's recomputed audit card still matches the published
     card."""
-    from etl_wikipedia_updates_spark.plans.corpus import pii_redacted_col
-
     docs = load_table(spark, sf_dir, "documents")
     if members is None:
         members = release_members(
@@ -237,7 +248,7 @@ def write_sharded(
     the SAME frame via the shared manifest_of aggregation, so plan and
     data stay in lockstep whatever the input.
 
-    ``n_shards`` (default plans.corpus.N_SHARDS) is THE scale dial:
+    ``n_shards`` (default stages.N_SHARDS) is THE scale dial:
     one file per shard means shard count == write parallelism == file
     size divisor — the 16-shard default fits the fixture tiers, a
     100 TB release raises it to e.g. 10k shards of ~10 GB so the
@@ -245,12 +256,6 @@ def write_sharded(
 
     Returns {"version": N, "manifest": [manifest rows as dicts]}.
     """
-    from etl_wikipedia_updates_spark.plans.corpus import (
-        N_SHARDS,
-        manifest_of,
-        shard_assign_col,
-    )
-
     if n_shards is None:
         n_shards = N_SHARDS
     from_sf_dir = docs is None
@@ -306,10 +311,6 @@ def verify_sharded(
 
     Returns {"version", "ok", "expected", "recomputed",
     "mismatches": [...]}."""
-    import os
-
-    from etl_wikipedia_updates_spark.plans.corpus import manifest_of
-
     table = SnapshotTable(out_root)
     v = table.current_version() if version is None else version
     if v is None:
@@ -451,13 +452,6 @@ def write_packed(
 
     Returns {"version": N, "seqs_per_file": K, "manifest": [...]}.
     """
-    from etl_wikipedia_updates_spark.plans.corpus import manifest_of
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SEQ_LEN,
-        packed_sequences,
-    )
-    from etl_wikipedia_updates_spark.tables import spread
-
     if seqs_per_file is None:
         seqs_per_file = SEQS_PER_FILE
     if seqs_per_file < 1:
@@ -522,10 +516,6 @@ def verify_packed(
     its partition column and shows up here even when its content is
     intact). Same caveat as verify_sharded: an integrity check against
     corruption and writer bugs, not an adversarial seal."""
-    import os
-
-    from etl_wikipedia_updates_spark.plans.corpus import manifest_of
-
     table = SnapshotTable(out_root)
     v = table.current_version() if version is None else version
     if v is None:
@@ -594,26 +584,6 @@ def verify_packed(
 # --- persistent span-hash store (r17: incremental_span_dedup's state) -------
 
 
-def _require_span_params(meta: dict, what: str) -> None:
-    """A span-hash store is only probeable under the SPAN_W/SPAN_HOP
-    it was built with — different params are a different hash universe
-    and every probe silently misses (dup_prior=0 for verbatim dups,
-    a veto-nothing seed). The store records its params at publish;
-    consumers fail loudly on mismatch (r17 review)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SPAN_HOP,
-        SPAN_W,
-    )
-
-    got = (meta.get("span_w"), meta.get("span_hop"))
-    if got != (SPAN_W, SPAN_HOP):
-        raise ValueError(
-            f"{what}: span store built with (span_w, span_hop)={got} "
-            f"but the engine runs ({SPAN_W}, {SPAN_HOP}) — hashes are "
-            "incomparable; rebuild the store under the current params"
-        )
-
-
 def publish_span_store(
     spark: SparkSession,
     docs: DataFrame,
@@ -642,12 +612,6 @@ def publish_span_store(
     version} — the telemetry is free (parquet footers + file sizes),
     so callers should read it from here rather than re-counting the
     store."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SPAN_HOP,
-        SPAN_W,
-        _span_occurrences,
-    )
-
     spans = _span_occurrences(docs).select("h")
     table = SnapshotTable(store_root)
     cur = table.current_version()
@@ -749,19 +713,12 @@ def span_store_audit(
     version: int | None = None,
 ) -> DataFrame:
     """Probe a NEW crawl against a persisted span-hash store: the
-    production feed of plans.incremental.span_audit_vs_prior (the
+    production feed of stages.span_audit_vs_prior (the
     registered incremental_span_dedup recomputes the prior side from
     the table; this reads it from the store — equivalence of the two
     feeds is pinned in tests/test_incremental.py). Same audit schema:
     per new-crawl source, span totals, dup-vs-prior / dup-within-new /
     dup-any counts, affected docs, dup fraction."""
-    from etl_wikipedia_updates_spark.plans.incremental import (
-        span_audit_vs_prior,
-    )
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
-
     table = SnapshotTable(store_root)
     v = table.current_version() if version is None else version
     if v is None:

@@ -20,6 +20,22 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+def driver_memory(phys_bytes: int | None) -> str:
+    """Default driver heap: half of the host's ``phys_bytes`` (None:
+    unknown), capped at 16g. Past the host's memory a heavy query is
+    killed by the kernel with no message; at half, it fails with a Java
+    OutOfMemoryError and the Python workers and the OS keep room."""
+    cap_mb = 16 * 1024
+    return f"{min(phys_bytes // 2 >> 20, cap_mb) if phys_bytes else cap_mb}m"
+
+
+def _phys_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return None
+
+
 def _int_env(name: str, default: int) -> int:
     """Integer env knob with a loud, named failure mode: a malformed
     value warns (naming the variable and the bad value) and falls back
@@ -91,7 +107,10 @@ def get_spark(
         # Only effective when this call creates the JVM; a pre-existing
         # session (e.g. pytest reuse) keeps its original heap. On a real
         # cluster this is submit-time conf (spark-submit --driver-memory).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(_phys_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.ansi.enabled", "false")

@@ -48,11 +48,16 @@ from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import text as T
-from etl_wikipedia_updates_spark.plans.northstar import (
+from etl_wikipedia_updates_spark.stages import (
     CONTAM_MIN_SHARED,
     MINHASH_BANDS,
     MINHASH_ROWS,
     SHINGLE_DF_CAP,
+    _span_occurrences,
+    pii_redact,
+    quality_keep,
+    rep_keep_col,
+    temp_membership,
 )
 from etl_wikipedia_updates_spark.streaming.ingest import (
     append_batch,
@@ -60,7 +65,8 @@ from etl_wikipedia_updates_spark.streaming.ingest import (
 )
 from etl_wikipedia_updates_spark.streaming.neardup import (
     SigCols,
-    _compact_store,
+    batch_neardup_keep,
+    compact_store,
     dedup_append,
     doc_tids,
     sig_cols,
@@ -79,8 +85,8 @@ def compact_contam_store(
     target_files: int = 4,
     below: int | None = None,
 ) -> dict | None:
-    """Fold the quarantine table (see neardup._compact_store)."""
-    return _compact_store(
+    """Fold the quarantine table (see neardup.compact_store)."""
+    return compact_store(
         spark, contam_store_path(sink_path), target_files, below
     )
 
@@ -112,10 +118,6 @@ def bench_spans(bench_docs: DataFrame) -> DataFrame:
     token verbatim run is contamination signal regardless of how many
     bench docs carry it (the shingle cap exists because single
     shingles are weak evidence; a 16-token exact run is not)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
-
     return (
         _span_occurrences(bench_docs)
         .select("h", F.col("doc_id").alias("bench_doc"))
@@ -204,10 +206,6 @@ def span_hits(
     ``tids``/``cols``, the span join stays the veto and the shingle
     rows give the signature, which left-joins the hits (a doc with a
     span has >= SPAN_W tokens, hence shingles)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
-
     rows = (
         _span_occurrences(docs)
         .select("doc_id", "h")
@@ -266,19 +264,21 @@ def decontam_ingest_batch(
     be the ``mode``-matching static frame (bench_shingles output for
     'shingles', bench_spans for 'spans')."""
     spark = batch_df.sparkSession
+    # the batch feeds the verdicts and the survivors anti-join:
+    # persisted, so it is read once (numInputRows counts each row once)
+    batch = batch_df.persist()
     verdicts = verdict_rows(
-        _mode_fns(mode)[1](batch_df, bench_sh, exclude_self=exclude_self)
+        _mode_fns(mode)[1](batch, bench_sh, exclude_self=exclude_self)
     ).persist()
     try:
-        survivors = batch_df.join(
-            verdicts.select("doc_id"), "doc_id", "left_anti"
-        )
+        survivors = batch.join(verdicts.select("doc_id"), "doc_id", "left_anti")
         append_batch(survivors, sink_path, batch_id)
         append_batch(verdicts, contam_store_path(sink_path), batch_id)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_contam_store(spark, sink_path, below=batch_id)
     finally:
         verdicts.unpersist()
+        batch.unpersist()
 
 
 class _UnpersistOnTermination(StreamingQueryListener):
@@ -402,14 +402,14 @@ def full_curation_ingest_batch(
     """One micro-batch of the COMPLETE per-doc curation pipeline — the
     ingest-time twin of corpus_release's per-doc stages in one pass:
     (0) optional PII redaction (stateless TRANSFORM — the shared
-    plans.corpus.pii_redact expression the pii_scrub audit certifies),
+    stages.pii_redact expression the pii_scrub audit certifies),
     (1) the Gopher-style repetition quality gate (stateless),
     (2) the benchmark veto (stateless, quarantined; ``decontam_mode``
     picks shingle-overlap or exact-span, as in ingest_with_decontam —
     ``bench_sh`` must be the matching static frame),
     (3) near-dup dedup against the accumulating bucket store,
     (4) optional temperature mixing (``temp_rates``: a STATIC
-    (source, rate_ppm) frame — plans.northstar.static_temp_rates over
+    (source, rate_ppm) frame — stages.static_temp_rates over
     a declared corpus or prior snapshot, NEVER the unbounded stream;
     membership is the shared temp_keep_cond integer rule, applied to
     the sink append only, so mix-dropped docs still shadow their later
@@ -424,9 +424,6 @@ def full_curation_ingest_batch(
     precomputed thresholds. The quarantine and bucket stores both fold
     on the ``compact_every`` cadence. ``static_cols`` is the stream's
     _curation_cols, built once per stream (here when absent)."""
-    from etl_wikipedia_updates_spark.plans.corpus import pii_redact
-    from etl_wikipedia_updates_spark.plans.northstar import temp_membership
-
     keep, cols = static_cols or _curation_cols()
     spark = batch_df.sparkSession
     if redact_pii:
@@ -470,9 +467,7 @@ def full_curation_ingest_batch(
 def _curation_cols():
     """(quality verdict, SigCols): the curation trigger's static
     Columns, built once per stream. The verdict is rep_keep_col, the
-    statement plans.northstar.quality_keep filters on."""
-    from etl_wikipedia_updates_spark.plans.northstar import rep_keep_col
-
+    statement stages.quality_keep filters on."""
     return rep_keep_col(), sig_cols()
 
 
@@ -492,7 +487,7 @@ def ingest_with_full_curation(
     decontaminated, near-dup-deduped, (optionally temperature-mixed)
     sink: the one-command crawl-curation ingest. ``temp_rates`` is the
     stream-static temperature model (see full_curation_ingest_batch) —
-    fit it with plans.northstar.static_temp_rates over a DECLARED
+    fit it with stages.static_temp_rates over a DECLARED
     static frame. Persisted-bench (released on stream termination),
     exclude_self, and ``decontam_mode`` notes as in
     ingest_with_decontam."""
@@ -531,15 +526,6 @@ def batch_full_curation_keep(
     sink when the corpus replays in doc_id order (the dedup stage's
     usual arrival-order contract; redaction, the first two gates, and
     temperature membership are stateless and order-free)."""
-    from etl_wikipedia_updates_spark.plans.corpus import pii_redact
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        quality_keep,
-        temp_membership,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
-    )
-
     if redact_pii:
         docs = pii_redact(docs)
     kept = quality_keep(docs)

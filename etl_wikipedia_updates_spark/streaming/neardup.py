@@ -46,27 +46,36 @@ the near-dup generalization with explicit, inspectable state.
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from etl_wikipedia_updates_spark.functions.arrays import cosine_similarity
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import similarity as S
 from etl_wikipedia_updates_spark.operators import text as T
-from etl_wikipedia_updates_spark.plans.northstar import (
+from etl_wikipedia_updates_spark.stages import (
     MINHASH_BANDS,
     MINHASH_PARAMS,
     MINHASH_ROWS,
+    _require_span_params,
+    _span_occurrences,
+    quality_keep,
 )
 from etl_wikipedia_updates_spark.streaming.ingest import (
+    _committed_batch_dirs,
     _publish_rewrite,
     _view_parts,
     append_batch,
+    sink_snapshot,
     start_batches,
 )
+from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
 
 BUCKETS_DIRNAME = "_lsh_buckets"  # _-prefixed: invisible to sink readers
 SHINGLES_DIRNAME = "_shingle_store"  # verified mode: per-doc shingle sketches
@@ -123,11 +132,11 @@ def _store_view(
     return base
 
 
-def _compact_store(
+def compact_store(
     spark: SparkSession,
     store_path: str,
-    target_files: int,
-    below: int | None,
+    target_files: int = 4,
+    below: int | None = None,
 ) -> dict | None:
     """Fold one accumulating per-batch store (bucket or shingle) into a
     snapshot version — the same SnapshotTable fold the data sink uses
@@ -170,34 +179,9 @@ def compact_bucket_store(
     target_files: int = 4,
     below: int | None = None,
 ) -> dict | None:
-    """Fold the LSH bucket store (see ``_compact_store``)."""
-    return _compact_store(
+    """Fold the LSH bucket store (see ``compact_store``)."""
+    return compact_store(
         spark, bucket_store_path(sink_path), target_files, below
-    )
-
-
-def compact_shingle_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the verified-mode shingle store (see ``_compact_store``)."""
-    return _compact_store(
-        spark, shingle_store_path(sink_path), target_files, below
-    )
-
-
-def compact_vector_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the embedding-verified-mode vector store (see
-    ``_compact_store``)."""
-    return _compact_store(
-        spark, vector_store_path(sink_path), target_files, below
     )
 
 
@@ -524,8 +508,6 @@ def quality_neardup_ingest_batch(
     store. Mixing/splitting need corpus-global budgets, so they stay
     release-time; quality + dedup are the stages a crawl pipeline
     applies per batch."""
-    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
-
     kept = quality_keep(batch_df)
     _ingest_dedup_batch(
         kept, sink_path, batch_id, doc_band_rows, "doc_id",
@@ -554,8 +536,6 @@ def batch_quality_neardup_keep(docs: DataFrame) -> DataFrame:
     """Batch statement of the quality+dedup ingest: quality gate over
     the corpus, then the no-smaller-id-shares-a-bucket rule over the
     survivors."""
-    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
-
     return batch_neardup_keep(quality_keep(docs))
 
 
@@ -624,16 +604,12 @@ def batch_neardup_keep(docs: DataFrame) -> DataFrame:
 
 def doc_span_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, band, band_key) SPAN-occurrence rows for a
-    document frame — plans.northstar._span_occurrences (the same
+    document frame — stages._span_occurrences (the same
     machinery as the four batch span operators, so stream and batch
     agree on what a span is) shaped for the shared bucket engine:
     lang='*' (verbatim spans collide across langs), band=0, the span
     hash as the bucket key. Docs shorter than SPAN_W emit no rows and
     are never dropped."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
-
     return _span_occurrences(docs).select(
         "doc_id",
         F.lit("*").alias("lang"),
@@ -708,11 +684,6 @@ def seed_span_store_from(
     time act; injecting hashes under a live store would change history.
 
     Returns the number of seeded span hashes."""
-    import json
-
-    from etl_wikipedia_updates_spark.streaming.ingest import sink_snapshot
-    from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
-
     src = SnapshotTable(span_store_root)
     v = src.current_version() if version is None else version
     if v is None:
@@ -724,8 +695,6 @@ def seed_span_store_from(
         raise ValueError(
             f"{span_store_root} v{v} is not a span store"
         )
-    from etl_wikipedia_updates_spark.release import _require_span_params
-
     _require_span_params(src_meta, f"{span_store_root} v{v}")
     store_path = bucket_store_path(sink_path)
     snap = sink_snapshot(store_path)
@@ -804,8 +773,6 @@ def _write_seed_marker(sink_path: str, seed_root: str, version: int) -> None:
     """(Re)write the durable seed sidecar. ``seed_root`` must already
     be normalized (it comes from the publish-time meta or a fresh
     normpath(abspath(...)))."""
-    import json
-
     with open(seed_marker_path(sink_path), "w") as f:
         json.dump({"store_root": seed_root, "version": version}, f)
 
@@ -819,8 +786,6 @@ def seed_marker_path(sink_path: str) -> str:
 def seeded_from(sink_path: str) -> dict | None:
     """The seed marker's content ({'store_root', 'version'}, paths
     normalized) or None when the sink was never seeded."""
-    import json
-
     p = seed_marker_path(sink_path)
     if not os.path.exists(p):
         return None
@@ -829,10 +794,6 @@ def seeded_from(sink_path: str) -> dict | None:
 
 
 def _committed_batch_dirs_any(store_path: str) -> bool:
-    from etl_wikipedia_updates_spark.streaming.ingest import (
-        _committed_batch_dirs,
-    )
-
     return bool(_committed_batch_dirs(store_path))
 
 
@@ -855,7 +816,7 @@ def _committed_batch_dirs_any(store_path: str) -> bool:
 # scales with collision rate, not corpus size; at 100 TB the shingle
 # store is bucketed by doc_id (operators/layout.py) so the candidate
 # lookup co-locates.
-VERIFY_THRESHOLD = 0.5  # == plans.northstar.JACCARD_THRESHOLD (q26/minhash)
+VERIFY_THRESHOLD = 0.5  # == stages.JACCARD_THRESHOLD (q26/minhash)
 SHINGLE_SKETCH_K = 512  # bottom-k sketch width (per-doc store bound)
 
 
@@ -908,72 +869,112 @@ def _candidate_pairs(
     return pairs.unionByName(cross.distinct())
 
 
+class _Payload(NamedTuple):
+    """What a verified mode varies: its id column, the per-doc payload
+    store next to the sink (dir name, schema), the exact check
+    ((pairs, payload) -> the pairs that clear its threshold), and the
+    mode's name for errors."""
+
+    id_col: str
+    dirname: str
+    schema: str
+    verify: Callable[[DataFrame, DataFrame], DataFrame]
+    mode: str
+
+
+def _verified_append(
+    batch: DataFrame,
+    band: DataFrame,
+    payload: DataFrame,
+    spec: _Payload,
+    sink_path: str,
+    batch_id: int,
+    compact_every: int | None,
+) -> None:
+    """The body of one VERIFIED micro-batch, given the batch, its band
+    rows and its (doc_id, payload) rows, all persisted by the caller:
+    candidates come from band collisions (within the batch, and batch
+    x bucket store), but a doc is dropped only when ``spec.verify``
+    clears it against the earlier doc. Appends the survivors, ALL
+    batch buckets, and ALL batch payloads under this batch's
+    idempotent dirs; the store reads exclude this batch id, so a
+    replayed batch never verifies against its own first attempt."""
+    spark = batch.sparkSession
+    payload_path = os.path.join(sink_path, spec.dirname)
+    store_band = _store_view(spark, bucket_store_path(sink_path), batch_id)
+    pairs = _candidate_pairs(band, store_band)
+    lookup = payload
+    if store_band is not None:
+        # a bucket store without matching payload coverage (sink
+        # previously fed by a non-verified mode) must fail loudly,
+        # not silently pass near-dups of unverifiable docs
+        _require_payload_coverage(sink_path, spec.dirname, batch_id, spec.mode)
+        store_payload = _store_view(
+            spark, payload_path, batch_id, schema=spec.schema
+        )
+        if store_payload is not None:
+            lookup = payload.unionByName(store_payload)
+    drops = spec.verify(pairs, lookup).select("doc_id2").distinct()
+    survivors = batch.join(
+        drops.withColumnRenamed("doc_id2", spec.id_col), spec.id_col, "left_anti"
+    )
+    append_batch(survivors, sink_path, batch_id)
+    append_batch(
+        band.select("doc_id", "lang", "band", "band_key"),
+        bucket_store_path(sink_path),
+        batch_id,
+    )
+    append_batch(payload, payload_path, batch_id)
+    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+        compact_bucket_store(spark, sink_path, below=batch_id)
+        compact_store(spark, payload_path, below=batch_id)
+
+
+def _batch_verified_keep(
+    df: DataFrame, band: DataFrame, payload: DataFrame, spec: _Payload
+) -> DataFrame:
+    # The batch statement of a verified rule: the streaming rule with
+    # an empty store (global bucket enumeration covers within-batch and
+    # cross-batch pairs alike).
+    drops = spec.verify(_band_pairs_within(band), payload)
+    drops = drops.select(F.col("doc_id2").alias(spec.id_col)).distinct()
+    return df.join(drops, spec.id_col, "left_anti")
+
+
+_SHINGLE_PAYLOAD = _Payload(
+    "doc_id",
+    SHINGLES_DIRNAME,
+    _SHINGLE_SCHEMA,
+    lambda pairs, toks: D.jaccard_verify_sketch(
+        pairs, toks, VERIFY_THRESHOLD, SHINGLE_SKETCH_K
+    ),
+    "verified",
+)
+
+
 def verified_ingest_batch(
     batch_df: DataFrame,
     sink_path: str,
     batch_id: int,
     compact_every: int | None = None,
 ) -> None:
-    """One micro-batch of VERIFIED dedup ingest: candidates come from
-    band collisions (within the batch, and batch x bucket store),
-    but a doc is dropped only when exact shingle-Jaccard against the
-    earlier doc clears VERIFY_THRESHOLD. Appends the survivors, ALL
-    batch buckets, and ALL batch shingle sets under this batch's
-    idempotent dirs; the store reads exclude this batch id, so a
-    replayed batch never verifies against its own first attempt."""
-    spark = batch_df.sparkSession
-    # ONE shingle -> per-char term-hash pass per batch (the dominant
-    # per-batch map cost): band rows AND the verify arrays both derive
-    # from the persisted dtok instead of re-running the chain each —
-    # through the SAME helpers the batch equivalence reference uses,
-    # so the two paths cannot drift.
-    dtok = doc_tids(batch_df).persist()
-    band = doc_band_rows(batch_df, dtok=dtok).persist()
-    toks = doc_shingle_tid_arrays(batch_df, dtok=dtok).persist()
+    """One micro-batch of VERIFIED dedup ingest: a band-colliding doc
+    is dropped only when exact shingle-Jaccard against the earlier doc
+    clears VERIFY_THRESHOLD (see ``_verified_append``)."""
+    # The batch is read once (numInputRows counts each row once), and
+    # ONE shingle -> term-hash pass (the dominant per-batch map cost)
+    # feeds both the band rows and the verify arrays.
+    batch = batch_df.persist()
+    dtok = doc_tids(batch).persist()
+    band = doc_band_rows(batch, dtok=dtok).persist()
+    toks = doc_shingle_tid_arrays(batch, dtok=dtok).persist()
     try:
-        store_band = _store_view(
-            spark, bucket_store_path(sink_path), batch_id
+        _verified_append(
+            batch, band, toks, _SHINGLE_PAYLOAD, sink_path, batch_id, compact_every
         )
-        pairs = _candidate_pairs(band, store_band)
-        tok_lookup = toks
-        if store_band is not None:
-            # a bucket store without matching shingle coverage (sink
-            # previously fed by a non-verified mode) must fail loudly,
-            # not silently pass near-dups of unverifiable docs
-            _require_payload_coverage(
-                sink_path, SHINGLES_DIRNAME, batch_id, "verified"
-            )
-            store_toks = _store_view(
-                spark,
-                shingle_store_path(sink_path),
-                batch_id,
-                schema=_SHINGLE_SCHEMA,
-            )
-            if store_toks is not None:
-                tok_lookup = toks.unionByName(store_toks)
-        verified = D.jaccard_verify_sketch(
-            pairs, tok_lookup, VERIFY_THRESHOLD, SHINGLE_SKETCH_K
-        )
-        drops = verified.select("doc_id2").distinct()
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id2", "doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        append_batch(toks, shingle_store_path(sink_path), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-            compact_shingle_store(spark, sink_path, below=batch_id)
     finally:
-        band.unpersist()
-        toks.unpersist()
-        dtok.unpersist()
+        for df in (toks, band, dtok, batch):
+            df.unpersist()
 
 
 def ingest_with_verified_neardup(
@@ -1000,19 +1001,11 @@ def batch_verified_neardup_keep(docs: DataFrame) -> DataFrame:
     survives iff NO smaller doc_id both shares a band bucket AND has
     exact shingle-Jaccard >= VERIFY_THRESHOLD with it. When a stream
     replays the corpus in doc_id order, the verified sink must equal
-    this exactly (same candidate set: global bucket enumeration covers
-    within-batch and cross-batch pairs alike; same verify arrays:
-    batch and store shingle sets come from one builder)."""
-    band = doc_band_rows(docs)
-    pairs = _band_pairs_within(band)
-    toks = doc_shingle_tid_arrays(docs)
-    verified = D.jaccard_verify_sketch(
-        pairs, toks, VERIFY_THRESHOLD, SHINGLE_SKETCH_K
+    this exactly (same candidate set; same verify arrays: batch and
+    store shingle sets come from one builder)."""
+    return _batch_verified_keep(
+        docs, doc_band_rows(docs), doc_shingle_tid_arrays(docs), _SHINGLE_PAYLOAD
     )
-    drops = verified.select(
-        F.col("doc_id2").alias("doc_id")
-    ).distinct()
-    return docs.join(drops, "doc_id", "left_anti")
 
 
 # --- verified (precision-mode) EMBEDDING dedup --------------------------------
@@ -1033,10 +1026,6 @@ def _cosine_verify(
     """Exact-cosine check on candidate pairs. vectors: (doc_id,
     embedding). Two joins (candidates only), then the JVM-side
     fold-based cosine (functions.arrays) — no Python."""
-    from etl_wikipedia_updates_spark.functions.arrays import (
-        cosine_similarity,
-    )
-
     v1 = vectors.select(F.col("doc_id"), F.col("embedding").alias("e1"))
     v2 = vectors.select(
         F.col("doc_id").alias("doc_id2"), F.col("embedding").alias("e2")
@@ -1053,63 +1042,35 @@ def _cosine_verify(
     )
 
 
+_VECTOR_PAYLOAD = _Payload(
+    "vec_id",
+    VECTORS_DIRNAME,
+    _VECTOR_SCHEMA,
+    lambda pairs, vecs: _cosine_verify(pairs, vecs, EMB_VERIFY_THRESHOLD),
+    "embedding-verified",
+)
+
+
 def verified_embedding_ingest_batch(
     batch_df: DataFrame,
     sink_path: str,
     batch_id: int,
     compact_every: int | None = None,
 ) -> None:
-    """One micro-batch of VERIFIED embedding dedup ingest: candidates
-    come from sign-bucket band collisions (within the batch, and
-    batch x bucket store), but a vector is dropped only when exact
-    cosine against the earlier vector clears EMB_VERIFY_THRESHOLD.
-    Appends the survivors, ALL batch buckets, and ALL batch vectors
-    under this batch's idempotent dirs; the store reads exclude this
-    batch id, so a replayed batch never verifies against its own
-    first attempt."""
-    spark = batch_df.sparkSession
-    band = embedding_band_rows(batch_df).persist()
-    vecs = batch_df.select(
-        F.col("vec_id").alias("doc_id"), "embedding"
-    ).persist()
+    """One micro-batch of VERIFIED embedding dedup ingest: a
+    sign-bucket-colliding vector is dropped only when exact cosine
+    against the earlier vector clears EMB_VERIFY_THRESHOLD (see
+    ``_verified_append``)."""
+    batch = batch_df.persist()  # read once: feeds bands, vectors, sink
+    band = embedding_band_rows(batch).persist()
+    vecs = batch.select(F.col("vec_id").alias("doc_id"), "embedding").persist()
     try:
-        store_band = _store_view(
-            spark, bucket_store_path(sink_path), batch_id
+        _verified_append(
+            batch, band, vecs, _VECTOR_PAYLOAD, sink_path, batch_id, compact_every
         )
-        pairs = _candidate_pairs(band, store_band)
-        vec_lookup = vecs
-        if store_band is not None:
-            _require_payload_coverage(
-                sink_path, VECTORS_DIRNAME, batch_id, "embedding-verified"
-            )
-            store_vecs = _store_view(
-                spark,
-                vector_store_path(sink_path),
-                batch_id,
-                schema=_VECTOR_SCHEMA,
-            )
-            if store_vecs is not None:
-                vec_lookup = vecs.unionByName(store_vecs)
-        verified = _cosine_verify(pairs, vec_lookup, EMB_VERIFY_THRESHOLD)
-        drops = verified.select("doc_id2").distinct()
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id2", "vec_id"),
-            "vec_id",
-            "left_anti",
-        )
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        append_batch(vecs, vector_store_path(sink_path), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-            compact_vector_store(spark, sink_path, below=batch_id)
     finally:
-        band.unpersist()
-        vecs.unpersist()
+        for df in (vecs, band, batch):
+            df.unpersist()
 
 
 def ingest_with_verified_embedding_neardup(
@@ -1137,9 +1098,5 @@ def batch_verified_embedding_keep(emb: DataFrame) -> DataFrame:
     stream replays the table in vec_id order, the verified sink must
     equal this exactly (same candidate enumeration, same cosine on
     the same vectors)."""
-    band = embedding_band_rows(emb)
-    pairs = _band_pairs_within(band)
     vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    verified = _cosine_verify(pairs, vecs, EMB_VERIFY_THRESHOLD)
-    drops = verified.select(F.col("doc_id2").alias("vec_id")).distinct()
-    return emb.join(drops, "vec_id", "left_anti")
+    return _batch_verified_keep(emb, embedding_band_rows(emb), vecs, _VECTOR_PAYLOAD)

@@ -10,11 +10,12 @@ so the storage layout is swappable in one place.
 
 from __future__ import annotations
 
-from etl_wikipedia_updates_spark.caches import purge_stale
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_wikipedia_updates_spark.caches import memo
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -69,24 +70,19 @@ def _ensure_required_conf(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-# (applicationId, sf_dir, name) -> DataFrame. A DataFrame is an immutable
-# logical plan, so one per table per session is safely shared by every
-# query builder. Re-running spark.read.parquet costs ~70ms of parquet
-# footer/schema resolution per call (measured) — a 5-table star query
-# paid ~0.35s per build, ~6s across the full bench. Data is still read
-# per job; only plan construction is cached. Entries die with the
-# session (new applicationId); the driver's tables are read-only.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     _ensure_required_conf(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # One DataFrame per table per session, shared by every query
+    # builder: re-running spark.read.parquet costs ~70ms of parquet
+    # footer/schema resolution per call (measured; ~6s across the full
+    # bench). Data is still read per job; only the plan is memoized.
+    path = table_path(sf_dir, name)
+    return memo(spark, ("table", name), lambda: _read_table(spark, path, name), path)
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     # events.parquet stores ts as Parquet TIMESTAMP(NANOS). Readers differ
     # by Spark version: older readers reject it unless
     # spark.sql.legacy.parquet.nanosAsLong makes nanos arrive as long
@@ -96,7 +92,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # readers (4.1.x) read NANOS natively as timestamp_ntz, which we cast
     # to the session (UTC, _ensure_required_conf) timestamp so every
     # downstream plan sees one ts type regardless of reader version.
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)
         if ts_type.get("ts") == "bigint":
@@ -105,10 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif ts_type.get("ts") == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    # Purge entries from stopped sessions (stale py4j handles) on
-    # insert — same policy as plans/base._PLAN_CACHE.
-    purge_stale(_TABLE_CACHE, key[0])
-    _TABLE_CACHE[key] = df
     return df
 
 

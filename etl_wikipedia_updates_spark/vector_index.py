@@ -36,12 +36,13 @@ from etl_wikipedia_updates_spark.functions.arrays import cosine_similarity
 from etl_wikipedia_updates_spark.functions.deterministic import det_round
 from etl_wikipedia_updates_spark.operators import clustering as C
 from etl_wikipedia_updates_spark.operators import similarity as S
-from etl_wikipedia_updates_spark.plans.clustering import (
+from etl_wikipedia_updates_spark.stages import (
     KMEANS_ITERS,
     KMEANS_K,
     PQ_KS,
     PQ_M,
     PQ_SUB,
+    SEMDEDUP_TAU,
     _d2_array_expr,
     _pq_slice,
     ne_sql,
@@ -678,8 +679,6 @@ def dedup_index(
     near-neighbor (cosine >= tau) in its cell is removed (min-vec_id
     survivorship). Runs over the LIVE set, so repeated passes are
     idempotent. Returns delete_from_ivf_index's dict + n_removed."""
-    from etl_wikipedia_updates_spark.plans.clustering import SEMDEDUP_TAU
-
     tau = SEMDEDUP_TAU if tau is None else tau
     table = SnapshotTable(index_root)
     v = table.current_version() if version is None else version

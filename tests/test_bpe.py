@@ -108,7 +108,7 @@ def test_doc_nsub_col_matches_encode_col(spark):
     boundary (must NOT merge), on double/leading/trailing spaces
     (empty words), and on every document of the sf0.001 corpus under
     the corpus-fit merge table."""
-    from etl_wikipedia_updates_spark.plans.northstar import _memo_model
+    from etl_wikipedia_updates_spark.caches import memo
     from etl_wikipedia_updates_spark.tables import load_table
 
     merges = B.bpe_fit(
@@ -141,8 +141,8 @@ def test_doc_nsub_col_matches_encode_col(spark):
     docs = load_table(spark, sf, "documents").filter(
         F.col("text").isNotNull()
     )
-    corpus_merges = _memo_model(
-        spark, sf, "bpe_merges", lambda: B._fit_from_corpus(docs)
+    corpus_merges = memo(
+        spark, "bpe_merges", lambda: B._fit_from_corpus(docs), sf
     )
     per_word_sum = F.aggregate(
         F.split(F.lower("text"), " "),
@@ -259,9 +259,9 @@ def test_bpe_token_stats_three_way(spark, tmp_path):
 
     # the Python replay must use the SAME merges the Spark fit learned
     # (memoized per sf_dir — read it back through the same memo)
-    from etl_wikipedia_updates_spark.plans.northstar import _memo_model
+    from etl_wikipedia_updates_spark.caches import memo
 
-    merges = _memo_model(spark, sf, "bpe_merges", lambda: None)
+    merges = memo(spark, "bpe_merges", lambda: None, sf)
     assert merges, "fit must have been memoized by the operator run"
     want = _py_token_stats(rows, merges)
     assert set(spark_rows) == set(want)

@@ -24,6 +24,7 @@ Two classes of persist() in the engine:
 from __future__ import annotations
 
 import gc
+import os
 
 import pytest
 
@@ -117,42 +118,87 @@ def test_lazy_queries_leave_cache_clean_after_execution(spark):
 
 def test_driver_caches_purge_stale_session_entries(spark):
     """Entries keyed by a stopped session's applicationId are dropped
-    when a live session inserts — the driver-side caches (plans,
-    tables, fit centroids, update aggregates) must not accumulate
-    stale py4j handles across SparkContext restarts."""
-    from etl_wikipedia_updates_spark import tables
+    when a live session inserts — the driver-side memo (plans, tables,
+    fit centroids, PQ codebooks, update aggregates) must not
+    accumulate stale py4j handles across SparkContext restarts."""
+    from etl_wikipedia_updates_spark import caches, tables
     from etl_wikipedia_updates_spark.operators import clustering as C
-    from etl_wikipedia_updates_spark.plans import base, clustering as PC
+    from etl_wikipedia_updates_spark.plans import clustering as PC
 
     app = spark.sparkContext.applicationId
-
-    base._PLAN_CACHE[("dead-app", SF, "q1")] = object()
-    base._PLAN_CACHE.pop((app, SF, "q1"), None)
-    q1 = REGISTRY.queries["q1"]
-    q1.cached_builder()(spark, SF)
-    assert ("dead-app", SF, "q1") not in base._PLAN_CACHE
-    assert (app, SF, "q1") in base._PLAN_CACHE
-
-    tables._TABLE_CACHE[("dead-app", SF, "region")] = object()
-    tables._TABLE_CACHE.pop((app, SF, "region"), None)
-    tables.load_table(spark, SF, "region")
-    assert ("dead-app", SF, "region") not in tables._TABLE_CACHE
-    assert (app, SF, "region") in tables._TABLE_CACHE
-
-    C._UPDATE_AGG_CACHE[("dead-app", 4)] = object()
-    C._UPDATE_AGG_CACHE.pop((app, 4), None)
-    C._update_agg(4, app)
-    assert ("dead-app", 4) not in C._UPDATE_AGG_CACHE
-    assert (app, 4) in C._UPDATE_AGG_CACHE
-
-    PC._FIT_CACHE[("dead-app", SF, 8, 2)] = [[0.0]]
-    PC._FIT_CACHE.pop((app, SF, PC.KMEANS_K, PC.KMEANS_ITERS), None)
+    dead = ("dead-app", ("q1", SF))
     emb = tables.load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    PC._fit_centroids(emb, SF)
-    assert ("dead-app", SF, 8, 2) not in PC._FIT_CACHE
+    small = spark.createDataFrame(
+        [(i, [float(i), 0.0, 1.0, float(i % 2)]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    q1 = REGISTRY.queries["q1"].cached_builder()
+    region = tables.table_path(SF, "region")
+    inserts = [
+        (("plan", "q1"), SF, lambda: q1(spark, SF)),
+        (("table", "region"), region, lambda: tables.load_table(spark, SF, "region")),
+        (("update_agg", 4), None, lambda: C.kmeans_fit(small, 2, 1)),
+        (
+            ("kmeans", PC.KMEANS_K, PC.KMEANS_ITERS),
+            SF,
+            lambda: PC._fit_centroids(emb, SF),
+        ),
+        (("pq_codebook", 0), SF, lambda: PC._fit_codebooks(emb, SF)),
+    ]
+    for key, inputs, insert in inserts:
+        caches._MEMO[dead] = ((), object())
+        caches._MEMO.pop((app, (key, inputs)), None)
+        insert()
+        assert dead not in caches._MEMO, key
+        assert (app, (key, inputs)) in caches._MEMO, key
 
-    PC._PQ_FIT_CACHE[("dead-app", SF, 0)] = [[0.0]]
-    PC._PQ_FIT_CACHE.pop((app, SF, 0), None)
-    PC._fit_codebooks(emb, SF)
-    assert ("dead-app", SF, 0) not in PC._PQ_FIT_CACHE
-    assert (app, SF, 0) in PC._PQ_FIT_CACHE
+
+def test_memo_rebuilds_entries_whose_input_was_rewritten(spark, tmp_path):
+    """A table rewritten while the session is live changes the memo's
+    input fingerprint: the table handle, the plan and every fit built
+    from it are rebuilt (and replace the stale entries), so q26 follows
+    the new data. The rewrite moves every doc_id past 2^31, where a
+    stale packed-key gate (doc_id_bounds_u32 == True) would overflow
+    the x * 2^32 + y pair key."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from etl_wikipedia_updates_spark import caches, tables
+    from etl_wikipedia_updates_spark.oracle import compare_frames, duckdb_connection
+
+    sf = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    for name in os.listdir(SF):
+        shutil.copyfile(os.path.join(SF, name), os.path.join(sf, name))
+    q26 = REGISTRY.queries["q26"]
+
+    def fit_entry():
+        fail = lambda: pytest.fail("id-bounds fit not memoized")  # noqa: E731
+        return caches.memo(spark, "doc_id_bounds_u32", fail, sf)
+
+    plan = q26.cached_builder()(spark, sf)
+    docs = tables.load_table(spark, sf, "documents")
+    assert fit_entry() is True
+    n_before = len(caches._MEMO)
+
+    path = tables.table_path(sf, "documents")
+    t = pq.read_table(path)
+    ids = pc.add(t.column("doc_id"), pa.scalar(1 << 31, t.schema.field("doc_id").type))
+    t = t.set_column(t.schema.get_field_index("doc_id"), "doc_id", ids)
+    pq.write_table(t, path)
+
+    assert tables.load_table(spark, sf, "documents") is not docs
+    rebuilt = q26.cached_builder()(spark, sf)
+    assert rebuilt is not plan
+    assert fit_entry() is False
+    assert len(caches._MEMO) == n_before  # replaced, not kept beside
+    duck = duckdb_connection(sf)
+    try:
+        res = compare_frames("q26", rebuilt.toPandas(), duck.sql(q26.oracle).df())
+    finally:
+        duck.close()
+    assert res.ok, res.detail
+    assert res.spark_rows > 0

@@ -499,9 +499,7 @@ def test_cli_dedup_ingest_curate_redact_pii(spark, sf_smoke, tmp_path, capsys):
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_full_curation_keep,
     )
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.tables import load_table
@@ -828,9 +826,7 @@ def test_cli_pack_shard_from_release(spark, sf_smoke, tmp_path, capsys):
     fails loudly."""
     import json
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        packed_sequences,
-    )
+    from etl_wikipedia_updates_spark.stages import packed_sequences
     from etl_wikipedia_updates_spark.release import write_release
     from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
     from pyspark.sql import functions as F

@@ -575,12 +575,12 @@ def test_ngram_score_sql_matches_python_replay(spark, tmp_path):
     and a NULL-text doc (filtered before scoring, like every
     consumer). The fit itself is replayed too, so fit AND score pin
     against an implementation-independent oracle."""
-    from etl_wikipedia_updates_spark.plans.corpus import (
+    from etl_wikipedia_updates_spark.stages import (
         NGQ_BUCKETS,
         fit_ngram_weights,
         ngram_doc_scores,
     )
-    from etl_wikipedia_updates_spark.plans.northstar import rep_keep_col
+    from etl_wikipedia_updates_spark.stages import rep_keep_col
     from pyspark.sql import functions as F
 
     P = 2_147_483_647

@@ -11,12 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark import stages
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import text as T
 from etl_wikipedia_updates_spark.plans.incremental import (
     incremental_vs_prior,
 )
-from etl_wikipedia_updates_spark.plans.northstar import (
+from etl_wikipedia_updates_spark.stages import (
     JACCARD_THRESHOLD,
     MINHASH_BANDS,
     MINHASH_PARAMS,
@@ -201,9 +202,9 @@ def _from_scratch_span_audit(docs, thr):
     from etl_wikipedia_updates_spark.functions.deterministic import (
         det_round,
     )
-    from etl_wikipedia_updates_spark.plans.base import total_order
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         _span_occurrences,
+        total_order,
     )
     from pyspark.sql import Window as W
 
@@ -279,11 +280,9 @@ def test_incremental_span_equals_from_scratch(spark):
     new-vs-prior equals the from-scratch union span_dedup rule
     aggregated the same way — dup_prior | dup_new decomposes
     min(doc)!=max(doc) across the snapshot boundary exactly."""
-    from etl_wikipedia_updates_spark.plans.incremental import (
-        span_audit_vs_prior,
-    )
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         _span_occurrences,
+        span_audit_vs_prior,
     )
 
     thr = 100
@@ -313,11 +312,9 @@ def test_span_store_feed_equals_recomputed_and_merges(spark, tmp_path):
     audit as recomputing the prior side from the corpus (the
     registered query's feed), and merge_prior appends a snapshot so
     the two-step store equals the from-scratch store over the union."""
-    from etl_wikipedia_updates_spark.plans.incremental import (
-        span_audit_vs_prior,
-    )
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         _span_occurrences,
+        span_audit_vs_prior,
     )
     from etl_wikipedia_updates_spark.release import (
         publish_span_store,
@@ -398,7 +395,6 @@ def test_span_store_param_guard(spark, tmp_path, monkeypatch):
     an all-zero audit (r17 review)."""
     import pytest
 
-    import etl_wikipedia_updates_spark.plans.northstar as ns
     from etl_wikipedia_updates_spark.release import (
         publish_span_store,
         span_store_audit,
@@ -409,7 +405,7 @@ def test_span_store_param_guard(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "store")
     publish_span_store(spark, prior, root)
 
-    monkeypatch.setattr(ns, "SPAN_W", ns.SPAN_W + 2)
+    monkeypatch.setattr(stages, "SPAN_W", stages.SPAN_W + 2)
     with pytest.raises(ValueError, match="incomparable"):
         span_store_audit(spark, new, root)
     with pytest.raises(ValueError, match="incomparable"):

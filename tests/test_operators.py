@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark import stages
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import multimodal as M
 from etl_wikipedia_updates_spark.operators import text as T
@@ -246,7 +247,7 @@ def test_q26_pairs_postings_enumeration(spark, monkeypatch, tmp_path):
     assert all(d1 < d2 for d1, d2, _ in base)
 
     # a cap of 1 kills every shared shingle -> no pairs at all
-    monkeypatch.setattr(N, "SHINGLE_DF_CAP", 1)
+    monkeypatch.setattr(stages, "SHINGLE_DF_CAP", 1)
     assert N._q26_pairs(spark, sf).count() == 0
     assert N._q26_pairs(spark, sf, prefilter_hot=True).count() == 0
 
@@ -492,7 +493,7 @@ def test_remove_dup_spans_keeps_canonical_copy(spark):
     """Span excision: the minimum-id owner of a duplicated span keeps
     its text verbatim; every other doc loses exactly the span's
     tokens; untouched docs pass through unchanged."""
-    from etl_wikipedia_updates_spark.plans.northstar import remove_dup_spans
+    from etl_wikipedia_updates_spark.stages import remove_dup_spans
 
     docs = _span_fixture(spark)
     out = {r["doc_id"]: r for r in remove_dup_spans(docs).collect()}
@@ -511,7 +512,7 @@ def test_remove_dup_spans_long_doc_linear(spark):
     excision's de-facto runtime guard: the old per-token
     array_contains filter was O(n x removed) — ~10^9 comparisons on
     this fixture, minutes instead of seconds."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         SPAN_HOP,
         SPAN_W,
         remove_dup_spans,
@@ -552,10 +553,8 @@ def test_span_removal_extents_match_excision(spark, tmp_path):
     remove_dup_spans actually excises (n_kept == token count of
     text_clean) on the crafted fixture, written as a parquet table so
     the query builder's load path is exercised."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        remove_dup_spans,
-        span_removal,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import span_removal
+    from etl_wikipedia_updates_spark.stages import remove_dup_spans
 
     docs = _span_fixture(spark)
     docs.toPandas().to_parquet(str(tmp_path / "documents.parquet"))
@@ -948,17 +947,16 @@ def test_release_members_classifier_uses_weight_memo(spark, sf_smoke):
     from unittest import mock
 
     import etl_wikipedia_updates_spark.plans.corpus as C
-    import etl_wikipedia_updates_spark.plans.northstar as N
+    from etl_wikipedia_updates_spark.caches import memo
 
     # warm the shared memo the way ngram_quality does
     C.ngram_quality(spark, sf_smoke)
-    app = spark.sparkContext.applicationId
-    key = (app, sf_smoke, f"ngq_weights_{C.NGQ_BUCKETS}")
-    assert key in N._TEXT_MODEL_CACHE
+    key = f"ngq_weights_{stages.NGQ_BUCKETS}"
+    assert memo(spark, key, lambda: pytest.fail("not memoized"), sf_smoke)
     with mock.patch.object(
-        C, "fit_ngram_weights", side_effect=AssertionError("refit!")
+        stages, "fit_ngram_weights", side_effect=AssertionError("refit!")
     ):
-        out = N.release_members(spark, sf_smoke, quality_classifier=True)
+        out = stages.release_members(spark, sf_smoke, quality_classifier=True)
         assert out.count() > 0  # executes off the cached weights
 
 
@@ -1022,10 +1020,10 @@ def test_release_decontam_spans_stage(spark, sf_smoke):
     funnel (flag-on membership is a subset of flag-off membership
     plus mixing re-decisions — checked on the pre-mixing invariant:
     every flag-on member is a flag-off *quality* survivor)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.plans.northstar import span_decontam
+    from etl_wikipedia_updates_spark.stages import (
         CONTAM_BENCH_SOURCE,
         release_members,
-        span_decontam,
     )
 
     base = {
@@ -1042,9 +1040,7 @@ def test_release_decontam_spans_stage(spark, sf_smoke):
     checksum = sum(r["contam_checksum"] for r in audit)
     # disjointness: no released doc can be contaminated. The audit
     # only exposes count+checksum, so assert via the core:
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _span_occurrences,
-    )
+    from etl_wikipedia_updates_spark.stages import _span_occurrences
     from etl_wikipedia_updates_spark.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")

@@ -29,7 +29,7 @@ CASES = [
     ("q3", ["partial_"], []),
     # DSIR scoring: map-side weight-literal fold + top-k heaps; the
     # steady plan has no explode, no join, no range exchange (the
-    # fit's explode runs once at build inside _memo_model)
+    # fit's explode runs once at build inside caches.memo)
     (
         "dsir_select",
         ["TakeOrderedAndProject", "element_at("],
@@ -468,11 +468,8 @@ def test_packed_sequences_roundtrip_and_lengths(spark, sf_smoke):
     concatenation of the source's docs in doc_id order token for
     token — the round-trip that proves no fragment was lost,
     duplicated, or reordered."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SEQ_LEN,
-        packed_sequences,
-        seq_pack,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import seq_pack
+    from etl_wikipedia_updates_spark.stages import SEQ_LEN, packed_sequences
     from etl_wikipedia_updates_spark.tables import load_table, spread
 
     docs = spread(load_table(spark, sf_smoke, "documents"))

@@ -16,6 +16,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from etl_wikipedia_updates_spark import stages
 from etl_wikipedia_updates_spark.operators import dedup as D
 
 SLOW = settings(
@@ -197,10 +198,8 @@ def test_posting_list_pairs_match_naive_jaccard(spark, docs, tmp_path_factory):
 def test_dedup_corpus_partition_invariants(spark, sf_smoke):
     """kept + dropped = in, per source and in total; every near-dup
     cluster keeps exactly its minimum doc_id (the canonical survivor)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        _q26_pairs,
-        dedup_corpus,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import dedup_corpus
+    from etl_wikipedia_updates_spark.stages import _q26_pairs
 
     rows = dedup_corpus(spark, sf_smoke).collect()
     assert rows, "at least one source group"
@@ -345,7 +344,8 @@ def test_seq_pack_matches_python_packing(spark, sf_smoke):
     off-by-one drift."""
     import math
 
-    from etl_wikipedia_updates_spark.plans.northstar import SEQ_LEN, seq_pack
+    from etl_wikipedia_updates_spark.plans.northstar import seq_pack
+    from etl_wikipedia_updates_spark.stages import SEQ_LEN
     from etl_wikipedia_updates_spark.tables import load_table
 
     docs = sorted(
@@ -451,10 +451,8 @@ def test_seq_pack_bucketing_monotone_under_arbitrary_ids(spark, rows):
     concatenation and shift every split count)."""
     import math
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SEQ_LEN,
-        _seq_pack,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import _seq_pack
+    from etl_wikipedia_updates_spark.stages import SEQ_LEN
 
     want: dict[str, dict] = {}
     cursors: dict[str, int] = {}
@@ -515,9 +513,7 @@ def test_decontam_matches_python_reference(spark, corpus, bench):
     3-token shingles with any single (df-capped) benchmark doc,
     self-pairs excluded per exclude_self. The tiny 10-token alphabet
     makes shingle collisions common, exercising the threshold edge."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_MIN_SHARED,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_MIN_SHARED
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_decontam_keep,
     )
@@ -568,7 +564,7 @@ def _span_corpus(draw):
     so HOP-aligned SPAN_W windows (two adjacent segments) recur across
     docs with high probability — plus short docs (< SPAN_W tokens)
     exercising the no-span path."""
-    from etl_wikipedia_updates_spark.plans.northstar import SPAN_HOP
+    from etl_wikipedia_updates_spark.stages import SPAN_HOP
 
     pool = draw(
         st.lists(
@@ -627,7 +623,7 @@ def test_span_removal_matches_python_reference(spark, corpus):
     cleaned text equals the model's kept tokens — including the
     invariants that the globally-minimal doc never loses tokens and
     short docs pass through."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         SPAN_HOP,
         SPAN_W,
         _span_removed_positions,
@@ -791,7 +787,7 @@ def test_rep_per_doc_drops_null_text_like_the_oracle(spark):
     )
     got = {r["doc_id"] for r in N._rep_per_doc(df).collect()}
     assert got == {1}
-    kept = {r["doc_id"] for r in N.quality_keep(df).collect()}
+    kept = {r["doc_id"] for r in stages.quality_keep(df).collect()}
     assert 2 not in kept
 
 
@@ -806,11 +802,11 @@ def test_q26_packed_pair_key_gate_and_roundtrip(spark):
     mk = lambda ids: spark.createDataFrame(
         [(i,) for i in ids], "doc_id long"
     )
-    assert N._doc_ids_fit_u32(mk([0, (1 << 31) - 1]))
-    assert not N._doc_ids_fit_u32(mk([-1, 5]))
-    assert not N._doc_ids_fit_u32(mk([0, 1 << 31]))
-    assert not N._doc_ids_fit_u32(mk([None]))
-    assert not N._doc_ids_fit_u32(mk([]))
+    assert stages._doc_ids_fit_u32(mk([0, (1 << 31) - 1]))
+    assert not stages._doc_ids_fit_u32(mk([-1, 5]))
+    assert not stages._doc_ids_fit_u32(mk([0, 1 << 31]))
+    assert not stages._doc_ids_fit_u32(mk([None]))
+    assert not stages._doc_ids_fit_u32(mk([]))
 
     hi = (1 << 31) - 1
     pairs = [(0, 1), (0, hi), (1, hi), (hi - 1, hi), (0, 0)]
@@ -853,10 +849,10 @@ def test_release_barrier_gate_matches_streaming_quality_keep(spark):
     batch = {
         r["doc_id"]
         for r in df.filter(F.col("text").isNotNull())
-        .filter(N.eval_here(N.rep_keep_col()))
+        .filter(stages.eval_here(stages.rep_keep_col()))
         .collect()
     }
-    stream = {r["doc_id"] for r in N.quality_keep(df).collect()}
+    stream = {r["doc_id"] for r in stages.quality_keep(df).collect()}
     assert batch == stream
     # the fixture must exercise both verdicts, or the pin is vacuous
     assert batch and batch != {r[0] for r in rows}
@@ -937,11 +933,8 @@ def test_span_decontam_matches_python_reference(spark, corpus):
     two-level aggregate) must equal a literal-token Python model on
     ANY corpus: the lowest doc_id plays the benchmark, odd/even train
     docs split across two sources, short docs carry no spans."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        SPAN_HOP,
-        SPAN_W,
-        span_decontam_audit,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import span_decontam_audit
+    from etl_wikipedia_updates_spark.stages import SPAN_HOP, SPAN_W
 
     bench_id = min(corpus)
     src = {d: ("sA" if d % 2 else "sB") for d in corpus}

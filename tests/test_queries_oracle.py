@@ -205,8 +205,8 @@ def test_packed_sequences_matches_duckdb(spark, sf_smoke):
     sequence text bodies."""
     from etl_wikipedia_updates_spark.plans.northstar import (
         PACKED_SEQUENCES_SQL,
-        packed_sequences,
     )
+    from etl_wikipedia_updates_spark.stages import packed_sequences
     from etl_wikipedia_updates_spark.tables import load_table, spread
 
     duck = duckdb_connection(sf_smoke)

@@ -94,3 +94,16 @@ def test_int_env_knobs_fail_soft(monkeypatch):
     assert _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32) == 48
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     assert _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32) == 32
+
+
+def test_driver_memory_default_follows_the_host():
+    """The default driver heap is half the host's physical memory,
+    capped at 16g, so it never exceeds the machine it runs on."""
+    from etl_wikipedia_updates_spark.session import driver_memory
+
+    gib = 1 << 30
+    assert driver_memory(15 * gib) == "7680m"
+    assert driver_memory(8 * gib) == "4096m"
+    assert driver_memory(32 * gib) == "16384m"
+    assert driver_memory(256 * gib) == "16384m"
+    assert driver_memory(None) == "16384m"

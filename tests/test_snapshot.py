@@ -214,7 +214,7 @@ def test_write_release_with_span_removal_stage(spark, sf_smoke, tmp_path):
     membership/audit card is unchanged vs a plain release (spans only
     edit text, never membership), and the stage is recorded in the
     version metadata."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         release_members,
         remove_dup_spans,
     )
@@ -374,7 +374,7 @@ def test_write_sharded_manifest_matches_files_and_detects_tamper(
     import glob
     import shutil
 
-    from etl_wikipedia_updates_spark.plans.corpus import N_SHARDS
+    from etl_wikipedia_updates_spark.stages import N_SHARDS
     from etl_wikipedia_updates_spark.release import (
         verify_sharded,
         write_sharded,
@@ -425,11 +425,7 @@ def test_write_sharded_reproducible_under_any_partitioning(
     per-shard manifests and identical per-shard id sets, and the
     mapping is the pure Python LCG replay of each doc_id."""
     from etl_wikipedia_updates_spark.operators.text import HASH_P
-    from etl_wikipedia_updates_spark.plans.corpus import (
-        N_SHARDS,
-        SHARD_A,
-        SHARD_B,
-    )
+    from etl_wikipedia_updates_spark.stages import N_SHARDS, SHARD_A, SHARD_B
     from etl_wikipedia_updates_spark.release import write_sharded
     from etl_wikipedia_updates_spark.tables import load_table
 
@@ -578,11 +574,11 @@ def test_write_release_with_quality_classifier_gate(spark, sf_smoke, tmp_path):
     features pass — anti-join on LOW scorers), its audit card totals
     match the published rows, the flag rides in the version metadata,
     and the default-release contract is untouched."""
-    from etl_wikipedia_updates_spark.plans.corpus import (
+    from etl_wikipedia_updates_spark.stages import (
         NGQ_HI_PPM,
         ngram_doc_scores,
+        release_members,
     )
-    from etl_wikipedia_updates_spark.plans.northstar import release_members
     from etl_wikipedia_updates_spark.release import write_release
     from etl_wikipedia_updates_spark.tables import load_table
 

@@ -980,6 +980,8 @@ def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
     expected = _checksum_docs(batch_verified_neardup_keep(docs))
     got = _checksum_docs(read_sink(spark, sink))
     assert got == expected
+    # the micro-batch is read once: the reported input is the replay
+    assert sum(p["numInputRows"] for p in q.recentProgress) == docs.count()
     n_all = docs.count()
     n_aggressive = batch_neardup_keep(docs).count()
     assert expected[0] < n_all  # the verified rule still bites
@@ -1054,6 +1056,8 @@ def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
     expected = cks(batch_verified_embedding_keep(emb))
     got = cks(read_sink(spark, sink))
     assert got == expected
+    # the micro-batch is read once: the reported input is the replay
+    assert sum(p["numInputRows"] for p in q.recentProgress) == emb.count()
     n_aggressive = batch_embedding_neardup_keep(emb).count()
     assert expected[0] >= n_aggressive  # precision: never drops more
     for store in (bucket_store_path(sink), vector_store_path(sink)):
@@ -1236,9 +1240,7 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     docs' verdicts, sink + quarantine must partition the corpus, and
     benchmark docs streaming through must NOT be vetoed by their own
     shingles (self-pair exclusion)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_decontam_keep,
         contam_store_path,
@@ -1267,6 +1269,8 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     kept = read_sink(spark, sink)
     expected = batch_decontam_keep(docs, bench)
     assert _checksum_docs(kept) == _checksum_docs(expected)
+    # the micro-batch is read once: the reported input is the replay
+    assert sum(p["numInputRows"] for p in q.recentProgress) == docs.count()
 
     quarantine = read_sink(spark, contam_store_path(sink))
     n_all, n_kept = docs.count(), kept.count()
@@ -1302,9 +1306,7 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
     another corpus-lifetime cache entry)."""
     import time
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         ingest_with_decontam,
     )
@@ -1365,9 +1367,7 @@ def test_streaming_full_curation_equals_batch(spark, tmp_path):
     near-dup dedup) replayed in doc_id order must equal the composed
     batch statement, quarantine its contaminated docs, and keep
     strictly fewer docs than any single stage alone."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_full_curation_keep,
         contam_store_path,
@@ -1413,7 +1413,7 @@ def _reference_verdicts(docs, bench, mode):
     pairs dropped, threshold, then each doc's strongest match by a
     ranked window (ties to the smallest bench_doc)."""
     from etl_wikipedia_updates_spark.operators import text as T
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         CONTAM_MIN_SHARED,
         _span_occurrences,
     )
@@ -1450,7 +1450,7 @@ def _assert_curation_stores(spark, sink, docs, bench, mode):
     """The full-curation stores, row for row: the quarantine holds the
     veto verdicts over the quality-kept docs, and the bucket store the
     band rows of the clean docs (kept and not vetoed)."""
-    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
+    from etl_wikipedia_updates_spark.stages import quality_keep
     from etl_wikipedia_updates_spark.streaming.decontam import (
         contam_store_path,
     )
@@ -1505,9 +1505,7 @@ def test_curation_checkpoint_resume_equals_batch(spark, tmp_path):
     is replay-safe end-to-end, not just its parts."""
     import time
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_full_curation_keep,
         ingest_with_full_curation,
@@ -1632,7 +1630,7 @@ def test_streaming_curation_with_pii_redaction(spark, tmp_path):
     email/IP/phone is its class tag and n_chars reflects the REDACTED
     text (redaction is stage 0, so every downstream signal sees the
     text a release would ship)."""
-    from etl_wikipedia_updates_spark.plans.corpus import PII_EMAIL
+    from etl_wikipedia_updates_spark.stages import PII_EMAIL
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_full_curation_keep,
         ingest_with_full_curation,
@@ -1700,7 +1698,7 @@ def test_streaming_temperature_mix_equals_batch(spark, tmp_path):
     enter the bucket store, so the dedup-before-mix order of the
     release pipeline is preserved (a near-dup of a mix-dropped doc
     cannot sneak into the sink)."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
+    from etl_wikipedia_updates_spark.stages import (
         CONTAM_BENCH_SOURCE,
         static_temp_rates,
         temp_membership,
@@ -1768,7 +1766,7 @@ def test_temp_membership_unseen_source_fails_loudly(spark):
     would lose 100% of a new crawl source with no signal."""
     import pytest
 
-    from etl_wikipedia_updates_spark.plans.northstar import temp_membership
+    from etl_wikipedia_updates_spark.stages import temp_membership
 
     docs = spark.createDataFrame(
         [(1, "known", 10), (2, "brand_new", 10)],
@@ -1788,9 +1786,7 @@ def test_static_temp_rates_is_materialized(spark):
     """The stream-static fit must carry NO lineage back to the static
     corpus (review finding): a lazy plan would re-run the full static
     scan+aggregation inside every foreachBatch broadcast."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        static_temp_rates,
-    )
+    from etl_wikipedia_updates_spark.stages import static_temp_rates
 
     docs = spark.createDataFrame(
         [(1, "a", 100), (2, "b", 400)],
@@ -1811,10 +1807,8 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
     span_decontam audit counts as contaminated (contam_doc > 0) — the
     stream, the batch rule, and the batch audit are three statements
     of one contract."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-        span_decontam,
-    )
+    from etl_wikipedia_updates_spark.plans.northstar import span_decontam
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_decontam_keep,
         contam_store_path,
@@ -1881,9 +1875,7 @@ def test_streaming_full_curation_span_mode_equals_batch(spark, tmp_path):
     span-rule verdicts (>= 1 exact span — no min-shared threshold),
     and the two modes genuinely differ on this corpus (different veto
     sets), so the dial is doing something."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_full_curation_keep,
         contam_store_path,

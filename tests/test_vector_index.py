@@ -392,7 +392,7 @@ def test_pq_index_adc_rescore_and_frozen_codebook_append(
         _pq_encode,
         append_to_ivf_index,
     )
-    from etl_wikipedia_updates_spark.plans.clustering import PQ_KS, PQ_M
+    from etl_wikipedia_updates_spark.stages import PQ_KS, PQ_M
 
     froot, proot = str(tmp_path / "f"), str(tmp_path / "p")
     build_ivf_index(spark, sf_smoke, froot)
@@ -479,7 +479,7 @@ def test_unit_normalize_zero_vector_yields_zeros_not_nan(spark):
     ADVICE), and any nonzero vector is bit-level unaffected."""
     import math
 
-    from etl_wikipedia_updates_spark.plans.clustering import ne_sql
+    from etl_wikipedia_updates_spark.stages import ne_sql
 
     df = spark.createDataFrame(
         [(0, [0.0, 0.0, 0.0]), (1, [3.0, 0.0, 4.0])],

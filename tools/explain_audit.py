@@ -147,7 +147,7 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     # r19: DSIR scoring is a pure map-side in-array fold over the
     # collected 512-long weight literal, selected via
     # TakeOrderedAndProject — the steady plan has NO explode, NO join
-    # (the fit's explode runs once at build inside _memo_model, not in
+    # (the fit's explode runs once at build inside caches.memo, not in
     # the scoring plan), and never a range exchange for the top-k
     "dsir_select": (
         ["TakeOrderedAndProject", "element_at("],

@@ -141,9 +141,7 @@ def _replay_frame(spark, frame, key, start, what: str):
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
     from etl_wikipedia_updates_spark.streaming.decontam import (
         ingest_with_decontam,
         ingest_with_full_curation,
