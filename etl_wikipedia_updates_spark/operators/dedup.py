@@ -206,10 +206,11 @@ def lsh_candidate_pairs_split(
 ) -> DataFrame:
     """Distinct candidate (doc_id, doc_id2) pairs (doc_id < doc_id2)
     sharing an LSH bucket with AT LEAST ONE endpoint ``>= thr`` —
-    bit-equal to ``lsh_candidate_pairs_vs(band_rows.filter(doc_id >=
-    thr), band_rows)`` (pinned in tests/test_incremental.py), for the
-    case where the probe side is an id-threshold restriction of the
-    base (the incremental-recrawl snapshot boundary).
+    bit-equal to the join of the ``doc_id >= thr`` band rows against
+    all band rows (the reference ``lsh_candidate_pairs_vs`` in
+    tests/test_incremental.py pins it), where the probe side is an
+    id-threshold restriction of the base (the incremental-recrawl
+    snapshot boundary).
 
     Physical shape (r20): ONE aggregation groups the band rows into
     sorted per-bucket doc lists, then pairs stream out of each list
@@ -248,35 +249,6 @@ def lsh_candidate_pairs_split(
             F.col("x").alias("doc_id"), F.explode(partners).alias("doc_id2")
         )
         .filter(F.col("doc_id") != F.col("doc_id2"))
-        .distinct()
-    )
-
-
-def lsh_candidate_pairs_vs(
-    band_probe: DataFrame, band_base: DataFrame
-) -> DataFrame:
-    """Distinct candidate (doc_id, doc_id2) pairs (doc_id < doc_id2)
-    sharing an LSH bucket where AT LEAST ONE side is in ``band_probe``
-    (both frames: lsh_band_rows shape).
-
-    The incremental-dedup join shape: probe = the NEW snapshot's band
-    rows, base = prior release ∪ new. base×base pairs where both sides
-    are prior docs are never generated — the prior corpus is already
-    canonical, so re-pairing it against itself is the quadratic term
-    an incremental recrawl at 100 TB cannot afford (and its band rows
-    are a storable artifact of the prior release, not a recompute).
-    Pairs are normalized (least, greatest) + distinct, so a new×new
-    collision found from both sides collapses to one row."""
-    base = band_base.select(
-        F.col("doc_id").alias("doc_id_b"), "lang", "band", "band_key"
-    )
-    return (
-        band_probe.join(base, ["lang", "band", "band_key"])
-        .filter(F.col("doc_id") != F.col("doc_id_b"))
-        .select(
-            F.least("doc_id", "doc_id_b").alias("doc_id"),
-            F.greatest("doc_id", "doc_id_b").alias("doc_id2"),
-        )
         .distinct()
     )
 

@@ -6,20 +6,13 @@ str() casts and one replace (/root/reference/pipeline.py:119-124); these
 operators are the north-star extension of that surface for LLM-corpus
 work: token stats, language-ID, quality scores, fingerprints.
 
-Cross-engine determinism: operators that need a token->integer mapping
-use ``token_dictionary``, which DEFAULTS (since r11) to ``ids='hash'``
-— stateless ``xxhash64(term)`` ids, a pure map-side expression with no
-shuffle, the 100 TB shape a new caller should get. The dense path
-(``ids='dense'`` or ``SPARK_GRAFT_DICT_IDS=dense``) is the opt-in
-oracle-parity mode: dense 1-based ids from a global sort the DuckDB
-oracle can reproduce bit-for-bit, valid only for bounded vocabularies.
-Downstream set/join/grouping results are identical under either scheme
-modulo the id values (equivalence pinned in tests).
+Cross-engine determinism: operators that need a token->integer id use
+``term_hash_col`` — a stateless polynomial fold, a pure map-side
+expression with no shuffle, which ``sql_term_hash`` replays bit-for-bit
+in DuckDB.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -90,13 +83,11 @@ TERM_HASH_BASE = 131
 def term_hash_col(term_col: str = "term"):
     """Stateless term -> integer id: polynomial char fold
     ``fold((a*131 + ascii(c)) % (2^31-1))`` — a pure map-side
-    expression, no distinct, no global sort, no broadcast join. This is
-    the 100 TB id path the dictionary docstrings point at, usable in
-    the CONTRACT too because ``sql_term_hash`` replays the identical
+    expression, no distinct, no global sort, no broadcast join. It is
+    usable in the CONTRACT because ``sql_term_hash`` replays the identical
     integer sequence in DuckDB (verified bit-equal): hash collisions
     are possible but occur identically in both engines, and
-    MinHash/SimHash tolerate them by construction. ``token_dictionary``
-    remains for operators that need *dense, sorted* ids."""
+    MinHash/SimHash tolerate them by construction."""
     return F.expr(
         f"aggregate(split({term_col}, ''), 0L, "
         f"(a, c) -> (a * {TERM_HASH_BASE} + ascii(c)) % {HASH_P})"
@@ -126,56 +117,11 @@ def sql_term_hash(expr: str = "term") -> str:
     )
 
 
-def term_dictionary(term_rows: DataFrame, ids: str = "hash") -> DataFrame:
-    """(term, tid) ids for any exploded (.., term) rows — the
-    shingle/token-agnostic core of token_dictionary.
-
-    ``ids='hash'`` (default): stateless ``xxhash64(term)`` ids — a
-    pure map-side expression, no global sort, no single-partition
-    window. THE 100 TB path, and therefore the default a new caller
-    gets: a web corpus's vocabulary is billions of distinct terms, and
-    a dense-rank window would funnel all of them through one task.
-    Ids are sparse 64-bit values instead of dense ranks; every
-    downstream set/join/grouping result is identical modulo the id
-    VALUES (pinned by test_token_dictionary_hash_ids_equivalent), with
-    hash collisions possible-but-negligible (~n^2/2^65) and absent at
-    every test tier.
-
-    ``ids='dense'``: dense 1-based ids by sorted term order. The
-    single-partition row_number window is the opt-in oracle-parity
-    mode, valid ONLY for bounded vocabularies (fixture corpora,
-    per-language profile tables)."""
-    terms = term_rows.select("term").distinct()
-    if ids == "hash":
-        return terms.select("term", F.xxhash64("term").alias("tid"))
-    if ids != "dense":
-        raise ValueError(f"unknown dictionary ids mode {ids!r}")
-    return terms.select(
-        "term", F.row_number().over(W.orderBy("term")).alias("tid")
-    )
-
-
 def doc_tokens_with_pos(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, term) with 1-based positions (order-preserving)."""
     return docs.select(
         "doc_id", F.posexplode(tokens_col()).alias("pos0", "term")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "term")
-
-
-def token_dictionary(docs: DataFrame, ids: str | None = None) -> DataFrame:
-    """(term, tid) for a documents frame's whitespace-token vocabulary.
-
-    ``ids`` selects the id scheme (see term_dictionary): ``'hash'``
-    for the stateless shuffle-free xxhash64 scale path (the default
-    since r11 — a new caller gets the 100 TB shape), ``'dense'`` for
-    opt-in oracle-parity dense ranks. Default comes from the
-    ``SPARK_GRAFT_DICT_IDS`` env var (``hash`` if unset), so a
-    deployment needing dense ids flips the whole engine with one
-    setting and no code change.
-    """
-    if ids is None:
-        ids = os.environ.get("SPARK_GRAFT_DICT_IDS", "hash")
-    return term_dictionary(doc_tokens(docs, distinct=True), ids=ids)
 
 
 def fit_stopwords(docs: DataFrame, n: int) -> list[str]:

@@ -20,7 +20,7 @@ perplexity-filter, or shard-planning stage), re-expressed the way a
 - ``shard_manifest``: deterministic assignment of every document to a
   fixed number of output shards plus the per-shard manifest (doc/char
   budgets, checksums, balance shares) a dataloader or writer consumes.
-  The actual partitioned write is operators.layout's job; this is the
+  The actual sharded write is release.write_sharded; this is the
   planning/audit view of it.
 - ``pii_scrub``: regex PII detection + redaction audit
   (email/IPv4/phone) in the Java-regex/RE2 common subset, map-side

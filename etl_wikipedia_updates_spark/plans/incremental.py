@@ -13,7 +13,7 @@ an incremental pass only needs candidates touching the new snapshot:
   rows are exactly the posting lists the streaming near-dup store
   keeps; here they are recomputed from the table).
 - Candidates = band collisions with AT LEAST ONE new endpoint
-  (operators.dedup.lsh_candidate_pairs_vs) — prior x prior pairs are
+  (operators.dedup.lsh_candidate_pairs_split) — prior x prior pairs are
   never generated, which is the quadratic term that makes from-scratch
   re-dedup infeasible per recrawl at 100 TB.
 - Exact-Jaccard verify, then connected components over the verified
@@ -84,11 +84,10 @@ def incremental_vs_prior(
         dtok.select("doc_id", "lang", "tid"), MINHASH_PARAMS
     )
     band_all = D.lsh_band_rows(sig, MINHASH_BANDS, MINHASH_ROWS)
-    # r20: the split form — bit-equal to
-    # lsh_candidate_pairs_vs(band_all.filter(doc_id >= thr), band_all)
-    # (pinned in tests/test_incremental.py) but planned as ONE
-    # aggregation over one sig pipeline; the join form scanned,
-    # shingled and min-hashed the corpus once per side.
+    # r20: the split form — bit-equal to the join of the new band rows
+    # against all band rows (pinned in tests/test_incremental.py) but
+    # planned as ONE aggregation over one sig pipeline; the join form
+    # scanned, shingled and min-hashed the corpus once per side.
     cand = D.lsh_candidate_pairs_split(band_all, thr)
     tok_arrays = docs.select(
         "doc_id",

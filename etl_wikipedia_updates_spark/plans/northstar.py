@@ -1587,9 +1587,8 @@ FROM documents ORDER BY doc_id
 def grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completes the Python-UDF surface matrix: pandas_udf as a grouped
     AGGREGATE (q28 = scalar, grouped_zscore = grouped-map applyInPandas,
-    multimodal_bytes = mapInPandas, streaming.stateful =
-    applyInPandasWithState). The UDAF receives each group's column as
-    one Arrow-backed pandas Series and returns one scalar; integer
+    multimodal_bytes = mapInPandas). The UDAF receives each group's
+    column as one Arrow-backed pandas Series and returns one scalar; integer
     accumulation (scaled-long sum) makes the result independent of row
     order within the group — the same property the JVM-side dec_sum
     relies on, proven here across the Python boundary."""
@@ -2529,8 +2528,8 @@ def pack_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (bkt, source) shuffle + tiny offsets broadcast) with NO extra
     shuffle — the per-doc projection is map-side over the window
     output; the total order by doc_id is the contract artifact (a
-    production writer would repartition by (source, seq_first div
-    SEQS_PER_FILE) instead — operators.layout's job)."""
+    production writer shards the packed sequences by (source, seq_id
+    div SEQS_PER_FILE) instead — release.write_packed)."""
     per = _seq_pack_cum(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())

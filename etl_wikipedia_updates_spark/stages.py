@@ -32,7 +32,7 @@ def total_order(df: DataFrame, *cols) -> DataFrame:
     so the plan becomes Exchange(1) + in-partition sort. Contract
     outputs are small (a few rows to ~10^5), so the serial sort is
     noise. At 100 TB a large *result* would never be globally sorted at
-    all — you write partitioned/sorted files (operators.layout) — so
+    all — you write partitioned/sorted files (release.write_sharded) — so
     the total order stays a contract artifact, not a scale path.
 
     Use with ``DataFrame.transform``:
@@ -110,7 +110,7 @@ def _q26_pairs(
     docs = spread(load_table(spark, sf_dir, "documents"))
     # Pairs on raw shingle strings: a dense-id dictionary costs two
     # extra shuffles (the 100 TB swap to 8-byte keys is a map-side
-    # xxhash64(term); operators.text.token_dictionary notes it). NULL
+    # operators.text.term_hash_col). NULL
     # lang never pairs — (lang, term) is a JOIN key in the oracle SQL,
     # where NULL = NULL is false, but only a grouping key here.
     raw = T.doc_shingles(docs).filter(F.col("lang").isNotNull())
@@ -654,9 +654,8 @@ def packed_sequences(docs: DataFrame) -> DataFrame:
     sequence's space-joined tokens in corpus order. The end of the
     packing story: seq_pack audits it, pack_assignments maps docs into
     it, this emits the sequences a dataloader reads (write with
-    ``df.write.partitionBy("source")`` or operators.layout's sharded
-    writer). Only each source's final sequence may carry fewer than
-    SEQ_LEN tokens.
+    ``df.write.partitionBy("source")`` or release.write_packed). Only
+    each source's final sequence may carry fewer than SEQ_LEN tokens.
 
     Scale shape — FRAGMENT-level, never token-level: each doc emits
     one row per sequence it overlaps (ceil(n_tok/SEQ_LEN) + 1 worst
@@ -1466,7 +1465,7 @@ def _d2_array_expr(cents: list[list[float]], col: str) -> str:
     )
 
 
-# SemDeDup cosine threshold (semantic_dedup, vector_index.dedup_index)
+# SemDeDup cosine threshold (semantic_dedup)
 SEMDEDUP_TAU = 0.35
 
 

@@ -31,12 +31,6 @@ dirs already folded into the PREVIOUS version too are deleted one
 maintenance cycle late, and versions are vacuumed with keep_last=2 —
 both one-publish grace horizons for in-flight readers, same contract
 as Delta's VACUUM retention.
-
-Scale notes: at 100 TB the retention rewrite becomes a partition-level
-operation (retain_newest_partitioned: drop whole event-date
-partitions, or Delta ``DELETE WHERE`` + ``VACUUM``) rather than a
-full-file rewrite — the trigger condition and keep-newest-N semantics
-are identical.
 """
 
 from __future__ import annotations
@@ -260,30 +254,6 @@ def _recover_swap(live_dir: str) -> None:
             shutil.rmtree(old, ignore_errors=True)
 
 
-def _swap_dirs(new_dir: str, live_dir: str) -> None:
-    """Publish a fully-written ``new_dir`` at ``live_dir``.
-
-    Two same-filesystem renames: the live dir steps aside (to a hidden
-    ``._old_*`` sibling no Spark reader will list), the new dir takes
-    its path, then the old data is deleted. A concurrent reader can
-    never observe an EMPTY, HALF-WRITTEN, or DOUBLED sink (the failure
-    modes of rmtree-then-rewrite and of visible tmp/old siblings):
-    every state of this sequence has exactly one complete dataset at
-    ``live_dir`` except the microsecond gap between the renames, which
-    surfaces as transient path-not-found — the same class of blip any
-    direct-to-filesystem table has and a retry absorbs. A crash inside
-    that gap is healed by ``_recover_swap`` on the next run. Readers
-    that listed the OLD files keep reading them (POSIX: open fds
-    survive unlink) unless they open after the final rmtree; closing
-    that last hole needs a table format with snapshot isolation
-    (Delta/Iceberg), which is the declared 100 TB path."""
-    old = _hidden_sibling(live_dir, "old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live_dir, old)
-    os.rename(new_dir, live_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _view_file_count(sink_path: str) -> int:
     """Parquet files the CURRENT consistent view reads (version dir +
     unfolded committed batch dirs; the committed batch dirs — or the
@@ -423,12 +393,10 @@ def apply_retention(
 ) -> bool:
     """R14: keep the newest ``max_rows`` by event time once the sink
     exceeds slack x cap, published as the next snapshot version (see
-    module docstring; at this container's parquet sink the rewrite is
-    full-file — retain_newest_partitioned is the partition-level 100 TB
-    path). The cap check reads the MAINTAINED count (version meta +
-    per-batch sidecars, sink_row_count) — per-trigger cost is a few
-    tiny file reads, not a count() scan of the sink. Returns True when
-    a rewrite happened."""
+    module docstring). The cap check reads the MAINTAINED count
+    (version meta + per-batch sidecars, sink_row_count) — per-trigger
+    cost is a few tiny file reads, not a count() scan of the sink.
+    Returns True when a rewrite happened."""
     _recover_swap(sink_path)  # heal a pre-snapshot-era crashed swap
     total = sink_row_count(sink_path)
     if total < RETENTION_SLACK * max_rows:
@@ -439,81 +407,6 @@ def apply_retention(
         lambda view: view.orderBy(F.col(ts_col).desc()).limit(max_rows),
     )
     return True
-
-
-def retain_newest_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    max_rows: int,
-    ts_col: str,
-    date_col: str = "event_date",
-) -> dict:
-    """R14 at 100 TB: exact keep-newest-N over a date-partitioned sink
-    with partition-level I/O.
-
-    Layout: ``table_path/<date_col>=YYYY-MM-DD/...``. The walk is
-    newest-partition-first: partitions that fit wholly inside the keep
-    budget are left untouched (their files are never read or rewritten),
-    partitions wholly older than the cutoff are deleted as directories,
-    and only the single boundary partition is row-trimmed (rewritten).
-    I/O is O(boundary partition), not O(sink) — the property that makes
-    retention viable when the sink is 100 TB; with Delta the same walk
-    is ``DELETE WHERE`` + ``VACUUM``. Semantics equal the reference's
-    keep-newest-N (pipeline.py:41-51) exactly, because date(ts) ordering
-    is consistent with ts ordering.
-
-    Returns {"kept": .., "dropped_partitions": .., "trimmed": bool}.
-    """
-    # Heal any partition swap a crashed predecessor left half-done
-    # (hidden ._old_<partition> dirs inside the table root) and drop
-    # abandoned in-flight rewrites (._trim_*: never the only copy —
-    # the source partition still exists until the swap's first rename).
-    for d in os.listdir(table_path):
-        if d.startswith("._old_"):
-            _recover_swap(os.path.join(table_path, d[len("._old_"):]))
-        elif d.startswith("._trim_"):
-            shutil.rmtree(os.path.join(table_path, d), ignore_errors=True)
-    parts = sorted(
-        (
-            d
-            for d in os.listdir(table_path)
-            if d.startswith(f"{date_col}=")
-            and os.path.isdir(os.path.join(table_path, d))
-        ),
-        reverse=True,  # newest date first
-    )
-    budget = max_rows
-    dropped = 0
-    trimmed = False
-    boundary_done = False
-    for d in parts:
-        pdir = os.path.join(table_path, d)
-        if boundary_done or budget <= 0:
-            shutil.rmtree(pdir, ignore_errors=True)
-            dropped += 1
-            continue
-        n = spark.read.parquet(pdir).count()  # footer-only row count
-        if n <= budget:
-            budget -= n  # fully kept — files untouched
-            continue
-        # boundary partition: keep only its newest `budget` rows. The
-        # rewrite target is a hidden sibling INSIDE the table root — a
-        # concurrent reader listing the table never sees the in-flight
-        # copy, so no row is ever observed twice.
-        rows = spark.read.parquet(pdir)
-        kept = rows.orderBy(F.col(ts_col).desc()).limit(budget)
-        tmp = _hidden_sibling(pdir, "trim")
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.write.mode("overwrite").parquet(tmp)
-        _swap_dirs(tmp, pdir)
-        budget = 0
-        trimmed = True
-        boundary_done = True
-    return {
-        "kept": max_rows - budget,
-        "dropped_partitions": dropped,
-        "trimmed": trimmed,
-    }
 
 
 def ingest_with_retention(
@@ -640,19 +533,6 @@ def ingest_with_rollup(
         rollup_partials(batch_df, rollup_path, batch_id, ts_col, key_col)
 
     return start_batches(stream, handle, checkpoint, available_now)
-
-
-def enrich_stream(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a
-    (small) dimension table — the streaming analog of the reference
-    joining nothing because SQLite holds one table. The static side is
-    broadcast, so enrichment is map-side per batch: no shuffle of the
-    stream, no streaming state, and the dim snapshot is re-resolved per
-    micro-batch (a dim update is picked up at the next trigger). At
-    100 TB of stream this is the only join shape that keeps up; a big
-    static side becomes a pre-bucketed table instead
-    (operators/layout.py)."""
-    return stream.join(F.broadcast(dim), key, "left")
 
 
 def streaming_dedup(

@@ -813,9 +813,7 @@ def _committed_batch_dirs_any(store_path: str) -> bool:
 # standard bottom-k estimator (operators.dedup.jaccard_verify_sketch),
 # EXACT for every pair whose union fits under k. Per batch the verify
 # join touches only CANDIDATE pairs (band-colliding), so its cost
-# scales with collision rate, not corpus size; at 100 TB the shingle
-# store is bucketed by doc_id (operators/layout.py) so the candidate
-# lookup co-locates.
+# scales with collision rate, not corpus size.
 VERIFY_THRESHOLD = 0.5  # == stages.JACCARD_THRESHOLD (q26/minhash)
 SHINGLE_SKETCH_K = 512  # bottom-k sketch width (per-doc store bound)
 

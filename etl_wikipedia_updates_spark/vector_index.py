@@ -42,7 +42,6 @@ from etl_wikipedia_updates_spark.stages import (
     PQ_KS,
     PQ_M,
     PQ_SUB,
-    SEMDEDUP_TAU,
     _d2_array_expr,
     _pq_slice,
     ne_sql,
@@ -247,13 +246,6 @@ def append_to_ivf_index(
         # frozen codebooks, like the frozen centroids: an appended
         # vector encodes exactly as a from-scratch encode would
         assigned = _pq_encode(assigned, meta["pq_books"])
-    # persist the assigned batch across publish + tombstone-revive: the
-    # revive check below must see EXACTLY the rows publish wrote, even
-    # when the caller's new_vectors plan is non-deterministic (sample/
-    # limit/stream), and without re-paying the assignment projection
-    # per step (r14 advice fix). Append batches are batch-sized, not
-    # corpus-sized, so the cache is bounded.
-    assigned = assigned.persist()
     existing = table.read(spark, base)
     if "n_rows" in meta:
         base_rows = int(meta["n_rows"])
@@ -266,31 +258,14 @@ def append_to_ivf_index(
         # discarded, since publish always records n_rows.
         base_rows = int(dir_row_count(table.version_path(base)))
     merged = existing.unionByName(assigned)
-    try:
-        new_version = table.publish(
-            merged,
-            meta={**{k: v for k, v in meta.items() if k != "n_rows"},
-                  "appended_from": base},
-            partition_by=["cell"],
-        )
-        table.vacuum(keep_last=keep_last)
-        appended = int(table.meta_for(new_version)["n_rows"]) - base_rows
-        # append-after-delete contract: an appended vec_id is LIVE
-        # again. Without this, a recrawled document re-embedded under
-        # its old id would publish into the index but stay invisible
-        # behind a stale tombstone — the silent-miss failure mode. The
-        # check is one small join on the broadcast-sized tombstone set
-        # against the CACHED batch (the rows publish actually wrote);
-        # the republish happens only when an overlap exists.
-        tomb = tombstone_ids(spark, index_root)
-        if tomb is not None:
-            new_ids = assigned.select("vec_id")
-            if tomb.join(new_ids, "vec_id").limit(1).count():
-                t = _tombstone_table(index_root)
-                t.publish(tomb.join(new_ids, "vec_id", "left_anti"))
-                t.vacuum(keep_last=keep_last)
-    finally:
-        assigned.unpersist()
+    new_version = table.publish(
+        merged,
+        meta={**{k: v for k, v in meta.items() if k != "n_rows"},
+              "appended_from": base},
+        partition_by=["cell"],
+    )
+    table.vacuum(keep_last=keep_last)
+    appended = int(table.meta_for(new_version)["n_rows"]) - base_rows
     # balance telemetry per append: frozen centroids mean cells drift
     # as the ingested distribution shifts — surface it so the operator
     # sees probe selectivity degrade instead of discovering it in
@@ -360,24 +335,6 @@ def probe_selectivity(index_root: str, version: int | None = None) -> dict:
     max_share = (max_cell / n) if n else 0.0
     exp_read = sum((c / n) ** 2 for c in counts.values()) if n else 0.0
     imbalance = max_share * k
-    # tombstone telemetry (driver-side, from the tombstone table's own
-    # version metadata — no Spark job): the histogram above counts
-    # PHYSICAL rows, tombstoned included, because that is what a probe
-    # scans until compaction; the deleted fraction is the wasted-scan
-    # share and the compaction trigger. Reported ONLY for the current
-    # index version: the live tombstone count divided by a pinned
-    # HISTORICAL version's row count is not a meaningful fraction (it
-    # can exceed 1 when inspecting a pre-append version after later
-    # deletes — r14 advice fix), so pinned inspections get None there.
-    is_current = v == table.current_version()
-    t = _tombstone_table(index_root)
-    tv = t.current_version()
-    n_tomb = (
-        int(t.meta_for(tv).get("n_rows", 0))
-        if (is_current and tv is not None)
-        else (0 if is_current else None)
-    )
-    tomb_frac = ((n_tomb / n) if n else 0.0) if is_current else None
     return {
         "version": v,
         "n_rows": n,
@@ -389,15 +346,6 @@ def probe_selectivity(index_root: str, version: int | None = None) -> dict:
         "expected_probe_fraction": round(exp_read, 6),
         "imbalance": round(imbalance, 4),
         "needs_refit": imbalance > REFIT_IMBALANCE,
-        "n_tombstones": n_tomb,
-        "tombstone_fraction": (
-            round(tomb_frac, 6) if tomb_frac is not None else None
-        ),
-        "needs_compaction": (
-            tomb_frac > TOMBSTONE_COMPACT_FRACTION
-            if tomb_frac is not None
-            else None
-        ),
         "cells": {str(c): r for c, r in sorted(counts.items())},
     }
 
@@ -411,7 +359,6 @@ def index_recall(
     n_probes: int = 1,
     exclude_self: bool = True,
     overfetch: int = 4,
-    tombstone_version: int | None = None,
 ) -> dict:
     """Measured recall@k of the index probe vs brute-force cosine over
     the SAME published version's vectors — the accuracy half of the
@@ -443,16 +390,9 @@ def index_recall(
         n_probes=n_probes,
         exclude_self=exclude_self,
         overfetch=overfetch,
-        tombstone_version=tombstone_version,
     )
     exact = S.cosine_topk(
-        # the brute-force side sees the same LIVE set the probe does —
-        # comparing against tombstoned rows would depress recall for
-        # finding exactly what it should find; the same pinned pair
-        # keeps both sides consistent under concurrent deletes
-        _live(
-            spark, index_root, table.read(spark, v), tombstone_version
-        ).select("vec_id", "embedding"),
+        table.read(spark, v).select("vec_id", "embedding"),
         queries,
         k=topk,
         exclude_self=exclude_self,
@@ -489,221 +429,6 @@ def index_recall(
     }
 
 
-# --- deletions: tombstones applied at query time, folded at compaction --------
-#
-# The r11/r12 gap: semantic_dedup's removed vec_ids were not composable
-# back into the index — deleted vectors stayed probeable. The standard
-# serving answer (Lucene tombstones, Delta deletion vectors) is a small
-# versioned side table of deleted ids: deletes publish a new tombstone
-# version (never rewriting the 100 TB index data), every probe
-# anti-joins the broadcast tombstone set, and a periodic COMPACTION
-# folds the tombstones into a physically-filtered index version and
-# clears the set. Both tables are SnapshotTables, so a pinned reader
-# keeps a consistent (index version, tombstone version) pair and
-# deletes are lock-free under live query traffic.
-
-TOMBSTONES_DIR = "_tombstones"  # _-prefixed: invisible to Spark listings
-# Past this deleted fraction, every probe is paying >20% wasted scan on
-# dead rows — the compaction is due (the analog of REFIT_IMBALANCE).
-TOMBSTONE_COMPACT_FRACTION = 0.2
-
-
-def _tombstone_table(index_root: str) -> SnapshotTable:
-    return SnapshotTable(os.path.join(index_root, TOMBSTONES_DIR))
-
-
-def tombstone_ids(
-    spark: SparkSession, index_root: str, version: int | None = None
-) -> DataFrame | None:
-    """The current (or pinned) tombstone set as a (vec_id) frame;
-    None when no tombstones exist — callers skip the anti-join
-    entirely rather than paying a join against an empty side."""
-    t = _tombstone_table(index_root)
-    v = t.current_version() if version is None else version
-    if v is None or int(t.meta_for(v).get("n_rows", 0)) == 0:
-        return None
-    return t.read(spark, v).select("vec_id")
-
-
-def _live(
-    spark: SparkSession,
-    index_root: str,
-    data: DataFrame,
-    tombstone_version: int | None = None,
-) -> DataFrame:
-    """Filter a version's rows down to the live (non-tombstoned) set.
-    The tombstone side broadcasts: a delete set is operationally small
-    relative to the corpus (past TOMBSTONE_COMPACT_FRACTION the
-    operator compacts), so the anti-join is map-side — no shuffle of
-    the index rows. ``tombstone_version`` pins the tombstone snapshot
-    (None = current): a reader holding a pinned (index version,
-    tombstone version) pair keeps a consistent view even while a
-    compaction clears the live tombstone set under it (r14, the
-    advice-flagged gap: previously every reader silently tracked the
-    CURRENT tombstones, so pinned reads could see deleted rows
-    resurface mid-compaction)."""
-    tomb = tombstone_ids(spark, index_root, tombstone_version)
-    if tomb is None:
-        return data
-    return data.join(F.broadcast(tomb), "vec_id", "left_anti")
-
-
-def delete_from_ivf_index(
-    spark: SparkSession,
-    index_root: str,
-    deleted,
-    keep_last: int = 2,
-) -> dict:
-    """Tombstone ``deleted`` vec_ids (a DataFrame with a vec_id column,
-    or an iterable of ints). Publishes tombstones ∪ deleted as the next
-    tombstone version — the index data itself is untouched (deleting
-    by rewriting a 100 TB index per dedup pass is the non-starter this
-    table exists to avoid). Ids not present in the index are harmless
-    (the anti-join ignores them). Returns {"tombstone_version",
-    "n_tombstones", "tombstone_fraction", "needs_compaction"}."""
-    if not isinstance(deleted, DataFrame):
-        deleted = spark.createDataFrame(
-            [(int(i),) for i in deleted], "vec_id bigint"
-        )
-    deleted = deleted.select(F.col("vec_id").cast("bigint"))
-    existing = tombstone_ids(spark, index_root)
-    merged = (
-        deleted if existing is None else existing.unionByName(deleted)
-    ).distinct()
-    t = _tombstone_table(index_root)
-    tv = t.publish(merged)
-    t.vacuum(keep_last=keep_last)
-    n_tomb = int(t.meta_for(tv)["n_rows"])
-    table = SnapshotTable(index_root)
-    iv = table.current_version()
-    n_rows = int(table.meta_for(iv).get("n_rows", 0)) if iv else 0
-    frac = (n_tomb / n_rows) if n_rows else 0.0
-    return {
-        "tombstone_version": tv,
-        "n_tombstones": n_tomb,
-        "tombstone_fraction": round(frac, 6),
-        "needs_compaction": frac > TOMBSTONE_COMPACT_FRACTION,
-    }
-
-
-def compact_ivf_index(
-    spark: SparkSession,
-    index_root: str,
-    keep_last: int = 2,
-) -> dict:
-    """Fold the tombstones into the data: publish a new index version
-    with the tombstoned rows physically filtered (centroids frozen —
-    the space partition is untouched, only dead rows leave their
-    cells), then clear the FOLDED tombstones. Queries before, during,
-    and after see the same live rows; what changes is that probes stop
-    scanning dead ones. On Delta/Iceberg this is a partition-level
-    rewrite of only the cells containing deletes.
-
-    Two r14 advice fixes: (1) the tombstone version is PINNED at plan
-    time and only that version's ids are cleared — a delete published
-    between our read and the clear survives (published as current
-    minus folded) instead of being silently dropped; (2) with no live
-    tombstones the compact is a no-op early-return (removed_rows=0,
-    folded_tombstones=0) rather than a full-corpus rewrite that
-    changes nothing."""
-    table = SnapshotTable(index_root)
-    base = table.current_version()
-    if base is None:
-        raise FileNotFoundError(f"no published index under {index_root}")
-    meta = table.meta_for(base)
-    t = _tombstone_table(index_root)
-    tv = t.current_version()
-    tomb = tombstone_ids(spark, index_root, tv)
-    if tomb is None:
-        return {
-            "version": base,
-            "base": base,
-            "removed_rows": 0,
-            "folded_tombstones": 0,
-        }
-    live = table.read(spark, base).join(
-        F.broadcast(tomb), "vec_id", "left_anti"
-    )
-    new_version = table.publish(
-        live,
-        meta={
-            **{k: v for k, v in meta.items() if k != "n_rows"},
-            "compacted_from": base,
-        },
-        partition_by=["cell"],
-    )
-    table.vacuum(keep_last=keep_last)
-    folded = int(t.meta_for(tv).get("n_rows", 0))
-    tv_now = t.current_version()
-    if tv_now == tv:
-        t.publish(spark.createDataFrame([], "vec_id bigint"))
-    else:
-        # deletes landed mid-compaction: keep exactly the ids we did
-        # NOT fold (both sides are broadcast-small tombstone sets)
-        t.publish(
-            t.read(spark, tv_now)
-            .select("vec_id")
-            .join(
-                F.broadcast(t.read(spark, tv).select("vec_id")),
-                "vec_id",
-                "left_anti",
-            )
-        )
-    t.vacuum(keep_last=keep_last)
-    removed = int(meta.get("n_rows", 0)) - int(
-        table.meta_for(new_version)["n_rows"]
-    )
-    return {
-        "version": new_version,
-        "base": base,
-        "removed_rows": removed,
-        "folded_tombstones": folded,
-    }
-
-
-def dedup_index(
-    spark: SparkSession,
-    index_root: str,
-    tau: float | None = None,
-    version: int | None = None,
-    keep_last: int = 2,
-) -> dict:
-    """SemDeDup over a published index version's OWN vectors, composed
-    into the deletion path — the build → dedup → delete → query loop
-    the corpus pipeline runs between releases. The index's cells ARE
-    the clustering SemDeDup wants (the same k-means family
-    semantic_dedup fits), so the pair space is the stored per-cell
-    layout — no refit, no reassignment, and the parquet scan reads
-    only (vec_id, cell, embedding). Removal rule shared with
-    plans.clustering.semantic_dedup: a vector with a smaller-id
-    near-neighbor (cosine >= tau) in its cell is removed (min-vec_id
-    survivorship). Runs over the LIVE set, so repeated passes are
-    idempotent. Returns delete_from_ivf_index's dict + n_removed."""
-    tau = SEMDEDUP_TAU if tau is None else tau
-    table = SnapshotTable(index_root)
-    v = table.current_version() if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no published index under {index_root}")
-    data = _live(
-        spark,
-        index_root,
-        table.read(spark, v).select("vec_id", "cell", "embedding"),
-    )
-    removed = (
-        S.near_pairs_of_prenormed(S.prenormed_cells(data, "cell"), tau)
-        .select(F.col("vec_id2").alias("vec_id"))
-        .distinct()
-    )
-    t = _tombstone_table(index_root)
-    tv = t.current_version()
-    prior = int(t.meta_for(tv).get("n_rows", 0)) if tv is not None else 0
-    out = delete_from_ivf_index(spark, index_root, removed, keep_last)
-    # exact without a second pair-join execution: the pass ran on the
-    # LIVE set, so its removals are disjoint from the prior tombstones
-    out["n_removed"] = out["n_tombstones"] - prior
-    return out
-
-
 def query_ivf_index(
     spark: SparkSession,
     index_root: str,
@@ -713,14 +438,8 @@ def query_ivf_index(
     overfetch: int = 4,
     n_probes: int = 1,
     exclude_self: bool = True,
-    tombstone_version: int | None = None,
 ) -> DataFrame:
     """Probe a published index. queries: (q_vec_id, q_embedding).
-
-    ``tombstone_version`` pins the tombstone snapshot alongside
-    ``version`` (None = current) — a pinned reader passes both and
-    keeps a consistent view across concurrent deletes/compactions
-    (see _live).
 
     Output: (q_vec_id, rank, vec_id, cos_sim), ordered. The query
     cells are collected (|queries| * n_probes ints — bounded driver
@@ -770,16 +489,7 @@ def query_ivf_index(
     qrows = qprobe.collect()
     cells = sorted({c for r in qrows for c in r["probe_cells"]})
     qprobe = spark.createDataFrame(qrows, schema)
-    # tombstoned rows are dead to every probe mode (float, sq8, pq):
-    # filter once, before the approximate scan, so a deleted vector
-    # can neither surface in results nor crowd a live one out of the
-    # overfetched shortlist
-    data = _live(
-        spark,
-        index_root,
-        table.read(spark, v).filter(F.col("cell").isin(cells)),
-        tombstone_version,
-    )
+    data = table.read(spark, v).filter(F.col("cell").isin(cells))
     quant = _norm_quantize(meta.get("quantized"))
     if not quant:
         out = S.cosine_topk_multiprobe(

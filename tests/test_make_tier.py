@@ -1,120 +1,6 @@
-"""Physical-layout levers (operators/layout.py): the plans and
-equalities SCALE.md promises, asserted.
-
-- bucketed co-located join -> zero Exchange in the physical plan
-- partitioned sink -> partition-pruned scan (PartitionFilters)
-- salted aggregation / join -> identical results to the unsalted form
-"""
+"""tools/make_tier.py: the reproducible replicated tier (SCALE 10x)."""
 
 from __future__ import annotations
-
-import shutil
-import tempfile
-
-import pytest
-from pyspark.sql import functions as F
-
-from etl_wikipedia_updates_spark.operators import layout as L
-from etl_wikipedia_updates_spark.tables import load_table
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def warehouse(spark):
-    """Bucketed tables for the module; dropped afterwards."""
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    lineitem = load_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    ).withColumnRenamed("l_orderkey", "o_orderkey")
-    L.write_bucketed(orders, "b_orders", "o_orderkey", buckets=8)
-    L.write_bucketed(lineitem, "b_lineitem", "o_orderkey", buckets=8)
-    yield
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_join_has_no_shuffle(spark, warehouse):
-    # disable auto-broadcast: at test scale the planner would broadcast
-    # the tiny side and skip bucketing entirely; at 100 TB neither side
-    # broadcasts, which is exactly when bucket co-location pays
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = L.bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-    # and it is the co-located merge join, not a fallback
-    assert "SortMergeJoin" in plan
-
-
-def test_bucketed_join_matches_plain_join(spark, warehouse):
-    orders = load_table(spark, SF, "orders")
-    lineitem = load_table(spark, SF, "lineitem")
-    expected = orders.join(
-        lineitem, orders.o_orderkey == lineitem.l_orderkey
-    ).count()
-    got = L.bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey").count()
-    assert got == expected
-
-
-def test_partitioned_sink_prunes(spark):
-    events = load_table(spark, SF, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    path = tempfile.mkdtemp(prefix="layout_part_")
-    try:
-        L.write_partitioned(events, path, ["day"])
-        days = [r.day for r in events.select("day").distinct().collect()]
-        pick = sorted(days)[0]
-        scan = spark.read.parquet(path).filter(F.col("day") == F.lit(pick))
-        plan = scan._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan
-        # the partition predicate must be in PartitionFilters (pruning),
-        # not only a row-level PushedFilters entry
-        pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-        assert "day" in pf, f"day filter not pruned:\n{plan}"
-        expected = events.filter(F.col("day") == F.lit(pick)).count()
-        assert scan.count() == expected
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def _skewed_frame(spark):
-    """90% of rows share one key — the shape AQE skew stats see."""
-    n = 2000
-    return spark.range(n).select(
-        F.when(F.col("id") % 10 != 0, F.lit(7))
-        .otherwise(F.col("id") % 50)
-        .cast("long")
-        .alias("k"),
-        (F.col("id") * 3).alias("v"),
-    )
-
-
-def test_salted_count_matches_plain(spark):
-    df = _skewed_frame(spark)
-    plain = {r.k: r.cnt for r in df.groupBy("k").agg(F.count("*").alias("cnt")).collect()}
-    salted = {r.k: r.cnt for r in L.salted_count(df, "k", salts=8).collect()}
-    assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    fact = _skewed_frame(spark)
-    dim = spark.range(50).select(
-        F.col("id").alias("k"), F.concat(F.lit("g"), F.col("id")).alias("grp")
-    )
-    plain = sorted(
-        (r.k, r.v, r.grp) for r in fact.join(dim, "k").collect()
-    )
-    salted = sorted(
-        (r.k, r.v, r.grp) for r in L.salted_join(fact, dim, "k", salts=8).collect()
-    )
-    assert salted == plain
 
 
 def test_make_tier_replicates_documents(tmp_path):

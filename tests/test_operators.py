@@ -36,90 +36,6 @@ def test_hash_params_are_stable():
     assert len({a for a, _ in D.hash_params(16)}) > 1
 
 
-def test_token_dictionary_dense_sorted(spark, sf_smoke):
-    docs = load_table(spark, sf_smoke, "documents")
-    d = T.token_dictionary(docs, ids="dense").orderBy("tid").collect()
-    assert [r.tid for r in d] == list(range(1, len(d) + 1))
-    terms = [r.term for r in d]
-    assert terms == sorted(terms)
-
-
-def test_token_dictionary_hash_ids_equivalent(spark, sf_correctness):
-    """ids='hash' is the 100 TB dictionary path (stateless xxhash64,
-    no global sort): it must cover the same vocabulary, be injective
-    (no collisions at this tier), and induce IDENTICAL downstream
-    structure modulo id values — same per-doc token-id multiplicities
-    and same doc-pair co-occurrence counts as the dense path."""
-    docs = load_table(spark, sf_correctness, "documents")
-    dense = T.token_dictionary(docs, ids="dense")
-    hashed = T.token_dictionary(docs, ids="hash")
-    n_terms = dense.count()
-    assert hashed.count() == n_terms
-    # injective: one id per term, both schemes
-    assert hashed.select("tid").distinct().count() == n_terms
-    assert (
-        dense.join(hashed, "term").count() == n_terms
-    ), "hash dictionary covers a different vocabulary"
-
-    # downstream equivalence: per-doc distinct-token-id counts agree
-    dtok = T.doc_tokens(docs, distinct=True)
-
-    def per_doc(dic):
-        return {
-            r["doc_id"]: r["n"]
-            for r in dtok.join(dic, "term")
-            .groupBy("doc_id")
-            .agg(F.countDistinct("tid").alias("n"))
-            .collect()
-        }
-
-    assert per_doc(dense) == per_doc(hashed)
-
-
-def _formatted(df, spark) -> str:
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-
-
-def test_token_dictionary_hash_plan_is_shuffle_free_of_windows(
-    spark, sf_smoke
-):
-    """The hash path must plan with NO window and NO global sort —
-    that's its whole point; the dense path's single-partition
-    row_number is the documented oracle-parity exception."""
-    docs = load_table(spark, sf_smoke, "documents")
-    plan = _formatted(T.token_dictionary(docs, ids="hash"), spark)
-    assert "xxhash64" in plan
-    assert "Window" not in plan
-    assert "row_number" not in plan
-    assert "rangepartitioning" not in plan
-
-
-def test_token_dictionary_default_is_hash(spark, sf_smoke):
-    """The default a new caller gets is the 100 TB path (r11 flip)."""
-    docs = load_table(spark, sf_smoke, "documents")
-    plan = _formatted(T.token_dictionary(docs), spark)
-    assert "xxhash64" in plan and "Window" not in plan
-
-
-def test_token_dictionary_env_selects_dense(spark, sf_smoke, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_DICT_IDS", "dense")
-    docs = load_table(spark, sf_smoke, "documents")
-    plan = _formatted(T.token_dictionary(docs), spark)
-    assert "row_number" in plan and "xxhash64" not in plan
-
-
-def test_token_dictionary_rejects_unknown_ids_mode(spark, sf_smoke):
-    import pytest
-
-    docs = load_table(spark, sf_smoke, "documents")
-    with pytest.raises(ValueError, match="ids mode"):
-        T.token_dictionary(docs, ids="bogus")
-
-
 def test_minhash_lsh_candidates_superset_of_identical_docs(spark):
     docs = spark.createDataFrame(
         [
@@ -129,8 +45,9 @@ def test_minhash_lsh_candidates_superset_of_identical_docs(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    dic = T.token_dictionary(docs)
-    dtok = T.doc_tokens(docs, distinct=True).join(dic, "term")
+    dtok = T.doc_tokens(docs, distinct=True).withColumn(
+        "tid", T.term_hash_col()
+    )
     sig = D.minhash_signatures(
         dtok.select("doc_id", "lang", "tid"), D.hash_params(16)
     )
@@ -146,8 +63,9 @@ def test_simhash_identical_docs_zero_hamming(spark):
         [(1, "a b c", "en"), (2, "a b c", "en")],
         "doc_id long, text string, lang string",
     )
-    dic = T.token_dictionary(docs)
-    dtok = T.doc_tokens(docs, distinct=True).join(dic, "term")
+    dtok = T.doc_tokens(docs, distinct=True).withColumn(
+        "tid", T.term_hash_col()
+    )
     fps = D.simhash_fingerprints(dtok.select("doc_id", "lang", "tid"))
     pairs = D.simhash_near_pairs(fps, 3).collect()
     assert len(pairs) == 1 and pairs[0].hamming == 0
@@ -601,7 +519,6 @@ def test_operators_on_empty_input(spark):
     )
     assert T.doc_tokens(empty_docs).count() == 0
     assert T.doc_shingles(empty_docs).count() == 0
-    assert T.token_dictionary(empty_docs).count() == 0
     empty_rows = spark.createDataFrame([], "k int, g int, v int")
     assert D.exact_dedup(empty_rows, ["k", "g"], ["v"]).count() == 0
     empty_tids = spark.createDataFrame([], "doc_id long, lang string, tid long")

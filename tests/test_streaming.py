@@ -189,79 +189,6 @@ def test_pinned_reader_survives_next_publish(spark, events, replay_dir, tmp_path
     assert _checksum(read_sink(spark, sink)) == full
 
 
-def test_enrich_stream_equals_batch_join(spark, events, replay_dir, tmp_path):
-    """Stream-static broadcast enrichment must equal the batch join."""
-    from etl_wikipedia_updates_spark.streaming.ingest import enrich_stream
-
-    dim = (
-        events.select("user_id")
-        .distinct()
-        .select("user_id", (F.col("user_id") % 5).alias("cohort"))
-    )
-    stream = read_replay_stream(spark, replay_dir, events.schema)
-    enriched = enrich_stream(stream, dim, "user_id")
-    sink = str(tmp_path / "sink")
-    q = ingest_with_retention(enriched, sink, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
-    got = read_sink(spark, sink)
-    expected = events.join(F.broadcast(dim), "user_id", "left")
-    g = got.agg(
-        F.count("*").alias("n"), F.sum(F.col("event_id") * F.col("cohort")).alias("s")
-    ).first()
-    e = expected.agg(
-        F.count("*").alias("n"), F.sum(F.col("event_id") * F.col("cohort")).alias("s")
-    ).first()
-    assert (g["n"], g["s"]) == (e["n"], e["s"])
-
-
-def test_stateful_running_counts_equal_batch(spark, events, replay_dir, tmp_path):
-    """applyInPandasWithState: the last emitted running count per user
-    must equal the batch count, and alarms fire exactly once for users
-    crossing the threshold."""
-    from etl_wikipedia_updates_spark.streaming.stateful import running_counts
-
-    threshold = 20
-    stream = read_replay_stream(spark, replay_dir, events.schema)
-    out = running_counts(stream, "user_id", alarm_threshold=threshold)
-    sink = str(tmp_path / "sink")
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, bid: df.write.mode("overwrite").parquet(
-                f"{sink}/b{bid:05d}"
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    emitted = spark.read.option("recursiveFileLookup", "true").parquet(sink)
-    # running counts only grow, so max(cnt) per user == final total
-    finals = {
-        r.user_id: r.total
-        for r in emitted.groupBy("user_id")
-        .agg(F.max("cnt").alias("total"))
-        .collect()
-    }
-    batch = {
-        r.user_id: r.cnt
-        for r in events.groupBy("user_id").agg(F.count("*").alias("cnt")).collect()
-    }
-    assert finals == batch
-    alarms = {
-        r.user_id: r.n
-        for r in emitted.filter("alarm")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    expected_alarm_users = {u for u, c in batch.items() if c >= threshold}
-    assert set(alarms) == expected_alarm_users
-    assert all(n == 1 for n in alarms.values()), "alarm must fire exactly once"
-
-
-# --- S2: watermark drops late rows --------------------------------------------
 def test_s2_watermark_drops_late_rows(spark, events, tmp_path):
     """Spark's semantics (verified on 4.1): rows later than the
     watermark are *admitted* while their window's state is still live
@@ -436,46 +363,6 @@ def test_session_window_equals_batch(spark, events, tmp_path):
     assert got == expected
 
 
-# --- R14 scale path: partition-level retention ---------------------------------
-def test_retention_partitioned_exact_and_io_bounded(spark, events, tmp_path):
-    import os
-
-    from etl_wikipedia_updates_spark.streaming.ingest import (
-        retain_newest_partitioned,
-    )
-
-    table = str(tmp_path / "table")
-    events.withColumn("event_date", F.to_date("ts")).write.partitionBy(
-        "event_date"
-    ).parquet(table)
-    max_rows = 700
-
-    # files of the newest partition must never be rewritten
-    newest = sorted(
-        d for d in os.listdir(table) if d.startswith("event_date=")
-    )[-1]
-    before = {
-        f: os.stat(os.path.join(table, newest, f)).st_mtime_ns
-        for f in os.listdir(os.path.join(table, newest))
-    }
-
-    stats = retain_newest_partitioned(spark, table, max_rows, "ts")
-    assert stats["kept"] == max_rows and stats["dropped_partitions"] > 0
-
-    after = {
-        f: os.stat(os.path.join(table, newest, f)).st_mtime_ns
-        for f in os.listdir(os.path.join(table, newest))
-    }
-    assert after == before, "newest partition was rewritten"
-
-    # exact keep-newest-N semantics end-to-end
-    kept = spark.read.parquet(table).select(*events.columns)
-    expected = events.orderBy(F.col("ts").desc()).limit(max_rows)
-    assert kept.count() == max_rows
-    assert kept.exceptAll(expected).count() == 0
-    assert expected.exceptAll(kept).count() == 0
-
-
 def test_partitioned_swap_state_is_hidden_and_recoverable(
     spark, events, tmp_path
 ):
@@ -487,37 +374,43 @@ def test_partitioned_swap_state_is_hidden_and_recoverable(
 
     from etl_wikipedia_updates_spark.streaming.ingest import (
         _hidden_sibling,
-        retain_newest_partitioned,
+        append_batch,
+        apply_retention,
     )
 
-    table = str(tmp_path / "table")
-    events.withColumn("event_date", F.to_date("ts")).write.partitionBy(
-        "event_date"
-    ).parquet(table)
-    total = spark.read.parquet(table).count()
-    parts = sorted(d for d in os.listdir(table) if d.startswith("event_date="))
-    victim = os.path.join(table, parts[-1])
+    sink = str(tmp_path / "sink")
+    append_batch(events, sink, 0)
+    total = read_sink(spark, sink).count()
+    batch = os.path.join(sink, "batch_0000000000")
 
     # Hidden siblings are invisible to readers: plant a full copy of the
-    # newest partition under both in-flight names; the row count must
-    # not change.
-    shutil.copytree(victim, _hidden_sibling(victim, "trim"))
-    shutil.copytree(victim, _hidden_sibling(victim, "old"))
-    assert spark.read.parquet(table).count() == total
-    shutil.rmtree(_hidden_sibling(victim, "trim"))
-    shutil.rmtree(_hidden_sibling(victim, "old"))
+    # batch dir under both in-flight names; the row count must not
+    # change, for the sink view and for a raw recursive listing alike.
+    shutil.copytree(batch, _hidden_sibling(batch, "trim"))
+    shutil.copytree(batch, _hidden_sibling(batch, "old"))
+    assert read_sink(spark, sink).count() == total
+    raw = spark.read.option("recursiveFileLookup", "true").parquet(sink)
+    assert raw.count() == total
+    shutil.rmtree(_hidden_sibling(batch, "trim"))
+    shutil.rmtree(_hidden_sibling(batch, "old"))
 
-    # Crash between the two renames: live partition missing, data
-    # stranded at the hidden old name. The next retention run restores
-    # it before walking, so nothing is lost.
-    os.rename(victim, _hidden_sibling(victim, "old"))
-    stats = retain_newest_partitioned(spark, table, total, "ts")
-    assert os.path.isdir(victim)
-    assert stats["kept"] == total
-    assert spark.read.parquet(table).count() == total
+    # Crash between the two renames: live sink missing, data stranded
+    # at the hidden old name. The next retention run restores it before
+    # checking the cap, so nothing is lost.
+    os.rename(sink, _hidden_sibling(sink, "old"))
+    assert not apply_retention(spark, sink, total, "ts")
+    assert os.path.isdir(sink)
+    assert not os.path.exists(_hidden_sibling(sink, "old"))
+    assert read_sink(spark, sink).count() == total
+
+    # Crash after both renames but before the cleanup: a stale old dir
+    # beside the live sink is deleted, the live sink is untouched.
+    shutil.copytree(sink, _hidden_sibling(sink, "old"))
+    assert not apply_retention(spark, sink, total, "ts")
+    assert not os.path.exists(_hidden_sibling(sink, "old"))
+    assert read_sink(spark, sink).count() == total
 
 
-# --- S5: checkpoint resume (kill/restart) == uninterrupted -----------------------
 def test_s5_checkpoint_resume(spark, events, replay_dir, tmp_path):
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
     stream = read_replay_stream(spark, replay_dir, events.schema)

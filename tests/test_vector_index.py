@@ -548,258 +548,3 @@ def test_quantized_index_recall_floors_and_overfetch_dial(
         >= r_float["recall_at_k"]
     )
 
-
-# --- deletions: tombstones, compaction, dedup composition (round 13) ----------
-
-
-def test_delete_then_query_excludes_tombstoned(spark, sf_smoke, tmp_path):
-    """build -> delete -> query: a tombstoned id never surfaces, in any
-    probe mode, and the live neighbors shift up to fill the topk."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        delete_from_ivf_index,
-        probe_selectivity,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    emb = load_table(spark, sf_smoke, "embeddings")
-    q = _queries(emb)
-    before = query_ivf_index(spark, root, q, topk=3).collect()
-    victim = before[0]["vec_id"]
-
-    out = delete_from_ivf_index(spark, root, [victim])
-    assert out["n_tombstones"] == 1
-    assert not out["needs_compaction"]
-
-    after = query_ivf_index(spark, root, q, topk=3).collect()
-    assert victim not in {r["vec_id"] for r in after}
-    # the rest of the ranking is the before-ranking with the victim
-    # removed and ranks recomputed (per query, order preserved)
-    for qid in {r["q_vec_id"] for r in before}:
-        want = [r["vec_id"] for r in before if r["q_vec_id"] == qid
-                and r["vec_id"] != victim]
-        got = [r["vec_id"] for r in after if r["q_vec_id"] == qid]
-        assert got[: len(want)] == want, qid
-
-    sel = probe_selectivity(root)
-    assert sel["n_tombstones"] == 1
-    assert sel["tombstone_fraction"] > 0
-
-
-def test_compaction_folds_tombstones_and_preserves_answers(
-    spark, sf_smoke, tmp_path
-):
-    """delete -> compact: query answers identical before/after, the
-    physical rows drop by the deleted count, the tombstone set clears,
-    and the centroids stay frozen (no reassignment)."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        compact_ivf_index,
-        delete_from_ivf_index,
-        probe_selectivity,
-    )
-
-    root = str(tmp_path / "idx")
-    built = build_ivf_index(spark, sf_smoke, root)
-    emb = load_table(spark, sf_smoke, "embeddings")
-    victims = [r["vec_id"] for r in emb.limit(40).collect()][25:]
-    delete_from_ivf_index(spark, root, victims)
-    q = _queries(emb)
-    before = [tuple(r) for r in query_ivf_index(spark, root, q, topk=3).collect()]
-
-    table = SnapshotTable(root)
-    n_before = int(table.meta_for(table.current_version())["n_rows"])
-    out = compact_ivf_index(spark, root)
-    assert out["removed_rows"] == len(victims)
-    assert out["folded_tombstones"] == len(victims)
-    v = table.current_version()
-    assert v == out["version"]
-    assert int(table.meta_for(v)["n_rows"]) == n_before - len(victims)
-    assert table.meta_for(v)["centroids"] == table.meta_for(out["base"])[
-        "centroids"
-    ]
-
-    after = [tuple(r) for r in query_ivf_index(spark, root, q, topk=3).collect()]
-    assert after == before
-    sel = probe_selectivity(root)
-    assert sel["n_tombstones"] == 0
-    assert not sel["needs_compaction"]
-    assert built["k"] == sel["k"]
-
-
-def test_append_after_delete_revives_id(spark, sf_smoke, tmp_path):
-    """append-after-delete contract: re-appending a tombstoned vec_id
-    makes it live again (the recrawl re-embeds under the old id)."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        append_to_ivf_index,
-        delete_from_ivf_index,
-        tombstone_ids,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    emb = load_table(spark, sf_smoke, "embeddings")
-    q = _queries(emb)
-    victim = query_ivf_index(spark, root, q, topk=3).collect()[0]["vec_id"]
-    delete_from_ivf_index(spark, root, [victim, 99999])
-    assert victim not in {
-        r["vec_id"] for r in query_ivf_index(spark, root, q, topk=3).collect()
-    }
-
-    readd = emb.filter(F.col("vec_id") == victim).select("vec_id", "embedding")
-    append_to_ivf_index(spark, root, readd)
-    # NOTE: the re-appended row joins the existing copy (both live) —
-    # the contract under test is liveness, not upsert
-    assert victim in {
-        r["vec_id"] for r in query_ivf_index(spark, root, q, topk=3).collect()
-    }
-    remaining = tombstone_ids(spark, root)
-    assert {r["vec_id"] for r in remaining.collect()} == {99999}
-
-
-def test_dedup_index_composes_and_is_idempotent(spark, sf_smoke, tmp_path):
-    """build -> dedup -> query: every removed id is unfindable; a
-    second dedup pass over the live set removes nothing (survivors
-    have no smaller near-neighbor by construction); recall measured
-    on the live set holds the floor."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        dedup_index,
-        tombstone_ids,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    d1 = dedup_index(spark, root, tau=0.3)
-    assert d1["n_removed"] > 0, "tau=0.3 must remove something at sf0.001"
-    removed = {r["vec_id"] for r in tombstone_ids(spark, root).collect()}
-    assert len(removed) == d1["n_removed"]
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    q = _queries(emb)
-    hits = {
-        r["vec_id"]
-        for r in query_ivf_index(spark, root, q, topk=5, n_probes=8).collect()
-    }
-    assert not (hits & removed)
-
-    d2 = dedup_index(spark, root, tau=0.3)
-    assert d2["n_removed"] == 0
-
-    r = index_recall(spark, root, q, topk=3)
-    assert r["recall_at_k"] >= RECALL_FLOOR_1PROBE
-
-
-def test_compact_with_no_tombstones_is_a_noop(spark, sf_smoke, tmp_path):
-    """r14 advice fix: compacting an index with no live tombstones must
-    NOT publish a full duplicate version (a corpus rewrite that changes
-    nothing) — it early-returns with zeros, both on a fresh index and
-    on a second consecutive compact (tombstone version exists but holds
-    0 rows)."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        compact_ivf_index,
-        delete_from_ivf_index,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    table = SnapshotTable(root)
-    v0 = table.current_version()
-
-    out = compact_ivf_index(spark, root)  # never any tombstones
-    assert out == {
-        "version": v0, "base": v0, "removed_rows": 0,
-        "folded_tombstones": 0,
-    }
-    assert table.current_version() == v0, "no new version published"
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    victim = emb.limit(1).collect()[0]["vec_id"]
-    delete_from_ivf_index(spark, root, [victim])
-    first = compact_ivf_index(spark, root)
-    assert first["folded_tombstones"] == 1
-    v1 = table.current_version()
-    assert v1 != v0
-
-    second = compact_ivf_index(spark, root)  # empty tombstone version
-    assert second == {
-        "version": v1, "base": v1, "removed_rows": 0,
-        "folded_tombstones": 0,
-    }
-    assert table.current_version() == v1
-
-
-def test_pinned_tombstone_version_is_consistent(spark, sf_smoke, tmp_path):
-    """r14 advice fix: a reader pinned to (index version, tombstone
-    version) keeps a consistent view — later deletes do not leak into
-    its results, and the brute-force recall pair uses the same pinned
-    set."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        _tombstone_table,
-        delete_from_ivf_index,
-        query_ivf_index as q_idx,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    emb = load_table(spark, sf_smoke, "embeddings")
-    q = _queries(emb)
-    base = q_idx(spark, root, q, topk=3).collect()
-    v1, v2 = base[0]["vec_id"], base[1]["vec_id"]
-
-    delete_from_ivf_index(spark, root, [v1])
-    tv1 = _tombstone_table(root).current_version()
-    pinned_before = [
-        tuple(r)
-        for r in q_idx(spark, root, q, topk=3, tombstone_version=tv1).collect()
-    ]
-    assert v1 not in {t[2] for t in pinned_before}
-
-    delete_from_ivf_index(spark, root, [v2])
-    # the pinned reader still sees v2 (only v1 was tombstoned at tv1)...
-    pinned_after = [
-        tuple(r)
-        for r in q_idx(spark, root, q, topk=3, tombstone_version=tv1).collect()
-    ]
-    assert pinned_after == pinned_before
-    assert v2 in {t[2] for t in pinned_after}
-    # ...while the unpinned (current) reader sees neither
-    live = {r["vec_id"] for r in q_idx(spark, root, q, topk=3).collect()}
-    assert v1 not in live and v2 not in live
-
-    rec = index_recall(spark, root, q, topk=3, tombstone_version=tv1)
-    assert rec["recall_at_k"] >= RECALL_FLOOR_1PROBE
-
-
-def test_probe_selectivity_pinned_version_omits_tombstone_telemetry(
-    spark, sf_smoke, tmp_path
-):
-    """r14 advice fix: the live tombstone count divided by a pinned
-    HISTORICAL version's physical rows is not a meaningful fraction —
-    pinned inspections report None for the tombstone fields; the
-    current version keeps real numbers."""
-    from etl_wikipedia_updates_spark.vector_index import (
-        append_to_ivf_index,
-        delete_from_ivf_index,
-        probe_selectivity,
-    )
-
-    root = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_smoke, root)
-    table = SnapshotTable(root)
-    v_old = table.current_version()
-    emb = load_table(spark, sf_smoke, "embeddings")
-    extra = emb.limit(5).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    append_to_ivf_index(spark, root, extra)
-    victims = [r["vec_id"] for r in emb.limit(3).collect()]
-    delete_from_ivf_index(spark, root, victims)
-
-    cur = probe_selectivity(root)
-    assert cur["n_tombstones"] == len(victims)
-    assert cur["tombstone_fraction"] > 0
-    assert cur["needs_compaction"] in (True, False)
-
-    old = probe_selectivity(root, version=v_old)
-    assert old["n_tombstones"] is None
-    assert old["tombstone_fraction"] is None
-    assert old["needs_compaction"] is None
