@@ -7,8 +7,9 @@ pipeline, graceful shutdown).
     python -m etl_wikipedia_updates_spark ingest --replay DIR --sink DIR
         [--max-rows N]            # file-replay ingest with retention (R11-R14)
     python -m etl_wikipedia_updates_spark dedup-ingest --replay DIR --sink DIR
-        [--mode doc|quality|verified|embedding|embedding-verified|
-                decontam|curate] [--decontam-mode shingles|spans]
+        [--mode doc|quality|verified|span|embedding|
+                embedding-verified|decontam|curate]
+        [--decontam-mode shingles|spans]
         [--compact-every N]       # near-dup dedup / curation at ingest
     python -m etl_wikipedia_updates_spark index build|append|query|stats
         --root DIR [--vectors PARQUET]  # persistent IVF index lifecycle
@@ -413,54 +414,32 @@ def cmd_dedup_ingest(args) -> int:
 
     from etl_wikipedia_updates_spark.sources.replay import read_replay_stream
     from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
+        MODES,
+        start_ingest,
     )
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_embedding_neardup,
-        ingest_with_neardup,
-        ingest_with_quality_neardup,
-        ingest_with_span_neardup,
-        ingest_with_verified_embedding_neardup,
-        ingest_with_verified_neardup,
-    )
     from etl_wikipedia_updates_spark.tables import load_table
 
     spark = _spark()
-    table = (
-        "embeddings"
-        if args.mode in ("embedding", "embedding-verified")
-        else "documents"
-    )
-    if getattr(args, "seed_span_store", None) and args.mode != "span":
-        print(
-            "--seed-span-store seeds the span-veto store: it requires "
-            f"--mode span (got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "redact_pii", False) and args.mode != "curate":
-        # a privacy control must apply or fail loudly, never no-op
-        print(
-            "--redact-pii is a curation stage: it requires --mode curate "
-            f"(got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "temperature_mix", False) and args.mode != "curate":
-        print(
-            "--temperature-mix is a curation stage: it requires --mode "
-            f"curate (got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    schema = load_table(spark, args.sf_dir, table).schema
+    spec = MODES[args.mode]
+    # a mode-specific flag (a privacy control among them) must apply or
+    # fail loudly, never no-op
+    for flag, need, what in (
+        ("seed_span_store", "span", "--seed-span-store seeds the span-veto store"),
+        ("redact_pii", "curate", "--redact-pii is a curation stage"),
+        ("temperature_mix", "curate", "--temperature-mix is a curation stage"),
+    ):
+        if getattr(args, flag) and args.mode != need:
+            print(
+                f"{what}: it requires --mode {need} (got --mode {args.mode})",
+                file=sys.stderr,
+            )
+            return 2
+    schema = load_table(spark, args.sf_dir, spec.table).schema
     stream = read_replay_stream(spark, args.replay, schema)
-    if args.mode in ("decontam", "curate"):
-        from etl_wikipedia_updates_spark.streaming.decontam import (
-            ingest_with_full_curation,
-        )
-
+    opts: dict = {"compact_every": args.compact_every}
+    bench = None
+    if spec.bench:
         # held-out benchmark: an explicit parquet path, else the
         # CONTAM_BENCH_SOURCE slice of the static documents table
         # (the same convention the batch contamination query
@@ -476,110 +455,84 @@ def cmd_dedup_ingest(args) -> int:
             bench = load_table(spark, args.sf_dir, "documents").filter(
                 F.col("source") == CONTAM_BENCH_SOURCE
             )
-        start_b = (
-            ingest_with_decontam
-            if args.mode == "decontam"
-            else ingest_with_full_curation
-        )
-        extra = {}
-        if args.mode == "decontam":
-            extra["mode"] = args.decontam_mode
-        else:  # curate: same veto rule dial, curation param name
-            extra["decontam_mode"] = args.decontam_mode
-        if args.redact_pii:
-            extra["redact_pii"] = True
-        if getattr(args, "temperature_mix", False):
-            from etl_wikipedia_updates_spark.stages import static_temp_rates
+        opts["exclude_self"] = args.bench is None
+        opts["decontam_mode"] = args.decontam_mode
+    if args.redact_pii:
+        opts["redact_pii"] = True
+    if args.temperature_mix:
+        from etl_wikipedia_updates_spark.stages import static_temp_rates
 
-            # stream-static model: rates fit once from the declared
-            # static table; the stream only applies the thresholds
-            extra["temp_rates"] = static_temp_rates(
-                load_table(spark, args.sf_dir, "documents").select(
-                    "source", "n_chars"
-                )
+        # stream-static model: rates fit once from the declared
+        # static table; the stream only applies the thresholds
+        opts["temp_rates"] = static_temp_rates(
+            load_table(spark, args.sf_dir, "documents").select(
+                "source", "n_chars"
             )
-        q = start_b(
-            stream,
-            bench,
-            args.sink,
-            args.checkpoint or args.sink + "_ckpt",
-            compact_every=args.compact_every,
-            exclude_self=args.bench is None,
-            **extra,
         )
-    else:
-        if getattr(args, "seed_span_store", None):
-            import os as _os
+    if args.seed_span_store:
+        from etl_wikipedia_updates_spark.streaming.neardup import (
+            seed_span_store_from,
+            seeded_from,
+        )
 
-            from etl_wikipedia_updates_spark.streaming.neardup import (
-                seed_span_store_from,
-                seeded_from,
+        # checkpointed-resume friendliness: re-running the same
+        # seeded command must resume, not crash — the durable
+        # sidecar marker (which survives store compaction, unlike
+        # snapshot meta) says whether THIS store already seeded
+        # the sink; paths are normalized so a trailing slash or
+        # relative form still matches. Any other prior state is a
+        # clean usage error, as are a missing / wrong-kind /
+        # wrong-span-params source store (r17 review).
+        marker = seeded_from(args.sink)
+        want = os.path.normpath(os.path.abspath(args.seed_span_store))
+        if marker is not None and marker.get("store_root") == want:
+            print(
+                f"span store already seeded (from {want} "
+                f"v{marker.get('version')}); resuming"
+            )
+            # root-only matching can mask drift: the SOURCE store
+            # may have advanced (a --merge published v2) since the
+            # seed. Resuming is still correct — the seed is
+            # creation-time state — but say so loudly instead of
+            # letting the print read as "seeded with the newest
+            # release" (r17 advice).
+            from etl_wikipedia_updates_spark.streaming.snapshot import (
+                SnapshotTable as _ST,
             )
 
-            # checkpointed-resume friendliness: re-running the same
-            # seeded command must resume, not crash — the durable
-            # sidecar marker (which survives store compaction, unlike
-            # snapshot meta) says whether THIS store already seeded
-            # the sink; paths are normalized so a trailing slash or
-            # relative form still matches. Any other prior state is a
-            # clean usage error, as are a missing / wrong-kind /
-            # wrong-span-params source store (r17 review).
-            marker = seeded_from(args.sink)
-            want = _os.path.normpath(_os.path.abspath(args.seed_span_store))
-            if marker is not None and marker.get("store_root") == want:
+            # advisory only: a broken SOURCE store must not stop a
+            # healthy sink from resuming (r18 review — resume never
+            # touched the source store before this warning existed)
+            try:
+                _cur = _ST(args.seed_span_store).current_version()
+            except (RuntimeError, OSError, ValueError):
+                _cur = None
+            if _cur is not None and _cur != marker.get("version"):
                 print(
-                    f"span store already seeded (from {want} "
-                    f"v{marker.get('version')}); resuming"
+                    f"WARNING: source span store is now at v{_cur} "
+                    f"but this sink was seeded from "
+                    f"v{marker.get('version')}; the newer spans are "
+                    "NOT in this sink's store (re-seed a fresh sink "
+                    "to pick them up)",
+                    file=sys.stderr,
                 )
-                # root-only matching can mask drift: the SOURCE store
-                # may have advanced (a --merge published v2) since the
-                # seed. Resuming is still correct — the seed is
-                # creation-time state — but say so loudly instead of
-                # letting the print read as "seeded with the newest
-                # release" (r17 advice).
-                from etl_wikipedia_updates_spark.streaming.snapshot import (
-                    SnapshotTable as _ST,
+        else:
+            try:
+                n = seed_span_store_from(
+                    spark, args.sink, args.seed_span_store
                 )
-
-                # advisory only: a broken SOURCE store must not stop a
-                # healthy sink from resuming (r18 review — resume never
-                # touched the source store before this warning existed)
-                try:
-                    _cur = _ST(args.seed_span_store).current_version()
-                except (RuntimeError, OSError, ValueError):
-                    _cur = None
-                if _cur is not None and _cur != marker.get("version"):
-                    print(
-                        f"WARNING: source span store is now at v{_cur} "
-                        f"but this sink was seeded from "
-                        f"v{marker.get('version')}; the newer spans are "
-                        "NOT in this sink's store (re-seed a fresh sink "
-                        "to pick them up)",
-                        file=sys.stderr,
-                    )
-            else:
-                try:
-                    n = seed_span_store_from(
-                        spark, args.sink, args.seed_span_store
-                    )
-                except (RuntimeError, FileNotFoundError, ValueError) as e:
-                    print(str(e), file=sys.stderr)
-                    return 2
-                print(f"seeded {n} span hashes from {args.seed_span_store}")
-        start = {
-            "doc": ingest_with_neardup,
-            "quality": ingest_with_quality_neardup,
-            "verified": ingest_with_verified_neardup,
-            "span": ingest_with_span_neardup,
-            "embedding": ingest_with_embedding_neardup,
-            "embedding-verified": ingest_with_verified_embedding_neardup,
-        }[args.mode]
-        q = start(
-            stream,
-            args.sink,
-            args.checkpoint or args.sink + "_ckpt",
-            compact_every=args.compact_every,
-        )
+            except (RuntimeError, FileNotFoundError, ValueError) as e:
+                print(str(e), file=sys.stderr)
+                return 2
+            print(f"seeded {n} span hashes from {args.seed_span_store}")
+    q = start_ingest(
+        args.mode,
+        stream,
+        args.sink,
+        args.checkpoint or args.sink + "_ckpt",
+        bench_docs=bench,
+        **opts,
+    )
     finished = q.awaitTermination(args.timeout)
     if not finished:
         q.stop()
@@ -596,9 +549,9 @@ def cmd_maintain(args) -> int:
     at scale maintenance is a scheduled job, not trigger-path work:
     fold the data sink's batch appends into a compacted snapshot
     version, optionally fold the neardup bucket store and the rollup
-    partials. Each fold is the same crash-safe SnapshotTable /
-    swap publish the streaming path uses, so running this against a
-    live sink is safe (replay grace horizons are preserved). Prints
+    partials. Each fold is the same crash-safe SnapshotTable
+    version publish the streaming path uses, so running this against
+    a live sink is safe (replay grace horizons are preserved). Prints
     one JSON line of what happened."""
     import json
 
@@ -744,7 +697,9 @@ def cmd_dashboard(args) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def build_parser() -> argparse.ArgumentParser:
+    from etl_wikipedia_updates_spark.streaming.decontam import MODES
+
     sf_default = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     p = argparse.ArgumentParser(prog="etl_wikipedia_updates_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -959,32 +914,14 @@ def main(argv: list[str] | None = None) -> int:
 
     ded = sub.add_parser(
         "dedup-ingest",
-        help="file-replay ingest with curation at ingest "
-        "(doc: MinHash bands; quality: repetition gate + MinHash "
-        "bands; verified: bands nominate + sketch-Jaccard decides; "
-        "embedding: sign-bucket LSH; embedding-verified: sign "
-        "buckets nominate + exact cosine decides; decontam: "
-        "benchmark shingle veto with quarantine audit table; "
-        "curate: quality gate + decontam + near-dup dedup in one "
-        "pass)",
+        help="file-replay ingest with curation at ingest ("
+        + "; ".join(f"{name}: {m.help}" for name, m in MODES.items())
+        + ")",
     )
     ded.add_argument("--replay", required=True)
     ded.add_argument("--sink", required=True)
     ded.add_argument("--checkpoint")
-    ded.add_argument(
-        "--mode",
-        choices=[
-            "doc",
-            "quality",
-            "verified",
-            "span",
-            "embedding",
-            "embedding-verified",
-            "decontam",
-            "curate",
-        ],
-        default="doc",
-    )
+    ded.add_argument("--mode", choices=list(MODES), default="doc")
     ded.add_argument("--sf-dir", default=sf_default)
     ded.add_argument(
         "--bench",
@@ -1059,7 +996,11 @@ def main(argv: list[str] | None = None) -> int:
     dash.add_argument("--interval", type=float, default=5.0)
     dash.add_argument("--polls", type=int, default=0, help="0 = until Ctrl-C")
 
-    args = p.parse_args(argv)
+    return p
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = build_parser().parse_args(argv)
     return {
         "list": cmd_list,
         "run": cmd_run,

@@ -2807,11 +2807,11 @@ def span_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     h-keyed corpus exchange (span_dedup needs one because BOTH sides
     are corpus-scale; here the bench side is bounded). Past broadcast
     reach (a multi-TB bench set — not a benchmark anymore) the same
-    plan degrades to an h-keyed shuffle join. The ingest-time
-    counterpart (streaming/decontam.py) vetoes on shingle OVERLAP —
-    the `contamination` rule; this operator is the exact-substring
-    complement, and its broadcast span set drops into the same
-    stream-static join shape (ingest_with_decontam(mode='spans'))."""
+    plan degrades to an h-keyed shuffle join. Its ingest-time
+    counterpart (streaming/decontam.py) is the decontam mode with
+    ``decontam_mode='spans'``: the same broadcast span set in the
+    stream-static join shape of the shingle-OVERLAP veto (the
+    `contamination` rule)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     # the bench branch re-runs the span Generate over the UN-spread
     # table: its source filter pushes to the parquet scan, so it only

@@ -7,14 +7,10 @@ correctness gate records the first 50 entries per round, so with the
 29 contract rows pinned every round the rotating entries share ~21
 slots: the feasible bound is a refresh every THIRD gate, pinned by
 tests/test_survey_contract.py (an entry about to exceed it, or never
-certified, must sit inside the next window). Order: never-certified
-entries, entries changed this round, entries at the freshness bound,
-the contract rows Q1-Q28 + wiki, then the oldest remaining rows FIFO.
-
-Round-21 window: the 19 r17-official entries (past the bound after
-the r20 recording), the 29 contract rows, and the 2 oldest
-r18-certified rows. The other r18-certified entries reach the bound
-at r21 and head the next rotation; the r20-certified ones yield.
+certified, must sit inside the next window). ``certification_rotation``
+computes the order from the CORRECTNESS_r*.json history: the entries
+that are due, then the contract rows Q1-Q28 + wiki, then the rest,
+each group stalest first.
 
 Every entry is benched by bench.py regardless of position, and the
 oracle-backed ones are oracle-tested on every pytest run
@@ -23,6 +19,10 @@ approximate by design and get only the driver's rows-only check).
 """
 
 from __future__ import annotations
+
+import json
+import re
+from pathlib import Path
 
 from etl_wikipedia_updates_spark.plans.base import QueryRegistry
 from etl_wikipedia_updates_spark.plans.bpe import BPE_QUERIES
@@ -34,79 +34,63 @@ from etl_wikipedia_updates_spark.plans.northstar import NORTHSTAR_QUERIES
 from etl_wikipedia_updates_spark.plans.relational import RELATIONAL_QUERIES
 from etl_wikipedia_updates_spark.plans.wiki import WIKI_QUERIES
 
-DECLARATION_ORDER: list[str] = [
-    # --- r17-official entries, past the 3-gate freshness bound ---
-    "seq_pack",
-    "pack_assignments",
-    "rep_filter",
-    "corpus_release",
-    "corpus_release_temp",
-    "multimodal_bytes",
-    "ann_lsh",
-    "ann_ivf",
-    "span_removal",
-    "ann_lsh_multiprobe",
-    "temperature_mix",
-    "distinct_kmv",
-    "ann_pq",
-    "zipf_fit",
-    "length_hist",
-    "embedding_stats",
-    "ngram_quality",
-    "bpe_token_stats",
-    "source_mix",
-    # --- §2.3 contract rows (always inside the gate window) ---
-    *[f"q{i}" for i in range(1, 29)],
-    "wiki_pipeline",
-    # --- r18-certified block, FIFO in r18 window order: the first 2
-    # fill the window's spare slots, the rest head the r22 rotation ---
-    "percentiles_refined",
-    "bm25_rank",
-    # --- positions 51+: past the cutoff this round. Every
-    # oracle-backed entry is still differentially tested locally on
-    # each pytest run by tests/test_queries_oracle.py ---
-    "pii_scrub",
-    "charlm_score",
-    "shard_manifest",
-    "dedup_corpus",
-    "span_dedup",
-    "token_stats",
-    "corpus_stats",
-    "minhash_lsh",
-    "lang_id",
-    "quantize_embeddings",
-    "lang_id_chargram",
-    "ann_sq8",
-    "q12_approx",
-    "percentiles_approx",
-    "packed_sequences",
-    "span_decontam",
-    "seq_pack_subword",
-    "source_mix_subword",
-    "incremental_dedup",
-    # r20-certified, FIFO in r20 window order
-    "dsir_select",
-    "winnow_fp",
-    "source_overlap",
-    "ccnet_buckets",
-    "grouped_agg_udf",
-    "kmeans_clusters",
-    "ann_kmeans",
-    "sample_hash",
-    "simhash_pairs",
-    "stratified_sample",
-    "tfidf_topterms",
-    "semantic_dedup",
-    "cosine_neardup",
-    "text_quality",
-    "dedup_clusters",
-    "contamination",
-    "percentiles",
-    "grouped_zscore",
-    "doc_fingerprint",
-    "text_normalize",
-    "incremental_span_dedup",
-]
+HISTORY_ROOT = Path(__file__).resolve().parents[1]  # CORRECTNESS_r*.json
+CONTRACT_ROWS = frozenset([*(f"q{i}" for i in range(1, 29)), "wiki_pipeline"])
+FRESHNESS_BOUND = 3  # gates an entry may go without an official row
+
+
+def _official(row) -> bool:
+    """A recorded row that certifies its entry: no error, or the
+    rows-only record (err='no_oracle' with a counted result) of an
+    oracle-less approximate entry."""
+    return isinstance(row, dict) and (
+        not row.get("err")
+        or (row.get("err") == "no_oracle" and row.get("spark_rows") is not None)
+    )
+
+
+def certification_history() -> dict[int, list[str]]:
+    """{round: the names with an official row, in that round's file
+    order}, from the CORRECTNESS_r{N}.json files."""
+    return {
+        int(re.search(r"r(\d+)", f.name).group(1)): [
+            name for name, row in json.loads(f.read_text()).items()
+            if _official(row)
+        ]
+        for f in HISTORY_ROOT.glob("CORRECTNESS_r*.json")
+    }
+
+
+def certification_rotation(
+    names: list[str], history: dict[int, list[str]]
+) -> list[str]:
+    """``names`` in gate order: first the DUE entries (never certified,
+    or newest official round <= latest - FRESHNESS_BOUND), then the
+    CONTRACT_ROWS, then everything else. Within each group the
+    stalest come first: by newest certified round (never certified
+    before any), ties by position in that round's file (never-
+    certified ties by position in ``names``)."""
+    latest = max(history, default=0)
+
+    def newest(name: str) -> int:  # -1: never certified
+        return max((r for r, rows in history.items() if name in rows), default=-1)
+
+    def stalest_first(name: str) -> tuple[int, int]:
+        r = newest(name)
+        return (r, history[r].index(name)) if r >= 0 else (r, names.index(name))
+
+    due = [
+        n for n in names
+        if newest(n) < 0 or newest(n) <= latest - FRESHNESS_BOUND
+    ]
+    pinned = [n for n in names if n in CONTRACT_ROWS and n not in due]
+    rest = [n for n in names if n not in due and n not in pinned]
+    return [
+        name
+        for group in (due, pinned, rest)
+        for name in sorted(group, key=stalest_first)
+    ]
+
 
 _declared = QueryRegistry()
 _declared.extend(RELATIONAL_QUERIES)
@@ -118,13 +102,9 @@ _declared.extend(WIKI_QUERIES)
 _declared.extend(BPE_QUERIES)
 _declared.extend(INCREMENTAL_QUERIES)
 
-_missing = set(_declared.queries) - set(DECLARATION_ORDER)
-_extra = set(DECLARATION_ORDER) - set(_declared.queries)
-if _missing or _extra:
-    raise RuntimeError(
-        "DECLARATION_ORDER out of sync: "
-        f"missing={sorted(_missing)} extra={sorted(_extra)}"
-    )
+DECLARATION_ORDER = certification_rotation(
+    list(_declared.queries), certification_history()
+)
 
 REGISTRY = QueryRegistry()
 REGISTRY.extend([_declared.queries[name] for name in DECLARATION_ORDER])

@@ -150,6 +150,68 @@ def write_release(
     return {"version": version, "audit": audit}
 
 
+def _published_version(
+    table: SnapshotTable, out_root: str, version: int | None, what: str
+) -> int:
+    """``version``, else the table's current one; raises when nothing
+    is published."""
+    v = table.current_version() if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"no published {what} under {out_root}")
+    return v
+
+
+def _keyed_mismatches(
+    exp: dict, got: dict, field: str, absent: str, show=lambda k: k
+) -> list[dict]:
+    """Expected-vs-recomputed rows keyed alike: one mismatch per key
+    present on one side only (``absent`` names the published side) or
+    whose rows differ."""
+    out = []
+    for k in sorted(set(exp) | set(got)):
+        if k not in exp:
+            out.append({field: show(k), "error": f"not in {absent}"})
+        elif k not in got:
+            out.append({field: show(k), "error": "not in data"})
+        elif exp[k] != got[k]:
+            out.append(
+                {field: show(k), "expected": exp[k], "recomputed": got[k]}
+            )
+    return out
+
+
+def _leaf_file_mismatches(vdir: str, levels: list[str]) -> list[dict]:
+    """Physical layout: one mismatch per leaf partition dir (one
+    ``levels`` prefix per depth, e.g. ["shard="]) that does not hold
+    exactly one data file."""
+    leaves = [""]
+    for prefix in levels:
+        leaves = [
+            os.path.join(leaf, entry)
+            for leaf in leaves
+            for entry in sorted(os.listdir(os.path.join(vdir, leaf)))
+            if entry.startswith(prefix)
+        ]
+    out = []
+    for leaf in leaves:
+        n = sum(f.endswith(".parquet") for f in os.listdir(os.path.join(vdir, leaf)))
+        if n != 1:
+            out.append({"shard": leaf, "error": f"{n} files, expected 1"})
+    return out
+
+
+def _verdict(
+    v: int, expected: list, recomputed: list, mismatches: list
+) -> dict:
+    return {
+        "version": v,
+        "ok": not mismatches,
+        "expected": expected,
+        "recomputed": recomputed,
+        "mismatches": mismatches,
+    }
+
+
 def verify_release(
     spark: SparkSession, out_root: str, version: int | None = None
 ) -> dict:
@@ -168,9 +230,7 @@ def verify_release(
     (source, split) whose row differs, plus cards present on only one
     side."""
     table = SnapshotTable(out_root)
-    v = table.current_version() if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no published release under {out_root}")
+    v = _published_version(table, out_root, version, "release")
     meta = table.meta_for(v)
     expected = meta.get("audit") or []
     data = table.read(spark, v)
@@ -181,21 +241,12 @@ def verify_release(
         ).collect()
     ]
 
-    def key(row: dict) -> tuple:
-        return (row["source"], row["split"])
+    def keyed(rows: list[dict]) -> dict:
+        return {(r["source"], r["split"]): r for r in rows}
 
-    exp = {key(r): r for r in expected}
-    got = {key(r): r for r in recomputed}
-    mismatches = []
-    for k in sorted(set(exp) | set(got)):
-        if k not in exp:
-            mismatches.append({"card": list(k), "error": "not in metadata"})
-        elif k not in got:
-            mismatches.append({"card": list(k), "error": "not in data"})
-        elif exp[k] != got[k]:
-            mismatches.append(
-                {"card": list(k), "expected": exp[k], "recomputed": got[k]}
-            )
+    mismatches = _keyed_mismatches(
+        keyed(expected), keyed(recomputed), "card", "metadata", list
+    )
     n_rows = int(meta.get("n_rows", -1))
     audit_docs = (
         sum(int(r["n_docs"]) for r in recomputed) if recomputed else 0
@@ -208,13 +259,7 @@ def verify_release(
                 "recomputed": {"n_rows": audit_docs},
             }
         )
-    return {
-        "version": v,
-        "ok": not mismatches,
-        "expected": expected,
-        "recomputed": recomputed,
-        "mismatches": mismatches,
-    }
+    return _verdict(v, expected, recomputed, mismatches)
 
 
 def write_sharded(
@@ -312,9 +357,7 @@ def verify_sharded(
     Returns {"version", "ok", "expected", "recomputed",
     "mismatches": [...]}."""
     table = SnapshotTable(out_root)
-    v = table.current_version() if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no published sharded write under {out_root}")
+    v = _published_version(table, out_root, version, "sharded write")
     meta = table.meta_for(v)
     expected = meta.get("manifest") or []
     data = table.read(spark, v)
@@ -340,36 +383,9 @@ def verify_sharded(
             mismatches.append(
                 {"shard": k, "error": f"out of range for n_shards={n_shards}"}
             )
-    for k in sorted(set(exp) | set(got)):
-        if k not in exp:
-            mismatches.append({"shard": k, "error": "not in manifest"})
-        elif k not in got:
-            mismatches.append({"shard": k, "error": "not in data"})
-        elif exp[k] != got[k]:
-            mismatches.append(
-                {"shard": k, "expected": exp[k], "recomputed": got[k]}
-            )
-    # physical layout: one data file per shard dir
-    vdir = table.version_path(v)
-    for entry in sorted(os.listdir(vdir)):
-        if not entry.startswith("shard="):
-            continue
-        files = [
-            f
-            for f in os.listdir(os.path.join(vdir, entry))
-            if f.endswith(".parquet")
-        ]
-        if len(files) != 1:
-            mismatches.append(
-                {"shard": entry, "error": f"{len(files)} files, expected 1"}
-            )
-    return {
-        "version": v,
-        "ok": not mismatches,
-        "expected": expected,
-        "recomputed": recomputed,
-        "mismatches": mismatches,
-    }
+    mismatches += _keyed_mismatches(exp, got, "shard", "manifest")
+    mismatches += _leaf_file_mismatches(table.version_path(v), ["shard="])
+    return _verdict(v, expected, recomputed, mismatches)
 
 
 def release_docs(spark: SparkSession, release_root: str):
@@ -517,9 +533,7 @@ def verify_packed(
     intact). Same caveat as verify_sharded: an integrity check against
     corruption and writer bugs, not an adversarial seal."""
     table = SnapshotTable(out_root)
-    v = table.current_version() if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no published packed write under {out_root}")
+    v = _published_version(table, out_root, version, "packed write")
     meta = table.meta_for(v)
     if meta.get("kind") != "packed":
         raise ValueError(
@@ -541,44 +555,16 @@ def verify_packed(
         mismatches.append(
             {"error": f"{misplaced} rows in the wrong seq_block dir"}
         )
-    exp = {r["shard"]: r for r in expected}
-    got = {r["shard"]: r for r in recomputed}
-    for k in sorted(set(exp) | set(got)):
-        if k not in exp:
-            mismatches.append({"shard": k, "error": "not in manifest"})
-        elif k not in got:
-            mismatches.append({"shard": k, "error": "not in data"})
-        elif exp[k] != got[k]:
-            mismatches.append(
-                {"shard": k, "expected": exp[k], "recomputed": got[k]}
-            )
-    # physical layout: one data file per source=S/seq_block=K leaf
-    vdir = table.version_path(v)
-    for sdir in sorted(os.listdir(vdir)):
-        if not sdir.startswith("source="):
-            continue
-        for bdir in sorted(os.listdir(os.path.join(vdir, sdir))):
-            if not bdir.startswith("seq_block="):
-                continue
-            files = [
-                f
-                for f in os.listdir(os.path.join(vdir, sdir, bdir))
-                if f.endswith(".parquet")
-            ]
-            if len(files) != 1:
-                mismatches.append(
-                    {
-                        "shard": f"{sdir}/{bdir}",
-                        "error": f"{len(files)} files, expected 1",
-                    }
-                )
-    return {
-        "version": v,
-        "ok": not mismatches,
-        "expected": expected,
-        "recomputed": recomputed,
-        "mismatches": mismatches,
-    }
+    mismatches += _keyed_mismatches(
+        {r["shard"]: r for r in expected},
+        {r["shard"]: r for r in recomputed},
+        "shard",
+        "manifest",
+    )
+    mismatches += _leaf_file_mismatches(
+        table.version_path(v), ["source=", "seq_block="]
+    )
+    return _verdict(v, expected, recomputed, mismatches)
 
 
 # --- persistent span-hash store (r17: incremental_span_dedup's state) -------

@@ -36,11 +36,18 @@ sets are thousands of docs, not billions), the broadcast is a few MB,
 and the per-batch cost is one shingle explode over the BATCH joined
 map-side against the broadcast — no shuffle of corpus-scale data at
 all beyond the per-doc aggregate of matched shingles.
+
+As the top of the streaming stack, this module also holds MODES, the
+one table of ``dedup-ingest`` modes (the near-dup bodies of
+streaming/neardup.py, the veto and curation bodies here), and
+start_ingest, their one start-up.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -59,6 +66,7 @@ from etl_wikipedia_updates_spark.stages import (
     rep_keep_col,
     temp_membership,
 )
+from etl_wikipedia_updates_spark.streaming import neardup
 from etl_wikipedia_updates_spark.streaming.ingest import (
     append_batch,
     start_batches,
@@ -238,12 +246,12 @@ DECONTAM_MODES = {
 }
 
 
-def _mode_fns(mode: str):
+def _mode_fns(decontam_mode: str):
     try:
-        return DECONTAM_MODES[mode]
+        return DECONTAM_MODES[decontam_mode]
     except KeyError:
         raise ValueError(
-            f"unknown decontam mode {mode!r}; "
+            f"unknown decontam mode {decontam_mode!r}; "
             f"expected one of {sorted(DECONTAM_MODES)}"
         ) from None
 
@@ -255,20 +263,20 @@ def decontam_ingest_batch(
     batch_id: int,
     compact_every: int | None = None,
     exclude_self: bool = True,
-    mode: str = "shingles",
+    decontam_mode: str = "shingles",
 ) -> None:
     """One micro-batch of decontaminating ingest: clean rows append to
     the sink, contaminated verdicts append to the quarantine table —
     both under this batch's idempotent dir, so an at-least-once replay
     overwrites its own first attempt on both sides. ``bench_sh`` must
-    be the ``mode``-matching static frame (bench_shingles output for
-    'shingles', bench_spans for 'spans')."""
+    be the ``decontam_mode``-matching static frame (bench_shingles
+    output for 'shingles', bench_spans for 'spans')."""
     spark = batch_df.sparkSession
     # the batch feeds the verdicts and the survivors anti-join:
     # persisted, so it is read once (numInputRows counts each row once)
     batch = batch_df.persist()
     verdicts = verdict_rows(
-        _mode_fns(mode)[1](batch, bench_sh, exclude_self=exclude_self)
+        _mode_fns(decontam_mode)[1](batch, bench_sh, exclude_self=exclude_self)
     ).persist()
     try:
         survivors = batch.join(verdicts.select("doc_id"), "doc_id", "left_anti")
@@ -334,52 +342,17 @@ def _release_on_termination(query: StreamingQuery, df: DataFrame) -> None:
         listener.release()
 
 
-def ingest_with_decontam(
-    stream: DataFrame,
-    bench_docs: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-    exclude_self: bool = True,
-    mode: str = "shingles",
-) -> StreamingQuery:
-    """Streamed documents -> benchmark-decontaminated sink, with the
-    contaminated verdicts quarantined beside it. ``bench_docs`` is the
-    static held-out corpus; its shingle set is built and persisted
-    ONCE, outside the per-batch handler, and unpersisted when the
-    stream terminates (a restarted curation stream rebuilds it — no
-    cache leak across streams). ``exclude_self`` as in
-    _strongest_hits: True only when bench_docs is an id-shared
-    subset of the stream; False for an external benchmark.
-    ``mode``: 'shingles' (overlap veto — the `contamination` rule) or
-    'spans' (exact-substring veto — the `span_decontam` rule)."""
-    bench_sh = _mode_fns(mode)[0](bench_docs).persist()
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        decontam_ingest_batch(
-            batch_df, bench_sh, sink_path, batch_id,
-            compact_every=compact_every,
-            exclude_self=exclude_self,
-            mode=mode,
-        )
-
-    query = start_batches(stream, handle, checkpoint, available_now)
-    _release_on_termination(query, bench_sh)
-    return query
-
-
 def batch_decontam_keep(
     docs: DataFrame,
     bench_docs: DataFrame,
     exclude_self: bool = True,
-    mode: str = "shingles",
+    decontam_mode: str = "shingles",
 ) -> DataFrame:
     """The BATCH statement of the streaming rule (equivalence tests
     and backfills): keep docs with no benchmark match. The operator
     is stateless per doc, so the streamed sink equals this under ANY
     batching — no arrival-order caveat needed."""
-    build, hits_fn = _mode_fns(mode)
+    build, hits_fn = _mode_fns(decontam_mode)
     drops = verdict_rows(
         hits_fn(docs, build(bench_docs), exclude_self=exclude_self)
     ).select("doc_id")
@@ -405,7 +378,7 @@ def full_curation_ingest_batch(
     stages.pii_redact expression the pii_scrub audit certifies),
     (1) the Gopher-style repetition quality gate (stateless),
     (2) the benchmark veto (stateless, quarantined; ``decontam_mode``
-    picks shingle-overlap or exact-span, as in ingest_with_decontam —
+    picks shingle-overlap or exact-span, as in decontam_ingest_batch —
     ``bench_sh`` must be the matching static frame),
     (3) near-dup dedup against the accumulating bucket store,
     (4) optional temperature mixing (``temp_rates``: a STATIC
@@ -488,26 +461,15 @@ def ingest_with_full_curation(
     sink: the one-command crawl-curation ingest. ``temp_rates`` is the
     stream-static temperature model (see full_curation_ingest_batch) —
     fit it with stages.static_temp_rates over a DECLARED
-    static frame. Persisted-bench (released on stream termination),
-    exclude_self, and ``decontam_mode`` notes as in
-    ingest_with_decontam."""
-    bench_sh = _mode_fns(decontam_mode)[0](bench_docs).persist()
-    static_cols = _curation_cols()
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        full_curation_ingest_batch(
-            batch_df, bench_sh, sink_path, batch_id,
-            compact_every=compact_every,
-            exclude_self=exclude_self,
-            redact_pii=redact_pii,
-            temp_rates=temp_rates,
-            decontam_mode=decontam_mode,
-            static_cols=static_cols,
-        )
-
-    query = start_batches(stream, handle, checkpoint, available_now)
-    _release_on_termination(query, bench_sh)
-    return query
+    static frame. The curate row of MODES, started by start_ingest."""
+    return start_ingest(
+        "curate", stream, sink_path, checkpoint, available_now, bench_docs,
+        compact_every=compact_every,
+        exclude_self=exclude_self,
+        redact_pii=redact_pii,
+        temp_rates=temp_rates,
+        decontam_mode=decontam_mode,
+    )
 
 
 def batch_full_curation_keep(
@@ -532,9 +494,110 @@ def batch_full_curation_keep(
     out = batch_neardup_keep(
         batch_decontam_keep(
             kept, bench_docs, exclude_self=exclude_self,
-            mode=decontam_mode,
+            decontam_mode=decontam_mode,
         )
     )
     if temp_rates is not None:
         out = temp_membership(out, temp_rates)
     return out
+
+
+# --- the mode table: every dedup-ingest mode and its one start-up ------------
+class Mode(NamedTuple):
+    """One ``dedup-ingest --mode``: the table it replays, its CLI help,
+    its foreachBatch body, whether the body takes the static bench
+    frame (ahead of the sink path), and the per-stream options built
+    once at start (static Columns reused by every trigger)."""
+
+    table: str
+    help: str
+    body: Callable[[], Callable]  # looked up at each trigger
+    bench: bool = False
+    statics: Callable[[], dict] = dict
+
+
+MODES: dict[str, Mode] = {
+    "doc": Mode(
+        "documents", "MinHash bands", lambda: neardup.dedup_ingest_batch
+    ),
+    "quality": Mode(
+        "documents",
+        "repetition gate + MinHash bands",
+        lambda: neardup.quality_neardup_ingest_batch,
+    ),
+    "verified": Mode(
+        "documents",
+        "bands nominate + sketch-Jaccard decides",
+        lambda: neardup.verified_ingest_batch,
+    ),
+    "span": Mode(
+        "documents",
+        "exact SPAN_W-token span veto against earlier docs",
+        lambda: neardup.span_dedup_ingest_batch,
+    ),
+    "embedding": Mode(
+        "embeddings", "sign-bucket LSH", lambda: neardup.embedding_ingest_batch
+    ),
+    "embedding-verified": Mode(
+        "embeddings",
+        "sign buckets nominate + exact cosine decides",
+        lambda: neardup.verified_embedding_ingest_batch,
+    ),
+    "decontam": Mode(
+        "documents",
+        "benchmark veto with quarantine audit table",
+        lambda: decontam_ingest_batch,
+        bench=True,
+    ),
+    "curate": Mode(
+        "documents",
+        "quality gate + decontam + near-dup dedup in one pass",
+        lambda: full_curation_ingest_batch,
+        bench=True,
+        statics=lambda: {"static_cols": _curation_cols()},
+    ),
+}
+
+
+def start_ingest(
+    mode: str,
+    stream: DataFrame,
+    sink_path: str,
+    checkpoint: str,
+    available_now: bool = True,
+    bench_docs: DataFrame | None = None,
+    **opts,
+) -> StreamingQuery:
+    """Start ``MODES[mode]`` over ``stream`` into ``sink_path``,
+    checkpointed; ``available_now`` drains the input and stops.
+    ``opts`` go to every body call: compact_every, and for the bench
+    modes exclude_self / decontam_mode (curate also takes redact_pii /
+    temp_rates).
+
+    The body is looked up through its module attribute at each
+    trigger, so a wrap installed on that attribute takes effect. A
+    bench mode needs ``bench_docs``, the static held-out corpus: its
+    ``decontam_mode`` frame is built and persisted ONCE, outside the
+    per-batch body, and unpersisted when the stream terminates (a
+    restarted stream rebuilds it; no cache leak across streams).
+    ``exclude_self`` as in _strongest_hits: True only when bench_docs
+    is an id-shared subset of the stream; False for an external
+    benchmark."""
+    spec = MODES[mode]
+    if spec.bench != (bench_docs is not None):
+        raise ValueError(
+            f"mode {mode!r} {'needs' if spec.bench else 'takes no'} bench_docs"
+        )
+    static = ()
+    if spec.bench:
+        build = _mode_fns(opts.get("decontam_mode", "shingles"))[0]
+        static = (build(bench_docs).persist(),)
+    opts.update(spec.statics())
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        spec.body()(batch_df, *static, sink_path, batch_id, **opts)
+
+    query = start_batches(stream, handle, checkpoint, available_now)
+    for df in static:
+        _release_on_termination(query, df)
+    return query

@@ -4,15 +4,17 @@ The batch near-dup family (minhash_lsh, dedup_corpus) dedups a corpus
 at rest; a training-data pipeline also needs the INGEST form — drop a
 crawled row the moment it collides with anything already ingested,
 without re-scanning the corpus per batch. This module is that
-operator family: four pipelines over one shared batch engine —
+operator family: six foreachBatch bodies over one shared batch engine —
 MinHash-band blocking for documents (the batch path's exact shingle/
-hash/band machinery, operators.dedup), multi-band sign-bucket LSH for
-embeddings (SemDeDup-style semantic blocking), the document form
-composed with the repetition quality gate (corpus_release's
-ingest-time twin), and a VERIFIED precision mode (band collisions
-only nominate; exact shingle-Jaccard against the colliding earlier
-doc decides, at the cost of a second store of per-doc shingle sets).
-The shared mechanics:
+hash/band machinery, operators.dedup), the same composed with the
+repetition quality gate (corpus_release's ingest-time twin), an
+exact-span veto (span hashes as the bucket rows), multi-band
+sign-bucket LSH for embeddings (SemDeDup-style semantic blocking), and
+VERIFIED precision modes for documents and embeddings (band
+collisions only nominate; exact shingle-Jaccard or cosine against the
+colliding earlier row decides, at the cost of a second per-id store).
+Each body is started as a ``dedup-ingest --mode`` through
+``streaming.decontam.MODES`` / ``start_ingest``. The shared mechanics:
 
 - Per micro-batch, each doc's signature unpivots into (lang, band,
   band_key) bucket rows (``lsh_band_rows``).
@@ -53,7 +55,6 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from etl_wikipedia_updates_spark.functions.arrays import cosine_similarity
 from etl_wikipedia_updates_spark.operators import dedup as D
@@ -73,7 +74,6 @@ from etl_wikipedia_updates_spark.streaming.ingest import (
     _view_parts,
     append_batch,
     sink_snapshot,
-    start_batches,
 )
 from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
 
@@ -477,24 +477,6 @@ def dedup_ingest_batch(
     )
 
 
-def ingest_with_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> near-dup-deduped sink, checkpointed.
-    ``compact_every=N`` folds the bucket store every N batches."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
-
-
 def quality_neardup_ingest_batch(
     batch_df: DataFrame,
     sink_path: str,
@@ -515,21 +497,17 @@ def quality_neardup_ingest_batch(
     )
 
 
-def ingest_with_quality_neardup(
-    stream: DataFrame,
+def embedding_ingest_batch(
+    batch_df: DataFrame,
     sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
+    batch_id: int,
     compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> quality-gated, near-dup-deduped sink."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        quality_neardup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
+) -> None:
+    """Embedding (SemDeDup-style sign-bucket) dedup ingest micro-batch."""
+    _ingest_dedup_batch(
+        batch_df, sink_path, batch_id, embedding_band_rows, "vec_id",
+        compact_every=compact_every,
+    )
 
 
 def batch_quality_neardup_keep(docs: DataFrame) -> DataFrame:
@@ -537,25 +515,6 @@ def batch_quality_neardup_keep(docs: DataFrame) -> DataFrame:
     the corpus, then the no-smaller-id-shares-a-bucket rule over the
     survivors."""
     return batch_neardup_keep(quality_keep(docs))
-
-
-def ingest_with_embedding_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed embeddings -> sign-bucket-deduped sink (SemDeDup-style
-    ingest blocking), checkpointed."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        _ingest_dedup_batch(
-            batch_df, sink_path, batch_id, embedding_band_rows, "vec_id",
-            compact_every=compact_every,
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def _batch_keep(df: DataFrame, band_fn, id_col: str) -> DataFrame:
@@ -587,7 +546,7 @@ def batch_neardup_keep(docs: DataFrame) -> DataFrame:
 
 
 # --- span-mode (exact-substring) ingest dedup ---------------------------------
-# The sixth variant (r17): a doc is dropped iff it shares ONE verbatim
+# The span variant (r17): a doc is dropped iff it shares ONE verbatim
 # SPAN_W-token span with any earlier-arrived doc — the streaming
 # statement of the span_dedup / incremental_span_dedup rule (Lee et
 # al. 2021's dup-span test applied as a doc-level veto at ingest),
@@ -631,26 +590,6 @@ def span_dedup_ingest_batch(
         compact_every=compact_every,
         sink_transform=sink_transform,
     )
-
-
-def ingest_with_span_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> span-dedup'd sink: a doc lands only if
-    none of its SPAN_W-token spans was seen from an earlier doc.
-    Checkpointed; ``compact_every=N`` folds the span store every N
-    batches."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        span_dedup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_span_keep(docs: DataFrame) -> DataFrame:
@@ -975,25 +914,6 @@ def verified_ingest_batch(
             df.unpersist()
 
 
-def ingest_with_verified_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> Jaccard-VERIFIED near-dup-deduped sink
-    (precision mode: band collisions only nominate, the exact overlap
-    decides)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verified_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
-
-
 def batch_verified_neardup_keep(docs: DataFrame) -> DataFrame:
     """The BATCH statement of the verified streaming rule: a doc
     survives iff NO smaller doc_id both shares a band bucket AND has
@@ -1069,24 +989,6 @@ def verified_embedding_ingest_batch(
     finally:
         for df in (vecs, band, batch):
             df.unpersist()
-
-
-def ingest_with_verified_embedding_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed embeddings -> cosine-VERIFIED sign-bucket-deduped sink
-    (precision mode: bands nominate, the exact cosine decides)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verified_embedding_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    return start_batches(stream, handle, checkpoint, available_now)
 
 
 def batch_verified_embedding_keep(emb: DataFrame) -> DataFrame:

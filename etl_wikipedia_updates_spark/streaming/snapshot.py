@@ -1,8 +1,10 @@
 """Snapshot-isolated table publish on a plain filesystem.
 
-The rename-swap sinks in ``ingest.py`` close the empty/half-written
-window but keep one microsecond hole: between their two renames the
-live path does not exist, and a reader that lists exactly then sees
+Every rewriting publish — sink retention and compaction in
+``ingest.py``, store compaction in ``neardup.py``, releases, shards
+and packs — goes through this module. A rename-swap publish of a
+rewritten dataset leaves one hole: between its two renames the live
+path does not exist, and a reader that lists exactly then sees
 path-not-found. Table formats (Delta/Iceberg) close that hole with a
 manifest pointer; this module is the minimal filesystem version of the
 same idea — what the SCALE.md "declared 100 TB path" prose promises,

@@ -387,6 +387,71 @@ def test_cli_dedup_ingest_embedding_verified(spark, sf_smoke, tmp_path, capsys):
     assert _os.path.isdir(_os.path.join(sink, "_vector_store"))
 
 
+def test_cli_dedup_ingest_embedding_mode(spark, sf_smoke, tmp_path, capsys):
+    """--mode embedding replays the embeddings table through sign-bucket
+    dedup: the sink must equal batch_embedding_neardup_keep exactly."""
+    from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
+    from etl_wikipedia_updates_spark.streaming.ingest import read_sink
+    from etl_wikipedia_updates_spark.streaming.neardup import (
+        batch_embedding_neardup_keep,
+    )
+    from etl_wikipedia_updates_spark.tables import load_table
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    replay = str(tmp_path / "replay")
+    write_replay_splits(emb, replay, 3, "vec_id")
+    sink = str(tmp_path / "sink")
+    assert (
+        main(
+            [
+                "dedup-ingest",
+                "--replay", replay,
+                "--sink", sink,
+                "--sf-dir", sf_smoke,
+                "--mode", "embedding",
+            ]
+        )
+        == 0
+    )
+    assert "rows kept:" in capsys.readouterr().out
+
+    def ids(df):
+        return sorted(r["vec_id"] for r in df.select("vec_id").collect())
+
+    kept = ids(read_sink(spark, sink))
+    assert kept == ids(batch_embedding_neardup_keep(emb))
+    assert 0 < len(kept) < emb.count()
+
+
+def test_dedup_ingest_modes_dispatch_through_one_table():
+    """Session-free guard: the CLI's --mode choices are exactly the
+    streaming mode table's keys, and every stream_bench metric label
+    maps to a table entry."""
+    import argparse
+    import importlib.util
+    import pathlib
+
+    from etl_wikipedia_updates_spark.__main__ import build_parser
+    from etl_wikipedia_updates_spark.streaming.decontam import MODES
+
+    sub = next(
+        a for a in build_parser()._actions
+        if isinstance(a, argparse._SubParsersAction)
+    )
+    mode = next(
+        a for a in sub.choices["dedup-ingest"]._actions if a.dest == "mode"
+    )
+    assert list(mode.choices) == list(MODES)
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "stream_bench.py"
+    spec = importlib.util.spec_from_file_location("stream_bench", path)
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    for label, (name, opts) in bench.MODE_SPECS.items():
+        assert name in MODES, label
+        assert not opts or MODES[name].bench, label
+
+
 def test_cli_dedup_ingest_decontam(spark, sf_smoke, tmp_path, capsys):
     from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
     from etl_wikipedia_updates_spark.tables import load_table

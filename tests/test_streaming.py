@@ -16,6 +16,7 @@ from etl_wikipedia_updates_spark.sources.replay import (
     read_replay_stream,
     write_replay_splits,
 )
+from etl_wikipedia_updates_spark.streaming.decontam import start_ingest
 from etl_wikipedia_updates_spark.streaming.ingest import (
     ingest_with_retention,
     metrics_delta,
@@ -517,7 +518,7 @@ def test_maintenance_skips_uncommitted_batch_dir(spark, events, tmp_path):
 
 def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     """S-style batch equivalence for ingest-time near-dup dedup: the
-    corpus replayed in doc_id order through ingest_with_neardup must
+    corpus replayed in doc_id order through the doc mode must
     land exactly the docs the batch rule keeps (no smaller doc_id
     shares any LSH bucket), and the rule must actually drop something
     on this corpus. A second run over the same checkpoint replays
@@ -529,7 +530,6 @@ def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.streaming.neardup import (
         batch_neardup_keep,
-        ingest_with_neardup,
     )
     from etl_wikipedia_updates_spark.tables import load_table
 
@@ -539,7 +539,7 @@ def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
     stream = read_replay_stream(spark, replay, docs.schema)
-    q = ingest_with_neardup(stream, sink, ckpt)
+    q = start_ingest("doc", stream, sink, ckpt)
     q.awaitTermination(300)
 
     def checksum(df):
@@ -554,7 +554,8 @@ def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     # the micro-batch is read once: the reported input is the replay
     assert sum(p["numInputRows"] for p in q.recentProgress) == docs.count()
 
-    q2 = ingest_with_neardup(
+    q2 = start_ingest(
+        "doc",
         read_replay_stream(spark, replay, docs.schema), sink, ckpt
     )
     q2.awaitTermination(300)
@@ -601,7 +602,6 @@ def test_streaming_embedding_neardup_equals_batch(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.streaming.neardup import (
         batch_embedding_neardup_keep,
-        ingest_with_embedding_neardup,
     )
     from etl_wikipedia_updates_spark.tables import load_table
 
@@ -610,7 +610,8 @@ def test_streaming_embedding_neardup_equals_batch(spark, tmp_path):
     write_replay_splits(emb, replay, 4, "vec_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_embedding_neardup(
+    q = start_ingest(
+        "embedding",
         read_replay_stream(spark, replay, emb.schema), sink, ckpt
     )
     q.awaitTermination(300)
@@ -637,7 +638,6 @@ def test_streaming_quality_neardup_equals_batch(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.neardup import (
         batch_neardup_keep,
         batch_quality_neardup_keep,
-        ingest_with_quality_neardup,
     )
     from etl_wikipedia_updates_spark.tables import load_table
 
@@ -646,7 +646,8 @@ def test_streaming_quality_neardup_equals_batch(spark, tmp_path):
     write_replay_splits(docs, replay, 4, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_quality_neardup(
+    q = start_ingest(
+        "quality",
         read_replay_stream(spark, replay, docs.schema), sink, ckpt
     )
     q.awaitTermination(300)
@@ -730,7 +731,7 @@ def _checksum_docs(df):
 
 
 def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
-    """ingest_with_neardup(compact_every=2) over a 5-split replay:
+    """The doc mode with compact_every=2 over a 5-split replay:
     result still equals the batch rule exactly, the store has folded
     into a snapshot version, and fewer live batch dirs remain than
     batches ran."""
@@ -741,7 +742,6 @@ def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.neardup import (
         batch_neardup_keep,
         bucket_store_path,
-        ingest_with_neardup,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -749,7 +749,8 @@ def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_neardup(
+    q = start_ingest(
+        "doc",
         read_replay_stream(spark, replay, docs.schema),
         sink,
         ckpt,
@@ -839,7 +840,7 @@ def test_sink_row_count_maintained(spark, tmp_path):
 
 def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
     """Precision-mode ingest dedup: the corpus replayed in doc_id
-    order through ingest_with_verified_neardup (with store compaction
+    order through the verified mode (with store compaction
     mid-stream) must equal the batch statement — a doc drops only when
     a smaller doc_id shares a band bucket AND exact shingle-Jaccard
     clears the threshold. Verified must keep at least as many docs as
@@ -853,7 +854,6 @@ def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
         batch_neardup_keep,
         batch_verified_neardup_keep,
         bucket_store_path,
-        ingest_with_verified_neardup,
         shingle_store_path,
     )
 
@@ -862,7 +862,8 @@ def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_verified_neardup(
+    q = start_ingest(
+        "verified",
         read_replay_stream(spark, replay, docs.schema),
         sink,
         ckpt,
@@ -909,7 +910,7 @@ def test_verified_batch_replay_idempotent(spark, tmp_path):
 
 def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
     """Embedding precision-mode ingest: the embeddings table replayed
-    in vec_id order through ingest_with_verified_embedding_neardup
+    in vec_id order through the embedding-verified mode
     (with store compaction mid-stream) must equal the batch statement
     — a vector drops only when a smaller vec_id shares a sign-bucket
     band AND exact cosine clears the threshold. Verified keeps at
@@ -923,7 +924,6 @@ def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
         batch_embedding_neardup_keep,
         batch_verified_embedding_keep,
         bucket_store_path,
-        ingest_with_verified_embedding_neardup,
         vector_store_path,
     )
 
@@ -932,7 +932,8 @@ def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
     write_replay_splits(emb, replay, 5, "vec_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_verified_embedding_neardup(
+    q = start_ingest(
+        "embedding-verified",
         read_replay_stream(spark, replay, emb.schema),
         sink,
         ckpt,
@@ -1127,7 +1128,7 @@ def test_verified_guard_tolerates_lagging_payload_compaction(
 
 def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     """Ingest-time benchmark decontamination: the corpus replayed
-    through ingest_with_decontam must equal batch_decontam_keep (the
+    through the decontam mode must equal batch_decontam_keep (the
     operator is stateless per doc, so equality holds under any
     batching), the quarantine table must carry exactly the dropped
     docs' verdicts, sink + quarantine must partition the corpus, and
@@ -1137,7 +1138,6 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_decontam_keep,
         contam_store_path,
-        ingest_with_decontam,
     )
     from etl_wikipedia_updates_spark.streaming.ingest import (
         _batch_dirs,
@@ -1150,11 +1150,12 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_decontam(
+    q = start_ingest(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
-        bench,
         sink,
         ckpt,
+        bench_docs=bench,
         compact_every=2,
     )
     q.awaitTermination(300)
@@ -1200,9 +1201,6 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
     import time
 
     from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
-    )
 
     def n_cached() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -1213,11 +1211,12 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
     write_replay_splits(docs, replay, 3, "doc_id")
 
     base = n_cached()
-    q = ingest_with_decontam(
+    q = start_ingest(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
-        bench,
         str(tmp_path / "sink"),
         str(tmp_path / "ckpt"),
+        bench_docs=bench,
     )
     q.awaitTermination(300)
     # the listener fires on the streaming event thread — poll briefly
@@ -1298,6 +1297,41 @@ def test_streaming_full_curation_equals_batch(spark, tmp_path):
     for store in (contam_store_path(sink), bucket_store_path(sink)):
         assert sink_snapshot(store).current_version() is not None
     _assert_curation_stores(spark, sink, docs, bench, "shingles")
+
+
+def test_full_curation_stream_calls_patched_body(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The perfbench tracer contract: the tracer wraps
+    decontam.full_curation_ingest_batch by module attribute, so a
+    stream started through ingest_with_full_curation must call what
+    that attribute holds when it runs, not a function captured at
+    import."""
+    from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
+    from etl_wikipedia_updates_spark.streaming import decontam
+
+    docs = load_table(spark, sf_smoke, "documents")
+    bench = docs.filter(F.col("source") == CONTAM_BENCH_SOURCE)
+    replay = str(tmp_path / "replay")
+    write_replay_splits(docs, replay, 2, "doc_id")
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    body = decontam.full_curation_ingest_batch
+    batch_ids = []
+
+    def traced(batch_df, bench_sh, sink_path, batch_id, **opts):
+        batch_ids.append(batch_id)
+        body(batch_df, bench_sh, sink_path, batch_id, **opts)
+
+    monkeypatch.setattr(decontam, "full_curation_ingest_batch", traced)
+    q = decontam.ingest_with_full_curation(
+        read_replay_stream(spark, replay, docs.schema), bench, sink, ckpt
+    )
+    q.awaitTermination(300)
+
+    assert batch_ids == [0, 1]
+    assert _checksum_docs(read_sink(spark, sink)) == _checksum_docs(
+        decontam.batch_full_curation_keep(docs, bench)
+    )
 
 
 def _reference_verdicts(docs, bench, mode):
@@ -1694,8 +1728,8 @@ def test_static_temp_rates_is_materialized(spark):
 
 def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
     """SPAN mode (r16): the corpus replayed through
-    ingest_with_decontam(mode='spans') must equal
-    batch_decontam_keep(mode='spans') under multi-batch replay, and
+    the decontam mode with decontam_mode='spans' must equal
+    batch_decontam_keep(decontam_mode='spans') under multi-batch replay, and
     the dropped TRAIN ids must be exactly the docs the registered
     span_decontam audit counts as contaminated (contam_doc > 0) — the
     stream, the batch rule, and the batch audit are three statements
@@ -1705,7 +1739,6 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.decontam import (
         batch_decontam_keep,
         contam_store_path,
-        ingest_with_decontam,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1715,17 +1748,18 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
     write_replay_splits(docs, replay, 4, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_decontam(
+    q = start_ingest(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
-        bench,
         sink,
         ckpt,
-        mode="spans",
+        bench_docs=bench,
+        decontam_mode="spans",
     )
     q.awaitTermination(300)
 
     kept = read_sink(spark, sink)
-    expected = batch_decontam_keep(docs, bench, mode="spans")
+    expected = batch_decontam_keep(docs, bench, decontam_mode="spans")
     assert _checksum_docs(kept) == _checksum_docs(expected)
 
     # dropped TRAIN ids == the registered audit's contaminated docs
@@ -1758,7 +1792,7 @@ def test_decontam_mode_rejects_unknown(spark):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     with pytest.raises(ValueError, match="unknown decontam mode"):
-        batch_decontam_keep(docs, docs, mode="hashes")
+        batch_decontam_keep(docs, docs, decontam_mode="hashes")
 
 
 def test_streaming_full_curation_span_mode_equals_batch(spark, tmp_path):
@@ -1820,7 +1854,6 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.streaming.neardup import (
         batch_span_keep,
-        ingest_with_span_neardup,
     )
 
     def blk(name):
@@ -1844,7 +1877,8 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_span_neardup(
+    q = start_ingest(
+        "span",
         read_replay_stream(spark, replay, docs.schema), sink, ckpt
     )
     q.awaitTermination(300)
@@ -1858,7 +1892,8 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
     assert kept_stream == kept_batch == [0, 3, 5]  # 2 shadowed by 1
 
     # replay idempotence
-    q2 = ingest_with_span_neardup(
+    q2 = start_ingest(
+        "span",
         read_replay_stream(spark, replay, docs.schema), sink, ckpt
     )
     q2.awaitTermination(300)
@@ -1883,7 +1918,6 @@ def test_span_ingest_seeded_from_release_store(spark, tmp_path):
     )
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_span_neardup,
         seed_span_store_from,
     )
 
@@ -1920,7 +1954,8 @@ def test_span_ingest_seeded_from_release_store(spark, tmp_path):
 
     replay = str(tmp_path / "replay")
     write_replay_splits(new, replay, 3, "doc_id")
-    q = ingest_with_span_neardup(
+    q = start_ingest(
+        "span",
         read_replay_stream(spark, replay, new.schema), sink, ckpt
     )
     q.awaitTermination(300)

@@ -126,3 +126,30 @@ def test_certification_rotation_keeps_official_rows_fresh():
         f"certified) are outside the next 50-entry gate window: "
         f"{sorted(stale)} — move them to the head of DECLARATION_ORDER"
     )
+
+
+def test_certification_rotation_rule_on_synthetic_history():
+    """The rotation rule on a made-up history (latest round 5, so an
+    entry is due when its newest official round is <= 2): due entries
+    first, never-certified ones in declaration order, then the
+    contract rows, then the rest; each group stalest first, ties by
+    position in that round's file. A due contract row is due first."""
+    from etl_wikipedia_updates_spark.registry import certification_rotation
+
+    names = [
+        "fresh", "q1", "never_b", "old_b", "mid", "q2", "old_a",
+        "never_a", "wiki_pipeline", "mid2",
+    ]
+    history = {
+        1: ["q2"],
+        2: ["old_b", "old_a", "q2_typo"],
+        3: ["mid2", "mid", "old_a_typo"],
+        5: ["q1", "wiki_pipeline", "fresh"],
+    }
+    assert certification_rotation(names, history) == [
+        "never_b", "never_a", "q2", "old_b", "old_a",  # due
+        "q1", "wiki_pipeline",  # contract rows
+        "mid2", "mid", "fresh",  # the rest
+    ]
+    # no history: everything is due, in declaration order
+    assert certification_rotation(names, {}) == names

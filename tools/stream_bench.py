@@ -50,6 +50,7 @@ from etl_wikipedia_updates_spark.sources.replay import (
     read_replay_stream,
     write_replay_splits,
 )
+from etl_wikipedia_updates_spark.streaming.decontam import MODES, start_ingest
 from etl_wikipedia_updates_spark.streaming.ingest import (
     ingest_with_retention,
     read_sink,
@@ -60,55 +61,20 @@ WIKIMEDIA_EV_S = 40  # upper end of the publicly observed SSE rate
 N_SPLITS = 8  # micro-batches; each batch pays trigger+commit overhead
 TIMEOUT_S = 600
 
-# mode -> (replayed table, split/order key, one-line cost note);
-# starters bind in main() once the static frames exist
-MODE_SPECS: dict[str, tuple[str, str, str]] = {
-    "neardup": (
-        "documents",
-        "doc_id",
-        "shingle+MinHash per batch + bucket-store collision join",
-    ),
-    "quality": (
-        "documents",
-        "doc_id",
-        "quality gate, then the MinHash dedup path",
-    ),
-    "verified": (
-        "documents",
-        "doc_id",
-        "MinHash nomination + exact bottom-k Jaccard verify",
-    ),
-    "span": (
-        "documents",
-        "doc_id",
-        "exact-substring veto: span hashes ARE the store rows",
-    ),
-    "embedding": (
-        "embeddings",
-        "vec_id",
-        "sign-bucket (SimHash band) blocking over the embedding column",
-    ),
-    "embedding_verified": (
-        "embeddings",
-        "vec_id",
-        "sign-bucket nomination + exact cosine verify",
-    ),
-    "decontam_shingle": (
-        "documents",
-        "doc_id",
-        "benchmark shingle-overlap veto (batch `contamination` rule)",
-    ),
-    "decontam_span": (
-        "documents",
-        "doc_id",
-        "benchmark exact-substring veto (batch `span_decontam` rule)",
-    ),
-    "curate": (
-        "documents",
-        "doc_id",
-        "one-pass quality + decontam + near-dup curation ingest",
-    ),
+# metric label -> (streaming.decontam.MODES name, its options). The
+# labels are the STREAMBENCH_r*.json metric names.
+MODE_SPECS: dict[str, tuple[str, dict]] = {
+    "neardup": ("doc", {}),
+    "quality": ("quality", {}),
+    "verified": ("verified", {}),
+    "span": ("span", {}),
+    "embedding": ("embedding", {}),
+    "embedding_verified": ("embedding-verified", {}),
+    "decontam_shingle": ("decontam", {"decontam_mode": "shingles"}),
+    "decontam_span": ("decontam", {"decontam_mode": "spans"}),
+    "curate": ("curate", {}),
 }
+KEYS = {"documents": "doc_id", "embeddings": "vec_id"}  # split/order key
 
 
 def _await_or_die(q, what: str) -> None:
@@ -142,18 +108,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from etl_wikipedia_updates_spark.stages import CONTAM_BENCH_SOURCE
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
-        ingest_with_full_curation,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_embedding_neardup,
-        ingest_with_neardup,
-        ingest_with_quality_neardup,
-        ingest_with_span_neardup,
-        ingest_with_verified_embedding_neardup,
-        ingest_with_verified_neardup,
-    )
 
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
@@ -186,9 +140,9 @@ def main() -> None:
     spark = get_spark(app_name="stream_bench", shuffle_partitions=8)
     events = load_table(spark, sf_dir, "events")
     n_events = events.count()
+    tables = {m: MODES[MODE_SPECS[m][0]].table for m in selected}
     frames = {
-        name: load_table(spark, sf_dir, name)
-        for name in {MODE_SPECS[m][0] for m in selected}
+        name: load_table(spark, sf_dir, name) for name in set(tables.values())
     }
     counts = {name: f.count() for name, f in frames.items()}
     docs = frames.get("documents")
@@ -200,30 +154,21 @@ def main() -> None:
         if docs is not None
         else None
     )
-    starters = {
-        "neardup": ingest_with_neardup,
-        "quality": ingest_with_quality_neardup,
-        "verified": ingest_with_verified_neardup,
-        "span": ingest_with_span_neardup,
-        "embedding": ingest_with_embedding_neardup,
-        "embedding_verified": ingest_with_verified_embedding_neardup,
-        "decontam_shingle": lambda s, sink, ck: ingest_with_decontam(
-            s, bench, sink, ck, mode="shingles"
-        ),
-        "decontam_span": lambda s, sink, ck: ingest_with_decontam(
-            s, bench, sink, ck, mode="spans"
-        ),
-        "curate": lambda s, sink, ck: ingest_with_full_curation(
-            s, bench, sink, ck
-        ),
-    }
+
+    def starter(label: str):
+        mode, opts = MODE_SPECS[label]
+        bench_docs = bench if MODES[mode].bench else None
+        return lambda s, sink, ck: start_ingest(
+            mode, s, sink, ck, bench_docs=bench_docs, **opts
+        )
+
     # One untimed replay first (the first selected mode, else the
     # events ingest), so JVM start-up and first-use class loading land
     # on no timed measurement.
     if selected:
-        table, key, _note = MODE_SPECS[selected[0]]
+        table = tables[selected[0]]
         _replay_frame(
-            spark, frames[table], key, starters[selected[0]], "warm-up"
+            spark, frames[table], KEYS[table], starter(selected[0]), "warm-up"
         )
     else:
         _replay_frame(spark, events, "ts", ingest_with_retention, "warm-up")
@@ -253,9 +198,9 @@ def main() -> None:
     )
 
     for mode in selected:
-        table, key, note = MODE_SPECS[mode]
+        table = tables[mode]
         elapsed, kept = _replay_frame(
-            spark, frames[table], key, starters[mode], f"{mode}_ingest"
+            spark, frames[table], KEYS[table], starter(mode), f"{mode}_ingest"
         )
         emit(
             {
@@ -267,7 +212,7 @@ def main() -> None:
                 "docs_kept": kept,
                 "elapsed_sec": round(elapsed, 2),
                 "micro_batches": N_SPLITS,
-                "note": note,
+                "note": MODES[MODE_SPECS[mode][0]].help,
                 "sf": sf_dir,
             }
         )
