@@ -559,12 +559,12 @@ def cmd_maintain(args) -> int:
     from etl_wikipedia_updates_spark.streaming.ingest import (
         compact_rollup,
         compact_sink,
+        compact_store,
     )
     from etl_wikipedia_updates_spark.streaming.neardup import (
         BUCKETS_DIRNAME,
         SHINGLES_DIRNAME,
         VECTORS_DIRNAME,
-        compact_store,
     )
 
     spark = _spark()

@@ -73,24 +73,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        # --- adaptive execution: the main scale lever ---
-        # SPARK_GRAFT_AQE lets bench experiments toggle it; default on
-        # (production posture: runtime re-planning, skew-join splitting).
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_AQE", "true"),
-        )
+        # --- adaptive execution: the main scale lever (runtime
+        # re-planning, skew-join splitting) ---
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing: initial parallelism ~= cores locally; AQE
         # coalesces small partitions, so this is safe at every SF ---
         .config(
             "spark.sql.shuffle.partitions",
-            str(
-                shuffle_partitions
-                if shuffle_partitions is not None
-                else _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-            ),
+            str(shuffle_partitions if shuffle_partitions is not None else cpus),
         )
         # --- Python <-> JVM transfer is Arrow-batched, never pickled rows ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -69,12 +69,12 @@ from etl_wikipedia_updates_spark.stages import (
 from etl_wikipedia_updates_spark.streaming import neardup
 from etl_wikipedia_updates_spark.streaming.ingest import (
     append_batch,
+    compact_store,
     start_batches,
 )
 from etl_wikipedia_updates_spark.streaming.neardup import (
     SigCols,
     batch_neardup_keep,
-    compact_store,
     dedup_append,
     doc_tids,
     sig_cols,
@@ -85,18 +85,6 @@ CONTAM_DIRNAME = "_contaminated"  # _-prefixed: invisible to sink readers
 
 def contam_store_path(sink_path: str) -> str:
     return os.path.join(sink_path, CONTAM_DIRNAME)
-
-
-def compact_contam_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the quarantine table (see neardup.compact_store)."""
-    return compact_store(
-        spark, contam_store_path(sink_path), target_files, below
-    )
 
 
 def bench_shingles(
@@ -283,7 +271,7 @@ def decontam_ingest_batch(
         append_batch(survivors, sink_path, batch_id)
         append_batch(verdicts, contam_store_path(sink_path), batch_id)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_contam_store(spark, sink_path, below=batch_id)
+            compact_store(spark, contam_store_path(sink_path), below=batch_id)
     finally:
         verdicts.unpersist()
         batch.unpersist()
@@ -423,7 +411,7 @@ def full_curation_ingest_batch(
             verdicts.coalesce(1), contam_store_path(sink_path), batch_id
         )
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_contam_store(spark, sink_path, below=batch_id)
+            compact_store(spark, contam_store_path(sink_path), below=batch_id)
         band = D.lsh_band_rows(
             per_doc.filter(F.col("hit").isNull()),
             MINHASH_BANDS, MINHASH_ROWS, cols.bands,

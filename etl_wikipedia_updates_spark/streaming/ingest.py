@@ -21,11 +21,10 @@ Appends only ever ADD batch dirs. Retention/compaction — the rewriting
 maintenance ops — publish the rewritten table as the next snapshot
 version whose metadata records ``folded_through``: the highest batch id
 folded in. Readers resolve the manifest once and read that version's
-immutable files plus batch dirs with id > folded_through, so there is
-NO instant at which the sink is unreadable, partial, or doubled — the
-guarantee the previous rename-swap publish could not give (its
-microsecond between-renames window surfaced as transient
-path-not-found), and the streaming upgrade of the reference's WAL
+immutable files plus batch dirs with id > folded_through (read_view,
+the one reader of this layout for the sink, the rollup and the side
+stores), so there is NO instant at which the sink is unreadable,
+partial, or doubled — the streaming upgrade of the reference's WAL
 1-writer/N-readers contract (/root/reference/pipeline.py:198). Batch
 dirs already folded into the PREVIOUS version too are deleted one
 maintenance cycle late, and versions are vacuumed with keep_last=2 —
@@ -89,8 +88,8 @@ def start_batches(
 
 def _batch_dir_rows(path: str) -> int:
     """Row count of one committed batch dir: the append-time sidecar,
-    else the parquet-footer sum (sidecar lost to a crash window, or a
-    dir written before sidecars existed)."""
+    else the parquet-footer sum (sidecar lost to the crash window
+    between write and sidecar)."""
     try:
         with open(os.path.join(path, NROWS_SIDECAR)) as fh:
             return int(json.load(fh)["n"])
@@ -112,23 +111,11 @@ def sink_row_count(sink_path: str) -> int:
     a typo'd path)."""
     if not os.path.isdir(sink_path):
         raise FileNotFoundError(f"no such sink: {sink_path}")
-    snap, v, _folded, newer = _view_parts(sink_path)
+    snap, v, _folded, newer = view_parts(sink_path)
     if v is None and not newer:
-        if _batch_dirs(sink_path):
-            raise FileNotFoundError(
-                f"{sink_path}: no committed batch yet (first append "
-                "in flight); retry after its _SUCCESS lands"
-            )
-        return dir_row_count(sink_path)  # foreign sink: footer walk
-    total = 0
-    if v is not None:
-        meta = snap.meta_for(v)
-        total += (
-            int(meta["n_rows"])
-            if "n_rows" in meta
-            else dir_row_count(snap.version_path(v))
-        )
-    return total + sum(_batch_dir_rows(p) for _b, p in newer)
+        return dir_row_count(_whole_tree(sink_path))  # foreign sink
+    base = 0 if v is None else int(snap.meta_for(v)["n_rows"])
+    return base + sum(_batch_dir_rows(p) for _b, p in newer)
 
 
 SNAPSHOT_DIRNAME = "_snapshot"
@@ -172,100 +159,122 @@ def _committed_batch_dirs(sink_path: str) -> list[tuple[int, str]]:
     ]
 
 
-def _view_parts(
-    sink_path: str, version: int | None = None
-) -> tuple[SnapshotTable, int | None, int, list[tuple[int, str]]]:
-    """THE resolution of the sink's composite view — (snapshot store,
-    resolved version, folded_through, unfolded committed (id, path)
-    batch dirs). Shared by read_sink / _view_file_count /
-    _publish_rewrite so the version pointer, fold marker, and
-    batch-dir filter can never disagree between the reader and the
-    maintenance paths."""
-    snap = sink_snapshot(sink_path)
+ViewParts = tuple[SnapshotTable, int | None, int, list[tuple[int, str]]]
+
+
+def view_parts(
+    path: str, version: int | None = None, below: int | None = None
+) -> ViewParts:
+    """THE resolution of a per-batch table's composite view — (snapshot
+    store, resolved version, folded_through, unfolded committed (id,
+    path) batch dirs, with ``below`` only ids < below). Shared by
+    read_view / sink_row_count / _view_file_count and the folds, so the
+    version pointer, fold marker, and batch-dir filter can never
+    disagree between the readers and the maintenance paths.
+
+    ``below`` (exclusive) is a store read's replay guard: a batch
+    retried under its own id must not collide with its first attempt's
+    rows, folded or not. A version folded through ``below`` or beyond
+    cannot give that view, so it raises."""
+    snap = sink_snapshot(path)
     v = snap.current_version() if version is None else version
-    if v is None:
-        return snap, None, -1, _committed_batch_dirs(sink_path)
-    folded = int(snap.meta_for(v).get("folded_through", -1))
-    newer = [(b, p) for b, p in _committed_batch_dirs(sink_path) if b > folded]
+    folded = (
+        -1 if v is None else int(snap.meta_for(v).get("folded_through", -1))
+    )
+    if below is not None and folded >= below:
+        # Only possible through an external compaction run with an
+        # explicit too-high ``below`` while the stream was in flight;
+        # reading on would let a replayed batch collide with itself
+        # and silently drop every row.
+        raise RuntimeError(
+            f"store {path} folded through {folded} but "
+            f"batch {below} may replay; compact only below the "
+            "in-flight batch id"
+        )
+    newer = [
+        (b, p)
+        for b, p in _committed_batch_dirs(path)
+        if b > folded and (below is None or b < below)
+    ]
     return snap, v, folded, newer
+
+
+def _whole_tree(path: str) -> str:
+    """``path`` itself, for a table with no snapshot and no committed
+    batch dir: a parquet dir written by something else, read as one
+    whole tree. Batch dirs with NONE committed mean the first append is
+    mid-write; recursing then would read the in-flight dir's partial
+    part-files — rows that reappear once its _SUCCESS lands, or that a
+    fold would record under folded_through=-1 and double. Fail like an
+    unpublished snapshot does; the caller retries after the commit."""
+    if _batch_dirs(path):
+        raise FileNotFoundError(
+            f"{path}: no committed batch yet (first append "
+            "in flight); retry after its _SUCCESS lands"
+        )
+    return path
+
+
+def read_view(
+    spark: SparkSession,
+    path: str,
+    below: int | None = None,
+    version: int | None = None,
+    schema: str | None = None,
+) -> tuple[DataFrame | None, ViewParts]:
+    """The composite view of a per-batch table — the sink, the rollup
+    or a side store — and the view_parts it was read from, so a fold
+    records exactly what it read: the current (or a pinned) snapshot
+    version's immutable files plus the COMMITTED batch appends above
+    its ``folded_through`` marker (only ids < ``below`` when given).
+
+    Before the first publish the table is pure appends and reads the
+    committed batch dirs, under ``schema`` when given (append-only
+    needs no manifest: every committed state is complete). With nothing
+    committed, a ``below`` read (a store before its first qualifying
+    batch) is None and any other read takes _whole_tree."""
+    parts = view_parts(path, version, below)
+    snap, v, _folded, newer = parts
+    paths = [p for _, p in newer]
+    if v is not None:
+        view = snap.read(spark, v)
+        if paths:
+            # explicit schema: skips re-inference and keeps a 0-row
+            # batch dir (a committed empty batch has only _SUCCESS)
+            # from failing the read
+            view = view.unionByName(
+                spark.read.schema(view.schema).parquet(*paths)
+            )
+    elif paths:
+        reader = spark.read.schema(schema) if schema else spark.read
+        view = reader.parquet(*paths)
+    elif below is not None:
+        view = None
+    else:
+        view = spark.read.option("recursiveFileLookup", "true").parquet(
+            _whole_tree(path)
+        )
+    return view, parts
 
 
 def read_sink(
     spark: SparkSession, sink_path: str, version: int | None = None
 ) -> DataFrame:
-    """The sink's current (or a pinned) consistent view: the snapshot
-    version's immutable files plus COMMITTED batch appends newer than
-    its ``folded_through`` marker. Before the first maintenance publish
-    the sink is pure appends and reads the committed batch dirs
-    (append-only needs no manifest: every committed state is
-    complete)."""
-    snap, v, _folded, newer = _view_parts(sink_path, version)
-    paths = [p for _, p in newer]
-    if v is None:
-        if paths:
-            return spark.read.parquet(*paths)
-        if _batch_dirs(sink_path):
-            # Batch dirs exist but NONE has committed yet (the first
-            # append is mid-write). The committed view is empty and we
-            # have no schema to synthesize an empty frame with — and
-            # falling back to a recursive listing here would read the
-            # in-flight dir's partial part-files, rows that reappear
-            # once its _SUCCESS lands. Fail like an unpublished
-            # snapshot does; the reader retries after the commit.
-            raise FileNotFoundError(
-                f"{sink_path}: no committed batch yet (first append "
-                "in flight); retry after its _SUCCESS lands"
-            )
-        # no batch_* dirs at all (a sink written by something else):
-        # fall back to the whole tree
-        return spark.read.option("recursiveFileLookup", "true").parquet(sink_path)
-    base = snap.read(spark, v)
-    if not paths:
-        return base
-    # explicit schema: skips re-inference and keeps a 0-row batch dir
-    # (a committed empty batch has only _SUCCESS) from failing the read
-    return base.unionByName(spark.read.schema(base.schema).parquet(*paths))
+    """The sink's current (or a pinned) consistent view (read_view);
+    FileNotFoundError while the first append is still in flight."""
+    return read_view(spark, sink_path, version=version)[0]
 
 
-def _hidden_sibling(path: str, tag: str) -> str:
-    """A ``._``-prefixed sibling of ``path`` — Spark's file index skips
-    names starting with ``.`` or ``_``, so in-flight rewrite state named
-    this way is INVISIBLE to any concurrent reader of the enclosing
-    tree (recursiveFileLookup, glob, or partition discovery alike)."""
-    parent, base = os.path.split(path.rstrip("/"))
-    return os.path.join(parent, f"._{tag}_{base}")
-
-
-def _recover_swap(live_dir: str) -> None:
-    """Heal a swap interrupted between its two renames.
-
-    Crash states and their recovery (old = the hidden step-aside dir):
-    - live missing + old present  -> rename old back to live (the
-      pre-rewrite dataset; complete by construction).
-    - live present + old present  -> the swap finished but the final
-      cleanup didn't: delete the stale old dir.
-    Idempotent; called at the top of every rewrite entry point, so the
-    next maintenance run self-heals a crashed predecessor."""
-    old = _hidden_sibling(live_dir, "old")
-    if os.path.exists(old):
-        if not os.path.exists(live_dir):
-            os.rename(old, live_dir)
-        else:
-            shutil.rmtree(old, ignore_errors=True)
-
-
-def _view_file_count(sink_path: str) -> int:
-    """Parquet files the CURRENT consistent view reads (version dir +
-    unfolded committed batch dirs; the committed batch dirs — or the
-    whole tree when there are none — before the first publish)."""
-    snap, v, _folded, newer = _view_parts(sink_path)
-    if v is None:
-        roots = [p for _, p in newer] or [sink_path]
-    else:
-        roots = [snap.version_path(v)] + [p for _, p in newer]
+def _view_file_count(sink_path: str, parts: ViewParts) -> int:
+    """Parquet files the resolved view reads (version dir + unfolded
+    committed batch dirs; the whole tree of a foreign dir)."""
+    snap, v, _folded, newer = parts
+    roots = [p for _, p in newer]
+    if v is not None:
+        roots.append(snap.version_path(v))
     return sum(
         1
-        for root in roots
+        for root in roots or [_whole_tree(sink_path)]
         for _r, _d, files in os.walk(root)
         for f in files
         if f.endswith(".parquet")
@@ -286,7 +295,7 @@ def _publish_rewrite(
     in-flight batch. Dirs at or above ``below`` stay unfolded and
     remain visible through the composite view.
 
-    The committed-batch-dir list is resolved ONCE (_view_parts) and the
+    The committed-batch-dir list is resolved ONCE (read_view) and the
     fold reads EXACTLY those explicit paths — never a recursive listing
     of the sink tree, which Spark would take at a later instant than
     the dir list, so a batch committing in between would be read into
@@ -298,34 +307,8 @@ def _publish_rewrite(
     in-flight readers: batch dirs are deleted only once the PREVIOUS
     version had already folded them, and versions are vacuumed
     keep_last=2."""
-    snap, prev_v, prev_folded, newer = _view_parts(sink_path)
-    if below is not None:
-        newer = [(b, p) for b, p in newer if b < below]
+    view, (snap, _v, prev_folded, newer) = read_view(spark, sink_path, below)
     folded_through = max([b for b, _ in newer], default=prev_folded)
-    paths = [p for _, p in newer]
-    if prev_v is None:
-        if paths:
-            view = spark.read.parquet(*paths)
-        elif _batch_dirs(sink_path):
-            # Same pre-first-commit hole as read_sink: recursing here
-            # would fold the in-flight dir's partial part-files into
-            # the version while recording folded_through=-1, so the
-            # batch's rows would double once its _SUCCESS lands.
-            # Abort; maintenance retries after the first commit.
-            raise FileNotFoundError(
-                f"{sink_path}: nothing committed to fold yet (first "
-                "append in flight); retry after its _SUCCESS lands"
-            )
-        else:
-            view = spark.read.option("recursiveFileLookup", "true").parquet(
-                sink_path
-            )
-    else:
-        view = snap.read(spark, prev_v)
-        if paths:
-            view = view.unionByName(
-                spark.read.schema(view.schema).parquet(*paths)
-            )
     version = snap.publish(
         transform(view), meta={"folded_through": folded_through}
     )
@@ -360,32 +343,64 @@ def compact_sink(
     maintenance loop must not pay a full-table rewrite (nor burn a
     version number) per idle cycle.
     """
-    _recover_swap(sink_path)  # heal a pre-snapshot-era crashed swap
-    snap, v, _folded, newer = _view_parts(sink_path)
-    before = _view_file_count(sink_path)
+    parts = view_parts(sink_path)
+    snap, v, _folded, newer = parts
+    before = _view_file_count(sink_path, parts)
     if v is not None and not newer and before <= target_files:
-        # same pre-n_rows-metadata fallback as sink_row_count: a
-        # version published before row counts existed must no-op,
-        # not crash the maintenance loop
-        rows = int(
-            snap.meta_for(v).get(
-                "n_rows", dir_row_count(snap.version_path(v))
-            )
-        )
         return {
             "files_before": before,
             "files_after": before,
-            "rows": rows,
+            "rows": int(snap.meta_for(v)["n_rows"]),
         }
     version = _publish_rewrite(
         spark, sink_path, lambda view: view.coalesce(target_files)
     )
-    rows = int(sink_snapshot(sink_path).meta_for(version)["n_rows"])
     return {
         "files_before": before,
-        "files_after": _view_file_count(sink_path),
-        "rows": rows,
+        "files_after": _view_file_count(sink_path, view_parts(sink_path)),
+        "rows": int(snap.meta_for(version)["n_rows"]),
     }
+
+
+def compact_store(
+    spark: SparkSession,
+    store_path: str,
+    target_files: int = 4,
+    below: int | None = None,
+) -> dict | None:
+    """Fold one accumulating per-batch store (bucket or shingle) into a
+    snapshot version — the same SnapshotTable fold the data sink uses
+    (``_publish_rewrite``), so the store's file count stops growing
+    with batch count. Without this a store gains one directory per
+    trigger forever and the per-batch collision join pays an
+    ever-growing file-listing + footer cost.
+
+    ``below`` (exclusive) bounds which batch ids are folded. The
+    default folds everything EXCEPT the newest committed batch — a
+    one-batch grace horizon, because with at-least-once foreachBatch
+    the newest appended batch may be replayed if the checkpoint commit
+    did not land, and a replayed batch must never find its own rows
+    already folded (``view_parts`` raises on that invariant). The
+    in-handler call sites pass ``below=batch_id`` for the same reason.
+
+    Returns {"version": N, "folded_dirs": n} or None when there was
+    nothing new to fold (no pointless full-store rewrite)."""
+    _snap, _v, _folded, newer = view_parts(store_path)
+    if below is None:
+        # newest UNFOLDED committed id; when everything committed is
+        # already folded the max is over an empty set and foldable
+        # below comes out empty either way
+        below = max((b for b, _ in newer), default=-1)
+    foldable = [b for b, _ in newer if b < below]
+    if not foldable:
+        return None
+    version = _publish_rewrite(
+        spark,
+        store_path,
+        lambda view: view.coalesce(target_files),
+        below=below,
+    )
+    return {"version": version, "folded_dirs": len(foldable)}
 
 
 def apply_retention(
@@ -397,7 +412,6 @@ def apply_retention(
     (version meta + per-batch sidecars, sink_row_count) — per-trigger
     cost is a few tiny file reads, not a count() scan of the sink.
     Returns True when a rewrite happened."""
-    _recover_swap(sink_path)  # heal a pre-snapshot-era crashed swap
     total = sink_row_count(sink_path)
     if total < RETENTION_SLACK * max_rows:
         return False
@@ -498,15 +512,11 @@ def compact_rollup(
     composite view never counts it beside the fold that already
     absorbed it) and append-while-compacting safety (the fold reads an
     explicit committed-dir list resolved once; a batch landing after
-    that stays above the marker and remains visible). The previous
-    whole-root swap had neither — a replay after compaction doubled
-    that batch's (day, key) totals forever, and a concurrent append
-    between read and swap was rmtree'd with the old root. At 100 TB
+    that stays above the marker and remains visible). At 100 TB
     this runs per closed day-partition, like compact_sink. A pass with
     nothing new to fold is a no-op (no version burned per idle
     maintenance cycle)."""
-    _recover_swap(rollup_path)  # heal a pre-snapshot-era crashed swap
-    _snap, v, _folded, newer = _view_parts(rollup_path)
+    _snap, v, _folded, newer = view_parts(rollup_path)
     if v is not None and not newer:
         return
     _publish_rewrite(

@@ -33,7 +33,7 @@ the data sink (append_batch layout): idempotent under foreachBatch
 replay because a retried batch overwrites its own dir, and the
 collision read EXCLUDES the current batch id, so a replay never
 collides with its own first attempt. The store COMPACTS through the
-same SnapshotTable fold the data sink uses (compact_bucket_store /
+same SnapshotTable fold the data sink uses (compact_store /
 compact_every), so its file count is bounded by the compaction cadence
 instead of growing one directory per trigger forever. At 100 TB the
 store is
@@ -69,11 +69,10 @@ from etl_wikipedia_updates_spark.stages import (
     quality_keep,
 )
 from etl_wikipedia_updates_spark.streaming.ingest import (
-    _committed_batch_dirs,
-    _publish_rewrite,
-    _view_parts,
     append_batch,
-    sink_snapshot,
+    compact_store,
+    read_view,
+    view_parts,
 )
 from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
 
@@ -98,93 +97,6 @@ def vector_store_path(sink_path: str) -> str:
     return os.path.join(sink_path, VECTORS_DIRNAME)
 
 
-def _store_view(
-    spark: SparkSession,
-    store_path: str,
-    below: int,
-    schema: str = _STORE_SCHEMA,
-) -> DataFrame | None:
-    """Committed store rows from batches with id < ``below``: the
-    compacted snapshot version (if any) plus unfolded committed batch
-    dirs. None when nothing qualifying is committed yet (first batch,
-    or an empty store). The ``below`` exclusion is the replay guard —
-    a batch retried under its own id must not collide with its first
-    attempt's rows, folded or not."""
-    snap, v, folded, newer = _view_parts(store_path)
-    dirs = [p for b, p in newer if b < below]
-    if v is None:
-        if not dirs:
-            return None
-        return spark.read.schema(schema).parquet(*dirs)
-    if folded >= below:
-        # Only possible through an external compaction run with an
-        # explicit too-high ``below`` while the stream was in flight;
-        # reading on would let a replayed batch collide with itself
-        # and silently drop every row.
-        raise RuntimeError(
-            f"store {store_path} folded through {folded} but "
-            f"batch {below} may replay; compact only below the "
-            "in-flight batch id"
-        )
-    base = snap.read(spark, v)
-    if dirs:
-        base = base.unionByName(spark.read.schema(base.schema).parquet(*dirs))
-    return base
-
-
-def compact_store(
-    spark: SparkSession,
-    store_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold one accumulating per-batch store (bucket or shingle) into a
-    snapshot version — the same SnapshotTable fold the data sink uses
-    (``_publish_rewrite``), so the store's file count stops growing
-    with batch count. Without this a store gains one directory per
-    trigger forever and the per-batch collision join pays an
-    ever-growing file-listing + footer cost.
-
-    ``below`` (exclusive) bounds which batch ids are folded. The
-    default folds everything EXCEPT the newest committed batch — a
-    one-batch grace horizon, because with at-least-once foreachBatch
-    the newest appended batch may be replayed if the checkpoint commit
-    did not land, and a replayed batch must never find its own rows
-    already folded (``_store_view`` raises on that invariant). The
-    in-handler call sites pass ``below=batch_id`` for the same reason.
-
-    Returns {"version": N, "folded_dirs": n} or None when there was
-    nothing new to fold (no pointless full-store rewrite)."""
-    _snap, _v, _folded, newer = _view_parts(store_path)
-    if below is None:
-        # newest UNFOLDED committed id; when everything committed is
-        # already folded the max is over an empty set and foldable
-        # below comes out empty either way
-        below = max((b for b, _ in newer), default=-1)
-    foldable = [b for b, _ in newer if b < below]
-    if not foldable:
-        return None
-    version = _publish_rewrite(
-        spark,
-        store_path,
-        lambda view: view.coalesce(target_files),
-        below=below,
-    )
-    return {"version": version, "folded_dirs": len(foldable)}
-
-
-def compact_bucket_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the LSH bucket store (see ``compact_store``)."""
-    return compact_store(
-        spark, bucket_store_path(sink_path), target_files, below
-    )
-
-
 def _require_payload_coverage(
     sink_path: str, payload_dirname: str, below: int, mode: str
 ) -> None:
@@ -207,9 +119,9 @@ def _require_payload_coverage(
     in-lockstep store compactions leaves the payload watermark
     behind but ALL its ids still on disk unfolded, which is healthy
     and must not raise."""
-    _bs, _bv, bfolded, bnewer = _view_parts(bucket_store_path(sink_path))
+    _bs, _bv, bfolded, bnewer = view_parts(bucket_store_path(sink_path))
     payload_path = os.path.join(sink_path, payload_dirname)
-    _ps, _pv, pfolded, pnewer = _view_parts(payload_path)
+    _ps, _pv, pfolded, pnewer = view_parts(payload_path)
     have = {b for b, _ in pnewer}
     missing = [
         b
@@ -443,7 +355,9 @@ def dedup_append(
     mixing: a mix-dropped doc must still shadow its later near-dups,
     or a duplicate of it would sneak into the sink."""
     spark = docs.sparkSession
-    store = _store_view(spark, bucket_store_path(sink_path), batch_id)
+    store, _ = read_view(
+        spark, bucket_store_path(sink_path), batch_id, schema=_STORE_SCHEMA
+    )
     drops = batch_neardup_drops(band, store)
     if vetoed is not None:
         drops = drops.unionByName(vetoed.select("doc_id"))
@@ -459,7 +373,7 @@ def dedup_append(
         batch_id,
     )
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        compact_bucket_store(spark, sink_path, below=batch_id)
+        compact_store(spark, bucket_store_path(sink_path), below=batch_id)
 
 
 def dedup_ingest_batch(
@@ -613,7 +527,7 @@ def seed_span_store_from(
     lands even though that corpus was ingested in another lifetime.
 
     The seed publishes as the bucket store's initial snapshot version
-    with folded_through=-1: the committed view (``_store_view``) is
+    with folded_through=-1: the committed view (``read_view``) is
     'snapshot + batch dirs above the fold marker', so every future
     batch sees the seed without any special-casing, compaction folds
     on top of it, and replay semantics are untouched. Store hashes
@@ -636,9 +550,8 @@ def seed_span_store_from(
         )
     _require_span_params(src_meta, f"{span_store_root} v{v}")
     store_path = bucket_store_path(sink_path)
-    snap = sink_snapshot(store_path)
-    prior_v = snap.current_version()
-    if prior_v is not None or _committed_batch_dirs_any(store_path):
+    snap, prior_v, _folded, unfolded = view_parts(store_path)
+    if prior_v is not None or unfolded:
         # Crash-recovery path (r17 advice): a crash between the seed
         # publish and the sidecar write leaves a seeded store with no
         # marker, after which the CLI resume check misses and this
@@ -646,7 +559,7 @@ def seed_span_store_from(
         # snapshot from THIS store (no ingest batches yet — so
         # compaction can't have erased the seeded_from meta), rewrite
         # the missing marker and return idempotently.
-        if prior_v is not None and not _committed_batch_dirs_any(store_path):
+        if prior_v is not None and not unfolded:
             prior_meta = snap.meta_for(prior_v)
             if (
                 prior_meta.get("folded_through") == -1
@@ -666,7 +579,7 @@ def seed_span_store_from(
                 == os.path.normpath(os.path.abspath(span_store_root))
             ):
                 _write_seed_marker(sink_path, prior_meta["seed_root"], v)
-                return snap.read(spark, prior_v).count()
+                return int(prior_meta["n_rows"])
         raise RuntimeError(
             f"span store at {store_path} already has state — seeding "
             "must happen before the first ingest batch. To recover: "
@@ -703,9 +616,9 @@ def seed_span_store_from(
     # Paths are normalized so resume matching survives trailing-slash /
     # relative-vs-absolute differences.
     _write_seed_marker(sink_path, seed_root, v)
-    # count the MATERIALIZED snapshot, not the source plan again — the
-    # publish already paid the store scan (r17 review)
-    return snap.read(spark, sv).count()
+    # the published version's row count, not the source plan again —
+    # the publish already paid the store scan (r17 review)
+    return int(snap.meta_for(sv)["n_rows"])
 
 
 def _write_seed_marker(sink_path: str, seed_root: str, version: int) -> None:
@@ -730,10 +643,6 @@ def seeded_from(sink_path: str) -> dict | None:
         return None
     with open(p) as f:
         return json.load(f)
-
-
-def _committed_batch_dirs_any(store_path: str) -> bool:
-    return bool(_committed_batch_dirs(store_path))
 
 
 # --- verified (precision-mode) ingest dedup -----------------------------------
@@ -838,7 +747,9 @@ def _verified_append(
     replayed batch never verifies against its own first attempt."""
     spark = batch.sparkSession
     payload_path = os.path.join(sink_path, spec.dirname)
-    store_band = _store_view(spark, bucket_store_path(sink_path), batch_id)
+    store_band, _ = read_view(
+        spark, bucket_store_path(sink_path), batch_id, schema=_STORE_SCHEMA
+    )
     pairs = _candidate_pairs(band, store_band)
     lookup = payload
     if store_band is not None:
@@ -846,7 +757,7 @@ def _verified_append(
         # previously fed by a non-verified mode) must fail loudly,
         # not silently pass near-dups of unverifiable docs
         _require_payload_coverage(sink_path, spec.dirname, batch_id, spec.mode)
-        store_payload = _store_view(
+        store_payload, _ = read_view(
             spark, payload_path, batch_id, schema=spec.schema
         )
         if store_payload is not None:
@@ -863,7 +774,7 @@ def _verified_append(
     )
     append_batch(payload, payload_path, batch_id)
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        compact_bucket_store(spark, sink_path, below=batch_id)
+        compact_store(spark, bucket_store_path(sink_path), below=batch_id)
         compact_store(spark, payload_path, below=batch_id)
 
 

@@ -1,14 +1,12 @@
 """Snapshot-isolated table publish on a plain filesystem.
 
-Every rewriting publish — sink retention and compaction in
-``ingest.py``, store compaction in ``neardup.py``, releases, shards
-and packs — goes through this module. A rename-swap publish of a
-rewritten dataset leaves one hole: between its two renames the live
-path does not exist, and a reader that lists exactly then sees
-path-not-found. Table formats (Delta/Iceberg) close that hole with a
-manifest pointer; this module is the minimal filesystem version of the
-same idea — what the SCALE.md "declared 100 TB path" prose promises,
-as working code:
+Every rewriting publish — sink, rollup and store folds in
+``ingest.py``, releases, shards and packs — goes through this module.
+A reader must never find a rewritten table missing, partial or
+doubled. Table formats (Delta/Iceberg) guarantee that with a manifest
+pointer; this module is the minimal filesystem version of the same
+idea — what the SCALE.md "declared 100 TB path" prose promises, as
+working code:
 
 - Every publish writes a COMPLETE dataset into a fresh immutable
   version directory ``v{N}/`` (never mutated after creation).

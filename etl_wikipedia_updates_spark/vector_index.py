@@ -247,16 +247,7 @@ def append_to_ivf_index(
         # vector encodes exactly as a from-scratch encode would
         assigned = _pq_encode(assigned, meta["pq_books"])
     existing = table.read(spark, base)
-    if "n_rows" in meta:
-        base_rows = int(meta["n_rows"])
-    else:
-        # Footer-count fallback (a base version published before n_rows
-        # metadata existed), resolved BEFORE publish+vacuum so the base
-        # dir is still guaranteed on disk. Guarded by the key check: as
-        # a .get() default it would run eagerly on EVERY append — a
-        # full os.walk + per-file footer read of the whole base version,
-        # discarded, since publish always records n_rows.
-        base_rows = int(dir_row_count(table.version_path(base)))
+    base_rows = int(meta["n_rows"])
     merged = existing.unionByName(assigned)
     new_version = table.publish(
         merged,

@@ -364,52 +364,31 @@ def test_session_window_equals_batch(spark, events, tmp_path):
     assert got == expected
 
 
-def test_partitioned_swap_state_is_hidden_and_recoverable(
+def test_hidden_swap_siblings_are_invisible_to_readers(
     spark, events, tmp_path
 ):
-    """The in-flight rewrite state lives in `._`-prefixed siblings that
-    Spark's file listing skips, and a swap interrupted between its two
-    renames is healed by the next retention run."""
+    """`._`-prefixed siblings of a batch dir (the names the retired
+    rename-swap publish used for its in-flight state) are skipped by
+    Spark's file listing, so leftovers never reach a reader."""
     import os
     import shutil
 
-    from etl_wikipedia_updates_spark.streaming.ingest import (
-        _hidden_sibling,
-        append_batch,
-        apply_retention,
-    )
+    from etl_wikipedia_updates_spark.streaming.ingest import append_batch
 
     sink = str(tmp_path / "sink")
     append_batch(events, sink, 0)
     total = read_sink(spark, sink).count()
-    batch = os.path.join(sink, "batch_0000000000")
 
-    # Hidden siblings are invisible to readers: plant a full copy of the
-    # batch dir under both in-flight names; the row count must not
-    # change, for the sink view and for a raw recursive listing alike.
-    shutil.copytree(batch, _hidden_sibling(batch, "trim"))
-    shutil.copytree(batch, _hidden_sibling(batch, "old"))
+    # Plant a full copy of the batch dir under both in-flight names;
+    # the row count must not change, for the sink view and for a raw
+    # recursive listing alike.
+    for name in ("._trim_batch_0000000000", "._old_batch_0000000000"):
+        shutil.copytree(
+            os.path.join(sink, "batch_0000000000"), os.path.join(sink, name)
+        )
     assert read_sink(spark, sink).count() == total
     raw = spark.read.option("recursiveFileLookup", "true").parquet(sink)
     assert raw.count() == total
-    shutil.rmtree(_hidden_sibling(batch, "trim"))
-    shutil.rmtree(_hidden_sibling(batch, "old"))
-
-    # Crash between the two renames: live sink missing, data stranded
-    # at the hidden old name. The next retention run restores it before
-    # checking the cap, so nothing is lost.
-    os.rename(sink, _hidden_sibling(sink, "old"))
-    assert not apply_retention(spark, sink, total, "ts")
-    assert os.path.isdir(sink)
-    assert not os.path.exists(_hidden_sibling(sink, "old"))
-    assert read_sink(spark, sink).count() == total
-
-    # Crash after both renames but before the cleanup: a stale old dir
-    # beside the live sink is deleted, the live sink is untouched.
-    shutil.copytree(sink, _hidden_sibling(sink, "old"))
-    assert not apply_retention(spark, sink, total, "ts")
-    assert not os.path.exists(_hidden_sibling(sink, "old"))
-    assert read_sink(spark, sink).count() == total
 
 
 def test_s5_checkpoint_resume(spark, events, replay_dir, tmp_path):
@@ -670,13 +649,13 @@ def test_neardup_bucket_store_compaction(spark, tmp_path):
     growing one dir per batch."""
     from etl_wikipedia_updates_spark.streaming.ingest import (
         _batch_dirs,
+        compact_store,
+        read_view,
         sink_snapshot,
     )
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        _store_view,
         batch_neardup_keep,
         bucket_store_path,
-        compact_bucket_store,
         dedup_ingest_batch,
         doc_band_rows,
     )
@@ -697,12 +676,12 @@ def test_neardup_bucket_store_compaction(spark, tmp_path):
 
     # Maintenance-form compaction: default folds everything below the
     # newest committed batch (one-batch replay grace horizon).
-    out = compact_bucket_store(spark, sink)
+    out = compact_store(spark, store)
     assert out == {"version": 1, "folded_dirs": 3}
     snap = sink_snapshot(store)
     assert int(snap.meta_for(1)["folded_through"]) == 2
     # Nothing new to fold -> no pointless full-store rewrite.
-    assert compact_bucket_store(spark, sink) is None
+    assert compact_store(spark, store) is None
 
     # A replay of the newest batch after the fold must not self-collide
     # (its own buckets stayed unfolded) nor duplicate output.
@@ -721,8 +700,15 @@ def test_neardup_bucket_store_compaction(spark, tmp_path):
     assert live == [3, 4, 5]  # bounded: 3 live dirs after 6 batches
 
     # The composite store view neither lost nor doubled a bucket row.
-    total_rows = _store_view(spark, store, 10**9).count()
+    total_rows = read_view(spark, store, below=10**9)[0].count()
     assert total_rows == doc_band_rows(docs).count()
+
+    # A fold through the newest batch (an external run with a too-high
+    # below) leaves no view a replay of that batch may read: the dedup
+    # body refuses instead of colliding the batch with itself.
+    assert compact_store(spark, store, below=6) is not None
+    with pytest.raises(RuntimeError, match="folded through"):
+        dedup_ingest_batch(part(5), sink, 5)
 
 
 def _checksum_docs(df):
@@ -777,6 +763,7 @@ def test_sink_invisible_before_first_commit(spark, tmp_path):
     from etl_wikipedia_updates_spark.streaming.ingest import (
         append_batch,
         compact_sink,
+        sink_row_count,
     )
 
     events = load_table(spark, "/root/testdata/sf0.001", "events").limit(10)
@@ -787,6 +774,8 @@ def test_sink_invisible_before_first_commit(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         read_sink(spark, sink).count()
+    with pytest.raises(FileNotFoundError):
+        sink_row_count(sink)
     with pytest.raises(FileNotFoundError):
         compact_sink(spark, sink, target_files=1)
 
@@ -1064,16 +1053,23 @@ def test_shingle_store_sketch_bounded(spark, tmp_path):
     assert mx == SHINGLE_SKETCH_K
 
 
-def test_compact_sink_noop_when_nothing_to_fold(spark, events, tmp_path):
+def test_compact_sink_noop_when_nothing_to_fold(
+    spark, events, tmp_path, monkeypatch
+):
     """An idle maintenance pass — no unfolded committed batch dirs and
     the current version already at/under target_files — must be a
-    no-op (no full-table rewrite, no version burned), and a new
-    committed append re-arms the fold."""
+    no-op (no full-table rewrite, no version burned, no walk of the
+    version's parquet footers), and a new committed append re-arms
+    the fold."""
+    from etl_wikipedia_updates_spark.streaming import ingest
     from etl_wikipedia_updates_spark.streaming.ingest import (
         append_batch,
         compact_sink,
         sink_snapshot,
     )
+
+    def no_footer_walk(root):
+        raise AssertionError(f"idle pass walked the footers of {root}")
 
     sink = str(tmp_path / "sink")
     append_batch(events.limit(50), sink, 0)
@@ -1081,7 +1077,9 @@ def test_compact_sink_noop_when_nothing_to_fold(spark, events, tmp_path):
     snap = sink_snapshot(sink)
     v1 = snap.current_version()
 
-    s2 = compact_sink(spark, sink, target_files=2)  # idle pass
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "dir_row_count", no_footer_walk)
+        s2 = compact_sink(spark, sink, target_files=2)  # idle pass
     assert snap.current_version() == v1  # no version burned
     assert s2["files_after"] == s2["files_before"]
     assert s2["rows"] == s1["rows"] == 50
@@ -1101,8 +1099,9 @@ def test_verified_guard_tolerates_lagging_payload_compaction(
     store's while every payload id is still on disk unfolded — that
     is healthy coverage and the next verified batch must proceed, not
     raise."""
+    from etl_wikipedia_updates_spark.streaming.ingest import compact_store
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        compact_bucket_store,
+        bucket_store_path,
         verified_ingest_batch,
     )
 
@@ -1114,7 +1113,7 @@ def test_verified_guard_tolerates_lagging_payload_compaction(
     verified_ingest_batch(b1, sink, 1)
     # simulate the crash window: bucket store folds, shingle store
     # never gets its turn
-    assert compact_bucket_store(spark, sink, below=2) is not None
+    assert compact_store(spark, bucket_store_path(sink), below=2) is not None
     # next batch verifies fine against the mixed folded/unfolded state
     b2 = docs.limit(10).withColumn("doc_id", F.col("doc_id") + 100000)
     verified_ingest_batch(b2, sink, 2)  # exact dups of batch-0 docs
@@ -1980,11 +1979,13 @@ def test_seeded_span_ingest_resumes_cleanly(spark, tmp_path):
     import os
 
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        compact_bucket_store,
         doc_span_rows,
         seeded_from,
     )
-    from etl_wikipedia_updates_spark.streaming.ingest import append_batch
+    from etl_wikipedia_updates_spark.streaming.ingest import (
+        append_batch,
+        compact_store,
+    )
 
     prior = spark.createDataFrame(
         [(0, "en", "wiki", " ".join(f"w{i}" for i in range(20)))],
@@ -2012,7 +2013,7 @@ def test_seeded_span_ingest_resumes_cleanly(spark, tmp_path):
     )
     append_batch(doc_span_rows(batch), bucket_store_path(sink), 0)
     append_batch(doc_span_rows(batch), bucket_store_path(sink), 1)
-    assert compact_bucket_store(spark, sink, below=1) is not None
+    assert compact_store(spark, bucket_store_path(sink), below=1) is not None
     snap2 = sink_snapshot(bucket_store_path(sink))
     assert "seeded_from" not in snap2.meta_for(snap2.current_version())
     assert seeded_from(sink) == marker  # sidecar unaffected
