@@ -4,13 +4,18 @@ Determinism knobs come first (they gate duckdb-oracle hash matching):
 UTC session timezone, ANSI off (we want permissive casts like the
 reference's lenient ingest), Arrow on for the Pandas-UDF surface.
 
-Performance knobs are sized for the local[32] test harness but chosen so
-the same code scales: AQE handles runtime re-planning (partition
-coalescing, skew joins) on a real cluster exactly as it does locally;
-``spark.sql.shuffle.partitions`` is only the *initial* shuffle
-parallelism — with AQE coalescing enabled the effective partition count
-adapts to data volume, so a 1000-executor deployment overrides one conf
-value rather than any code.
+Performance knobs are sized for the host (``local[N]``, N the CPUs this
+process may run on) but chosen so the same code scales: AQE handles
+runtime re-planning (partition coalescing, skew joins) on a real
+cluster exactly as it does locally; ``spark.sql.shuffle.partitions`` is
+only the *initial* shuffle parallelism — with AQE coalescing enabled
+the effective partition count adapts to data volume, so a 1000-executor
+deployment overrides one conf value rather than any code.
+
+A start that launches the driver JVM maps a class-data archive of
+Spark's classes, or records one on the first start for this JDK and
+Spark install (``jvm_archive``): the cold JVM is most of a start's
+time, and a restarted ingest pays it before its first event lands.
 """
 
 from __future__ import annotations
@@ -18,7 +23,12 @@ from __future__ import annotations
 import os
 import warnings
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from etl_wikipedia_updates_spark import jvm_archive
+
 
 def driver_memory(phys_bytes: int | None) -> str:
     """Default driver heap: half of the host's ``phys_bytes`` (None:
@@ -37,22 +47,32 @@ def _phys_bytes() -> int | None:
 
 
 def _int_env(name: str, default: int) -> int:
-    """Integer env knob with a loud, named failure mode: a malformed
-    value warns (naming the variable and the bad value) and falls back
-    to ``default`` rather than killing session construction with an
-    opaque int() traceback."""
+    """Positive integer env knob with a loud, named failure mode: a
+    malformed or below-1 value warns (naming the variable and the bad
+    value) and falls back to ``default`` rather than killing session
+    construction with an opaque int() traceback."""
     raw = os.environ.get(name)
     if raw is None:
         return default
     try:
-        return int(raw)
+        value = int(raw)
     except ValueError:
+        value = 0
+    if value < 1:
         warnings.warn(
-            f"{name}={raw!r} is not an integer; falling back to "
+            f"{name}={raw!r} is not a positive integer; falling back to "
             f"{default}",
             stacklevel=3,
         )
         return default
+    return value
+
+
+def local_cpus() -> int:
+    """Task slots for ``local[N]``: ``SPARK_GRAFT_CPUS`` when set, else
+    the CPUs this process may run on (its affinity mask, so a container
+    limited to a cpuset counts its share, not the machine's)."""
+    return _int_env("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -64,8 +84,10 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     Parameters are overridable for tests/bench; defaults fit local[N].
+    A ``spark.driver.defaultJavaOptions`` in ``extra_conf`` is kept, with
+    the class-data archive's options after it.
     """
-    cpus = _int_env("SPARK_GRAFT_CPUS", 32)
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -112,6 +134,13 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        spark = jvm_archive.launch(
+            builder,
+            (extra_conf or {}).get(jvm_archive.JAVA_OPTIONS, ""),
+            jvm_archive.plan(_find_spark_home(), os.environ),
+        )
+    else:  # the driver JVM is running already
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,3 +1,5 @@
+import os
+
 from etl_wikipedia_updates_spark.tables import TABLE_NAMES, register_views
 
 EXPECTED_MIN_ROWS = {
@@ -94,6 +96,27 @@ def test_int_env_knobs_fail_soft(monkeypatch):
     assert _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32) == 48
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     assert _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32) == 32
+
+
+def test_local_cpus_default_follows_the_host(monkeypatch):
+    """local[N] defaults to the CPUs this process may run on;
+    SPARK_GRAFT_CPUS overrides it, and a value below 1 warns and falls
+    back like a malformed one."""
+    import warnings
+
+    from etl_wikipedia_updates_spark.session import local_cpus
+
+    host = len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == host
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
+    for bad in ("0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            assert local_cpus() == host
+        assert any(f"SPARK_GRAFT_CPUS={bad!r}" in str(x.message) for x in w)
 
 
 def test_driver_memory_default_follows_the_host():
