@@ -14,8 +14,9 @@ pipeline, graceful shutdown).
     python -m etl_wikipedia_updates_spark index build|append|query|stats
         --root DIR [--vectors PARQUET]  # persistent IVF index lifecycle
                                   # (stats: per-cell balance readout)
-    python -m etl_wikipedia_updates_spark pack --out DIR [--verify]
-                                  # materialize / verify the packed
+    python -m etl_wikipedia_updates_spark release|shard|pack --out DIR
+        [--verify]                # publish / verify a corpus release,
+                                  # its fixed shards or its packed
                                   # fixed-SEQ_LEN training stream
     python -m etl_wikipedia_updates_spark sse --url URL --sink DIR
         [--max-batches N]         # live SSE ingest (R1-R3, R15)
@@ -69,196 +70,65 @@ def cmd_sql(args) -> int:
     return 0
 
 
-def cmd_release(args) -> int:
+def cmd_publish(args) -> int:
+    """The one path of the publish jobs (release, shard, pack): with
+    --verify, print the job's verify_* verdict and exit 0 or 1 on it;
+    else publish through its write_* and print what that returns. Each
+    write-side option maps to the write_* keyword its value feeds (the
+    parser stores it under that name); only the options given are
+    passed, so an absent one keeps the write_*'s default, and
+    --from-release is resolved here into the docs frame."""
     import json
 
-    from etl_wikipedia_updates_spark.release import (
-        verify_release,
-        write_release,
-    )
+    from etl_wikipedia_updates_spark import release as R
 
-    spark = _spark()
-    if args.verify:
-        out = verify_release(spark, args.out)
-        print(json.dumps(out))
-        return 0 if out["ok"] else 1
-    out = write_release(
-        spark,
-        args.sf_dir,
-        args.out,
-        keep_last=args.keep_last,
-        remove_spans=args.remove_spans,
-        mix_alpha=0.5 if args.temperature_mix else None,
-        redact_pii=args.redact_pii,
-        quality_classifier=args.quality_classifier,
-        decontam_spans=args.decontam_spans,
-    )
-    print(json.dumps(out))
-    return 0
-
-
-def cmd_pack(args) -> int:
-    """Materialize the packed training stream (packed_sequences) as
-    parquet partitioned by source, or --verify a written directory
-    against the seq_pack audit recomputed from the corpus: per source,
-    the written sequence count, token total, and exact-SEQ_LEN body
-    lengths must match the audit card — the verify-after-write pattern
-    write_sharded/write_release use.
-
-    --shard (r17) routes the stream through the manifest-verified
-    snapshot layout instead: write_packed publishes one file per
-    (source, seq_id div seqs-per-file) shard with the per-shard
-    manifest in the version metadata; --shard --verify recomputes the
-    manifest from the produced files (verify_packed)."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from etl_wikipedia_updates_spark.plans.northstar import seq_pack
-    from etl_wikipedia_updates_spark.stages import SEQ_LEN, packed_sequences
-    from etl_wikipedia_updates_spark.tables import load_table, spread
-
-    if args.seqs_per_file is not None and not args.shard:
-        # a layout dial must apply or fail loudly, never no-op
-        print(
-            "--seqs-per-file shapes the sharded layout: it requires "
-            "--shard",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "from_release", None) and not args.shard:
-        print(
-            "--from-release packs a published release through the "
-            "sharded layout: it requires --shard",
-            file=sys.stderr,
-        )
-        return 2
-    if args.verify and (
-        getattr(args, "from_release", None) or args.seqs_per_file is not None
-    ):
-        # verify reads the written snapshot's own metadata; write-side
-        # flags would be silently ignored (apply-or-fail-loudly)
-        print(
-            "--verify recomputes from the written snapshot; "
-            "--from-release/--seqs-per-file are write-side flags",
-            file=sys.stderr,
-        )
-        return 2
-    spark = _spark()
-    if args.shard:
-        from etl_wikipedia_updates_spark.release import (
-            release_docs,
-            verify_packed,
-            write_packed,
-        )
-
-        if args.verify:
-            out = verify_packed(spark, args.out)
-            print(json.dumps(out))
-            return 0 if out["ok"] else 1
-        docs = None
-        source_desc = None
-        if args.from_release:
-            try:
-                docs, v = release_docs(spark, args.from_release)
-            except (FileNotFoundError, ValueError) as e:
-                print(str(e), file=sys.stderr)
-                return 2
-            source_desc = f"release {args.from_release} v{v}"
-        out = write_packed(
-            spark,
-            args.sf_dir,
-            args.out,
-            seqs_per_file=args.seqs_per_file,
-            docs=docs,
-            source_desc=source_desc,
-        )
-        print(json.dumps(out))
-        return 0
-    audit = {
-        r["source"]: r for r in seq_pack(spark, args.sf_dir).collect()
+    verify, write, flags = {
+        "release": (R.verify_release, R.write_release, {
+            "--keep-last": "keep_last",
+            "--remove-spans": "remove_spans",
+            "--temperature-mix": "mix_alpha",
+            "--redact-pii": "redact_pii",
+            "--quality-classifier": "quality_classifier",
+            "--decontam-spans": "decontam_spans",
+        }),
+        "shard": (R.verify_sharded, R.write_sharded, {
+            "--keep-last": "keep_last",
+            "--n-shards": "n_shards",
+            "--from-release": "from_release",
+        }),
+        "pack": (R.verify_packed, R.write_packed, {
+            "--seqs-per-file": "seqs_per_file",
+            "--from-release": "from_release",
+        }),
+    }[args.cmd]
+    kw = {
+        name: value for name in flags.values()
+        if (value := getattr(args, name)) is not None and value is not False
     }
-    if args.verify:
-        got = {
-            r["source"]: r
-            for r in spark.read.parquet(args.out)
-            .groupBy("source")
-            .agg(
-                F.count("*").alias("n_seqs"),
-                F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-                F.sum(
-                    F.when(F.col("n_tokens") != SEQ_LEN, 1).otherwise(0)
-                ).alias("short_seqs"),
-            )
-            .collect()
-        }
-        mismatches = []
-        for src, a in audit.items():
-            g = got.get(src)
-            if (
-                g is None
-                or g["n_seqs"] != a["n_seqs"]
-                or g["total_tokens"] != a["total_tokens"]
-                or g["short_seqs"] > 1  # only the final partial sequence
-            ):
-                mismatches.append(src)
-        out = {
-            "ok": not mismatches and set(got) == set(audit),
-            "sources": len(audit),
-            "mismatches": sorted(mismatches),
-        }
-        print(json.dumps(out))
-        return 0 if out["ok"] else 1
-    docs = spread(load_table(spark, args.sf_dir, "documents"))
-    packed = packed_sequences(docs)
-    packed.write.mode("overwrite").partitionBy("source").parquet(args.out)
-    print(
-        json.dumps(
-            {
-                "out": args.out,
-                "seq_len": SEQ_LEN,
-                "sources": {
-                    s: {
-                        "n_seqs": int(a["n_seqs"]),
-                        "total_tokens": int(a["total_tokens"]),
-                    }
-                    for s, a in audit.items()
-                },
-            }
+    if args.verify and kw:
+        # verify reads the published version's own metadata; a
+        # write-side flag would be silently ignored (apply or fail loudly)
+        given = ", ".join(o for o, name in flags.items() if name in kw)
+        print(
+            "--verify recomputes from the published version and takes "
+            f"no write-side flag (got {given})",
+            file=sys.stderr,
         )
-    )
-    return 0
-
-
-def cmd_shard(args) -> int:
-    import json
-
-    from etl_wikipedia_updates_spark.release import (
-        verify_sharded,
-        write_sharded,
-    )
-
+        return 2
     spark = _spark()
     if args.verify:
-        out = verify_sharded(spark, args.out)
+        out = verify(spark, args.out)
         print(json.dumps(out))
         return 0 if out["ok"] else 1
-    docs = None
-    source_desc = None
-    if args.from_release:
-        from etl_wikipedia_updates_spark.release import release_docs
-
+    rel = kw.pop("from_release", None)
+    if rel:
         try:
-            docs, v = release_docs(spark, args.from_release)
+            kw["docs"], v = R.release_docs(spark, rel)
         except (FileNotFoundError, ValueError) as e:
             print(str(e), file=sys.stderr)
             return 2
-        source_desc = f"release {args.from_release} v{v}"
-    out = write_sharded(
-        spark, args.sf_dir, args.out, keep_last=args.keep_last, docs=docs,
-        n_shards=args.n_shards, source_desc=source_desc,
-    )
-    print(json.dumps(out))
+        kw["source_desc"] = f"release {rel} v{v}"
+    print(json.dumps(write(spark, args.sf_dir, args.out, **kw)))
     return 0
 
 
@@ -409,6 +279,18 @@ def cmd_index(args) -> int:
     return 0
 
 
+def _drained(q, timeout: int) -> bool:
+    """Wait for a replay query to finish. One that outlives ``timeout``
+    seconds is stopped and reported as TIMEOUT, so the caller never
+    reads the sink of a still-running stream and exits 0 over a
+    partial sink."""
+    if q.awaitTermination(timeout):
+        return True
+    q.stop()
+    print(f"TIMEOUT after {timeout}s; sink is partial", file=sys.stderr)
+    return False
+
+
 def cmd_dedup_ingest(args) -> int:
     from pyspark.sql import functions as F
 
@@ -529,14 +411,13 @@ def cmd_dedup_ingest(args) -> int:
         args.mode,
         stream,
         args.sink,
-        args.checkpoint or args.sink + "_ckpt",
+        # beside the sink, never inside it (a trailing slash would
+        # put it under the sink, where the sink's byte walk counts it)
+        args.checkpoint or args.sink.rstrip("/") + "_ckpt",
         bench_docs=bench,
         **opts,
     )
-    finished = q.awaitTermination(args.timeout)
-    if not finished:
-        q.stop()
-        print(f"TIMEOUT after {args.timeout}s; sink is partial", file=sys.stderr)
+    if not _drained(q, args.timeout):
         return 1
     print(f"rows kept: {read_sink(spark, args.sink).count()}")
     return 0
@@ -605,14 +486,7 @@ def cmd_ingest(args) -> int:
         max_rows=args.max_rows,
         ts_col="ts",
     )
-    finished = q.awaitTermination(args.timeout)
-    if not finished:
-        # Same contract as cmd_dedup_ingest: a replay that outlives
-        # --timeout must stop the query and report the truncation —
-        # otherwise sink_metrics races the still-running stream and the
-        # command exits 0 over a partial sink.
-        q.stop()
-        print(f"TIMEOUT after {args.timeout}s; sink is partial", file=sys.stderr)
+    if not _drained(q, args.timeout):
         return 1
     print(sink_metrics(spark, args.sink, "ts"))
     return 0
@@ -725,14 +599,17 @@ def build_parser() -> argparse.ArgumentParser:
     )
     rel.add_argument("--out", required=True, help="SnapshotTable root dir")
     rel.add_argument("--sf-dir", default=sf_default)
-    rel.add_argument("--keep-last", type=int, default=2)
+    rel.add_argument(
+        "--keep-last", type=int, help="versions kept on disk (default 2)"
+    )
     rel.add_argument(
         "--remove-spans", action="store_true",
         help="add the span-excision stage: cross-doc duplicated spans "
         "are cut from every released doc but the canonical owner",
     )
     rel.add_argument(
-        "--temperature-mix", action="store_true",
+        "--temperature-mix", dest="mix_alpha", action="store_const",
+        const=0.5,
         help="mix with the temperature law (alpha=0.5: small sources "
         "upweighted, rate = sqrt(min_chars/chars)) instead of "
         "equalizing every source to the smallest character budget",
@@ -778,7 +655,9 @@ def build_parser() -> argparse.ArgumentParser:
     )
     shd.add_argument("--out", required=True, help="SnapshotTable root dir")
     shd.add_argument("--sf-dir", default=sf_default)
-    shd.add_argument("--keep-last", type=int, default=2)
+    shd.add_argument(
+        "--keep-last", type=int, help="versions kept on disk (default 2)"
+    )
     shd.add_argument(
         "--from-release", metavar="RELEASE_ROOT",
         help="shard the current version of a published release "
@@ -801,39 +680,31 @@ def build_parser() -> argparse.ArgumentParser:
 
     pk = sub.add_parser(
         "pack",
-        help="materialize the packed training stream (fixed-SEQ_LEN "
-        "sequences, parquet partitioned by source) or verify a "
-        "written directory against the seq_pack audit",
+        help="publish the packed training stream (fixed-SEQ_LEN "
+        "sequences, one file per (source, seq_id div seqs-per-file) "
+        "shard, manifest in version metadata) or verify a published "
+        "version against its manifest",
     )
-    pk.add_argument("--out", required=True, help="output parquet dir")
+    pk.add_argument("--out", required=True, help="SnapshotTable root dir")
     pk.add_argument("--sf-dir", default=sf_default)
     pk.add_argument(
         "--verify",
         action="store_true",
-        help="recompute per-source sequence counts / token totals from "
-        "the written files and compare to the audit (exit 1 on "
-        "mismatch) instead of writing",
+        help="recompute the per-shard manifest from the produced files "
+        "and compare to the published manifest (exit 1 on mismatch) "
+        "instead of writing",
     )
     pk.add_argument(
-        "--shard",
-        action="store_true",
-        help="publish through the manifest-verified snapshot layout "
-        "(one file per (source, seq_id div seqs-per-file) shard); "
-        "with --verify, recompute the manifest from the files",
-    )
-    pk.add_argument(
-        "--from-release",
+        "--from-release", metavar="RELEASE_ROOT",
         help="pack the current version of a published release "
-        "(SnapshotTable root) instead of the raw documents table — "
-        "the curated stream a training run actually loads; requires "
-        "--shard",
+        "instead of the raw documents table — the curated stream a "
+        "training run actually loads",
     )
     pk.add_argument(
         "--seqs-per-file",
         type=int,
-        default=None,
         help="sequences per output shard file (default 64) — the "
-        "packed layout's file-size dial, only with --shard",
+        "packed layout's file-size dial",
     )
     sps = sub.add_parser(
         "span-store",
@@ -1005,9 +876,9 @@ def main(argv: list[str] | None = None) -> int:
         "list": cmd_list,
         "run": cmd_run,
         "sql": cmd_sql,
-        "release": cmd_release,
-        "pack": cmd_pack,
-        "shard": cmd_shard,
+        "release": cmd_publish,
+        "pack": cmd_publish,
+        "shard": cmd_publish,
         "span-store": cmd_span_store,
         "index": cmd_index,
         "dedup-ingest": cmd_dedup_ingest,

@@ -390,9 +390,8 @@ def verify_sharded(
 
 def release_docs(spark: SparkSession, release_root: str):
     """Read the current version of a published release for downstream
-    composition — the shared reader of `shard --from-release` and
-    `pack --shard --from-release` (r17 review: was duplicated in both
-    CLI commands, and neither validated the root). Returns (docs, v).
+    composition — the reader of `shard --from-release` and
+    `pack --from-release`. Returns (docs, v).
     Fails cleanly on a missing release or a root publishing a FOREIGN
     kind (packed / span_store — releases publish audit metadata with
     no kind field), instead of packing the wrong corpus under false

@@ -28,6 +28,7 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from etl_wikipedia_updates_spark import jvm_archive
+from etl_wikipedia_updates_spark.tables import REQUIRED_CONF
 
 
 def driver_memory(phys_bytes: int | None) -> str:
@@ -91,10 +92,10 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        # --- determinism (oracle hash-matching) ---
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
+        # --- determinism (oracle hash-matching): UTC, ANSI off, parquet
+        # rebase and nanos-as-long reads; one dict shared with the
+        # foreign-session guard in tables ---
+        .config(map=REQUIRED_CONF)
         # --- adaptive execution: the main scale lever (runtime
         # re-planning, skew-join splitting) ---
         .config("spark.sql.adaptive.enabled", "true")
@@ -127,10 +128,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        # events.parquet carries TIMESTAMP(NANOS) — read as long, converted
-        # to microsecond timestamps in tables.load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,6 +4,6 @@
   them back as a micro-batched stream — the deterministic stand-in for
   a live feed (S1-S5).
 - ``sse``     Spark 4 Python DataSource wrapping a Server-Sent-Events
-  HTTP endpoint (the reference's live source, R1/R2) — network-
-  dependent, not test-gated.
+  HTTP endpoint (the reference's live source, R1/R2); the tests drive
+  it against loopback servers.
 """

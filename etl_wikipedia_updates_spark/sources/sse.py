@@ -7,9 +7,10 @@ pipeline.py:74-76): the offset is the last event timestamp delivered,
 and reconnects pass it back to the endpoint so no event is skipped;
 duplicate redelivery across the overlap is absorbed downstream by the
 natural-key dedup (R10), exactly the reference's recovery recipe
-(SURVEY §4.2). Network-dependent — registered but not exercised by the
-test tiers (the deterministic ``replay`` source covers the streaming
-contract S1-S5).
+(SURVEY §4.2). ``tests/test_sources.py`` runs the reader against
+loopback SSE servers (resume, reconnects, quiet streams, restarts);
+the deterministic ``replay`` source covers the streaming contract
+S1-S5.
 
 Uses only stdlib HTTP so the connector imports everywhere; partitions=1
 because SSE is a single ordered feed (like the reference's single

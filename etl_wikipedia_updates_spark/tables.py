@@ -41,27 +41,27 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # Correctness-critical session confs. The engine's own factory
-# (session.py) sets all of these at build time; this guard exists for
-# FOREIGN sessions — the driver's correctness gate calls
+# (session.get_spark) applies this dict at build time; the guard below
+# re-applies it for FOREIGN sessions — the driver's correctness gate calls
 # __spark_entry__.queries() with a SparkSession we didn't build. Without
 # nanosAsLong the events.parquet read fails outright (TIMESTAMP(NANOS));
 # a non-UTC session timezone flips every timestamp-string output. The
 # set is guarded (only when the value differs), so the engine's own
 # sessions are never redundantly mutated.
-_REQUIRED_CONF: dict[str, str] = {
+REQUIRED_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
     # Spark 4 defaults ANSI ON; the engine's declared semantics are the
-    # reference's lenient-ingest casts (session.py sets the same), and
-    # several expressions rely on permissive out-of-range behavior.
+    # reference's lenient-ingest casts, and several expressions rely on
+    # permissive out-of-range behavior.
     "spark.sql.ansi.enabled": "false",
 }
 
 
 def _ensure_required_conf(spark: SparkSession) -> None:
-    for k, v in _REQUIRED_CONF.items():
+    for k, v in REQUIRED_CONF.items():
         try:
             current = spark.conf.get(k)
         except Exception:

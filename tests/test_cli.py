@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from etl_wikipedia_updates_spark.__main__ import main
 from etl_wikipedia_updates_spark.registry import REGISTRY
 
@@ -225,6 +227,26 @@ def test_cli_dedup_ingest(spark, sf_smoke, tmp_path, capsys):
     )
     out = capsys.readouterr().out
     assert "rows kept:" in out
+
+
+def test_cli_dedup_ingest_checkpoint_beside_a_trailing_slash_sink(
+    spark, sf_smoke, tmp_path, capsys
+):
+    """The default checkpoint sits beside the sink, not inside it, when
+    the sink is given with a trailing slash — inside, the sink's byte
+    walk (the dashboard's D7 gauge) would count checkpoint files."""
+    from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
+    from etl_wikipedia_updates_spark.tables import load_table
+
+    docs = load_table(spark, sf_smoke, "documents").limit(40)
+    replay = str(tmp_path / "replay")
+    write_replay_splits(docs, replay, 1, "doc_id")
+    sink = str(tmp_path / "sink")
+    argv = ["dedup-ingest", "--replay", replay, "--sf-dir", sf_smoke]
+    assert main([*argv, "--sink", sink + "/"]) == 0
+    assert "rows kept:" in capsys.readouterr().out
+    assert os.path.isdir(sink + "_ckpt")
+    assert not os.path.exists(os.path.join(sink, "_ckpt"))
 
 
 def test_cli_dedup_ingest_quality_mode(spark, sf_smoke, tmp_path, capsys):
@@ -681,41 +703,67 @@ def test_cli_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
 
 
 def test_cli_pack_write_and_verify(spark, sf_smoke, tmp_path, capsys):
-    """`pack` materializes the packed stream and `pack --verify`
-    recomputes the per-source counts from the WRITTEN files against
-    the seq_pack audit — then a tampered directory must fail."""
+    """`pack` publishes the packed stream whose manifest, summed per
+    source, carries exactly the seq_pack audit's sequence count and
+    token total; `pack --verify` recomputes it from the files (exit 0),
+    and a removed source dir exits 1."""
     import json
-
-    out = str(tmp_path / "packed")
-    assert main(["pack", "--out", out, "--sf-dir", sf_smoke]) == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["seq_len"] == 512
-    assert summary["sources"]
-
-    assert main(["pack", "--out", out, "--sf-dir", sf_smoke, "--verify"]) == 0
-    v = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert v["ok"] and not v["mismatches"]
-
-    # tamper: drop one source's files entirely
     import shutil
 
-    victim = next(
-        d
-        for d in __import__("os").listdir(out)
-        if d.startswith("source=")
-    )
-    shutil.rmtree(out + "/" + victim)
-    assert main(["pack", "--out", out, "--sf-dir", sf_smoke, "--verify"]) == 1
-    v = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert not v["ok"]
+    from etl_wikipedia_updates_spark.plans.northstar import seq_pack
+    from etl_wikipedia_updates_spark.stages import SEQ_LEN
+    from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
+
+    root = str(tmp_path / "packed")
+    assert main(["pack", "--out", root, "--sf-dir", sf_smoke]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert SnapshotTable(root).meta_for(out["version"])["seq_len"] == SEQ_LEN
+    got: dict = {}
+    for r in out["manifest"]:
+        g = got.setdefault(r["shard"].rsplit("/", 1)[0], [0, 0])
+        g[0] += r["n_docs"]
+        g[1] += r["n_chars_total"]
+    audit = {
+        r["source"]: [r["n_seqs"], r["total_tokens"]]
+        for r in seq_pack(spark, sf_smoke).collect()
+    }
+    assert got == audit
+
+    assert main(["pack", "--out", root, "--verify"]) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["ok"]
+
+    vdir = SnapshotTable(root).version_path(out["version"])
+    victim = sorted(d for d in os.listdir(vdir) if d.startswith("source="))[0]
+    shutil.rmtree(os.path.join(vdir, victim))
+    assert main(["pack", "--out", root, "--verify"]) == 1
+    assert not json.loads(capsys.readouterr().out.strip().splitlines()[-1])["ok"]
+
+
+@pytest.mark.parametrize(
+    "job,flags",
+    [
+        ("release", ["--remove-spans"]),
+        ("shard", ["--n-shards", "8", "--from-release", "rel"]),
+        ("pack", ["--seqs-per-file", "4"]),
+    ],
+)
+def test_cli_publish_verify_rejects_write_side_flags(
+    tmp_path, capsys, job, flags
+):
+    """--verify checks what is published; a write-side flag beside it
+    would be dropped silently, so every publish job exits 2 before it
+    starts a session or writes anything."""
+    root = str(tmp_path / job)
+    assert main([job, "--out", root, "--verify", *flags]) == 2
+    assert flags[0] in capsys.readouterr().err
+    assert not os.path.exists(root)
 
 
 def test_cli_pack_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
-    """`pack --shard` (r17) publishes the packed stream through the
-    manifest-verified snapshot layout (one file per
-    (source, seq_id div seqs-per-file) shard); `pack --shard --verify`
-    recomputes the manifest from the files; a removed shard dir fails
-    the verify."""
+    """`pack` publishes the packed stream through the manifest-verified
+    snapshot layout (one file per (source, seq_id div seqs-per-file)
+    shard); `pack --verify` recomputes the manifest from the files; a
+    removed shard dir fails the verify."""
     import json
     import shutil
 
@@ -725,7 +773,7 @@ def test_cli_pack_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
     assert (
         main(
             [
-                "pack", "--shard", "--out", root,
+                "pack", "--out", root,
                 "--sf-dir", sf_smoke, "--seqs-per-file", "4",
             ]
         )
@@ -738,7 +786,7 @@ def test_cli_pack_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
     assert meta["manifest"] == out["manifest"]
     assert meta["kind"] == "packed"
 
-    assert main(["pack", "--shard", "--out", root, "--verify"]) == 0
+    assert main(["pack", "--out", root, "--verify"]) == 0
     capsys.readouterr()
 
     vdir = SnapshotTable(root).version_path(1)
@@ -751,7 +799,7 @@ def test_cli_pack_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
         if b.startswith("seq_block=")
     )[0]
     shutil.rmtree(os.path.join(vdir, srcdir, victim))
-    assert main(["pack", "--shard", "--out", root, "--verify"]) == 1
+    assert main(["pack", "--out", root, "--verify"]) == 1
 
 
 def test_cli_span_store_publish_merge_audit(spark, sf_smoke, tmp_path, capsys):
@@ -884,11 +932,10 @@ def test_cli_dedup_ingest_span_mode(spark, sf_smoke, tmp_path, capsys):
 
 
 def test_cli_pack_shard_from_release(spark, sf_smoke, tmp_path, capsys):
-    """`pack --shard --from-release` (r17): the packed sharded
-    snapshot is built from the CURATED release corpus — its manifest
-    token mass equals packed_sequences over the release members, not
-    the raw table — and verifies clean. Without --shard the flag
-    fails loudly."""
+    """`pack --from-release` (r17): the packed sharded snapshot is
+    built from the CURATED release corpus — its manifest token mass
+    equals packed_sequences over the release members, not the raw
+    table — and verifies clean."""
     import json
 
     from etl_wikipedia_updates_spark.stages import packed_sequences
@@ -904,7 +951,7 @@ def test_cli_pack_shard_from_release(spark, sf_smoke, tmp_path, capsys):
     assert (
         main(
             [
-                "pack", "--shard", "--out", root,
+                "pack", "--out", root,
                 "--sf-dir", sf_smoke,
                 "--from-release", rel_root,
                 "--seqs-per-file", "4",
@@ -921,15 +968,4 @@ def test_cli_pack_shard_from_release(spark, sf_smoke, tmp_path, capsys):
     ).first()["s"]
     assert sum(r["n_chars_total"] for r in out["manifest"]) == want
 
-    assert main(["pack", "--shard", "--out", root, "--verify"]) == 0
-    capsys.readouterr()
-
-    assert (
-        main(
-            [
-                "pack", "--out", str(tmp_path / "x"),
-                "--sf-dir", sf_smoke, "--from-release", rel_root,
-            ]
-        )
-        == 2
-    )
+    assert main(["pack", "--out", root, "--verify"]) == 0

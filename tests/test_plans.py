@@ -55,6 +55,12 @@ CASES = [
         ["BroadcastHashJoin", "partial_percentile_approx"],
         ["SortMergeJoin", "Exchange rangepartitioning"],
     ),
+    # q8's per-key ranking is a Window operator
+    ("q8", ["Window"], []),
+    # incremental_dedup's band candidates come from the bucketed join,
+    # never from exploding band rows (the one-join pin is
+    # test_incremental_dedup_single_vs_join)
+    ("incremental_dedup", [], ["Generate"]),
     # dims broadcast; no sort-merge join of a small side
     ("q5", ["BroadcastHashJoin"], []),
     ("q6", ["BroadcastHashJoin"], ["SortMergeJoin"]),
@@ -427,6 +433,22 @@ def test_incremental_dedup_single_vs_join(spark, sf_smoke):
         "CartesianProductExec",
         "BroadcastNestedLoopJoinExec",
     ), joins
+
+
+def test_corpus_release_eval_here_barrier(spark, sf_smoke):
+    """corpus_release keeps the repetition fold above the scan with an
+    eval_here barrier (an always-false SPARK_PARTITION_ID() < 0
+    disjunct). Its effect rides Catalyst internals, so a Spark upgrade
+    could push the fold to the scan again: the disjunct must survive
+    into the physical plan, each barrier filter must carry exactly one
+    copy of the fold (alias substitution once inlined it per extracted
+    field), and the fold must never reach a scan's PushedFilters."""
+    plan = _plan(spark, "corpus_release", sf_smoke).splitlines()
+    fold = "named_struct(n_words"
+    barriers = [ln for ln in plan if "SPARK_PARTITION_ID() < 0" in ln]
+    assert barriers, "eval_here barrier disjunct folded away"
+    assert all(ln.count(fold) == 1 for ln in barriers), barriers
+    assert not any(fold in ln for ln in plan if "PushedFilters" in ln)
 
 
 def test_pack_assignments_aggregates_to_seq_pack_audit(spark, sf_smoke):

@@ -50,6 +50,16 @@ def test_load_table_repairs_foreign_session_conf(spark, sf_smoke):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+def test_get_spark_builds_with_the_required_conf(spark):
+    """The engine's own sessions carry the correctness confs from build
+    time (the SparkConf the context started with), not only after the
+    first load_table re-applies them."""
+    from etl_wikipedia_updates_spark.tables import REQUIRED_CONF
+
+    conf = spark.sparkContext.getConf()
+    assert {k: conf.get(k) for k in REQUIRED_CONF} == REQUIRED_CONF
+
+
 def test_spark_sql_frontend_matches_dataframe_plan(spark, sf_smoke):
     """The engine's tables register as temp views, so users can drive
     the same data through spark.sql(); a Spark-SQL twin of q4 must
