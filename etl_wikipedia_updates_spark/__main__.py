@@ -70,6 +70,17 @@ def cmd_sql(args) -> int:
     return 0
 
 
+def _keep_last_rejected(keep_last: int | None) -> bool:
+    """True, with the message on stderr, for a --keep-last below 1.
+    Every publish vacuums to it only after its pointer has moved, so
+    the CLI checks it before a session starts (the writers check it
+    again before any job)."""
+    if keep_last is None or keep_last >= 1:
+        return False
+    print(f"--keep-last must be >= 1, got {keep_last}", file=sys.stderr)
+    return True
+
+
 def cmd_publish(args) -> int:
     """The one path of the publish jobs (release, shard, pack): with
     --verify, print the job's verify_* verdict and exit 0 or 1 on it;
@@ -115,6 +126,8 @@ def cmd_publish(args) -> int:
             file=sys.stderr,
         )
         return 2
+    if _keep_last_rejected(kw.get("keep_last")):
+        return 2
     spark = _spark()
     if args.verify:
         out = verify(spark, args.out)
@@ -151,16 +164,7 @@ def cmd_span_store(args) -> int:
     )
     from etl_wikipedia_updates_spark.tables import load_table, spread
 
-    if args.keep_last < 1:
-        # validate BEFORE any work: on the publish path this value
-        # reaches SnapshotTable.vacuum AFTER the version is published,
-        # where a late ValueError would exit with a traceback despite
-        # a successful publish (a scripted caller would retry and
-        # create a duplicate version — r19 review #2)
-        print(
-            f"--keep-last must be >= 1, got {args.keep_last}",
-            file=sys.stderr,
-        )
+    if _keep_last_rejected(args.keep_last):
         return 2
     if args.stats:
         # metadata-only: no SparkSession, no data read

@@ -44,8 +44,10 @@ import shlex
 import shutil
 import subprocess
 from collections.abc import Mapping
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
+from types import MappingProxyType
 
 from pyspark import SparkContext
 from pyspark.errors import PySparkRuntimeError
@@ -182,27 +184,29 @@ def plan(spark_home: str, env: Mapping[str, str]) -> Plan:
     )
 
 
-def launch(builder: SparkSession.Builder, java_options: str, how: Plan) -> SparkSession:
+def launch(
+    builder: SparkSession.Builder,
+    java_options: str,
+    how: Plan,
+    env: Mapping[str, str] = MappingProxyType({}),
+) -> SparkSession:
     """``builder.getOrCreate()`` for a start that launches the driver
     JVM, with ``how``'s options merged after the caller's
-    ``spark.driver.defaultJavaOptions`` (``java_options``)."""
+    ``spark.driver.defaultJavaOptions`` (``java_options``) and ``env``
+    set in ``os.environ`` for each start only (the JVM and the
+    SparkContext read it once, as they start)."""
     LOG.info("driver JVM class-data archive: %s (%s)", how.mode, how.reason)
     if how.mode == "off":
-        return builder.getOrCreate()
+        with _scoped_env(env):
+            return builder.getOrCreate()
     builder.config(JAVA_OPTIONS, f"{java_options} {how.options}".strip())
-    saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = how.conf_dir
     try:
-        spark = builder.getOrCreate()
+        with _scoped_env({**env, "SPARK_CONF_DIR": how.conf_dir}):
+            spark = builder.getOrCreate()
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
         spark = None
-    finally:
-        if saved is None:
-            del os.environ["SPARK_CONF_DIR"]
-        else:
-            os.environ["SPARK_CONF_DIR"] = saved
     if spark is None:
         if how.recording:
             how.recording.abandon("driver JVM failed to start while recording")
@@ -210,11 +214,27 @@ def launch(builder: SparkSession.Builder, java_options: str, how: Plan) -> Spark
         else:
             how.archive.unlink(missing_ok=True)
             LOG.warning("driver JVM failed to start with %s; deleted it", how.archive)
-        return builder.config(JAVA_OPTIONS, java_options).getOrCreate()
+        with _scoped_env(env):
+            return builder.config(JAVA_OPTIONS, java_options).getOrCreate()
     if how.recording:
         classpath = spark.sparkContext._jvm.java.lang.System.getProperty("java.class.path")
         atexit.register(_finish_at_exit, how.recording, SparkContext._gateway.proc, classpath)
     return spark
+
+
+@contextmanager
+def _scoped_env(overrides: Mapping[str, str]):
+    """``os.environ`` with ``overrides`` set, restored on exit."""
+    saved = {k: os.environ.get(k) for k in overrides}
+    os.environ.update(overrides)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
 
 
 def _finish_at_exit(recording: Recording, proc, classpath: str) -> None:

@@ -39,7 +39,7 @@ from etl_wikipedia_updates_spark.stages import (
     shard_assign_col,
     span_audit_vs_prior,
 )
-from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable
+from etl_wikipedia_updates_spark.streaming.snapshot import SnapshotTable, check_keep_last
 from etl_wikipedia_updates_spark.tables import load_table, spread
 
 
@@ -120,6 +120,7 @@ def write_release(
 
     Returns {"version": N, "audit": [card rows as dicts]}.
     """
+    check_keep_last(keep_last)
     table = SnapshotTable(out_root)
     members = release_members(
         spark, sf_dir, mix_alpha=mix_alpha,
@@ -301,6 +302,7 @@ def write_sharded(
 
     Returns {"version": N, "manifest": [manifest rows as dicts]}.
     """
+    check_keep_last(keep_last)
     if n_shards is None:
         n_shards = N_SHARDS
     from_sf_dir = docs is None
@@ -467,6 +469,7 @@ def write_packed(
 
     Returns {"version": N, "seqs_per_file": K, "manifest": [...]}.
     """
+    check_keep_last(keep_last)
     if seqs_per_file is None:
         seqs_per_file = SEQS_PER_FILE
     if seqs_per_file < 1:
@@ -597,6 +600,7 @@ def publish_span_store(
     version} — the telemetry is free (parquet footers + file sizes),
     so callers should read it from here rather than re-counting the
     store."""
+    check_keep_last(keep_last)
     spans = _span_occurrences(docs).select("h")
     table = SnapshotTable(store_root)
     cur = table.current_version()

@@ -16,19 +16,48 @@ A start that launches the driver JVM maps a class-data archive of
 Spark's classes, or records one on the first start for this JDK and
 Spark install (``jvm_archive``): the cold JVM is most of a start's
 time, and a restarted ingest pays it before its first event lands.
+
+The Python processes a local session starts (data-source, UDF and
+streaming-source workers) run the driver's own interpreter through a
+launcher in the same cache dir (:func:`worker_python`). Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` and the py4j source zip first on
+their ``PYTHONPATH``; those zips hold no compiled modules, so every
+worker would recompile PySpark on import (about 1 s each, against about
+0.4 s from the driver's compiled install). The launcher drops the two
+zips and ``exec``s the driver's interpreter. It is used only when the
+master is local, the driver imported ``pyspark`` and ``py4j`` from
+directories with a ``pyspark`` matching the Spark jars, and
+``PYSPARK_PYTHON`` is unset or names the driver's interpreter; otherwise
+the workers start as configured. The decision is logged at INFO.
+
+Call-site capture for DataFrame errors
+(``spark.python.sql.dataFrameDebugging.enabled``) is off: it adds
+py4j round trips to every Column call.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import re
+import shlex
+import shutil
+import subprocess
+import sys
 import warnings
+from collections.abc import Mapping
 
+import py4j
+import pyspark
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from etl_wikipedia_updates_spark import jvm_archive
 from etl_wikipedia_updates_spark.tables import REQUIRED_CONF
+
+LOG = logging.getLogger(__name__)
 
 
 def driver_memory(phys_bytes: int | None) -> str:
@@ -76,6 +105,122 @@ def local_cpus() -> int:
     return _int_env("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
 
 
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+_SPARK_CORE_JAR = re.compile(r"spark-core_[\d.]+-(.+)\.jar")
+# Spark prepends $SPARK_HOME/python/lib/{pyspark.zip,py4j-*-src.zip} to
+# every Python worker's PYTHONPATH; the launcher drops exactly those two
+_LAUNCHER = """\
+#!/bin/sh
+# Runs a Python worker of an etl_wikipedia_updates_spark session with the
+# driver's interpreter and its compiled pyspark/py4j, not the
+# source-only zips Spark puts first on PYTHONPATH.
+set -f
+kept=
+IFS=:
+for entry in $PYTHONPATH; do
+  case $entry in
+    "$SPARK_HOME/python/lib/pyspark.zip"|"$SPARK_HOME"/python/lib/py4j-*-src.zip) ;;
+    *) kept=${{kept:+$kept:}}$entry ;;
+  esac
+done
+unset IFS
+if [ -n "$kept" ]; then export PYTHONPATH="$kept"; else unset PYTHONPATH; fi
+exec {python} "$@"
+"""
+
+
+def _same_interpreter(a: str, b: str) -> bool:
+    """Same binary in the same directory: a venv's ``python`` links to
+    its base interpreter but reads its own ``pyvenv.cfg``, so the
+    directory matters as much as the file."""
+    return (
+        os.path.dirname(os.path.abspath(a)) == os.path.dirname(os.path.abspath(b))
+        and os.path.realpath(a) == os.path.realpath(b)
+    )
+
+
+def _foreign_python(env: Mapping[str, str]) -> str | None:
+    """Why ``PYSPARK_PYTHON`` in ``env`` would not run this interpreter,
+    or None when it is unset or does. A name that resolves elsewhere (a shim,
+    such as pyenv's) is asked for its ``sys.executable``."""
+    configured = env.get("PYSPARK_PYTHON")
+    if configured is None:
+        return None
+    found = shutil.which(configured, path=env.get("PATH"))
+    if found is None:
+        return f"PYSPARK_PYTHON={configured} is not on the PATH"
+    if _same_interpreter(found, sys.executable):
+        return None
+    try:
+        out = subprocess.run(
+            [found, "-c", "import sys; print(sys.executable)"],
+            env=dict(env), capture_output=True, text=True, timeout=60,
+        )
+    except (OSError, subprocess.TimeoutExpired) as e:
+        return f"PYSPARK_PYTHON={configured} did not run: {e}"
+    runs = out.stdout.strip()
+    if out.returncode or not runs or not _same_interpreter(runs, sys.executable):
+        return f"PYSPARK_PYTHON={configured} runs {runs or '?'}, not {sys.executable}"
+    return None
+
+
+def worker_python(master: str, spark_home: str, env: Mapping[str, str]) -> tuple[str | None, str]:
+    """The ``PYSPARK_PYTHON`` a session's Python workers should start
+    with (None: leave it as ``env`` has it), and why. A launcher that
+    runs the driver's interpreter without Spark's source-only zips is
+    written to the cache dir when every condition holds: the master is
+    local, the driver imported ``pyspark`` and ``py4j`` from directories
+    and its ``pyspark`` matches the Spark jars, and ``PYSPARK_PYTHON``
+    runs the driver's interpreter."""
+    if not _LOCAL_MASTER.fullmatch(master):
+        return None, f"master {master} is not local"
+    for module in (pyspark, py4j):
+        where = os.path.dirname(module.__file__)
+        if not os.path.isdir(where):
+            return None, f"driver imports {module.__name__} from {where}"
+    jars = os.path.join(spark_home, "jars")
+    try:
+        versions = sorted(
+            m.group(1) for name in os.listdir(jars)
+            if (m := _SPARK_CORE_JAR.fullmatch(name))
+        )
+    except OSError:
+        versions = []
+    if versions != [pyspark.__version__]:
+        return None, f"pyspark {pyspark.__version__}, Spark jars {versions or 'unknown'}"
+    other = _foreign_python(env)
+    if other:
+        return None, other
+    text = _LAUNCHER.format(python=shlex.quote(sys.executable))
+    launcher = jvm_archive.cache_dir(env) / (
+        f"python-{hashlib.sha256(text.encode()).hexdigest()[:16]}.sh"
+    )
+    if not launcher.is_file():
+        try:
+            launcher.parent.mkdir(parents=True, exist_ok=True)
+            temp = launcher.with_name(f"{launcher.name}.{os.getpid()}")
+            temp.write_text(text)
+            temp.chmod(0o755)
+            os.replace(temp, launcher)
+        except OSError as e:
+            return None, f"cache dir {launcher.parent} unwritable: {e.strerror}"
+    return str(launcher), f"runs {sys.executable} without Spark's pyspark/py4j zips"
+
+
+def _launch(builder: SparkSession.Builder, master: str, java_options: str) -> SparkSession:
+    """``builder.getOrCreate()`` for a start that launches the driver
+    JVM: with the class-data archive's plan, and with the worker
+    launcher as ``PYSPARK_PYTHON`` for the start only when
+    :func:`worker_python` chooses it."""
+    spark_home = _find_spark_home()
+    launcher, why = worker_python(master, spark_home, os.environ)
+    LOG.info("python workers: %s (%s)", launcher or "as configured", why)
+    return jvm_archive.launch(
+        builder, java_options, jvm_archive.plan(spark_home, os.environ),
+        {"PYSPARK_PYTHON": launcher} if launcher else {},
+    )
+
+
 def get_spark(
     app_name: str = "etl_wikipedia_updates_spark",
     master: str | None = None,
@@ -89,9 +234,10 @@ def get_spark(
     the class-data archive's options after it.
     """
     cpus = local_cpus()
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         # --- determinism (oracle hash-matching): UTC, ANSI off, parquet
         # rebase and nanos-as-long reads; one dict shared with the
         # foreign-session guard in tables ---
@@ -128,14 +274,19 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # per-Column call-site capture for error messages: several py4j
+        # round trips per Column call (F.col("a") + 1: 2.3-2.9 ms on,
+        # 0.5 ms off), which Spark documents as costly
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = extra_conf or {}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        spark = jvm_archive.launch(
+        spark = _launch(
             builder,
-            (extra_conf or {}).get(jvm_archive.JAVA_OPTIONS, ""),
-            jvm_archive.plan(_find_spark_home(), os.environ),
+            conf.get("spark.master", master),
+            conf.get(jvm_archive.JAVA_OPTIONS, ""),
         )
     else:  # the driver JVM is running already
         spark = builder.getOrCreate()

@@ -61,6 +61,14 @@ def dir_row_count(root: str) -> int:
     return total
 
 
+def check_keep_last(keep_last: int) -> None:
+    """A vacuum horizon keeps at least the live version. Writers that
+    publish and then vacuum call this before any job, so a bad value
+    fails before a version is published, not after."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1 (the live version), got {keep_last}")
+
+
 class SnapshotTable:
     """Versioned parquet table with an atomic manifest pointer."""
 
@@ -252,8 +260,7 @@ class SnapshotTable:
         the manifest. Only safe when no publisher is running (an
         explicit operator action, hence opt-in). Returns the removed
         version numbers."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1 (the live version)")
+        check_keep_last(keep_last)
         current = self.current_version()
         if current is None:
             return []

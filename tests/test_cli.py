@@ -759,6 +759,26 @@ def test_cli_publish_verify_rejects_write_side_flags(
     assert not os.path.exists(root)
 
 
+def test_cli_shard_rejects_keep_last_below_one(sf_smoke, tmp_path, capsys):
+    """A publish vacuums to --keep-last only after its pointer has
+    moved, so a value below 1 is refused before anything is published:
+    the CLI exits 2 with span-store's message, and the writer itself
+    raises before it touches the session or the output."""
+    from etl_wikipedia_updates_spark.release import write_sharded
+
+    root = tmp_path / "shards"
+    argv = ["shard", "--out", str(root), "--sf-dir", sf_smoke, "--keep-last", "0"]
+    assert main(argv) == 2
+    err = capsys.readouterr().err
+    assert "--keep-last must be >= 1, got 0" in err
+    assert main(["span-store", "--store", str(tmp_path / "s"), "--keep-last", "0"]) == 2
+    assert capsys.readouterr().err == err
+    assert not (root / "_current.json").exists()
+    with pytest.raises(ValueError, match="keep_last must be >= 1"):
+        write_sharded(None, sf_smoke, str(root), keep_last=0)
+    assert not root.exists()
+
+
 def test_cli_pack_shard_write_and_verify(spark, sf_smoke, tmp_path, capsys):
     """`pack` publishes the packed stream through the manifest-verified
     snapshot layout (one file per (source, seq_id div seqs-per-file)

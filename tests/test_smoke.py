@@ -58,6 +58,9 @@ def test_get_spark_builds_with_the_required_conf(spark):
 
     conf = spark.sparkContext.getConf()
     assert {k: conf.get(k) for k in REQUIRED_CONF} == REQUIRED_CONF
+    # per-Column call-site capture is off: it costs py4j round trips on
+    # every Column call of a plan build
+    assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_spark_sql_frontend_matches_dataframe_plan(spark, sf_smoke):

@@ -1,11 +1,10 @@
 #!/usr/bin/env python
 """Physical-plan audit: verify the scale-critical plan properties hold.
 
-For each audited query, formats the physical plan and checks:
-- projections reach the parquet scan (ReadSchema column count)
-- filters push down (PushedFilters non-empty where declared)
-- dim joins broadcast (BroadcastHashJoin where declared)
-- top-k compiles to TakeOrderedAndProject (no global sort)
+For each row of ``plan_pins.PLAN_PINS`` (the table tests/test_plans.py
+asserts), formats the query's physical plan and checks the fragments it
+must and must not contain: filters push down, dim joins broadcast,
+top-k compiles to TakeOrderedAndProject (no global sort), and so on.
 
 Additionally, EVERY registered query's physical plan is walked for
 unpartitioned Window nodes (the 100 TB single-task funnel): such a
@@ -24,168 +23,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_wikipedia_updates_spark.plan_pins import PLAN_PINS
 from etl_wikipedia_updates_spark.registry import REGISTRY
 from etl_wikipedia_updates_spark.session import get_spark
-
-# query -> (must_contain, must_not_contain) substrings of the formatted plan
-CHECKS: dict[str, tuple[list[str], list[str]]] = {
-    "q1": (["TakeOrderedAndProject"], ["Exchange rangepartitioning"]),
-    "q2": (["PushedFilters: [IsNotNull(l_shipdate)"], []),
-    "q3": (["partial_"], []),  # map-side partial aggregation
-    "q5": (["BroadcastHashJoin"], []),
-    "q6": (["BroadcastHashJoin"], ["SortMergeJoin"]),
-    "q8": (["Window"], []),
-    "q10": (["TakeOrderedAndProject"], ["Exchange rangepartitioning"]),
-    "q18": (["PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,10)]"], []),
-    "q25": (["BroadcastNestedLoopJoin", "row_number"], ["SortMergeJoin"]),
-    "ann_ivf": (["BroadcastHashJoin"], []),
-    "minhash_lsh": (["BroadcastHashJoin"], []),  # dictionary join broadcast
-    # r14 replan: map-side array_sort + run-max struct projection —
-    # no explode, no join (mirrors tests/test_plans.py)
-    "rep_filter": (["array_sort(", "partial_"], ["Generate", "Join"]),
-    "source_mix": (["BroadcastHashJoin", "partial_"], ["SortMergeJoin"]),
-    # r8: two-phase prefix sum (no corpus window on the skewed source
-    # key) and the join-free span audit (mirrors tests/test_plans.py)
-    "seq_pack": (
-        ["hashpartitioning(bkt", "BroadcastHashJoin"],
-        ["Generate", "hashpartitioning(doc_id"],
-    ),
-    "span_dedup": (["Generate", "hashpartitioning(h", "Window"], ["Join"]),
-    # r17: both snapshot sides tagged out of ONE scan — a Union of two
-    # filtered copies would scan + span-hash the corpus twice
-    "incremental_span_dedup": (
-        ["Generate", "hashpartitioning(h", "Window"],
-        ["Join", "Union"],
-    ),
-    # r15: seq_pack's consumable half — same prefix-sum contract
-    "pack_assignments": (
-        ["hashpartitioning(bkt", "Window", "BroadcastHashJoin"],
-        ["Generate", "hashpartitioning(doc_id", "SortMergeJoin"],
-    ),
-    # r10: same span core, then one doc_id agg + corpus join back
-    "span_removal": (
-        ["Generate", "hashpartitioning(h", "Window"],
-        ["Exchange rangepartitioning", "BroadcastNestedLoopJoin"],
-    ),
-    # r16: bench span set broadcasts; train side never h-shuffles
-    "span_decontam": (
-        ["Generate", "BroadcastHashJoin LeftOuter"],
-        ["SortMergeJoin", "BatchEvalPython"],
-    ),
-    # r16: the shared prefix-sum contract + one fragment Generate +
-    # the (source, seq_id) assembly agg; no doc_id corpus shuffle
-    "packed_sequences": (
-        ["hashpartitioning(bkt", "Window", "BroadcastHashJoin", "Generate"],
-        ["SortMergeJoin", "hashpartitioning(doc_id"],
-    ),
-    # r10: top-k is per-partition heaps; the rank window sits above the
-    # limit (structural bound checked by audit_unpartitioned_windows).
-    # r18: the ONE hashpartitioning(doc_id) exchange is deliberate —
-    # the shared (doc_id, dl, tf_*) projection both branches reuse
-    # instead of a second corpus scan+tokenize (mirrors
-    # tests/test_plans.py; ReusedExchange pinned there AQE-off)
-    "bm25_rank": (
-        ["TakeOrderedAndProject", "BroadcastExchange", "hashpartitioning(doc_id"],
-        ["Generate", "SortMergeJoin"],
-    ),
-    # r10 corpus trio (mirrors tests/test_plans.py): threshold/model
-    # frames broadcast onto the streamed corpus, map-side partials,
-    # no merge joins, charlm stays JVM-side with no window
-    "temperature_mix": (["BroadcastHashJoin", "partial_"], ["SortMergeJoin"]),
-    "charlm_score": (
-        ["partial_"],
-        ["Generate", "Join", "BatchEvalPython", "Window"],
-    ),
-    # r20: totals are window sums over the N_SHARDS-row aggregate
-    # (constant-bounded; allowlisted below) — no joins, one scan
-    "shard_manifest": (["partial_", "Window"], ["SortMergeJoin", "Generate", "Join"]),
-    "semantic_dedup": (["partial_"], ["BatchEvalPython"]),
-    "pii_scrub": (["partial_"], ["Generate", "Join", "BatchEvalPython"]),
-    "distinct_kmv": (
-        ["Generate", "partial_"],
-        ["BatchEvalPython", "Scan ExistingRDD"],
-    ),
-    "ann_pq": (
-        ["BroadcastNestedLoopJoin", "row_number"],
-        ["SortMergeJoin", "BatchEvalPython"],
-    ),
-    "zipf_fit": (["Generate", "partial_"], ["Join", "BatchEvalPython"]),
-    # r14 BPE family: whole-text replace-chain encode — pure map-side;
-    # forbidding Generate/Join pins out the falsified per-occurrence
-    # fold and the dictionary join, forbidding "aggregate(" pins out
-    # any HOF-fold encode (the 92.8x r13 plan). seq_pack_subword keeps
-    # whitespace seq_pack's prefix-sum contract; source_mix_subword
-    # keeps source_mix's broadcast-budget contract.
-    "bpe_token_stats": (
-        ["replace(", "partial_"],
-        ["Generate", "Join", "aggregate("],
-    ),
-    "seq_pack_subword": (
-        ["replace(", "hashpartitioning(bkt", "BroadcastHashJoin"],
-        ["Generate", "SortMergeJoin", "aggregate(", "hashpartitioning(doc_id"],
-    ),
-    "source_mix_subword": (
-        ["replace(", "BroadcastHashJoin", "partial_"],
-        ["Generate", "SortMergeJoin", "aggregate("],
-    ),
-    # r15: fit collected at build (fixed 4096-key space), scorer is a
-    # pure map-side fold over each doc's shingle array — the steady
-    # plan has NO explode, NO join, NO persist; forbidding
-    # Generate/Join pins out the r14 gram-stream broadcast ladder
-    "ngram_quality": (
-        ["partial_", "element_at("],
-        ["Generate", "Join", "SortMergeJoin", "BatchEvalPython",
-         "InMemoryTableScan"],
-    ),
-    # r14: the recrawl pays only new-vs-prior band candidates — one
-    # band-bucketed join, never a cartesian (the exactly-one-join
-    # structural pin lives in tests/test_plans.py)
-    "incremental_dedup": (
-        [],
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "Generate"],
-    ),
-    # r19: DSIR scoring is a pure map-side in-array fold over the
-    # collected 512-long weight literal, selected via
-    # TakeOrderedAndProject — the steady plan has NO explode, NO join
-    # (the fit's explode runs once at build inside caches.memo, not in
-    # the scoring plan), and never a range exchange for the top-k
-    "dsir_select": (
-        ["TakeOrderedAndProject", "element_at("],
-        ["Generate", "Join", "SortMergeJoin", "BatchEvalPython",
-         "Exchange rangepartitioning"],
-    ),
-    # r19: winnowing — k-gram hashes and window minima are per-doc
-    # in-array expressions; the ONE Generate explodes only the
-    # ~2/(W+1)-density selected fingerprints, the single aggregation
-    # pass partial-aggregates map-side, and nothing joins (the
-    # posexplode first-row marker replaces the density branch's
-    # would-be second scan + join)
-    "winnow_fp": (
-        ["Generate", "partial_"],
-        ["Join", "SortMergeJoin", "BatchEvalPython"],
-    ),
-    # r19: per-source MinHash signatures — the corpus-scale shingle
-    # stream collapses map-side (partial_min x H to |sources| keys);
-    # the pair join is a broadcast nested-loop over the aggregated
-    # |sources|-row frame (bounded, like the q25 probe side), never a
-    # sort-merge; the single-scan guarantee (both branches off one
-    # exchange) is pinned statically in test_plans with AQE off
-    "source_overlap": (
-        ["partial_min", "BroadcastNestedLoopJoin"],
-        ["SortMergeJoin", "BatchEvalPython"],
-    ),
-    # r19: CCNet tercile split — charlm's pure-projection scorer
-    # composed with exact_quantiles_refined's sketch-partial +
-    # broadcast-bracket plan; the cutpoint and bucket joins all
-    # broadcast (nothing corpus-sized exchanges, no range exchange,
-    # no per-language sort funnel)
-    "ccnet_buckets": (
-        ["BroadcastHashJoin", "partial_percentile_approx"],
-        ["SortMergeJoin", "Exchange rangepartitioning",
-         "BatchEvalPython"],
-    ),
-}
-
 
 # Queries allowed to carry an unpartitioned, not-limit-bounded Window,
 # with the reason. The audit exists to catch corpus-scale single-task
@@ -264,7 +104,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="explain_audit", shuffle_partitions=8)
     failures = 0
-    for name, (need, forbid) in CHECKS.items():
+    for name, need, forbid in PLAN_PINS:
         q = REGISTRY.queries[name]
         plan = q.builder(spark, sf_dir)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
