@@ -30,6 +30,16 @@ directories with a ``pyspark`` matching the Spark jars, and
 ``PYSPARK_PYTHON`` is unset or names the driver's interpreter; otherwise
 the workers start as configured. The decision is logged at INFO.
 
+Case mapping (``lower``, ``upper``, ``initcap``) runs through the JDK,
+not ICU (``spark.sql.icu.caseMappings.enabled=false``): Spark's ICU
+path builds a title-case table over every code point on its first use
+in a JVM, about 3 s of one thread under a class-init lock that every
+other lowercasing task waits on. The JDK maps non-ASCII case in the
+JVM's default locale, so the conf is set only when the driver JVM's
+default language has no special casing (not ``tr``, ``az`` or ``lt``)
+and ``extra_conf`` does not name it; otherwise ICU stays on. PARITY.md
+lists where the JDK's tables and ICU's part.
+
 Call-site capture for DataFrame errors
 (``spark.python.sql.dataFrameDebugging.enabled``) is off: it adds
 py4j round trips to every Column call.
@@ -58,6 +68,10 @@ from etl_wikipedia_updates_spark import jvm_archive
 from etl_wikipedia_updates_spark.tables import REQUIRED_CONF
 
 LOG = logging.getLogger(__name__)
+# case mapping through the JDK, not ICU (see the module docstring)
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+# languages whose JDK case mapping differs from the root locale's
+_SPECIAL_CASING = frozenset({"tr", "az", "lt"})
 
 
 def driver_memory(phys_bytes: int | None) -> str:
@@ -290,5 +304,11 @@ def get_spark(
         )
     else:  # the driver JVM is running already
         spark = builder.getOrCreate()
+    locale = spark.sparkContext._jvm.java.util.Locale
+    if (
+        ICU_CASE_MAPPINGS not in conf
+        and locale.getDefault().getLanguage() not in _SPECIAL_CASING
+    ):
+        spark.conf.set(ICU_CASE_MAPPINGS, "false")
     spark.sparkContext.setLogLevel("WARN")
     return spark

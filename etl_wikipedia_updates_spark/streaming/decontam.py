@@ -214,14 +214,6 @@ def span_hits(
     return sig.join(hits, "doc_id", "left")
 
 
-def decontam_verdicts(
-    docs: DataFrame, bench_sh: DataFrame, exclude_self: bool = True
-) -> DataFrame:
-    """(doc_id, bench_doc, shared) for every doc the shingle rule
-    vetoes (``exclude_self`` as in _strongest_hits)."""
-    return verdict_rows(shingle_hits(docs, bench_sh, exclude_self))
-
-
 # mode name -> (static-frame builder, per-doc hit function).
 # Both modes share the stream-static join shape, the quarantine-table
 # schema, and the idempotent batch-dir sink; they differ only in what

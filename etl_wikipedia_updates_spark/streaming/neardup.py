@@ -89,14 +89,6 @@ def bucket_store_path(sink_path: str) -> str:
     return os.path.join(sink_path, BUCKETS_DIRNAME)
 
 
-def shingle_store_path(sink_path: str) -> str:
-    return os.path.join(sink_path, SHINGLES_DIRNAME)
-
-
-def vector_store_path(sink_path: str) -> str:
-    return os.path.join(sink_path, VECTORS_DIRNAME)
-
-
 def _require_payload_coverage(
     sink_path: str, payload_dirname: str, below: int, mode: str
 ) -> None:

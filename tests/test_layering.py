@@ -77,8 +77,8 @@ def test_no_function_local_package_imports():
 
 
 # Top-level package definitions no root reaches, each with the reason it
-# stays: the SURVEY contract names it, tests compare against it as a
-# reference, or tests locate a store with it (or it is a helper of one).
+# stays: the SURVEY contract names it, or tests compare against it as a
+# reference (or it is a helper of one).
 UNREACHED_ALLOWED = {
     "windowed_counts": "SURVEY S2 (watermarked tumbling window)",
     "session_counts": "SURVEY S2 (session-window variant of Q21)",
@@ -96,15 +96,12 @@ UNREACHED_ALLOWED = {
     "bpe_encode": "test reference (bpe encode twin)",
     "encode_col": "test reference (bpe encode twin)",
     "_chars_col": "test reference (encode_col helper)",
-    "decontam_verdicts": "test reference (decontam shingle rule)",
     "batch_quality_neardup_keep": "test reference (streaming twin)",
     "batch_embedding_neardup_keep": "test reference (streaming twin)",
     "batch_span_keep": "test reference (streaming twin)",
     "batch_verified_neardup_keep": "test reference (streaming twin)",
     "batch_verified_embedding_keep": "test reference (streaming twin)",
     "_batch_verified_keep": "test reference (verified twins' helper)",
-    "shingle_store_path": "test path helper",
-    "vector_store_path": "test path helper",
 }
 
 

@@ -54,6 +54,7 @@ def test_get_spark_builds_with_the_required_conf(spark):
     """The engine's own sessions carry the correctness confs from build
     time (the SparkConf the context started with), not only after the
     first load_table re-applies them."""
+    from etl_wikipedia_updates_spark.session import ICU_CASE_MAPPINGS
     from etl_wikipedia_updates_spark.tables import REQUIRED_CONF
 
     conf = spark.sparkContext.getConf()
@@ -61,6 +62,9 @@ def test_get_spark_builds_with_the_required_conf(spark):
     # per-Column call-site capture is off: it costs py4j round trips on
     # every Column call of a plan build
     assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # case mapping runs through the JDK (a session conf, set once the
+    # JVM's default locale is known to have no special casing)
+    assert spark.conf.get(ICU_CASE_MAPPINGS) == "false"
 
 
 def test_spark_sql_frontend_matches_dataframe_plan(spark, sf_smoke):

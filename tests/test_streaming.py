@@ -8,6 +8,8 @@ duckdb-hashed; SURVEY §5.2).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -16,7 +18,11 @@ from etl_wikipedia_updates_spark.sources.replay import (
     read_replay_stream,
     write_replay_splits,
 )
-from etl_wikipedia_updates_spark.streaming.decontam import start_ingest
+from etl_wikipedia_updates_spark.streaming.decontam import (
+    shingle_hits,
+    start_ingest,
+    verdict_rows,
+)
 from etl_wikipedia_updates_spark.streaming.ingest import (
     ingest_with_retention,
     metrics_delta,
@@ -25,6 +31,10 @@ from etl_wikipedia_updates_spark.streaming.ingest import (
     sink_metrics,
     streaming_dedup,
     windowed_counts,
+)
+from etl_wikipedia_updates_spark.streaming.neardup import (
+    SHINGLES_DIRNAME,
+    VECTORS_DIRNAME,
 )
 from etl_wikipedia_updates_spark.tables import load_table
 
@@ -48,6 +58,20 @@ def _checksum(df):
         F.count("*").alias("n"), F.sum("event_id").alias("s")
     ).first()
     return row["n"], row["s"]
+
+
+def shingle_store_path(sink_path: str) -> str:
+    return os.path.join(sink_path, SHINGLES_DIRNAME)
+
+
+def vector_store_path(sink_path: str) -> str:
+    return os.path.join(sink_path, VECTORS_DIRNAME)
+
+
+def decontam_verdicts(docs, bench_sh, exclude_self: bool = True):
+    """(doc_id, bench_doc, shared) for every doc the shingle rule
+    vetoes (``exclude_self`` as in decontam._strongest_hits)."""
+    return verdict_rows(shingle_hits(docs, bench_sh, exclude_self))
 
 
 # --- S1: file-replay ingest == batch -----------------------------------------
@@ -843,7 +867,6 @@ def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
         batch_neardup_keep,
         batch_verified_neardup_keep,
         bucket_store_path,
-        shingle_store_path,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -913,7 +936,6 @@ def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
         batch_embedding_neardup_keep,
         batch_verified_embedding_keep,
         bucket_store_path,
-        vector_store_path,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1012,7 +1034,6 @@ def test_shingle_store_sketch_bounded(spark, tmp_path):
         SHINGLE_SKETCH_K,
         doc_shingle_tid_arrays,
         batch_verified_neardup_keep,
-        shingle_store_path,
         verified_ingest_batch,
     )
 
@@ -1249,7 +1270,7 @@ def test_bench_shingle_cap_drops_boilerplate(spark):
     kept_high = batch_decontam_keep(train, bench)
     assert kept_high.count() == 0  # boilerplate matches under big cap
     sh_capped = DC.bench_shingles(bench, cap=1)
-    drops = DC.decontam_verdicts(train, sh_capped)
+    drops = decontam_verdicts(train, sh_capped)
     assert drops.count() == 0  # capped: boilerplate can't nominate
 
 
