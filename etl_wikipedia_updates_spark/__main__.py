@@ -19,7 +19,9 @@ pipeline, graceful shutdown).
                                   # its fixed shards or its packed
                                   # fixed-SEQ_LEN training stream
     python -m etl_wikipedia_updates_spark sse --url URL --sink DIR
-        [--max-batches N]         # live SSE ingest (R1-R3, R15)
+        [--timeout S]             # live SSE ingest: parse, edit/new,
+                                  # natural-key dedup, 100k-row cap
+                                  # (R1-R10, R14-R16)
     python -m etl_wikipedia_updates_spark dashboard --sink DIR
         [--interval S] [--polls N]  # D1-D7 gauges + deltas + velocity
 
@@ -496,24 +498,45 @@ def cmd_ingest(args) -> int:
     return 0
 
 
+# The reference's default retention cap (config.py:20, db-max-events)
+# and the dedup horizon of the live path's natural-key dedup.
+SSE_MAX_ROWS = 100_000
+SSE_DEDUP_WATERMARK = "1 minute"
+
+
 def cmd_sse(args) -> int:
+    """The reference's v2 live path: parse, keep edit/new events,
+    dedup on the natural key within the watermark, append with the
+    retention cap on event time."""
+    from etl_wikipedia_updates_spark.pipeline import DEDUP_KEY, parse_raw, transform
     from etl_wikipedia_updates_spark.sources.sse import register_sse_source
-    from etl_wikipedia_updates_spark.streaming.ingest import ingest_with_retention
+    from etl_wikipedia_updates_spark.streaming.ingest import (
+        ingest_with_retention,
+        streaming_dedup,
+    )
 
     spark = _spark()
     if not register_sse_source(spark):
         print("SSE source needs the Spark 4 Python Data Source API", file=sys.stderr)
         return 2
-    stream = (
+    lines = (
         spark.readStream.format("sse")
         .option("url", args.url)
         .option("userAgent", os.environ.get("ETL_USER_AGENT", "etl-wikipedia-updates-spark"))
         .load()
     )
+    events = streaming_dedup(
+        transform(parse_raw(lines)),
+        DEDUP_KEY,
+        "event_timestamp",
+        SSE_DEDUP_WATERMARK,
+    )
     q = ingest_with_retention(
-        stream,
+        events,
         args.sink,
         args.checkpoint or args.sink.rstrip("/") + ".ckpt",
+        max_rows=SSE_MAX_ROWS,
+        ts_col="event_timestamp",
         available_now=False,
     )
     try:

@@ -144,10 +144,18 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int, rows: int) -> DataFrame:
     includes lang so candidates respect the same-language blocking the
     near-dup contract declares.
     """
-    buckets = (
-        lsh_band_rows(sig, bands, rows)
-        .groupBy("lang", "band", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+    return lsh_bucket_pairs(lsh_band_rows(sig, bands, rows))
+
+
+def lsh_bucket_pairs(band_rows: DataFrame) -> DataFrame:
+    """Distinct (doc_id, doc_id2) pairs, doc_id < doc_id2, of the
+    (doc_id, lang, band, band_key) rows that share a bucket: one
+    bucket groupBy into sorted doc lists, then enumerate_sorted_pairs.
+    The pair step of lsh_candidate_pairs and of the streaming verified
+    modes (streaming.neardup), which enumerate a micro-batch's own
+    band rows."""
+    buckets = band_rows.groupBy("lang", "band", "band_key").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ds")
     )
     return (
         enumerate_sorted_pairs(buckets)

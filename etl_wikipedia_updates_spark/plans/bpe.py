@@ -30,8 +30,8 @@ Determinism and the fit-small pattern (charlm_score's shape):
   Spark applies the same rank-ordered rules as a chain of literal
   string replaces over a separator encoding (doc_nsub_col), which is
   the same function (equivalence argument in its docstring, pinned by
-  tests against encode_col — the definitional array fold — and the
-  pure-Python replay).
+  tests against the definitional array fold and the pure-Python
+  replay in tests/bpe_reference.py).
 
 Scale shape (r14 — the third plan, after measurement falsified the
 first two): subword COUNTS come from doc_nsub_col, a whole-document
@@ -50,11 +50,11 @@ sf0.1 (SCALE.md r14):
   final per-source/per-doc aggregate; cost linear in corpus bytes x
   |merges|, embarrassingly parallel at any corpus size. The trade is
   |merges|: at BPE_MERGES=32 the map-side chain wins outright; a
-  real 50k-rule tokenizer flips the trade back to the dictionary
+  real 50k-rule tokenizer would flip the trade back to the dictionary
   join (each occurrence of a Zipf-head word re-pays the chain that
-  the dictionary amortizes) — since r15 that flip is LIVE CODE, the
-  per_doc_subwords dispatch below (BPE_JOIN_MERGES, with an
-  Arrow-batched vocab encoder measured flat in |merges|).
+  the dictionary amortizes). Every merge table here comes from
+  _fit_from_corpus, at most BPE_MERGES rules, so the chain is the
+  only path (SCALE.md r15 measures the join up to 2048 rules).
 The per-source audit is then a |sources|-key aggregation with
 map-side partials; the packing audit feeds per-doc counts straight
 into the shared _seq_pack prefix sum.
@@ -130,181 +130,26 @@ def bpe_fit(word_freqs: list[tuple[str, int]], n_merges: int) -> list[tuple[str,
     return merges
 
 
-def bpe_encode(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Python replay of the engine encode: rules in rank order, each a
-    single left-to-right fold. THE sequential spec (what the oracle
-    CTEs and the separator chain compute); O(|merges| x len) per word,
-    so tests and small tables only — the UDF tier encodes with
-    bpe_encode_ranked below."""
-    toks = list(word)
-    for a, b in merges:
-        out: list[str] = []
-        for x in toks:
-            if out and out[-1] == a and x == b:
-                out[-1] = a + b
-            else:
-                out.append(x)
-        toks = out
-    return toks
-
-
-def bpe_encode_ranked(
-    word: str, rank: dict[tuple[str, str], int]
-) -> list[str]:
-    """The production encoder (the GPT-2-tokenizer shape): repeatedly
-    take the LOWEST-RANK merge rule whose pair is adjacent anywhere in
-    the word and apply it as one greedy left-to-right pass; stop when
-    no present pair is in the table. Cost is O(len x applied_rules x
-    log) regardless of TABLE size — a 50k-rule table costs dict
-    lookups on the pairs actually present, where the sequential fold
-    (bpe_encode) pays a full pass per RULE.
-
-    Equivalence to the sequential spec holds for every FIT-PRODUCED
-    table (bpe_fit here, or any standard BPE trainer): applying rule k
-    can only create adjacencies that involve its merged token a||b,
-    and a||b enters the token universe at step k — so no rule j < k
-    can name it, and once the rules below k are exhausted they stay
-    exhausted. Min-rank-first therefore visits rules in exactly the
-    sequential order, and the one-pass-per-rule completeness argument
-    (see bpe_fit) makes each visit exhaustive. An ARBITRARY rule list
-    (e.g. one whose later rule re-creates an earlier rule's pair) can
-    diverge — per_doc_subwords' contract is fit-produced tables, and
-    the hypothesis property test pins the equivalence on random
-    fit-produced tables plus adversarial corpora."""
-    toks = list(word)
-    while len(toks) > 1:
-        best = None
-        best_pair = None
-        for i in range(len(toks) - 1):
-            p = (toks[i], toks[i + 1])
-            r = rank.get(p)
-            if r is not None and (best is None or r < best):
-                best, best_pair = r, p
-        if best_pair is None:
-            break
-        a, b = best_pair
-        out: list[str] = []
-        for x in toks:
-            if out and out[-1] == a and x == b:
-                out[-1] = a + b
-            else:
-                out.append(x)
-        toks = out
-    return toks
-
-
-_EMPTY_STR_ARRAY = "cast(array() as array<string>)"
-
-
-def _chars_col(col: str | Column) -> Column:
-    """Code-point array of a word column (name or Column — a Column
-    lets the encode run inside a lambda over tokens_col()).
-    sequence(1, 0) would count DOWN, so the empty word is guarded
-    explicitly; Spark length/substr and DuckDB len/[] both index code
-    points, so the twins agree on any charset."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(
-        F.length(c) == 0, F.expr(_EMPTY_STR_ARRAY)
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(c)),
-            lambda i: c.substr(i, F.lit(1)),
-        )
-    )
-
-
-def encode_col(col: str | Column, merges: list[tuple[str, str]]) -> Column:
-    """Subword-token ARRAY for word column ``col`` — the DEFINITIONAL
-    encode: fold the merge table (bound as a VALUE literal via
-    F.lit/F.struct — never inlined into SQL text, the charlm
-    string-escape lesson) over the char array; each rule is the inner
-    left-to-right fold. This is the spec anchor the tests pin
-    doc_nsub_col (the shipped fast count) and the pure-Python replay
-    against; it is NOT on any query's hot path — its per-element
-    slice+concat rebuilds are O(len^2) per rule, the r13 verdict's
-    measured 3.3x/92.8x root cause."""
-    chars = _chars_col(col)
-    if not merges:
-        return chars
-    marr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in merges
-        ]
-    )
-    return F.aggregate(
-        marr,
-        chars,
-        lambda toks, m: F.aggregate(
-            toks,
-            F.expr(_EMPTY_STR_ARRAY),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == m["a"])
-                & (x == m["b"]),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.concat(m["a"], m["b"])),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        ),
-    )
-
-
-# The separator-string wrap: every code point spaced apart, so merge
-# boundaries become literal-replace patterns (see doc_nsub_col).
-_SEP_WRAP_SQL = "regexp_replace({x}, '(?s)(.)', ' $1 ')"
-
-
 def _validate_merges(merges: list[tuple[str, str]]) -> None:
     """The boundary invariant of the separator encode requires every
     merge token to be space-free (rules learned from space-split words
     always are; a caller-supplied rule containing ' ' would silently
-    corrupt the count by bridging the wrap spaces — and silently
-    diverge from the Python-fold tier). Duplicate pairs are rejected
-    for the same reason: the ranked-pair tier keys priority on the
-    PAIR, so a pair appearing at two ranks has no single priority and
-    the UDF tier would silently diverge from the positional chain/
-    sequential tiers (r15 advice). Shared by every encode path."""
-    seen: dict[tuple[str, str], int] = {}
-    for i, (a, b) in enumerate(merges):
+    corrupt the count by bridging the wrap spaces)."""
+    for a, b in merges:
         if " " in a or " " in b:
             raise ValueError(
                 f"BPE merge rule ({a!r}, {b!r}) contains a space; "
                 "merge tokens must be space-free for the "
                 "separator-string encode to be exact"
             )
-        if (a, b) in seen:
-            raise ValueError(
-                f"BPE merge rule ({a!r}, {b!r}) appears at ranks "
-                f"{seen[(a, b)]} and {i}; duplicate pairs have no "
-                "single priority in the ranked-pair encoder and would "
-                "silently diverge from the sequential tiers"
-            )
-        seen[(a, b)] = i
-
-
-def _chain_sql(inner: str, merges: list[tuple[str, str]]) -> str:
-    """One replace() call per merge rule, nested around ``inner`` —
-    the shared chain builder for doc_nsub_col (whole text, all rules
-    in one expression) and per_doc_subwords' join path (per distinct
-    word, _CHAIN_CHUNK rules per projection block). Merge tokens are
-    inlined with sql_str_lit (backslash/quote escaping; hostile-token
-    test pins it)."""
-    s = inner
-    for a, b in merges:
-        s = (
-            f"replace({s}, {T.sql_str_lit(f' {a}  {b} ')}, "
-            f"{T.sql_str_lit(f' {a}{b} ')})"
-        )
-    return s
 
 
 def doc_nsub_col(
     merges: list[tuple[str, str]], text_col: str = "text"
 ) -> Column:
-    """Per-DOCUMENT subword count — sum over the doc's whitespace
-    tokens of ``F.size(encode_col(token, merges))`` — computed over
+    """Per-DOCUMENT subword count — the number of subwords the
+    sequential encode (each rule in rank order, one left-to-right fold)
+    yields, summed over the doc's whitespace tokens — computed over
     the WHOLE text in one separator-string pass: O(|merges| x chars)
     flat JVM string scans per doc, entirely map-side, no explode, no
     join, no shuffle. This is the r14 replan of the r13 fold
@@ -347,19 +192,27 @@ def doc_nsub_col(
     = original space count), the string holds the text's chars plus
     exactly 2T wrap spaces, so
         n_subwords = T - S = (len(s) - len(text)) / 2 - S.
-    Pinned against the fold encode by
+    Pinned against the definitional array fold by
     tests/test_bpe.py::test_doc_nsub_col_matches_encode_col.
 
     Built as ONE selectExpr-style SQL text (single parse) rather than
     a chain of F.replace Columns: the ~100 py4j round-trips of the
     Column form measured 0.3-0.44s of pure plan-build per query — the
-    quality_features finding again. Merge tokens are inlined with
+    quality_features finding again. One replace() call nests per rule,
+    and Spark's parser fails with FAILED_TO_PARSE_TOO_COMPLEX between
+    ~350 and 512 nesting levels (measured r15), far above the
+    BPE_MERGES rules a corpus fit yields. Merge tokens are inlined with
     sql_str_lit (backslash/quote escaping; embedded control chars ride
     inside the literal — pinned by the hostile-token test), and
     lower(text) is bound as a lambda variable so it evaluates once per
     row."""
     _validate_merges(merges)  # fail loudly on space-carrying rules
-    s = _chain_sql(_SEP_WRAP_SQL.format(x="x"), merges)
+    s = "regexp_replace(x, '(?s)(.)', ' $1 ')"
+    for a, b in merges:
+        s = (
+            f"replace({s}, {T.sql_str_lit(f' {a}  {b} ')}, "
+            f"{T.sql_str_lit(f' {a}{b} ')})"
+        )
     inner = (
         f"CAST(((length({s}) - length(x)) / 2) - "
         "(length(x) - length(replace(x, ' ', ''))) AS BIGINT)"
@@ -383,165 +236,13 @@ def _fit_from_corpus(docs: DataFrame) -> list[tuple[str, str]]:
     return bpe_fit([(r["w"], r["c"]) for r in topv], BPE_MERGES)
 
 
-# |merges| dispatch threshold for the per-doc subword count. TWO
-# reasons, either sufficient:
-# - Cost: the whole-text replace chain is O(|merges| x corpus chars) —
-#   every rule scans every document — while the dictionary join pays a
-#   FIXED plan overhead (token explode, distinct, vocab-keyed shuffle,
-#   doc-keyed re-aggregation) plus O(|merges| x vocab chars),
-#   amortizing each rule over distinct WORDS instead of occurrences.
-#   Measured at sf0.1 (SCALE.md r15): chain 0.33/0.34/0.42s vs join
-#   0.79/0.55/0.60s at 32/89/256 rules — the chain wins the whole
-#   contract range on this corpus, and the join's fixed barriers
-#   amortize at larger corpora while the chain's cost stays
-#   corpus-proportional forever.
-# - Parseability: the chain nests one replace() call per rule inside
-#   ONE expression, and Spark's parser hard-fails with
-#   FAILED_TO_PARSE_TOO_COMPLEX between ~350 and 512 nesting levels
-#   (measured r15) — above the threshold the chain is not slower, it
-#   is IMPOSSIBLE, so the join path (whose per-word encode applies
-#   rules in <=_CHAIN_CHUNK-deep projection blocks) is the only
-#   functioning plan. A production 30-50k-merge tokenizer always
-#   takes the join; the contract's BPE_MERGES=32 always takes the
-#   chain.
-BPE_JOIN_MERGES = 256
-
-# Max replace() nesting per projection block in the join path's
-# per-word encode — safely under the measured parser failure point
-# (>=350). Chunked application preserves semantics exactly: the rules
-# are a SEQUENTIAL fold over the separator string, so applying them
-# 192 at a time over chained projections is the same function. A
-# double-reference guard column keeps CollapseProject from re-merging
-# the blocks into one tree.
-_CHAIN_CHUNK = 192
-
-# The join's DEFAULT vocab-side encoder is the Arrow-batched
-# pandas_udf running the pure-Python fold (bpe_encode — the tested
-# replay of the chain) over the DISTINCT word frame. Python on the
-# hot path is normally forbidden here, but this is the sanctioned
-# shape — vocab-bounded, Zipf-amortized, Arrow-batched — and the r15
-# measurement is unambiguous: the UDF encoder is FLAT in |merges|
-# (0.67/0.61/0.56/0.53/0.58s at 32/89/256/512/2048 rules, sf0.1)
-# while the chunked-JVM-chain alternative grows with every projection
-# block (1.05/1.22/1.46/1.88s, then StackOverflows plan
-# stringification at ~1k rules even chunked) — a plan ARTIFACT, not
-# compute. The chunked chain (_vocab_nsub_chain) stays as a forced
-# strategy so the equivalence matrix can cross-check all tiers
-# JVM-only up to 512 rules.
-
-
-def _vocab_nsub_chain(vocab: DataFrame, merges) -> DataFrame:
-    """(w, w_sub) via the separator chain applied in _CHAIN_CHUNK-deep
-    projection blocks — the JVM-expression vocab encoder for
-    mid-sized merge tables. For a single word (no spaces by
-    split-construction) the count formula collapses to
-    (len(s) - len(lower(w))) / 2."""
-    enc = vocab.select(
-        "w",
-        F.length(F.lower(F.col("w"))).alias("lw"),
-        F.expr(
-            _chain_sql(
-                _SEP_WRAP_SQL.format(x="lower(w)"), merges[:_CHAIN_CHUNK]
-            )
-        ).alias("s"),
-    )
-    for i in range(_CHAIN_CHUNK, len(merges), _CHAIN_CHUNK):
-        enc = enc.select(
-            "w",
-            "lw",
-            F.expr(_chain_sql("s", merges[i : i + _CHAIN_CHUNK])).alias("s"),
-            # second reference to s: CollapseProject only merges a
-            # projection when each alias it inlines is referenced once
-            # (or cheap) — without this guard the blocks re-merge into
-            # ONE tree and a >~1k-rule table StackOverflows the plan
-            # traversal (measured r15)
-            F.length("s").alias("_sep_guard"),
-        )
-    return enc.select(
-        "w",
-        F.expr("CAST((length(s) - lw) / 2 AS BIGINT)").alias("w_sub"),
-    )
-
-
-def _vocab_nsub_udf(vocab: DataFrame, merges) -> DataFrame:
-    """(w, w_sub) via the Arrow-batched ranked-pair encoder
-    (bpe_encode_ranked — the GPT-2-tokenizer shape, equivalent to the
-    sequential spec on fit-produced tables; see its docstring) — the
-    production-size vocab encoder: table size costs one dict build per
-    executor batch, per-word cost depends only on the pairs actually
-    present. Functional at 50k rules where every expression-tree
-    encode is impossible (measured r15)."""
-    from pyspark.sql.functions import pandas_udf
-
-    # _validate_merges rejects duplicate pairs on every encode path,
-    # but build the rank table first-wins (setdefault) anyway so the
-    # lowest rank — the sequential tiers' effective priority — is the
-    # one the ranked encoder sees even if a caller bypasses validation
-    rank: dict[tuple[str, str], int] = {}
-    for i, pair in enumerate(merges):
-        rank.setdefault(pair, i)
-
-    @pandas_udf("bigint")
-    def nsub(col):
-        return col.map(lambda w: len(bpe_encode_ranked(w.lower(), rank)))
-
-    return vocab.select("w", nsub("w").alias("w_sub"))
-
-
 def per_doc_subwords(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    alias: str = "n_sub",
-    force_join: bool | None = None,
-    vocab_encoder: str | None = None,
+    docs: DataFrame, merges: list[tuple[str, str]], alias: str
 ) -> DataFrame:
-    """(doc_id, source, <alias>) — per-document subword counts under
-    the |merges| dispatch (BPE_JOIN_MERGES above):
-    the map-side whole-text replace chain for contract-sized merge
-    tables; above that, the distinct-word dictionary join — explode to
-    (doc, word) rows, encode each DISTINCT word once (amortizing the
-    rules over the vocabulary instead of every occurrence), join back,
-    re-aggregate per doc. One vocab-keyed shuffle + one doc-keyed
-    shuffle; at 100 TB the vocab side is Zipf-bounded and the join is
-    where a 50k-rule encode stops being corpus-proportional. The
-    vocab-side encoder defaults to the Arrow-batched Python fold
-    (flat in |merges| — see the measurement note above); the chunked
-    JVM chain remains a forced strategy. An empty-string token (from
-    consecutive spaces) encodes to 0 subwords on every path. All
-    tiers are the SAME function — pinned by the forced-strategy
-    matrix in tests/test_bpe.py (the charlm/dedup_clusters pattern).
-    ``force_join`` / ``vocab_encoder`` ('chain' | 'udf') override the
-    dispatch for tests and measurements.
-
-    PRECONDITION: ``docs`` must already be filtered to text IS NOT
-    NULL (every caller is). A NULL-text doc would otherwise DIVERGE
-    between tiers — the chain keeps it with a NULL count while the
-    join's explode drops it (the engine's documented NULL-text trap
-    class)."""
-    _validate_merges(merges)  # all tiers share the space-free contract
-    use_join = (
-        len(merges) > BPE_JOIN_MERGES if force_join is None else force_join
-    )
-    if not use_join:
-        return docs.select(
-            "doc_id", "source", doc_nsub_col(merges).alias(alias)
-        )
-    tok = docs.select(
-        "doc_id", "source", F.explode(T.tokens_col()).alias("w")
-    )
-    vocab = tok.select("w").distinct()
-    if vocab_encoder is None:
-        vocab_encoder = "udf"
-    enc = (
-        _vocab_nsub_chain(vocab, merges)
-        if vocab_encoder == "chain"
-        else _vocab_nsub_udf(vocab, merges)
-    )
-    return (
-        tok.join(enc, "w")
-        .groupBy("doc_id", "source")
-        .agg(F.sum("w_sub").cast("bigint").alias(alias))
-    )
+    """(doc_id, source, <alias>) — per-document subword counts from the
+    map-side replace chain (doc_nsub_col); the per-doc base the packing
+    and mixing audits share."""
+    return docs.select("doc_id", "source", doc_nsub_col(merges).alias(alias))
 
 
 def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,29 +278,12 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width 32 measured a wash vs 16 at the whole-query level here
     # (r15 pairs: 0.51 vs 0.50) — the encode-only gain drowns in the
     # agg stage's extra task scheduling; default kept
-    if len(merges) > BPE_JOIN_MERGES:
-        # production-size merge table: subword counts come from the
-        # dictionary join (see BPE_JOIN_MERGES); nw/nchars stay one
-        # map-side projection and re-join on doc_id (AQE broadcasts
-        # the smaller side when it measures small)
-        per_doc = docs.select(
-            "doc_id",
-            "source",
-            (nspaces + 1).cast("bigint").alias("nw"),
-            (F.length(txt) - nspaces).cast("bigint").alias("nchars"),
-        ).join(
-            per_doc_subwords(docs, merges).select(
-                "doc_id", F.col("n_sub").alias("nsub")
-            ),
-            "doc_id",
-        )
-    else:
-        per_doc = docs.select(
-            "source",
-            (nspaces + 1).cast("bigint").alias("nw"),
-            (F.length(txt) - nspaces).cast("bigint").alias("nchars"),
-            doc_nsub_col(merges).alias("nsub"),
-        )
+    per_doc = docs.select(
+        "source",
+        (nspaces + 1).cast("bigint").alias("nw"),
+        (F.length(txt) - nspaces).cast("bigint").alias("nchars"),
+        doc_nsub_col(merges).alias("nsub"),
+    )
     return (
         per_doc.groupBy("source")
         .agg(
@@ -640,7 +324,7 @@ def _fit_cte_parts(n_merges: int) -> list[str]:
     NULL rule is an identity step, matching the Python fit's early
     stop). After n_merges blocks, v{n} holds each word's subword
     tokens — the same rank-order single-pass application Spark's
-    encode_col performs.
+    replace chain (doc_nsub_col) counts.
 
     Every v{i} is AS MATERIALIZED: each is referenced twice (the next
     pair count and the next apply), and DuckDB 1.0's default otherwise
@@ -764,8 +448,7 @@ def seq_pack_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width 16 (default) beats 32 here (r15 pairs: 1.125 vs 1.224):
     # the encode-only gain of 32 partitions is outweighed by doubling
     # the shuffle-block count of the immediately following
-    # repartition(bkt, source) exchange. per_doc_subwords dispatches
-    # to the dictionary join above BPE_JOIN_MERGES.
+    # repartition(bkt, source) exchange.
     return _seq_pack(per_doc_subwords(docs, merges, alias="n_tok"))
 
 

@@ -295,7 +295,6 @@ def _ingest_dedup_batch(
     band_fn,
     id_col: str,
     compact_every: int | None = None,
-    sink_transform=None,
 ) -> None:
     """One micro-batch of dedup ingest (foreachBatch body), shared by
     the document (MinHash) and embedding (sign-bucket) variants: the
@@ -307,8 +306,7 @@ def _ingest_dedup_batch(
     band = band_fn(batch).persist()
     try:
         dedup_append(
-            batch, band, sink_path, batch_id, id_col,
-            compact_every=compact_every, sink_transform=sink_transform,
+            batch, band, sink_path, batch_id, id_col, compact_every=compact_every
         )
     finally:
         band.unpersist()
@@ -373,13 +371,11 @@ def dedup_ingest_batch(
     sink_path: str,
     batch_id: int,
     compact_every: int | None = None,
-    sink_transform=None,
 ) -> None:
     """Document (MinHash/LSH) dedup ingest micro-batch."""
     _ingest_dedup_batch(
         batch_df, sink_path, batch_id, doc_band_rows, "doc_id",
         compact_every=compact_every,
-        sink_transform=sink_transform,
     )
 
 
@@ -488,13 +484,11 @@ def span_dedup_ingest_batch(
     sink_path: str,
     batch_id: int,
     compact_every: int | None = None,
-    sink_transform=None,
 ) -> None:
     """Span-mode dedup ingest micro-batch (shared engine body)."""
     _ingest_dedup_batch(
         batch_df, sink_path, batch_id, doc_span_rows, "doc_id",
         compact_every=compact_every,
-        sink_transform=sink_transform,
     )
 
 
@@ -675,27 +669,13 @@ def doc_shingle_tid_arrays(
     )
 
 
-def _band_pairs_within(band: DataFrame) -> DataFrame:
-    """Distinct candidate (doc_id, doc_id2) pairs within one frame of
-    band rows, doc_id < doc_id2 — the batch pair enumeration's
-    posting-list shape (operators.dedup.enumerate_sorted_pairs)."""
-    buckets = band.groupBy("lang", "band", "band_key").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
-    return (
-        D.enumerate_sorted_pairs(buckets)
-        .select(F.col("x").alias("doc_id"), F.col("y").alias("doc_id2"))
-        .distinct()
-    )
-
-
 def _candidate_pairs(
     band: DataFrame, store_band: DataFrame | None
 ) -> DataFrame:
     """Candidate pairs of a verified micro-batch: within the batch, and
     across batches with the earlier (store) doc as doc_id and this
     batch's doc as doc_id2 — the only droppable side."""
-    pairs = _band_pairs_within(band)
+    pairs = D.lsh_bucket_pairs(band)
     if store_band is None:
         return pairs
     cross = band.join(
@@ -776,7 +756,7 @@ def _batch_verified_keep(
     # The batch statement of a verified rule: the streaming rule with
     # an empty store (global bucket enumeration covers within-batch and
     # cross-batch pairs alike).
-    drops = spec.verify(_band_pairs_within(band), payload)
+    drops = spec.verify(D.lsh_bucket_pairs(band), payload)
     drops = drops.select(F.col("doc_id2").alias(spec.id_col)).distinct()
     return df.join(drops, spec.id_col, "left_anti")
 

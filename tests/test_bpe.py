@@ -4,7 +4,8 @@ Spark fold expression == oracle CTE) on a controlled fixture — the
 sf0.01 oracle hash (tests/test_queries_oracle.py) certifies the full
 operator; these tests pin the PARTS on inputs where the expected
 answer is hand-derivable, plus the empty-word/no-pairs edges the
-_chars_col guard claims to handle."""
+_chars_col guard claims to handle (the reference encodes live in
+tests/bpe_reference.py)."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from bpe_reference import bpe_encode, encode_col
 from etl_wikipedia_updates_spark.plans import bpe as B
 
 
@@ -76,11 +78,11 @@ def test_encode_col_matches_python_replay(spark):
     got = {
         r["w"]: r["toks"]
         for r in df.select(
-            "w", B.encode_col("w", merges).alias("toks")
+            "w", encode_col("w", merges).alias("toks")
         ).collect()
     }
     for w in _WORDS:
-        assert got[w] == B.bpe_encode(w, merges), (w, merges)
+        assert got[w] == bpe_encode(w, merges), (w, merges)
 
 
 def test_encode_col_no_merges_is_char_split(spark):
@@ -88,14 +90,14 @@ def test_encode_col_no_merges_is_char_split(spark):
     df = spark.createDataFrame([(w,) for w in _WORDS], ["w"])
     got = {
         r["w"]: r["toks"]
-        for r in df.select("w", B.encode_col("w", []).alias("toks")).collect()
+        for r in df.select("w", encode_col("w", []).alias("toks")).collect()
     }
     for w in _WORDS:
         assert got[w] == list(w), w
 
 
 def _py_doc_nsub(text, merges):
-    return sum(len(B.bpe_encode(w, merges)) for w in text.lower().split(" "))
+    return sum(len(bpe_encode(w, merges)) for w in text.lower().split(" "))
 
 
 def test_doc_nsub_col_matches_encode_col(spark):
@@ -106,8 +108,9 @@ def test_doc_nsub_col_matches_encode_col(spark):
     non-overlap semantics bite; empty; unicode incl. a supplementary
     code point), on texts engineered so a merge pair SPANS a word
     boundary (must NOT merge), on double/leading/trailing spaces
-    (empty words), and on every document of the sf0.001 corpus under
-    the corpus-fit merge table."""
+    (empty words), under a table that repeats a pair, and on every
+    document of the sf0.001 corpus under the corpus-fit merge
+    table."""
     from etl_wikipedia_updates_spark.caches import memo
     from etl_wikipedia_updates_spark.tables import load_table
 
@@ -129,12 +132,24 @@ def test_doc_nsub_col_matches_encode_col(spark):
             "a\tb ab\nba",  # tab/newline INSIDE tokens (split is ' ')
         ]
     )
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = df.select(
-        "text", B.doc_nsub_col(merges).alias("n")
-    ).collect()
-    for r in got:
-        assert r["n"] == _py_doc_nsub(r["text"], merges), repr(r["text"])
+    # a repeated pair, re-applied at its second rank: (xy, z) matches
+    # nothing before (x, y) has formed xy, so the chain must follow
+    # rank order as the sequential fold does
+    repeated = [("xy", "z"), ("x", "y"), ("xy", "z"), ("a", "b"), ("a", "b")]
+    df = spark.createDataFrame(
+        [(t,) for t in texts + ["xyz", "xyzxyz xy z", "zxyzy abab"]],
+        ["text"],
+    )
+    for table in (merges, repeated):
+        got = df.select(
+            "text", B.doc_nsub_col(table).alias("n")
+        ).collect()
+        for r in got:
+            assert r["n"] == _py_doc_nsub(r["text"], table), (
+                repr(r["text"]),
+                table,
+            )
+    assert _py_doc_nsub("xyz", repeated) == 1  # the repeat merged it
 
     # full sf0.001 corpus under the REAL fitted table, doc by doc
     sf = "/root/testdata/sf0.001"
@@ -148,7 +163,7 @@ def test_doc_nsub_col_matches_encode_col(spark):
         F.split(F.lower("text"), " "),
         F.lit(0).cast("bigint"),
         lambda acc, w: acc
-        + F.size(B.encode_col(w, corpus_merges)).cast("bigint"),
+        + F.size(encode_col(w, corpus_merges)).cast("bigint"),
     )
     bad = docs.select(
         "doc_id",
@@ -196,7 +211,7 @@ def test_single_pass_per_rule_is_complete():
         for a, b in merges:
             toks = _fold_rule(toks, a, b)
             assert _fold_rule(toks, a, b) == toks, (w, (a, b), toks)
-        assert toks == B.bpe_encode(w, merges), w
+        assert toks == bpe_encode(w, merges), w
 
 
 # --- the operator on a controlled corpus: Spark == oracle == Python -----------
@@ -215,7 +230,7 @@ def _py_token_stats(rows, merges):
         for w in text.lower().split(" "):
             st["n_words"] += 1
             st["n_chars"] += len(w)
-            st["n_subwords"] += len(B.bpe_encode(w, merges))
+            st["n_subwords"] += len(bpe_encode(w, merges))
     return {
         s: {
             "n_docs": st["n_docs"],
@@ -361,158 +376,36 @@ def test_source_mix_subword_budgets_match_token_stats(spark, sf_smoke):
     assert floor_src["subwords_kept"] == floor_src["subwords_in"]
 
 
-def test_per_doc_subwords_join_path_bit_identical(spark, sf_smoke):
-    """The BPE_JOIN_MERGES dispatch (r15): the distinct-word dictionary
-    join and the whole-text replace chain are the SAME function —
-    forced-fallback equivalence on the real fixture corpus under the
-    corpus-fit table, plus synthetic never-matching padding rules to
-    exercise a threshold-crossing table size (the charlm/dedup_clusters
-    forced-strategy pattern)."""
-    from etl_wikipedia_updates_spark.tables import load_table, spread
-
-    docs = spread(load_table(spark, sf_smoke, "documents")).filter(
-        F.col("text").isNotNull()
-    )
-    merges = B._fit_from_corpus(docs)
-    # padding rules over characters absent from the corpus: replace()
-    # scans but never matches, so the count is unchanged while the
-    # table size crosses the dispatch threshold
-    padded = merges + [(f"§{i}", "¤") for i in range(8)]
-    for table in (merges, padded):
-        chain = {
-            (r["doc_id"]): r["n_sub"]
-            for r in B.per_doc_subwords(
-                docs, table, force_join=False
-            ).collect()
-        }
-        join = {
-            (r["doc_id"]): r["n_sub"]
-            for r in B.per_doc_subwords(
-                docs, table, force_join=True
-            ).collect()
-        }
-        assert chain == join
-    assert len(chain) == docs.count()
-
-
 def test_per_doc_subwords_dispatch_threshold(spark, sf_smoke):
-    """Below BPE_JOIN_MERGES the plan is the map-side chain (no join,
-    no explode); above it, the dictionary join. Structural check on
-    the physical plans, so the dispatch constant cannot silently stop
-    dispatching."""
+    """The per-doc subword count is the map-side chain: no join, no
+    explode. Structural check on the physical plan, so a token explode
+    or a word join cannot slip back onto the path."""
     from etl_wikipedia_updates_spark.tables import load_table, spread
 
     docs = spread(load_table(spark, sf_smoke, "documents")).filter(
         F.col("text").isNotNull()
     )
     merges = B._fit_from_corpus(docs)
-    small = B.per_doc_subwords(docs, merges)
-    plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan_small and "Generate" not in plan_small
-
-    big_table = merges + [
-        (f"§{i}", "¤") for i in range(B.BPE_JOIN_MERGES)
-    ]
-    big = B.per_doc_subwords(docs, big_table)
-    plan_big = big._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" in plan_big  # the token explode
-    assert "Join" in plan_big
-
-
-def test_per_doc_subwords_strategy_matrix(spark, sf_smoke):
-    """The full forced-strategy matrix: whole-text chain (tier 1),
-    dictionary join with the chunked JVM chain (tier 2), dictionary
-    join with the Arrow-batched Python fold (tier 3) — all the SAME
-    function. Above ~350 nested replace() calls Spark's parser
-    hard-fails (FAILED_TO_PARSE_TOO_COMPLEX, measured r15) and a ~1k
-    tree StackOverflows plan stringification, so tier 2 is probed at
-    512 padded rules and tier 3 at 2048 (padding rules never match, so
-    every count must equal the 89-real-rule chain's)."""
-    from etl_wikipedia_updates_spark.tables import load_table, spread
-
-    docs = spread(load_table(spark, sf_smoke, "documents")).filter(
-        F.col("text").isNotNull()
+    plan = (
+        B.per_doc_subwords(docs, merges, "n_sub")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
     )
-    merges = B._fit_from_corpus(docs)
-
-    def pad(n):
-        return merges + [(f"§{i}", "¤") for i in range(n - len(merges))]
-
-    def counts(table, **kw):
-        return {
-            r["doc_id"]: r["n_sub"]
-            for r in B.per_doc_subwords(docs, table, **kw).collect()
-        }
-
-    chain = counts(merges, force_join=False)
-    # tier 2 and 3 agree with tier 1 at the fitted size
-    assert counts(merges, force_join=True, vocab_encoder="chain") == chain
-    assert counts(merges, force_join=True, vocab_encoder="udf") == chain
-    # tier 2 at 512 rules (past the single-expression parser limit)
-    assert counts(pad(512), force_join=True, vocab_encoder="chain") == chain
-    # tier 3 at 2048 rules (past the JVM-tree stringification limit)
-    assert counts(pad(2048), force_join=True, vocab_encoder="udf") == chain
-
-
-def test_per_doc_subwords_functional_at_50k_rules(spark, sf_smoke):
-    """The production-size claim, pinned: a 50,000-rule merge table
-    dispatches to the join + ranked-encoder tier, completes, and (the
-    padding rules never matching — they never participate in either
-    encoder, so the fit-table equivalence is unaffected) counts
-    exactly what the real fitted table counts. Every expression-tree
-    encode is structurally impossible at this size (parser /
-    stringification ceilings, SCALE.md r15)."""
-    from etl_wikipedia_updates_spark.tables import load_table, spread
-
-    docs = spread(load_table(spark, sf_smoke, "documents")).filter(
-        F.col("text").isNotNull()
-    )
-    merges = B._fit_from_corpus(docs)
-    big = merges + [
-        (f"§{i}", "¤") for i in range(50_000 - len(merges))
-    ]
-    chain = {
-        r["doc_id"]: r["n_sub"]
-        for r in B.per_doc_subwords(docs, merges, force_join=False).collect()
-    }
-    got = {
-        r["doc_id"]: r["n_sub"]
-        for r in B.per_doc_subwords(docs, big).collect()  # auto-dispatch
-    }
-    assert got == chain
+    assert "Join" not in plan and "Generate" not in plan
 
 
 def test_validate_merges_rejects_duplicate_pairs(spark):
-    """r15 advice: a pair appearing at two ranks has no single
-    priority in the ranked-pair encoder (rank was keyed last-wins),
-    so the UDF tier could silently diverge from the positional chain/
-    sequential tiers. _validate_merges now rejects duplicates loudly
-    on every encode path."""
-    dup = [("a", "b"), ("b", "c"), ("a", "b")]
-    with pytest.raises(ValueError, match="appears at ranks 0 and 2"):
-        B._validate_merges(dup)
-    # the shared validation gate fires from the shipped count tiers
-    # (encode_col — the off-hot-path spec anchor — tolerates
-    # duplicates: the sequential fold just re-applies a no-op rule)
-    df = spark.createDataFrame([("abc",)], ["text"])
-    with pytest.raises(ValueError, match="appears at ranks"):
-        df.select(B.doc_nsub_col(dup))
-    # and the space-free check still fires first for space rules
+    """Only space-carrying rules are rejected (the separator encode
+    needs space-free tokens); the test keeps the name of the
+    duplicate-pair rejection it also checked while a ranked-pair
+    encoder existed. A repeated pair is a valid table now: the chain
+    applies it again at its second rank, as the sequential fold does
+    (pinned in test_doc_nsub_col_matches_encode_col)."""
+    B._validate_merges([("a", "b"), ("b", "c"), ("a", "b")])
     with pytest.raises(ValueError, match="space"):
         B._validate_merges([("a b", "c")])
-
-
-def test_ranked_rank_table_is_first_wins():
-    """Defense in depth behind the validation gate: if a duplicate
-    pair ever reaches the ranked encoder (a caller bypassing
-    _validate_merges), the rank table must keep the FIRST (lowest)
-    rank — the sequential tiers' effective priority — not the last."""
-    merges = [("a", "b"), ("b", "c"), ("a", "b")]
-    rank = {}
-    for i, pair in enumerate(merges):
-        rank.setdefault(pair, i)
-    assert rank[("a", "b")] == 0
-    # first-wins rank replays the sequential fold on the deduped table
-    assert B.bpe_encode_ranked("abc", rank) == B.bpe_encode(
-        "abc", [("a", "b"), ("b", "c")]
-    )
+    # the gate fires from the shipped count
+    df = spark.createDataFrame([("abc",)], ["text"])
+    with pytest.raises(ValueError, match="space"):
+        df.select(B.doc_nsub_col([("a", "b"), ("c", " ")]))

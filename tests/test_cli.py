@@ -51,6 +51,88 @@ def test_cli_ingest_replay(spark, sf_smoke, tmp_path, capsys):
     assert f"'rows': {events.count()}" in out
 
 
+def test_cli_sse_runs_the_v2_live_path(spark, tmp_path, capsys):
+    """`sse` parses, keeps edit/new events and dedups on the natural
+    key before it appends: a loopback feed with a duplicate key and a
+    `log` event leaves a sink of WIKI_EVENT_COLUMNS without either,
+    and `dashboard` reads its event time."""
+    import http.server
+    import json
+    import threading
+    import time
+
+    from test_sources import _sse_server
+
+    from etl_wikipedia_updates_spark.pipeline import WIKI_EVENT_COLUMNS
+    from etl_wikipedia_updates_spark.streaming.ingest import read_sink
+
+    def event(kind, title, user, dt, new):
+        return json.dumps({
+            "type": kind, "title": title, "title_url": f"/wiki/{title}",
+            "user": user, "bot": False, "meta": {"dt": dt},
+            "length": {"old": 10, "new": new},
+        })
+
+    feed = [
+        event("edit", "A", "alice", "2026-01-08T22:35:51Z", 15),
+        event("edit", "A", "alice", "2026-01-08T22:35:51Z", 16),  # dup key
+        event("log", "C", "carol", "2026-01-08T22:35:52Z", 10),
+        event("new", "B", "bob", "2026-01-08T22:35:53Z", 40),
+    ]
+    served = threading.Event()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802 - stdlib naming
+            self.send_response(200)
+            self.send_header("Content-Type", "text/event-stream")
+            self.end_headers()
+            if not served.is_set():
+                served.set()
+                for line in feed:
+                    self.wfile.write(f"event: message\ndata: {line}\n\n".encode())
+
+        def log_message(self, *args):
+            pass
+
+    def stop_when_drained():
+        # the CLI blocks until --timeout; stop its query once every
+        # served event went through a committed trigger
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            for q in spark.streams.active:
+                if sum(p["numInputRows"] for p in q.recentProgress) >= len(feed):
+                    q.stop()
+                    return
+            time.sleep(0.5)
+
+    srv = _sse_server(Handler)
+    sink = str(tmp_path / "sink")
+    watcher = threading.Thread(target=stop_when_drained, daemon=True)
+    watcher.start()
+    try:
+        url = f"http://127.0.0.1:{srv.server_address[1]}/stream"
+        assert main(["sse", "--url", url, "--sink", sink, "--timeout", "150"]) == 0
+    finally:
+        srv.shutdown()
+    watcher.join(timeout=10)
+    assert not watcher.is_alive()
+    got = read_sink(spark, sink)
+    assert got.columns == WIKI_EVENT_COLUMNS
+    assert sorted((r["title"], r["username"]) for r in got.collect()) == [
+        ("A", "alice"),
+        ("B", "bob"),
+    ]
+    capsys.readouterr()
+    assert main(
+        ["dashboard", "--sink", sink, "--ts-col", "event_timestamp",
+         "--interval", "0", "--polls", "1"]
+    ) == 0
+    poll = json.loads(capsys.readouterr().out)
+    assert poll["rows"] == 2
+    newest = got.agg({"event_timestamp": "max"}).first()[0]
+    assert newest is not None and poll["max_ts"] == str(newest)
+
+
 def test_cli_dashboard(spark, sf_smoke, tmp_path, capsys):
     import json
 

@@ -93,9 +93,6 @@ UNREACHED_ALLOWED = {
     "_thumbnail": "SURVEY multimodal decode (decode_image helper)",
     "frame_sample": "SURVEY multimodal frame sampling",
     "_frame_sample_batches": "SURVEY frame sampling (frame_sample helper)",
-    "bpe_encode": "test reference (bpe encode twin)",
-    "encode_col": "test reference (bpe encode twin)",
-    "_chars_col": "test reference (encode_col helper)",
     "batch_quality_neardup_keep": "test reference (streaming twin)",
     "batch_embedding_neardup_keep": "test reference (streaming twin)",
     "batch_span_keep": "test reference (streaming twin)",
